@@ -16,6 +16,7 @@ drives the same code paths the tests gate.
 from __future__ import annotations
 
 import datetime as dt
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,24 +75,28 @@ class PageDB:
             "is not part of the engine surface"
         )
 
+    def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
+        """Crawl batch in BATCH_SCHEMA, one row per page in list order:
+        ``crawl_order`` numbers the pages consecutively, so the MERGE's
+        within-batch first-writer-wins follows arrival order."""
+        default_ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+        rows = [
+            (
+                self._order + i,
+                page.url,
+                [(u, float(s)) for u, s in page.links],
+                float(page.score),
+                page.hash or b"",
+                (page.time or default_ts).replace(tzinfo=None),
+            )
+            for i, page in enumerate(pages)
+        ]
+        self._order += len(pages)
+        return self.spark.createDataFrame(rows, schema=self.BATCH_SCHEMA)
+
     def page_batch(self, page: CrawledPage) -> DataFrame:
         """One-row crawl batch in BATCH_SCHEMA from a CrawledPage."""
-        ts = page.time or dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-        batch = self.spark.createDataFrame(
-            [
-                (
-                    self._order,
-                    page.url,
-                    [(u, float(s)) for u, s in page.links],
-                    float(page.score),
-                    page.hash or b"",
-                    ts.replace(tzinfo=None),
-                )
-            ],
-            schema=self.BATCH_SCHEMA,
-        )
-        self._order += 1
-        return batch
+        return self.pages_batch([page])
 
     def add_batch(self, batch: DataFrame) -> DataFrame:
         """page_db_add (page_db.c:807-1016) for a whole batch: one
@@ -389,7 +394,29 @@ class Backend:
     (/root/reference/aduana/frontera.py:12-79): seeds become sentinel
     '_seed_{n}' pages whose outlinks are the real seed URLs (score
     default 1.0); crawled pages feed the scheduler; requests pop the
-    frontier view."""
+    frontier view.
+
+    Crawled pages are group-committed. ``page_crawled`` only appends
+    the page to an in-memory buffer: returning means "accepted into
+    the commit buffer", not "merged". ``get_next_requests`` and
+    ``flush`` commit the whole buffer as one crawl batch (one MERGE
+    and one round of checkpoints) before anything reads page state,
+    so page state becomes visible at the next GET or ``flush()``.
+    Page state, schedule and pop order equal those of ingesting each
+    page alone: the buffer is committed early when a page repeats a
+    buffered crawl (``n_crawls`` must count both) or was linked from a
+    buffered page (it must take that page's ``depth + 1`` and
+    ``linked_from``), and when it holds ``MAX_PENDING`` pages, which
+    bounds its memory. A commit that fails raises ``RuntimeError``
+    naming how many buffered pages it held; those pages are lost, just
+    as a process crash loses the in-memory ``page_info``.
+
+    Methods are thread-safe. One lock serializes the Spark work
+    (commit, seed ingest, pops), so a buffered ``page_crawled`` never
+    waits for it."""
+
+    #: pages buffered before ``page_crawled`` commits inline
+    MAX_PENDING = 1000
 
     def __init__(self, spark: SparkSession, scorer=None, max_depth: int | None = None):
         self.page_db = PageDB(spark)
@@ -400,27 +427,62 @@ class Backend:
             spark, scorer=scorer, max_depth=max_depth, page_db=self.page_db
         )
         self._n_seeds = 0
+        # lock order: _spark_lock before _lock
+        self._spark_lock = threading.Lock()
+        self._lock = threading.Lock()
+        self._pending: dict[str, CrawledPage] = {}  # url -> page, arrival order
+        self._pending_links: set[str] = set()
 
-    def _add(self, page: CrawledPage) -> None:
-        self.scheduler.add(self.page_db.page_batch(page))
+    def _commit(self) -> None:
+        """Commit the buffer as one batch; the caller holds _spark_lock."""
+        with self._lock:
+            pages = list(self._pending.values())
+            self._pending, self._pending_links = {}, set()
+        if not pages:
+            return
+        try:
+            self.scheduler.add(self.page_db.pages_batch(pages))
+        except Exception as e:
+            raise RuntimeError(
+                f"commit of {len(pages)} buffered pages failed, "
+                f"they are lost: {e}"
+            ) from e
+
+    def flush(self) -> None:
+        """Commit every buffered crawled page now."""
+        with self._spark_lock:
+            self._commit()
 
     def add_seeds(self, seed_urls: list[str], scores: list[float] | None = None) -> None:
         scores = scores or [1.0] * len(seed_urls)
-        self._add(
-            CrawledPage(
-                url=f"_seed_{self._n_seeds}",
-                links=list(zip(seed_urls, scores)),
+        with self._spark_lock:
+            self._commit()  # pages posted before the seeds go first
+            seed = CrawledPage(
+                url=f"_seed_{self._n_seeds}", links=list(zip(seed_urls, scores))
             )
-        )
-        self._n_seeds += 1
+            self._n_seeds += 1
+            self.scheduler.add(self.page_db.page_batch(seed))
 
     def page_crawled(self, url: str, links: list[tuple[str, float]],
                      score: float = 0.0, content_hash: bytes | None = None) -> None:
-        self._add(CrawledPage(url=url, links=links, score=score, hash=content_hash))
+        page = CrawledPage(url=url, links=links, score=score, hash=content_hash)
+        while True:
+            with self._lock:
+                if not (
+                    url in self._pending
+                    or url in self._pending_links
+                    or len(self._pending) >= self.MAX_PENDING
+                ):
+                    self._pending[url] = page
+                    self._pending_links.update(u for u, _ in links)
+                    return
+            self.flush()
 
     def request_error(self, url: str, error) -> None:
         """The reference ignores errors (frontera.py:60-61); the view
         recomputation makes retry automatic (U4)."""
 
     def get_next_requests(self, max_n_requests: int) -> list[str]:
-        return self.scheduler.requests(max_n_requests)
+        with self._spark_lock:
+            self._commit()
+            return self.scheduler.requests(max_n_requests)

@@ -369,6 +369,10 @@ def simulate_serving(
     State (url, freq, next_due) is kept as plain Python — the loop is
     control flow, exactly like the reference's cursor loop; the heavy
     lifting (building freq_table from page state) is the Spark part.
+
+    ``max_rows`` bounds that one driver collect: a freq table with
+    more rows raises ``ValueError``. Pass ``max_rows=None`` to collect
+    a larger table on purpose.
     """
     import heapq
 

@@ -9,6 +9,20 @@ format doc/python.rst:203-247):
   (matching the reference's error strings).
 - ``GET /request?n=42`` — JSON list of up to n frontier URLs.
 
+The ``Backend`` group-commits crawled pages (see ``api.Backend``):
+
+- 201 means "accepted into the commit buffer", not yet merged.
+- A page's state becomes visible at the next ``GET /request`` (or
+  ``Backend.flush()``), which commits every page buffered since the
+  previous one as one batch before it pops the frontier.
+- A failed commit loses the buffered pages, just as a process crash
+  loses the in-memory ``page_info``. The request that ran it gets 500
+  with a plain-text ``ERROR: ...`` body stating how many buffered
+  pages the commit held; any other backend failure also answers 500.
+
+The server holds no lock of its own: the backend serializes its
+Spark work, and a POST that only buffers does not wait for it.
+
 The reference serves falcon+gevent; here it is a stdlib
 ``http.server`` facade over the Frontera ``Backend`` (api.py) — the
 server is explicitly marked optional for parity in SURVEY.md, and the
@@ -20,11 +34,14 @@ tables; a fleet of them can share one Spark session per pod.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 DEFAULT_REQS = 10  # aduana-server.py Settings.DEFAULT_REQS
+
+_log = logging.getLogger(__name__)
 
 
 def _make_handler(backend, default_reqs: int):
@@ -32,13 +49,17 @@ def _make_handler(backend, default_reqs: int):
         def log_message(self, *a):  # quiet test runs
             pass
 
-        def _error(self, message: str) -> None:
+        def _error(self, message: str, code: int = 400) -> None:
             body = message.encode()
-            self.send_response(400)
+            self.send_response(code)
             self.send_header("Content-Type", "text/plain")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+
+        def _backend_failed(self, e: Exception) -> None:
+            _log.exception("backend call failed")
+            self._error(f"ERROR: {e}", code=500)
 
         def do_POST(self):
             if urlparse(self.path).path.rstrip("/") not in ("", "/crawled"):
@@ -63,10 +84,13 @@ def _make_handler(backend, default_reqs: int):
             except (TypeError, ValueError) as e:
                 self._error("ERROR: Incorrect data inside CrawledPage. " + str(e))
                 return
-            with backend_lock:
+            try:
                 backend.page_crawled(
                     data["url"], links, score=score, content_hash=chash
                 )
+            except Exception as e:
+                self._backend_failed(e)
+                return
             self.send_response(201)
             self.send_header("Content-Length", "0")
             self.end_headers()
@@ -82,8 +106,11 @@ def _make_handler(backend, default_reqs: int):
             except ValueError:
                 self._error("ERROR: Incorrect number of requests")
                 return
-            with backend_lock:
+            try:
                 urls = backend.get_next_requests(n)
+            except Exception as e:
+                self._backend_failed(e)
+                return
             body = json.dumps(urls, ensure_ascii=True).encode()
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
@@ -91,8 +118,6 @@ def _make_handler(backend, default_reqs: int):
             self.end_headers()
             self.wfile.write(body)
 
-    # one Spark driver → serialize scheduler access across HTTP threads
-    backend_lock = threading.Lock()
     return Handler
 
 

@@ -217,6 +217,112 @@ def test_frontera_backend_flow(spark):
     assert seeds == 1
 
 
+#: one arrival sequence for the group-commit equivalence test. Between
+#: the first two GETs, c.org/ arrives while a.org/, which links to it,
+#: is still buffered (it must take depth 2 and linked_from a.org/, so
+#: c.org/1 stays past max_depth), b.org/ is crawled twice (n_crawls
+#: must reach 2), and seeds arrive between POSTs
+GROUP_COMMIT_OPS = [
+    ("seeds", ["https://a.org/", "https://b.org/"]),
+    ("get", 2),
+    ("post", "https://a.org/", [("https://a.org/1", 0.9), ("https://c.org/", 0.5)]),
+    ("post", "https://c.org/", [("https://c.org/1", 0.7)]),
+    ("post", "https://b.org/", [("https://b.org/1", 0.8), ("https://a.org/1", 0.2)]),
+    ("post", "https://b.org/", [("https://b.org/2", 0.6)]),
+    ("seeds", ["https://d.org/"]),
+    ("post", "https://a.org/1", [("https://d.org/1", 0.3)]),
+    ("get", 3),
+    ("post", "https://d.org/", [("https://d.org/1", 0.4), ("https://e.org/", 0.1)]),
+    ("get", 5),
+]
+
+
+def test_backend_group_commit_matches_one_at_a_time(spark):
+    """Group commit in Backend leaves the page state, schedule and pop
+    order of ingesting every page alone through
+    ``scheduler.add(page_db.page_batch(p))`` — with a depth gate and a
+    crawl rate armed."""
+    from aduana_spark.api import Backend, CrawledPage
+
+    def rows(df):
+        return df.orderBy(*df.columns).collect()
+
+    def drive(b, post):
+        b.scheduler.set_crawl_rate(1.0, 4.0)
+        gets = []
+        for op, *args in GROUP_COMMIT_OPS:
+            if op == "seeds":
+                b.add_seeds(*args)
+            elif op == "get":
+                gets.append(b.get_next_requests(*args))
+            else:
+                post(b, *args)
+        return gets
+
+    def post_alone(b, url, links):
+        b.scheduler.add(b.page_db.page_batch(CrawledPage(url, links)))
+
+    grouped, single = Backend(spark, max_depth=2), Backend(spark, max_depth=2)
+    got = drive(grouped, Backend.page_crawled)
+    assert got == drive(single, post_alone)
+    # c.org/1 and d.org/1 sit at depth 3, past max_depth
+    assert got == [
+        ["https://b.org/", "https://a.org/"],
+        ["https://d.org/", "https://b.org/1", "https://b.org/2"],
+        ["https://e.org/"],
+    ]
+    assert rows(grouped.page_db.page_info) == rows(single.page_db.page_info)
+    assert rows(grouped.scheduler.schedule) == rows(single.scheduler.schedule)
+
+
+def test_backend_commit_buffer_bounded(spark, monkeypatch):
+    """At MAX_PENDING buffered pages, page_crawled commits inline."""
+    from aduana_spark.api import Backend
+
+    monkeypatch.setattr(Backend, "MAX_PENDING", 3)
+    b = Backend(spark)
+    urls = [f"https://s{i}.org/" for i in range(7)]
+    held = []
+    for u in urls:
+        b.page_crawled(u, [(u + "x", 0.5)])
+        held.append(len(b._pending))
+    assert max(held) <= 3
+    b.flush()
+    crawled = b.page_db.page_info.where(F.col("n_crawls") == 1).select("url")
+    assert sorted(r["url"] for r in crawled.collect()) == urls
+
+
+def test_backend_concurrent_posts_lose_nothing(spark, monkeypatch):
+    """Posting threads racing the inline commits: every page lands."""
+    import sys
+    import threading
+
+    from aduana_spark.api import Backend
+
+    monkeypatch.setattr(Backend, "MAX_PENDING", 16)
+    b = Backend(spark)
+    urls = [[f"https://t{t}.org/{i}" for i in range(10)] for t in range(8)]
+
+    def post(mine):
+        for u in mine:
+            b.page_crawled(u, [("https://hub.org/", 0.1)])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=post, args=(m,)) for m in urls]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    b.flush()
+    crawled = b.page_db.page_info.where(F.col("n_crawls") == 1).select("url")
+    assert sorted(r["url"] for r in crawled.collect()) == sorted(sum(urls, []))
+
+
 def test_freq_serving_ratios(spark):
     """Statistical property (reference test_freq_scheduler.py:6-55):
     long-run serve counts per page are proportional to the page's

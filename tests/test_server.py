@@ -7,6 +7,8 @@ import json
 import urllib.error
 import urllib.request
 
+import pytest
+
 
 def _post(base: str, payload: bytes):
     req = urllib.request.Request(
@@ -51,3 +53,30 @@ def test_rest_server_loopback(spark):
             raise AssertionError("expected 400")
         except urllib.error.HTTPError as e:
             assert e.code == 400 and b'"url" field' in e.read()
+
+
+def test_rest_server_backend_error_answers_500(spark):
+    """A failed group commit surfaces on the GET that ran it as 500
+    with a plain-text ERROR body naming the lost buffered pages; the
+    server keeps serving afterwards."""
+    from aduana_spark.api import Backend
+    from aduana_spark.server import AduanaServer
+
+    backend = Backend(spark)
+
+    def fail(batch):
+        raise OSError("disk full")
+
+    backend.scheduler.add = fail
+    with AduanaServer(backend) as srv:
+        for url in ("https://a.org/", "https://b.org/"):
+            assert _post(srv.url, json.dumps({"url": url}).encode()).status == 201
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"{srv.url}/request", timeout=30)
+        body = err.value.read()
+        assert err.value.code == 500
+        assert body.startswith(b"ERROR: ") and b"2 buffered pages" in body
+        assert b"disk full" in body
+        del backend.scheduler.add
+        got = json.loads(urllib.request.urlopen(f"{srv.url}/request", timeout=30).read())
+        assert got == []
