@@ -19,54 +19,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from aduana_spark.graph.pagerank import _derived_superstep_partitions
+from aduana_spark.graph.superstep import SuperstepLoop
 
 
 def bfs_depths(
     edges: DataFrame, seeds: DataFrame, max_depth: int | None = None
 ) -> DataFrame:
     """Shortest-path depth from ``seeds`` (DataFrame with column
-    ``id``). Returns (id, depth) for reachable vertices only."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").repartition(F.col("src")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_edges = e.count()
-
-    # scale-adaptive loop width (pagerank._derived_superstep_partitions):
-    # narrow the per-superstep exchanges for small graphs; session value
-    # restored at exit, the cached E-row layout above is untouched
-    restore_parts: str | None = None
-    dp = _derived_superstep_partitions(spark, n_edges)
-    if dp:
-        restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-    state = seeds.select("id", F.lit(0).alias("depth")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    frontier = state
-    depth = 0
-    while True:
-        depth += 1
-        if max_depth is not None and depth > max_depth:
-            break
-        reached = (
-            e.join(frontier.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = (
-            reached.join(state.select("id"), "id", "left_anti")
-            .select("id", F.lit(depth).alias("depth"))
-            .localCheckpoint()  # materialize + truncate lineage
-        )
-        if new_frontier.count() == 0:
-            break
-        new_state = state.unionAll(new_frontier).localCheckpoint()
-        state.unpersist()
-        state, frontier = new_state, new_frontier
-    if restore_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-    return state
+    ``id``). Returns (id, depth) for reachable vertices only. Each
+    superstep's delta is the number of vertices it reached."""
+    with SuperstepLoop(edges.sparkSession, "bfs") as loop:
+        e = loop.edge_cache(edges, "src")
+        loop.narrow()
+        state = loop.cache(seeds.select("id", F.lit(0).alias("depth")), supersteps=1)
+        frontier = state
+        for depth in loop.supersteps(max_depth):
+            reached = (
+                e.join(frontier.select(F.col("id").alias("src")), "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+            )
+            frontier = (
+                reached.join(state.select("id"), "id", "left_anti")
+                .select("id", F.lit(depth).alias("depth"))
+                .localCheckpoint()  # materialize + truncate lineage
+            )
+            n_new = frontier.count()
+            if n_new:
+                state = state.unionAll(frontier).localCheckpoint()
+            loop.end(state, n_new, n_new == 0)
+        return state

@@ -24,18 +24,11 @@ reference-shaped default because crawl graphs are shallow.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from aduana_spark.graph.checkpoint import CheckpointManager
-from aduana_spark.graph.pagerank import (
-    IterativeResult,
-    SuperstepMetrics,
-    _derived_superstep_partitions,
-)
+from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -44,6 +37,27 @@ def symmetrize(edges: DataFrame) -> DataFrame:
         edges.select("src", "dst")
         .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .dropDuplicates(["src", "dst"])
+    )
+
+
+def _candidate(sym: DataFrame, state: DataFrame, frontier: DataFrame) -> DataFrame:
+    """One min-propagation superstep: the frontier's labels sent along
+    ``sym``, min-aggregated per receiver → (id, old, component)."""
+    msgs = (
+        sym.join(
+            frontier.select(F.col("id").alias("src"), F.col("component").alias("c")),
+            "src",
+        )
+        .groupBy("dst")
+        .agg(F.min("c").alias("nbr_min"))
+        .withColumnRenamed("dst", "id")
+    )
+    return state.join(msgs, "id", "left").select(
+        "id",
+        F.col("component").alias("old"),
+        F.least("component", F.coalesce("nbr_min", F.col("component"))).alias(
+            "component"
+        ),
     )
 
 
@@ -77,116 +91,50 @@ def connected_components(
             resume=resume,
         )
     spark = edges.sparkSession
-    ckpt = (
-        CheckpointManager(checkpoint, "components")
-        if isinstance(checkpoint, str)
-        else checkpoint
-    )
-    sym = (
-        symmetrize(edges)
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")  # cached sort order → SMJ never re-sorts E
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = sym.count()
-
-    # scale-adaptive loop width (pagerank._derived_superstep_partitions):
-    # narrow per-superstep exchanges for small graphs, session value
-    # restored at exit; the cached E-row layout above is untouched
-    restore_parts: str | None = None
-    dp = _derived_superstep_partitions(spark, n_edges)
-    if dp:
-        restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-
-    verts = (
-        sym.select(F.col("src").alias("id"))
-        .unionAll(sym.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    start_iter = 0
-    if resume and ckpt is not None and ckpt.latest() is not None:
-        start_iter = ckpt.latest()
-        prev = ckpt.load(spark, start_iter).select("id", "component")
-        # vertices unseen by the shard (graph growth) start at their
-        # own id — monotone labels make the merge restart-safe
-        state = verts.join(prev, "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
+    with SuperstepLoop(spark, "components", checkpoint, checkpoint_interval) as loop:
+        sym = loop.edge_cache(symmetrize(edges), "src")
+        loop.narrow()
+        verts = (
+            sym.select(F.col("src").alias("id"))
+            .unionAll(sym.select(F.col("dst").alias("id")))
+            .distinct()
         )
-    else:
-        state = verts.select("id", F.col("id").alias("component"))
-    # no explicit repartition: both branches are hash-partitioned by id
-    # already (distinct / equi-join output)
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = state.count()
-
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    it = start_iter
-    # Delta propagation: a vertex only needs to (re)send its label after
-    # the superstep in which that label changed — a label already
-    # delivered to a neighbor was folded into the neighbor's (monotone,
-    # non-increasing) label, so messages from unchanged vertices are
-    # ≥ the receiver's current label and can never win the min. The
-    # per-superstep labels (and therefore the changed-count convergence
-    # test) are IDENTICAL to the broadcast-from-everyone formulation;
-    # what shrinks is the E-row join output and the groupBy shuffle,
-    # which decay with the frontier instead of staying O(E) for every
-    # superstep. Superstep 1 sends from every vertex (initial labels
-    # are unseen); after a resume the first superstep also sends from
-    # everyone — monotonicity makes the extra messages harmless.
-    frontier = state
-    for it in range(start_iter + 1, start_iter + max_iters + 1):
-        t0 = time.time()
-        msgs = (
-            sym.join(
-                frontier.select(
-                    F.col("id").alias("src"), F.col("component").alias("c")
-                ),
-                "src",
+        prev = loop.resume(resume)
+        if prev is not None:
+            # vertices unseen by the shard (graph growth) start at their
+            # own id — monotone labels make the merge restart-safe
+            state = verts.join(prev.select("id", "component"), "id", "left").select(
+                "id", F.coalesce("component", F.col("id")).alias("component")
             )
-            .groupBy("dst")
-            .agg(F.min("c").alias("nbr_min"))
-            .withColumnRenamed("dst", "id")
-        )
-        cand = state.join(msgs, "id", "left").select(
-            "id",
-            F.col("component").alias("old"),
-            F.least(
-                "component", F.coalesce("nbr_min", F.col("component"))
-            ).alias("component"),
-        ).localCheckpoint(eager=False)  # truncated; next action materializes
-        changed = cand.where(F.col("component") != F.col("old")).count()
-        new_state = cand.select("id", "component")
-        frontier = cand.where(F.col("component") != F.col("old")).select(
-            "id", "component"
-        )
-        wall = time.time() - t0
-        metrics.append(
-            SuperstepMetrics(it, float(changed), wall, n_edges, n_edges / max(wall, 1e-9))
-        )
-        converged = changed == 0
-        if ckpt is not None and (it % checkpoint_interval == 0 or converged):
-            new_state = ckpt.save(
-                it,
-                new_state,
-                {"algo": "components", "changed": changed, "wall_sec": wall},
-            )
-        state.unpersist()
-        state = new_state
-        if converged:
-            break
+        else:
+            state = verts.select("id", F.col("id").alias("component"))
+        # no explicit repartition: both branches are hash-partitioned by id
+        # already (distinct / equi-join output)
+        state = loop.cache(state, supersteps=1)
+        loop.n_vertices = state.count()
 
-    if restore_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-    return IterativeResult(
-        ranks=state,
-        converged=converged,
-        n_iterations=it - start_iter,
-        n_vertices=n_vertices,
-        n_edges=n_edges,
-        metrics=metrics,
-    )
+        # Delta propagation: a vertex only needs to (re)send its label after
+        # the superstep in which that label changed — a label already
+        # delivered to a neighbor was folded into the neighbor's (monotone,
+        # non-increasing) label, so messages from unchanged vertices are
+        # ≥ the receiver's current label and can never win the min. The
+        # per-superstep labels (and therefore the changed-count convergence
+        # test) are IDENTICAL to the broadcast-from-everyone formulation;
+        # what shrinks is the E-row join output and the groupBy shuffle,
+        # which decay with the frontier instead of staying O(E) for every
+        # superstep. Superstep 1 sends from every vertex (initial labels
+        # are unseen); after a resume the first superstep also sends from
+        # everyone — monotonicity makes the extra messages harmless.
+        frontier = state
+        for _ in loop.supersteps(max_iters):
+            # truncated; the changed count below materializes it
+            cand = _candidate(sym, state, frontier).localCheckpoint(eager=False)
+            frontier = cand.where(F.col("component") != F.col("old")).select(
+                "id", "component"
+            )
+            changed = frontier.count()
+            state = loop.end(cand.select("id", "component"), changed, changed == 0)
+        return loop.result(state)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -221,6 +169,15 @@ def _small_star(directed: DataFrame) -> DataFrame:
     )
 
 
+def _signature(df: DataFrame) -> tuple[int, int]:
+    """Order-insensitive (count, xor-hash) of an edge list."""
+    r = df.agg(
+        F.count("*").alias("n"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+    ).first()
+    return (r["n"], r["h"])
+
+
 def connected_components_two_phase(
     edges: DataFrame,
     max_iters: int = 40,
@@ -247,89 +204,45 @@ def connected_components_two_phase(
     to the uninterrupted run because the round transform is
     deterministic. The vertex set is always recomputed from the input
     ``edges`` (isolated vertices never enter the star forest)."""
-    import time as _time
-
     spark = edges.sparkSession
-    ckpt = (
-        CheckpointManager(checkpoint, "components_two_phase")
-        if isinstance(checkpoint, str)
-        else checkpoint
-    )
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionAll(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_vertices = verts.count()
-    cur = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    n_edges = cur.count()
-
-    def _sig(df: DataFrame):
-        r = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
-
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    prev_sig = None
-    start_iter = 0
-    if resume and ckpt is not None and ckpt.latest() is not None:
-        start_iter = ckpt.latest()
-        cur = ckpt.load(spark, start_iter).select("src", "dst")
-        man = ckpt.manifest(start_iter)
-        if "sig_n" in man:
-            prev_sig = (man["sig_n"], man["sig_h"])
-    it = start_iter
-    for it in range(start_iter + 1, start_iter + max_iters + 1):
-        t0 = _time.time()
-        sym = cur.unionAll(
-            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with SuperstepLoop(
+        spark, "components_two_phase", checkpoint, checkpoint_interval
+    ) as loop:
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .unionAll(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-        after_large = _large_star(sym)
-        cur = _small_star(after_large).localCheckpoint(eager=False)
-        sig = _sig(cur)
-        wall = _time.time() - t0
-        metrics.append(
-            SuperstepMetrics(it, float(sig[0]), wall, n_edges, n_edges / max(wall, 1e-9))
+        loop.n_vertices = verts.count()
+        cur = (
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .dropDuplicates(["src", "dst"])
+            .localCheckpoint(eager=False)
         )
-        if sig == prev_sig:
-            converged = True
-        if ckpt is not None and (
-            it % checkpoint_interval == 0 or converged or it == start_iter + max_iters
-        ):
-            cur = ckpt.save(
-                it,
-                cur,
-                {
-                    "algo": "components_two_phase",
-                    "sig_n": sig[0],
-                    "sig_h": sig[1],
-                    "wall_sec": wall,
-                },
+        loop.n_edges = cur.count()
+
+        prev_sig = None
+        shard = loop.resume(resume)
+        if shard is not None:
+            cur = shard.select("src", "dst")
+            man = loop.ckpt.manifest(loop.start_iter)
+            if "sig_n" in man:
+                prev_sig = (man["sig_n"], man["sig_h"])
+        for _ in loop.supersteps(max_iters):
+            sym = cur.unionAll(
+                cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-        if converged:
-            break
-        prev_sig = sig
+            cur = _small_star(_large_star(sym)).localCheckpoint(eager=False)
+            sig = _signature(cur)
+            cur = loop.end(cur, sig[0], sig == prev_sig, sig_n=sig[0], sig_h=sig[1])
+            prev_sig = sig
 
-    # stable star forest: cur maps v → root; isolated vertices map to self
-    comp = verts.join(
-        cur.select(F.col("src").alias("id"), F.col("dst").alias("component")),
-        "id",
-        "left",
-    ).select("id", F.coalesce("component", F.col("id")).alias("component"))
-    return IterativeResult(
-        ranks=comp,
-        converged=converged,
-        n_iterations=it - start_iter,
-        n_vertices=n_vertices,
-        n_edges=n_edges,
-        metrics=metrics,
-    )
+        # stable star forest: cur maps v → root; isolated vertices map to self
+        comp = verts.join(
+            cur.select(F.col("src").alias("id"), F.col("dst").alias("component")),
+            "id",
+            "left",
+        ).select("id", F.coalesce("component", F.col("id")).alias("component"))
+        return loop.result(comp)

@@ -26,20 +26,66 @@ aggregation; state persisted per iteration, checkpointed every
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from aduana_spark.graph.checkpoint import CheckpointManager
-from aduana_spark.graph.pagerank import (
-    ConvergenceError,
-    IterativeResult,
-    SuperstepMetrics,
-    _derived_superstep_partitions,
-    _resolve_partitions,
-)
+from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop
+
+
+def _vertices(
+    edges: DataFrame, scores: DataFrame | None, vertices: DataFrame | None
+) -> DataFrame:
+    """(id, score) over the vertex universe; score 1.0 without content
+    scores."""
+    if vertices is None:
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .unionAll(edges.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+    else:
+        verts = vertices.select("id").distinct()
+    if scores is None:
+        return verts.withColumn("score", F.lit(1.0))
+    return verts.join(scores.select("id", "score"), "id", "left").select(
+        "id", F.coalesce("score", F.lit(0.0)).alias("score")
+    )
+
+
+def _candidate(
+    edges_by_src: DataFrame, edges_by_dst: DataFrame, state: DataFrame, weighted: bool
+) -> DataFrame:
+    """One Jacobi superstep's two E-row joins + Σ aggregates:
+    (id, score, old_hub, old_auth, hub_raw, auth_raw)."""
+    # hub messages: weight of edge f→t is (score[t] *) a1[t]
+    am = (F.col("score") * F.col("auth")) if weighted else F.col("auth")
+    a_side = state.select(F.col("id").alias("dst"), am.alias("am"))
+    hub_raw = (
+        edges_by_dst.join(a_side, "dst").groupBy("src").agg(F.sum("am").alias("hub_raw"))
+    )
+    # authority messages: h1[f]
+    h_side = state.select(F.col("id").alias("src"), F.col("hub").alias("hm"))
+    auth_raw = (
+        edges_by_src.join(h_side, "src").groupBy("dst").agg(F.sum("hm").alias("auth_raw"))
+    )
+    return (
+        state.join(hub_raw.withColumnRenamed("src", "id"), "id", "left")
+        .join(auth_raw.withColumnRenamed("dst", "id"), "id", "left")
+        .select(
+            "id",
+            "score",
+            F.col("hub").alias("old_hub"),
+            F.col("auth").alias("old_auth"),
+            F.coalesce("hub_raw", F.lit(0.0)).alias("hub_raw"),
+            F.coalesce("auth_raw", F.lit(0.0)).alias("auth_raw"),
+        )
+    )
+
+
+def _sums(cand: DataFrame) -> DataFrame:
+    """The L1 normalizers Σ hub_raw and Σ auth_raw."""
+    return cand.agg(F.sum("hub_raw").alias("hs"), F.sum("auth_raw").alias("as_"))
 
 
 def hits(
@@ -51,184 +97,62 @@ def hits(
     checkpoint: CheckpointManager | str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    salt_buckets: int | None = None,
-    shuffle_partitions=None,
     strict: bool = False,
 ) -> IterativeResult:
     """HITS hub/authority over (src LONG, dst LONG). Returns ranks
     DataFrame (id, hub, auth)."""
     spark = edges.sparkSession
-    ckpt = (
-        CheckpointManager(checkpoint, "hits") if isinstance(checkpoint, str) else checkpoint
-    )
+    with SuperstepLoop(spark, "hits", checkpoint, checkpoint_interval) as loop:
+        # two cached copies, each pre-partitioned AND pre-sorted on its
+        # join key (hub messages join on dst, authority messages on src)
+        edges_by_src = loop.edge_cache(edges, "src")
+        edges_by_dst = loop.edge_cache(edges, "dst")
+        # no explicit repartition: hash-partitioned by id already
+        # (distinct / equi-join output)
+        verts = loop.cache(_vertices(edges_by_src, scores, vertices))
+        loop.n_vertices = verts.count()
 
-    # two cached copies, each pre-partitioned AND pre-sorted on its join
-    # key (hub messages join on dst, authority messages on src) — the
-    # per-superstep SortMergeJoins then sort only the V-row state sides
-    edges_by_src = (
-        edges.select("src", "dst")
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges_by_dst = (
-        edges.select("src", "dst")
-        .repartition(F.col("dst"))
-        .sortWithinPartitions("dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges = edges_by_src
-    n_edges = edges.count()
-    edges_by_dst.count()
-
-    # scale-adaptive loop width (see pagerank._derived_superstep_partitions):
-    # narrow the per-superstep exchanges for small graphs; session value
-    # restored at exit, E-row edge caches stay at the session layout
-    restore_parts: str | None = None
-    if shuffle_partitions is None:
-        dp = _derived_superstep_partitions(spark, n_edges)
-        if dp:
-            restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            shuffle_partitions = dp
-
-    def _restore() -> None:
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-
-    if vertices is None:
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionAll(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    else:
-        verts = vertices.select("id").distinct()
-    if scores is not None:
-        verts = verts.join(scores.select("id", "score"), "id", "left").select(
-            "id", F.coalesce("score", F.lit(0.0)).alias("score")
-        )
-    else:
-        verts = verts.withColumn("score", F.lit(1.0))
-    # no explicit repartition: hash-partitioned by id already
-    # (distinct / equi-join output)
-    verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = verts.count()
-
-    start_iter = 0
-    if resume and ckpt is not None and ckpt.latest() is not None:
-        start_iter = ckpt.latest()
-        state = ckpt.load(spark, start_iter)
-    else:
-        state = verts.select(
-            "id",
-            "score",
-            F.lit(1.0 / n_vertices).alias("hub"),
-            F.lit(1.0 / n_vertices).alias("auth"),
-        )
-    cache = state.persist(StorageLevel.MEMORY_AND_DISK)
-    state = cache
-
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    it = start_iter
-    for it in range(start_iter + 1, start_iter + max_iters + 1):
-        t0 = time.time()
-        parts = _resolve_partitions(spark, shuffle_partitions, it, n_edges)
-        if parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-
-        # hub messages: weight of edge f→t is (score[t] *) a1[t]
-        am = (F.col("score") * F.col("auth")) if scores is not None else F.col("auth")
-        a_side = state.select(F.col("id").alias("dst"), am.alias("am"))
-        hub_raw = (
-            edges_by_dst.join(a_side, "dst")
-            .groupBy("src")
-            .agg(F.sum("am").alias("hub_raw"))
-        )
-        # authority messages: h1[f]
-        h_side = state.select(F.col("id").alias("src"), F.col("hub").alias("hm"))
-        auth_raw = (
-            edges_by_src.join(h_side, "src")
-            .groupBy("dst")
-            .agg(F.sum("hm").alias("auth_raw"))
-        )
-
-        cand = (
-            state.join(hub_raw.withColumnRenamed("src", "id"), "id", "left")
-            .join(auth_raw.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
+        state = loop.resume(resume)
+        if state is None:
+            state = verts.select(
                 "id",
                 "score",
-                F.col("hub").alias("old_hub"),
-                F.col("auth").alias("old_auth"),
-                F.coalesce("hub_raw", F.lit(0.0)).alias("hub_raw"),
-                F.coalesce("auth_raw", F.lit(0.0)).alias("auth_raw"),
+                F.lit(1.0 / loop.n_vertices).alias("hub"),
+                F.lit(1.0 / loop.n_vertices).alias("auth"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # Job 1 (the only one touching the E-row joins): materialize cand
-        # into the cache while collecting the L1 sums
-        sums = cand.agg(
-            F.sum("hub_raw").alias("hs"), F.sum("auth_raw").alias("as_")
-        ).first()
-        hub_sum = sums["hs"] or 1.0
-        auth_sum = sums["as_"] or 1.0
-        new_state_full = cand.select(
-            "id",
-            "score",
-            "old_hub",
-            "old_auth",
-            (F.col("hub_raw") / F.lit(hub_sum)).alias("hub"),
-            (F.col("auth_raw") / F.lit(auth_sum)).alias("auth"),
-        )
-        # materialize + truncate logical lineage (see pagerank.py note)
-        new_state_full = new_state_full.localCheckpoint(eager=False)
-        delta = new_state_full.agg(
-            F.max(
-                F.greatest(
-                    F.abs(F.col("hub") - F.col("old_hub")),
-                    F.abs(F.col("auth") - F.col("old_auth")),
+        state = loop.cache(state, supersteps=1)
+        loop.narrow()
+
+        for _ in loop.supersteps(max_iters):
+            cand = loop.cache(
+                _candidate(edges_by_src, edges_by_dst, state, scores is not None),
+                supersteps=0,
+            )
+            # Job 1 (the only one touching the E-row joins): materialize
+            # cand into the cache while collecting the L1 sums
+            sums = _sums(cand).first()
+            hub_sum = sums["hs"] or 1.0
+            auth_sum = sums["as_"] or 1.0
+            # materialize + truncate logical lineage (see pagerank.py note)
+            new_state_full = cand.select(
+                "id",
+                "score",
+                "old_hub",
+                "old_auth",
+                (F.col("hub_raw") / F.lit(hub_sum)).alias("hub"),
+                (F.col("auth_raw") / F.lit(auth_sum)).alias("auth"),
+            ).localCheckpoint(eager=False)
+            delta = new_state_full.agg(
+                F.max(
+                    F.greatest(
+                        F.abs(F.col("hub") - F.col("old_hub")),
+                        F.abs(F.col("auth") - F.col("old_auth")),
+                    )
                 )
+            ).first()[0]
+            state = loop.end(
+                new_state_full.select("id", "score", "hub", "auth"),
+                delta,
+                delta <= precision,
             )
-        ).first()[0]
-        new_state = new_state_full.select("id", "score", "hub", "auth")
-
-        wall = time.time() - t0
-        metrics.append(
-            SuperstepMetrics(it, float(delta), wall, n_edges, n_edges / max(wall, 1e-9))
-        )
-        converged = delta <= precision
-
-        if ckpt is not None and (
-            it % checkpoint_interval == 0 or converged or it == start_iter + max_iters
-        ):
-            new_state = ckpt.save(
-                it,
-                new_state,
-                {
-                    "algo": "hits",
-                    "delta": float(delta),
-                    "wall_sec": wall,
-                    "edges": n_edges,
-                    "vertices": n_vertices,
-                    "converged": converged,
-                },
-            )
-        cache.unpersist()
-        cand.unpersist()
-        cache = new_state_full
-        state = new_state
-        if converged:
-            break
-
-    _restore()
-    if not converged and strict:
-        raise ConvergenceError(f"hits did not reach {precision} in {max_iters} iterations")
-    return IterativeResult(
-        ranks=state.select("id", "hub", "auth"),
-        converged=converged,
-        n_iterations=it - start_iter,
-        n_vertices=n_vertices,
-        n_edges=n_edges,
-        metrics=metrics,
-    )
+        return loop.result(state.select("id", "hub", "auth"), strict, precision)

@@ -15,19 +15,32 @@ Superstep = join + two aggregations, all map-side combinable:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from aduana_spark.graph.checkpoint import CheckpointManager
 from aduana_spark.graph.components import symmetrize
-from aduana_spark.graph.pagerank import (
-    IterativeResult,
-    SuperstepMetrics,
-    _derived_superstep_partitions,
-)
+from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop
+
+
+def _candidate(sym: DataFrame, state: DataFrame) -> DataFrame:
+    """One superstep's label counts and mode per vertex →
+    (id, old, label)."""
+    counts = (
+        sym.join(state.select(F.col("id").alias("src"), F.col("label").alias("l")), "src")
+        .groupBy("dst", "l")
+        .agg(F.count("*").alias("cnt"))
+    )
+    best = (
+        counts.groupBy("dst")
+        .agg(F.max(F.struct(F.col("cnt"), (-F.col("l")).alias("nl"))).alias("b"))
+        .select(F.col("dst").alias("id"), (-F.col("b.nl")).alias("new_label"))
+    )
+    return state.join(best, "id", "left").select(
+        "id",
+        F.col("label").alias("old"),
+        F.coalesce("new_label", F.col("label")).alias("label"),
+    )
 
 
 def label_propagation(
@@ -43,96 +56,27 @@ def label_propagation(
     a deterministic function of the previous label vector, so resuming
     from shard K reproduces the uninterrupted trajectory exactly)."""
     spark = edges.sparkSession
-    ckpt = (
-        CheckpointManager(checkpoint, "labelprop")
-        if isinstance(checkpoint, str)
-        else checkpoint
-    )
-    sym = (
-        (edges.select("src", "dst") if directed else symmetrize(edges))
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")  # cached sort order → SMJ never re-sorts E
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = sym.count()
-
-    # scale-adaptive loop width (pagerank._derived_superstep_partitions):
-    # narrow the per-superstep exchanges for small graphs; session value
-    # restored at exit, the cached E-row layout above is untouched
-    restore_parts: str | None = None
-    dp = _derived_superstep_partitions(spark, n_edges)
-    if dp:
-        restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-
-    verts = (
-        sym.select(F.col("src").alias("id"))
-        .unionAll(sym.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    start_iter = 0
-    if resume and ckpt is not None and ckpt.latest() is not None:
-        start_iter = ckpt.latest()
-        prev = ckpt.load(spark, start_iter).select("id", "label")
-        state = verts.join(prev, "id", "left").select(
-            "id", F.coalesce("label", F.col("id")).alias("label")
+    with SuperstepLoop(spark, "labelprop", checkpoint, checkpoint_interval) as loop:
+        sym = loop.edge_cache(edges if directed else symmetrize(edges), "src")
+        loop.narrow()
+        verts = (
+            sym.select(F.col("src").alias("id"))
+            .unionAll(sym.select(F.col("dst").alias("id")))
+            .distinct()
         )
-    else:
-        state = verts.select("id", F.col("id").alias("label"))
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = state.count()
-
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    it = start_iter
-    for it in range(start_iter + 1, start_iter + max_iters + 1):
-        t0 = time.time()
-        counts = (
-            sym.join(
-                state.select(F.col("id").alias("src"), F.col("label").alias("l")),
-                "src",
+        prev = loop.resume(resume)
+        if prev is not None:
+            state = verts.join(prev.select("id", "label"), "id", "left").select(
+                "id", F.coalesce("label", F.col("id")).alias("label")
             )
-            .groupBy("dst", "l")
-            .agg(F.count("*").alias("cnt"))
-        )
-        best = (
-            counts.groupBy("dst")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("l")).alias("nl"))).alias("b"))
-            .select(F.col("dst").alias("id"), (-F.col("b.nl")).alias("new_label"))
-        )
-        cand = state.join(best, "id", "left").select(
-            "id",
-            F.col("label").alias("old"),
-            F.coalesce("new_label", F.col("label")).alias("label"),
-        ).localCheckpoint(eager=False)  # truncated; next action materializes
-        changed = cand.where(F.col("label") != F.col("old")).count()
-        state.unpersist()
-        state = cand.select("id", "label")
-        wall = time.time() - t0
-        metrics.append(
-            SuperstepMetrics(it, float(changed), wall, n_edges, n_edges / max(wall, 1e-9))
-        )
-        converged = changed == 0
-        if ckpt is not None and (
-            it % checkpoint_interval == 0
-            or converged
-            or it == start_iter + max_iters
-        ):
-            state = ckpt.save(
-                it,
-                state,
-                {"algo": "labelprop", "changed": changed, "wall_sec": wall},
-            )
-        if converged:
-            break
+        else:
+            state = verts.select("id", F.col("id").alias("label"))
+        state = loop.cache(state, supersteps=1)
+        loop.n_vertices = state.count()
 
-    if restore_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-    return IterativeResult(
-        ranks=state,
-        converged=converged,
-        n_iterations=it - start_iter,
-        n_vertices=n_vertices,
-        n_edges=n_edges,
-        metrics=metrics,
-    )
+        for _ in loop.supersteps(max_iters):
+            # truncated; the changed count below materializes it
+            cand = _candidate(sym, state).localCheckpoint(eager=False)
+            changed = cand.where(F.col("label") != F.col("old")).count()
+            state = loop.end(cand.select("id", "label"), changed, changed == 0)
+        return loop.result(state)

@@ -42,97 +42,89 @@ Spark execution per superstep (designed for ~10^12-edge tables):
 - every ``checkpoint_interval`` iterations the state is additionally
   written as a parquet shard + manifest (delta, wall, edges/sec),
   enabling durable mid-iteration resume.
-- AQE handles runtime skew splitting and partition coalescing;
-  ``shuffle_partitions`` may be an int or a
-  ``f(iteration, n_edges) -> int`` policy applied per superstep.
+- AQE handles runtime skew splitting and partition coalescing; the
+  loop narrows the session's shuffle width for small graphs
+  (``graph.superstep``).
 """
 
 from __future__ import annotations
 
-import os
-import time
-from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from aduana_spark.graph.builder import out_degrees
 from aduana_spark.graph.checkpoint import CheckpointManager
+from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop, SuperstepMetrics
 
 
-class ConvergenceError(RuntimeError):
-    """Raised in strict mode when max_iters is hit without convergence
-    (mirrors page_rank_error_precision, page_rank.c:431-436)."""
+def _vertex_state(
+    edges: DataFrame, scores: DataFrame | None, vertices: DataFrame | None
+) -> tuple[DataFrame, float]:
+    """Static vertex state (id, deg, score) and the teleport score
+    total."""
+    if vertices is None:
+        # fused vertex-set + out-degree pass: tag each endpoint row with
+        # its degree contribution (src rows 1, dst/score rows 0) and
+        # groupBy-sum once — ONE map-side-combinable shuffle over the 2E
+        # endpoint rows replaces the former distinct-over-2E shuffle +
+        # groupBy-over-E shuffle + vertex⋈degree join (deg values are
+        # identical: Σ marks = #src occurrences, 0 for dangling)
+        marks = edges.select(F.col("src").alias("id"), F.lit(1).alias("_m")).unionAll(
+            edges.select(F.col("dst").alias("id"), F.lit(0).alias("_m"))
+        )
+        if scores is not None:
+            marks = marks.unionAll(scores.select("id", F.lit(0).alias("_m")))
+        vstate = marks.groupBy("id").agg(F.sum("_m").alias("deg"))
+    else:
+        vstate = vertices.select("id").distinct().join(
+            out_degrees(edges), "id", "left"
+        ).select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
+    if scores is None:
+        return vstate.withColumn("score", F.lit(0.0)), 1.0
+    vstate = vstate.join(scores.select("id", "score"), "id", "left").select(
+        "id", "deg", F.coalesce(F.col("score").cast("double"), F.lit(0.0)).alias("score")
+    )
+    # a zero total falls back to 1.0 (page_rank.c:204-206)
+    return vstate, scores.agg(F.sum("score")).first()[0] or 1.0
 
 
-@dataclass
-class SuperstepMetrics:
-    iteration: int
-    delta: float
-    wall_sec: float
-    edges: int
-    edges_per_sec: float
-    #: time.monotonic() at superstep end — lets external CPU samplers
-    #: (bench.py's per-superstep steal attribution) map samples onto
-    #: REAL superstep windows instead of reconstructing them
-    #: back-to-back from walls, which misattributes any non-superstep
-    #: tail work inside the loop
-    end_monotonic: float = 0.0
+def _candidate(
+    edges: DataFrame, state: DataFrame, damping: float, salt_buckets: int | None
+) -> DataFrame:
+    """One superstep's E-row join + Σ aggregate: (id, deg, score,
+    old_rank, raw) with raw = damping · Σ in-link messages."""
+    # dangling vertices (deg=0) emit nothing — their mass lands in rem
+    msg_src = state.where(F.col("deg") > 0).select(
+        F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m")
+    )
+    joined = edges.join(msg_src, "src")
+    if salt_buckets and salt_buckets > 1:
+        # two-phase salted aggregation for pathological hub keys
+        partial = joined.groupBy(
+            "dst", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)).alias("_salt")
+        ).agg(F.sum("m").alias("pm"))
+        contrib = partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("raw"))
+    else:
+        contrib = joined.groupBy("dst").agg((F.lit(damping) * F.sum("m")).alias("raw"))
+    return state.join(contrib.withColumnRenamed("dst", "id"), "id", "left").select(
+        "id",
+        "deg",
+        "score",
+        F.col("rank").alias("old_rank"),
+        F.coalesce("raw", F.lit(0.0)).alias("raw"),
+    )
 
 
-@dataclass
-class IterativeResult:
-    ranks: DataFrame
-    converged: bool
-    n_iterations: int
-    n_vertices: int
-    n_edges: int
-    metrics: list[SuperstepMetrics] = field(default_factory=list)
-
-    @property
-    def deltas(self) -> list[float]:
-        return [m.delta for m in self.metrics]
-
-
-def _resolve_partitions(spark, shuffle_partitions, iteration, n_edges) -> int | None:
-    if shuffle_partitions is None:
-        return None
-    if callable(shuffle_partitions):
-        return int(shuffle_partitions(iteration, n_edges))
-    return int(shuffle_partitions)
-
-
-#: target E-rows per superstep task. (src,dst,msg) rows are ~16-24 B, so
-#: 100k rows ≈ 2 MB — enough real work to amortize the per-task overhead
-#: (~5-10 ms scheduling + serialization) while keeping tasks small enough
-#: for straggler insurance. Tunable per deployment.
-SUPERSTEP_ROWS_PER_TASK = int(
-    os.environ.get("ADUANA_SUPERSTEP_ROWS_PER_TASK", "100000")
-)
-
-
-def _derived_superstep_partitions(spark, n_rows: int) -> int | None:
-    """Scale-adaptive shuffle width for the per-superstep exchanges:
-    ``min(session conf, ceil(n_rows / SUPERSTEP_ROWS_PER_TASK))``.
-
-    A fixed ``spark.sql.shuffle.partitions`` is tuned for ONE scale; an
-    iterative job pays its per-task overhead once per superstep, so a
-    small graph under a wide session setting spends the whole superstep
-    scheduling near-empty tasks (measured on the sf0.1 bench graph:
-    64→16 loop partitions took the median steady-state superstep from
-    ~0.8 s to ~0.5 s at identical results). The derivation only ever
-    NARROWS the session setting — big inputs keep the admin-chosen
-    width, so cluster runs and the pinned scaling protocol (256-part
-    fixed layout, ~32M edges) are untouched. Returns None when no
-    narrowing applies."""
-    try:
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return None
-    derived = max(1, -(-int(n_rows) // SUPERSTEP_ROWS_PER_TASK))
-    return derived if derived < session_parts else None
+def _uniform_sums(cand: DataFrame) -> DataFrame:
+    """The uniform-teleport superstep's one job: Σ raw, max d, min d
+    with d = raw − old_rank."""
+    return cand.agg(
+        F.sum("raw").alias("s"),
+        F.max(F.col("raw") - F.col("old_rank")).alias("dmax"),
+        F.min(F.col("raw") - F.col("old_rank")).alias("dmin"),
+    )
 
 
 def pagerank(
@@ -146,7 +138,6 @@ def pagerank(
     checkpoint_interval: int = 5,
     resume: bool = False,
     salt_buckets: int | None = None,
-    shuffle_partitions: int | Callable[[int, int], int] | None = None,
     strict: bool = False,
     on_superstep: Callable[[SuperstepMetrics], None] | None = None,
 ) -> IterativeResult:
@@ -167,252 +158,89 @@ def pagerank(
     writes and ``resume=True``.
     """
     spark = edges.sparkSession
-    ckpt = (
-        CheckpointManager(checkpoint, "pagerank")
-        if isinstance(checkpoint, str)
-        else checkpoint
-    )
+    with SuperstepLoop(
+        spark, "pagerank", checkpoint, checkpoint_interval, on_superstep
+    ) as loop:
+        edges = loop.edge_cache(edges, "src")
+        vstate, total_score = _vertex_state(edges, scores, vertices)
+        # no explicit repartition: every branch of _vertex_state ends
+        # hash-partitioned by id already (groupBy / equi-join output)
+        vstate = loop.cache(vstate)
+        loop.n_vertices = vstate.count()
 
-    parts0 = _resolve_partitions(spark, shuffle_partitions, 0, 0)
-    if parts0:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts0))
-    # hash-partition AND sort by src once, then cache: the cached scan
-    # advertises its ordering, so the per-superstep SortMergeJoin sorts
-    # only the V-row state side — never re-sorts the E-row edge table
-    edges = (
-        edges.select("src", "dst")
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = edges.count()
-
-    # Scale-adaptive loop width (only when the caller passed no explicit
-    # policy): narrow the per-superstep exchanges when the graph is too
-    # small to fill the session's configured shuffle width. The session
-    # value is restored at every exit below; the E-row edge cache above
-    # was laid out under the session setting and is untouched (measured
-    # equivalent to narrowing everything, and it keeps the pinned
-    # scaling protocol's fixed 256-partition layout byte-identical).
-    restore_parts: str | None = None
-    if shuffle_partitions is None:
-        dp = _derived_superstep_partitions(spark, n_edges)
-        if dp:
-            restore_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            shuffle_partitions = dp
-
-    def _restore() -> None:
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
-
-    # ---- static vertex state: (id, deg, score) --------------------------
-    if vertices is None:
-        # fused vertex-set + out-degree pass: tag each endpoint row with
-        # its degree contribution (src rows 1, dst/score rows 0) and
-        # groupBy-sum once — ONE map-side-combinable shuffle over the 2E
-        # endpoint rows replaces the former distinct-over-2E shuffle +
-        # groupBy-over-E shuffle + vertex⋈degree join (deg values are
-        # identical: Σ marks = #src occurrences, 0 for dangling)
-        marks = edges.select(F.col("src").alias("id"), F.lit(1).alias("_m")).unionAll(
-            edges.select(F.col("dst").alias("id"), F.lit(0).alias("_m"))
-        )
-        if scores is not None:
-            marks = marks.unionAll(scores.select("id", F.lit(0).alias("_m")))
-        vstate = marks.groupBy("id").agg(F.sum("_m").alias("deg"))
-    else:
-        vstate = vertices.select("id").distinct().join(
-            out_degrees(edges), "id", "left"
-        ).select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
-    if scores is not None:
-        vstate = vstate.join(scores.select("id", "score"), "id", "left").select(
-            "id", "deg", F.coalesce(F.col("score").cast("double"), F.lit(0.0)).alias("score")
-        )
-        total_score = scores.agg(F.sum("score")).first()[0] or 0.0
-        if total_score == 0.0:
-            total_score = 1.0  # page_rank.c:204-206
-    else:
-        vstate = vstate.withColumn("score", F.lit(0.0))
-        total_score = 1.0
-    # no explicit repartition: every branch above ends hash-partitioned
-    # by id already (groupBy / equi-join output) — the former
-    # .repartition(id) added a whole redundant V-row exchange
-    vstate = vstate.persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = vstate.count()
-
-    # ---- initial state ---------------------------------------------------
-    start_iter = 0
-    if resume and ckpt is not None and ckpt.latest() is not None:
-        start_iter = ckpt.latest()
-        prev = ckpt.load(spark, start_iter).select("id", "rank")
-        # renormalize (page_rank.c:234-248 — warm start after growth)
-        s = prev.agg(F.sum("rank")).first()[0]
-        state = vstate.join(prev, "id", "left").select(
-            "id",
-            "deg",
-            "score",
-            (F.coalesce("rank", F.lit(0.0)) / F.lit(s)).alias("rank"),
-        )
-    else:
-        state = vstate.withColumn("rank", F.lit(1.0 / n_vertices))
-    cache = state.persist(StorageLevel.MEMORY_AND_DISK)
-    state = cache
-
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    it = start_iter
-    # fused path only: the previous superstep's cand must stay cached
-    # until its localCheckpoint materializes (this superstep's job)
-    prev_cand = None
-    for it in range(start_iter + 1, start_iter + max_iters + 1):
-        t0 = time.time()
-        parts = _resolve_partitions(spark, shuffle_partitions, it, n_edges)
-        if parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-
-        # dangling vertices (deg=0) emit nothing — their mass lands in rem
-        msg_src = state.where(F.col("deg") > 0).select(
-            F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m")
-        )
-        joined = edges.join(msg_src, "src")
-        if salt_buckets and salt_buckets > 1:
-            # two-phase salted aggregation for pathological hub keys
-            partial = joined.groupBy(
-                "dst", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)).alias("_salt")
-            ).agg(F.sum("m").alias("pm"))
-            contrib = partial.groupBy("dst").agg(
-                (F.lit(damping) * F.sum("pm")).alias("raw")
-            )
-        else:
-            contrib = joined.groupBy("dst").agg(
-                (F.lit(damping) * F.sum("m")).alias("raw")
-            )
-        contrib = contrib.withColumnRenamed("dst", "id")
-
-        cand = (
-            state.join(contrib, "id", "left")
-            .select(
+        prev = loop.resume(resume)
+        if prev is not None:
+            prev = prev.select("id", "rank")
+            # renormalize (page_rank.c:234-248 — warm start after growth)
+            s = prev.agg(F.sum("rank")).first()[0]
+            state = vstate.join(prev, "id", "left").select(
                 "id",
                 "deg",
                 "score",
-                F.col("rank").alias("old_rank"),
-                F.coalesce("raw", F.lit(0.0)).alias("raw"),
+                (F.coalesce("rank", F.lit(0.0)) / F.lit(s)).alias("rank"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if scores is not None:
-            # personalized teleport: rem·score/total varies per row, so
-            # the L∞ delta needs the new ranks — two jobs per superstep.
-            # Job 1 (the only one touching the E-row join): materialize
-            # cand into the cache while collecting Σ value2 → rem
-            rem = 1.0 - (cand.agg(F.sum("raw")).first()[0] or 0.0)
-            rem_term = F.lit(rem) * F.col("score") / F.lit(total_score)
-            new_state_full = cand.select(
-                "id",
-                "deg",
-                "score",
-                "old_rank",
-                (F.col("raw") + rem_term).alias("rank"),
-            )
-            # materialize + truncate logical lineage (without this,
-            # Catalyst re-analyzes an exponentially deepening self-join
-            # tree and superstep latency explodes around iteration ~15)
-            new_state_full = new_state_full.localCheckpoint(eager=False)
-            # Job 2: L∞ delta over the materialized rows (tiny)
-            delta = new_state_full.agg(
-                F.max(F.abs(F.col("rank") - F.col("old_rank")))
-            ).first()[0]
         else:
-            # uniform teleport: rank_i = raw_i + c with ONE shared
-            # constant c = rem/N, so with d_i = raw_i − old_i the L∞
-            # delta decomposes into pre-barrier aggregates:
-            #   max_i |d_i + c| = max(|max_i d_i + c|, |min_i d_i + c|)
-            # (fl(x+c) is monotone in x, so the float max over rows
-            # equals the endpoint evaluation). ONE Spark job per
-            # superstep returns Σraw/max d/min d; the new ranks are
-            # bit-identical to the two-job form — only the delta's
-            # association changes, by ≤1 ulp. The lazy localCheckpoint
-            # below materializes inside the NEXT superstep's (or the
-            # caller's) first action, so per-superstep work is
-            # unchanged in steady state while one whole job launch +
-            # V-row scan disappears per superstep.
-            agg = cand.agg(
-                F.sum("raw").alias("s"),
-                F.max(F.col("raw") - F.col("old_rank")).alias("dmax"),
-                F.min(F.col("raw") - F.col("old_rank")).alias("dmin"),
-            ).first()
-            rem = 1.0 - (agg["s"] or 0.0)
-            c = rem / float(n_vertices)
-            delta = max(
-                abs((agg["dmax"] or 0.0) + c), abs((agg["dmin"] or 0.0) + c)
-            )
-            new_state_full = cand.select(
-                "id",
-                "deg",
-                "score",
-                "old_rank",
-                (F.col("raw") + F.lit(c)).alias("rank"),
-            ).localCheckpoint(eager=False)
-        new_state = new_state_full.select("id", "deg", "score", "rank")
+            state = vstate.withColumn("rank", F.lit(1.0 / loop.n_vertices))
+        state = loop.cache(state, supersteps=1)
+        # the edge cache and vertex state keep the session layout; only
+        # the per-superstep exchanges take the narrowed width
+        loop.narrow()
 
-        wall = time.time() - t0
-        metrics.append(
-            SuperstepMetrics(
-                it,
-                float(delta),
-                wall,
-                n_edges,
-                n_edges / max(wall, 1e-9),
-                end_monotonic=time.monotonic(),
+        for _ in loop.supersteps(max_iters):
+            # personalized: cand is materialized by this superstep's
+            # second job; uniform: it backs the lazy localCheckpoint
+            # that materializes inside the NEXT superstep's job
+            cand = loop.cache(
+                _candidate(edges, state, damping, salt_buckets),
+                supersteps=0 if scores is not None else 1,
             )
-        )
-        if on_superstep is not None:
-            on_superstep(metrics[-1])
-        converged = delta <= precision
-
-        do_ckpt = ckpt is not None and (
-            it % checkpoint_interval == 0 or converged or it == start_iter + max_iters
-        )
-        if do_ckpt:
-            new_state = ckpt.save(
-                it,
-                new_state,
-                {
-                    "algo": "pagerank",
-                    "delta": float(delta),
-                    "wall_sec": wall,
-                    "edges": n_edges,
-                    "vertices": n_vertices,
-                    "damping": damping,
-                    "converged": converged,
-                },
+            if scores is not None:
+                # personalized teleport: rem·score/total varies per row, so
+                # the L∞ delta needs the new ranks — two jobs per superstep.
+                # Job 1 (the only one touching the E-row join): materialize
+                # cand into the cache while collecting Σ value2 → rem
+                rem = 1.0 - (cand.agg(F.sum("raw")).first()[0] or 0.0)
+                rank = F.col("raw") + F.lit(rem) * F.col("score") / F.lit(total_score)
+                # materialize + truncate logical lineage (without this,
+                # Catalyst re-analyzes an exponentially deepening self-join
+                # tree and superstep latency explodes around iteration ~15)
+                new_state_full = cand.select(
+                    "id", "deg", "score", "old_rank", rank.alias("rank")
+                ).localCheckpoint(eager=False)
+                # Job 2: L∞ delta over the materialized rows (tiny)
+                delta = new_state_full.agg(
+                    F.max(F.abs(F.col("rank") - F.col("old_rank")))
+                ).first()[0]
+            else:
+                # uniform teleport: rank_i = raw_i + c with ONE shared
+                # constant c = rem/N, so with d_i = raw_i − old_i the L∞
+                # delta decomposes into pre-barrier aggregates:
+                #   max_i |d_i + c| = max(|max_i d_i + c|, |min_i d_i + c|)
+                # (fl(x+c) is monotone in x, so the float max over rows
+                # equals the endpoint evaluation). ONE Spark job per
+                # superstep returns Σraw/max d/min d; the new ranks are
+                # bit-identical to the two-job form — only the delta's
+                # association changes, by ≤1 ulp. The lazy localCheckpoint
+                # below materializes inside the NEXT superstep's (or the
+                # caller's) first action, so per-superstep work is
+                # unchanged in steady state while one whole job launch +
+                # V-row scan disappears per superstep.
+                agg = _uniform_sums(cand).first()
+                c = (1.0 - (agg["s"] or 0.0)) / float(loop.n_vertices)
+                delta = max(
+                    abs((agg["dmax"] or 0.0) + c), abs((agg["dmin"] or 0.0) + c)
+                )
+                new_state_full = cand.select(
+                    "id",
+                    "deg",
+                    "score",
+                    "old_rank",
+                    (F.col("raw") + F.lit(c)).alias("rank"),
+                ).localCheckpoint(eager=False)
+            state = loop.end(
+                new_state_full.select("id", "deg", "score", "rank"),
+                delta,
+                delta <= precision,
+                damping=damping,
             )
-        cache.unpersist()
-        if prev_cand is not None:
-            prev_cand.unpersist()
-        if scores is not None:
-            # two-job path: the delta job already materialized the
-            # checkpoint, so cand's blocks are no longer reachable
-            cand.unpersist()
-            prev_cand = None
-        else:
-            # fused path: cand backs the still-lazy localCheckpoint —
-            # drop it only after the next superstep materializes it
-            prev_cand = cand
-        cache = new_state_full
-        state = new_state
-        if converged:
-            break
-
-    _restore()
-    if not converged and strict:
-        raise ConvergenceError(
-            f"pagerank did not reach {precision} in {max_iters} iterations"
-        )
-    return IterativeResult(
-        ranks=state.select("id", "rank"),
-        converged=converged,
-        n_iterations=it - start_iter,
-        n_vertices=n_vertices,
-        n_edges=n_edges,
-        metrics=metrics,
-    )
+        return loop.result(state.select("id", "rank"), strict, precision)

@@ -7,8 +7,8 @@ cluster-shaped:
 - AQE on (runtime coalescing + skew-join splitting — hub domains in a
   web graph are heavily skewed),
 - Arrow enabled for every pandas UDF path,
-- shuffle partition count is a tunable (per-iteration policy lives in
-  the algorithm drivers, see ``graph.pagerank``).
+- shuffle partition count is a tunable (the iterative graph loops
+  narrow it for small graphs and restore it, see ``graph.superstep``).
 """
 
 from __future__ import annotations

@@ -207,181 +207,63 @@ def _explain_str(df) -> str:
     return buf.getvalue()
 
 
-def _superstep_plan(spark, algo: str, legacy: bool = False) -> str:
-    """Build ONE steady-state superstep's plan for an iterative algo:
-    run the setup + first superstep by hand exactly as the module does
-    (r6 shape: fused vertex/degree aggregation, scale-adaptive loop
-    width, CC delta-propagation frontier), then explain the second
-    superstep's candidate DataFrame.
-
-    ``legacy=True`` (hits only) rebuilds the ROUND-START loop shape
-    instead — session shuffle width for every per-superstep exchange
-    plus the explicit ``.repartition("id")`` of the vertex state that
-    round 6 removed — so before/after captures come from the same
-    session and graph."""
-    from pyspark.storagelevel import StorageLevel
-
+def _superstep_plan(spark, algo: str) -> str:
+    """Explain ONE steady-state superstep of an iterative algo on the
+    bench graph, built from the production pieces: SuperstepLoop's edge
+    cache and loop width, and the algorithm's own setup and
+    message/aggregate functions. pagerank and hits explain superstep
+    1's first job; cc runs superstep 1 and explains superstep 2, whose
+    plan shows the delta-propagation frontier."""
+    from aduana_spark.graph.components import _candidate as cc_candidate
     from aduana_spark.graph.components import symmetrize
-    from aduana_spark.graph.pagerank import _derived_superstep_partitions
+    from aduana_spark.graph.hits import _candidate as hits_candidate
+    from aduana_spark.graph.hits import _sums, _vertices
+    from aduana_spark.graph.pagerank import _candidate as pr_candidate
+    from aduana_spark.graph.pagerank import _uniform_sums, _vertex_state
+    from aduana_spark.graph.superstep import SuperstepLoop
 
     edges_raw = bench.bench_edges(spark)
-    if algo == "pagerank":
-        edges = (
-            edges_raw.select("src", "dst")
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_edges = edges.count()
-        dp = _derived_superstep_partitions(spark, n_edges)
-        marks = edges.select(F.col("src").alias("id"), F.lit(1).alias("_m")).unionAll(
-            edges.select(F.col("dst").alias("id"), F.lit(0).alias("_m"))
-        )
-        vstate = marks.groupBy("id").agg(F.sum("_m").alias("deg")).withColumn(
-            "score", F.lit(0.0)
-        )
-        vstate = vstate.persist(StorageLevel.MEMORY_AND_DISK)
-        n_vertices = vstate.count()
-        if dp:
-            spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-        state = vstate.withColumn("rank", F.lit(1.0 / n_vertices))
-        msg_src = state.where(F.col("deg") > 0).select(
-            F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m")
-        )
-        contrib = (
-            edges.join(msg_src, "src")
-            .groupBy("dst")
-            .agg((F.lit(0.85) * F.sum("m")).alias("raw"))
-            .withColumnRenamed("dst", "id")
-        )
-        cand = state.join(contrib, "id", "left").select(
-            "id",
-            "deg",
-            "score",
-            F.col("rank").alias("old_rank"),
-            F.coalesce("raw", F.lit(0.0)).alias("raw"),
-        )
-        agg = cand.agg(
-            F.sum("raw").alias("s"),
-            F.max(F.col("raw") - F.col("old_rank")).alias("dmax"),
-            F.min(F.col("raw") - F.col("old_rank")).alias("dmin"),
-        )
-        return _explain_str(agg)
-    if algo == "cc":
-        sym = (
-            symmetrize(edges_raw)
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_edges = sym.count()
-        dp = _derived_superstep_partitions(spark, n_edges)
-        if dp:
-            spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-        verts = (
-            sym.select(F.col("src").alias("id"))
-            .unionAll(sym.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        state = verts.select("id", F.col("id").alias("component"))
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        state.count()
-
-        def _superstep(state, frontier):
-            msgs = (
-                sym.join(
-                    frontier.select(
-                        F.col("id").alias("src"), F.col("component").alias("c")
-                    ),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.min("c").alias("nbr_min"))
-                .withColumnRenamed("dst", "id")
-            )
-            return state.join(msgs, "id", "left").select(
-                "id",
-                F.col("component").alias("old"),
-                F.least(
-                    "component", F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-            )
-
-        # superstep 1 (frontier = everyone), then the steady-state
-        # superstep 2 whose plan shows the delta-propagation frontier
-        cand1 = _superstep(state, state).localCheckpoint(eager=False)
-        cand1.where(F.col("component") != F.col("old")).count()
-        frontier = cand1.where(F.col("component") != F.col("old")).select(
-            "id", "component"
-        )
-        cand2 = _superstep(cand1.select("id", "component"), frontier)
-        return _explain_str(cand2)
-    if algo == "hits":
-        # mirrors aduana_spark.graph.hits.hits: two edge caches (by src /
-        # by dst), Jacobi double join, L1 sums in one cand aggregate
-        edges_by_src = (
-            edges_raw.select("src", "dst")
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        edges_by_dst = (
-            edges_raw.select("src", "dst")
-            .repartition(F.col("dst"))
-            .sortWithinPartitions("dst")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_edges = edges_by_src.count()
-        edges_by_dst.count()
-        if not legacy:
-            dp = _derived_superstep_partitions(spark, n_edges)
-            if dp:
-                spark.conf.set("spark.sql.shuffle.partitions", str(dp))
-        verts = (
-            edges_by_src.select(F.col("src").alias("id"))
-            .unionAll(edges_by_src.select(F.col("dst").alias("id")))
-            .distinct()
-            .withColumn("score", F.lit(1.0))
-        )
-        if legacy:
-            # round-start shape: explicit full V-row re-exchange
-            verts = verts.repartition("id")
-        verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
-        n_vertices = verts.count()
-        state = verts.select(
-            "id",
-            "score",
-            F.lit(1.0 / n_vertices).alias("hub"),
-            F.lit(1.0 / n_vertices).alias("auth"),
-        )
-        a_side = state.select(F.col("id").alias("dst"), F.col("auth").alias("am"))
-        hub_raw = (
-            edges_by_dst.join(a_side, "dst")
-            .groupBy("src")
-            .agg(F.sum("am").alias("hub_raw"))
-        )
-        h_side = state.select(F.col("id").alias("src"), F.col("hub").alias("hm"))
-        auth_raw = (
-            edges_by_src.join(h_side, "src")
-            .groupBy("dst")
-            .agg(F.sum("hm").alias("auth_raw"))
-        )
-        cand = (
-            state.join(hub_raw.withColumnRenamed("src", "id"), "id", "left")
-            .join(auth_raw.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
+    with SuperstepLoop(spark, algo) as loop:
+        if algo == "pagerank":
+            edges = loop.edge_cache(edges_raw, "src")
+            vstate, _ = _vertex_state(edges, None, None)
+            vstate = loop.cache(vstate)
+            n_vertices = vstate.count()
+            loop.narrow()
+            state = vstate.withColumn("rank", F.lit(1.0 / n_vertices))
+            cand = pr_candidate(edges, state, 0.85, None)
+            return _explain_str(_uniform_sums(cand))
+        if algo == "hits":
+            edges_by_src = loop.edge_cache(edges_raw, "src")
+            edges_by_dst = loop.edge_cache(edges_raw, "dst")
+            verts = loop.cache(_vertices(edges_by_src, None, None))
+            n_vertices = verts.count()
+            loop.narrow()
+            state = verts.select(
                 "id",
                 "score",
-                F.col("hub").alias("old_hub"),
-                F.col("auth").alias("old_auth"),
-                F.coalesce("hub_raw", F.lit(0.0)).alias("hub_raw"),
-                F.coalesce("auth_raw", F.lit(0.0)).alias("auth_raw"),
+                F.lit(1.0 / n_vertices).alias("hub"),
+                F.lit(1.0 / n_vertices).alias("auth"),
             )
-        )
-        sums = cand.agg(
-            F.sum("hub_raw").alias("hs"), F.sum("auth_raw").alias("as_")
-        )
-        return _explain_str(sums)
+            cand = hits_candidate(edges_by_src, edges_by_dst, state, False)
+            return _explain_str(_sums(cand))
+        if algo == "cc":
+            sym = loop.edge_cache(symmetrize(edges_raw), "src")
+            loop.narrow()
+            state = loop.cache(
+                sym.select(F.col("src").alias("id"))
+                .unionAll(sym.select(F.col("dst").alias("id")))
+                .distinct()
+                .select("id", F.col("id").alias("component"))
+            )
+            state.count()
+            cand1 = cc_candidate(sym, state, state).localCheckpoint(eager=False)
+            frontier = cand1.where(F.col("component") != F.col("old")).select(
+                "id", "component"
+            )
+            frontier.count()
+            cand2 = cc_candidate(sym, cand1.select("id", "component"), frontier)
+            return _explain_str(cand2)
     raise SystemExit(f"unknown superstep algo {algo}")
 
 
@@ -390,18 +272,9 @@ def cmd_plans(out_dir: str, names: list[str]) -> None:
     spark = _spark()
     frames = _plan_frames(spark)
     names = names or (list(frames) + ["pagerank_superstep", "cc_superstep"])
-    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for name in names:
-        # superstep builders narrow the session width; reset per capture
-        spark.conf.set("spark.sql.shuffle.partitions", session_parts)
-        if name == "pagerank_superstep":
-            txt = _superstep_plan(spark, "pagerank")
-        elif name == "cc_superstep":
-            txt = _superstep_plan(spark, "cc")
-        elif name == "hits_superstep":
-            txt = _superstep_plan(spark, "hits")
-        elif name == "hits_superstep_legacy":
-            txt = _superstep_plan(spark, "hits", legacy=True)
+        if name.endswith("_superstep"):
+            txt = _superstep_plan(spark, name[: -len("_superstep")])
         else:
             txt = _explain_str(frames[name]())
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:

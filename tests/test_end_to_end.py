@@ -95,23 +95,20 @@ def test_superstep_plan_has_no_edge_side_sort(spark, flow):
     so the superstep join must not re-sort the E-row side (the Sort
     belongs to the V-row state side only)."""
     *_, edges = flow
-    from pyspark.storagelevel import StorageLevel
+    from aduana_spark.graph.superstep import SuperstepLoop
 
-    e = (
-        edges.select("src", "dst")
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-    state = (
-        e.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.lit(1.0).alias("rank"), F.lit(2.0).alias("deg"))
-    )
-    msg = state.select(F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m"))
-    contrib = e.join(msg, "src").groupBy("dst").agg(F.sum("m").alias("raw"))
-    plan = contrib._jdf.queryExecution().executedPlan().toString()
+    with SuperstepLoop(spark, "pagerank") as loop:
+        e = loop.edge_cache(edges, "src")
+        state = (
+            e.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.lit(1.0).alias("rank"), F.lit(2.0).alias("deg"))
+        )
+        msg = state.select(
+            F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m")
+        )
+        contrib = e.join(msg, "src").groupBy("dst").agg(F.sum("m").alias("raw"))
+        plan = contrib._jdf.queryExecution().executedPlan().toString()
     join_idx = plan.find("SortMergeJoin")
     if join_idx == -1:
         return  # planner chose a hash join — no sort at all
@@ -122,7 +119,6 @@ def test_superstep_plan_has_no_edge_side_sort(spark, flow):
     edge_branch = plan[join_idx:scan_idx]
     first_branch = edge_branch.split(":-")[1] if ":-" in edge_branch else edge_branch
     assert "Sort " not in first_branch, plan[:2000]
-    e.unpersist()
 
 
 def test_parquet_scan_prunes_and_pushes(spark, sf_dir):

@@ -3,12 +3,17 @@ networkx exact oracles (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from aduana_spark.datagen import random_digraph
 from aduana_spark.graph.bfs import bfs_depths
 from aduana_spark.graph.components import connected_components
+from aduana_spark.graph.hits import hits
 from aduana_spark.graph.labelprop import label_propagation
+from aduana_spark.graph.pagerank import pagerank
+from aduana_spark.graph.superstep import SuperstepLoop
 from aduana_spark.graph.triangles import triangle_count, triangle_list
 
 nx = pytest.importorskip("networkx")
@@ -137,24 +142,28 @@ def test_components_checkpoint_resume(spark, tmp_path):
     """North-rule mid-iteration resume for connected components: kill
     after 3 supersteps, resume from the shard, converge to the exact
     labels — and in fewer supersteps than a cold run (monotone labels
-    make the warm start strictly ahead)."""
+    make the warm start strictly ahead). A run that stops unconverged
+    at max_iters checkpoints its last superstep even off the interval."""
+    from aduana_spark.graph.checkpoint import CheckpointManager
     from aduana_spark.graph.components import connected_components
 
     n = 16  # path graph: diameter n-1 forces many supersteps
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src LONG, dst LONG"
     )
-    ck = str(tmp_path / "ck")
-    partial = connected_components(
-        df, max_iters=3, checkpoint=ck, checkpoint_interval=1
-    )
-    assert not partial.converged
-    resumed = connected_components(df, max_iters=50, checkpoint=ck, resume=True)
-    assert resumed.converged
-    got = {r["id"]: r["component"] for r in resumed.ranks.collect()}
-    assert got == {i: 0 for i in range(n)}
     cold = connected_components(df, max_iters=50)
-    assert resumed.n_iterations < cold.n_iterations
+    for interval in (1, 5):
+        ck = str(tmp_path / f"ck{interval}")
+        partial = connected_components(
+            df, max_iters=3, checkpoint=ck, checkpoint_interval=interval
+        )
+        assert not partial.converged
+        assert CheckpointManager(ck, "components").latest() == 3
+        resumed = connected_components(df, max_iters=50, checkpoint=ck, resume=True)
+        assert resumed.converged
+        got = {r["id"]: r["component"] for r in resumed.ranks.collect()}
+        assert got == {i: 0 for i in range(n)}
+        assert resumed.n_iterations < cold.n_iterations
 
 
 def test_labelprop_checkpoint_resume(spark, tmp_path):
@@ -255,3 +264,62 @@ def test_bfs_and_labelprop_restore_session_shuffle_partitions(spark):
     assert len({got[i] for i in range(5)}) == 1
     assert len({got[100 + i] for i in range(5)}) == 1
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+#: every iterative loop, as a call returning the DataFrame it computes
+LOOPS = {
+    "pagerank": lambda edges, seeds: pagerank(edges).ranks,
+    "hits": lambda edges, seeds: hits(edges).ranks,
+    "components": lambda edges, seeds: connected_components(edges).ranks,
+    "components_two_phase": lambda edges, seeds: connected_components(
+        edges, algorithm="two-phase"
+    ).ranks,
+    "labelprop": lambda edges, seeds: label_propagation(edges).ranks,
+    "bfs": bfs_depths,
+}
+
+
+@pytest.mark.parametrize("algo", list(LOOPS))
+def test_loop_leaves_session_as_found(spark, monkeypatch, algo):
+    """A loop that raises mid-way or returns normally leaves the
+    caller's session as it found it: the shuffle width it narrowed is
+    restored and no DataFrame it cached stays cached."""
+    edges = _edges_df(spark, [(i, i + 1) for i in range(9)] + [(9, 0), (3, 7)])
+    seeds = spark.createDataFrame([(0,)], "id LONG")
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    emit = SuperstepLoop.emit
+
+    def emit_or_raise(self, m):
+        if m.iteration == 2:
+            raise RuntimeError("superstep 2")
+        emit(self, m)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(SuperstepLoop, "emit", emit_or_raise)
+    with pytest.raises(RuntimeError, match="superstep 2"):
+        LOOPS[algo](edges, seeds)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert cache.isEmpty()
+
+    monkeypatch.undo()
+    assert LOOPS[algo](edges, seeds).count() > 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert cache.isEmpty()
+
+
+def test_supersteps_logged_in_order(spark, caplog):
+    """Each superstep reports one INFO line on aduana_spark.graph."""
+    edges = _edges_df(spark, [(i, i + 1) for i in range(4)])
+    with caplog.at_level(logging.INFO, logger="aduana_spark.graph"):
+        res = connected_components(edges)
+    logged = [
+        (r.algo, r.iteration, r.delta, r.edges)
+        for r in caplog.records
+        if r.name == "aduana_spark.graph"
+    ]
+    # the min label walks one hop per superstep: changed counts 4..1, 0
+    assert logged == [
+        ("components", i, float(changed), res.n_edges)
+        for i, changed in enumerate([4, 3, 2, 1, 0], start=1)
+    ]

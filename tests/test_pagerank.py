@@ -142,7 +142,7 @@ def test_derived_superstep_partitions_policy(spark):
     """The scale-adaptive loop width only ever NARROWS the session's
     shuffle setting: tiny inputs derive few partitions, inputs big
     enough to fill the configured width leave it alone (None)."""
-    from aduana_spark.graph.pagerank import (
+    from aduana_spark.graph.superstep import (
         SUPERSTEP_ROWS_PER_TASK,
         _derived_superstep_partitions,
     )
