@@ -17,13 +17,18 @@ from __future__ import annotations
 
 import datetime as dt
 import threading
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aduana_spark.frontier.bf_scheduler import BFSchedulerView, frontier_topk
-from aduana_spark.frontier.page_info import empty_page_info, ingest_crawl_batch
+from aduana_spark.frontier.page_info import (
+    cached_batch,
+    empty_page_info,
+    ingest_crawl_batch,
+)
 from aduana_spark.functions.urls import url_hash_col
 from aduana_spark.graph.builder import edges_with_ids
 from aduana_spark.graph.hits import hits as hits_job
@@ -104,17 +109,18 @@ class PageDB:
         newly created crawlable pages (the schedule insertions) so a
         scheduler sharing this PageDB ingests each batch exactly
         once."""
-        new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
-        # localCheckpoint (not persist+count): each batch's plan embeds
-        # the previous state's plan, so without truncation Catalyst
-        # re-analyzes a deepening tree and per-batch cost grows
-        # super-linearly (~5s → 30s within 10 batches, measured)
-        self.page_info = new_info.localCheckpoint()
-        new_edges = batch.select(
-            F.col("url").alias("src_url"),
-            F.explode("links").alias("l"),
-        ).select("src_url", F.col("l.url").alias("dst_url"))
-        self.edges = self.edges.unionByName(new_edges).localCheckpoint()
+        with cached_batch(batch):
+            new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
+            # localCheckpoint (not persist+count): each batch's plan embeds
+            # the previous state's plan, so without truncation Catalyst
+            # re-analyzes a deepening tree and per-batch cost grows
+            # super-linearly (~5s → 30s within 10 batches, measured)
+            self.page_info = new_info.localCheckpoint()
+            new_edges = batch.select(
+                F.col("url").alias("src_url"),
+                F.explode("links").alias("l"),
+            ).select("src_url", F.col("l.url").alias("dst_url"))
+            self.edges = self.edges.unionByName(new_edges).localCheckpoint()
         return new_sched
 
     def add(self, page: CrawledPage) -> None:
@@ -389,6 +395,24 @@ class BFScheduler(BFSchedulerView):
         )
 
 
+@dataclass
+class _QueuedGet:
+    """One ``get_next_requests`` call waiting for its round."""
+
+    n: int
+    urls: list[str] | None = None
+    error: BaseException | None = None
+
+    @property
+    def done(self) -> bool:
+        return self.urls is not None or self.error is not None
+
+    def result(self) -> list[str]:
+        if self.error is not None:
+            raise self.error
+        return self.urls
+
+
 class Backend:
     """Mirror of the Frontera backend
     (/root/reference/aduana/frontera.py:12-79): seeds become sentinel
@@ -411,9 +435,13 @@ class Backend:
     naming how many buffered pages it held; those pages are lost, just
     as a process crash loses the in-memory ``page_info``.
 
+    GETs are served in rounds: the GETs that queued while the Spark
+    work of an earlier round (or a flush) ran are served together by
+    one commit and one frontier pop (see ``get_next_requests``).
+
     Methods are thread-safe. One lock serializes the Spark work
     (commit, seed ingest, pops), so a buffered ``page_crawled`` never
-    waits for it."""
+    waits for it. ``metrics()`` reads the ingest and round counters."""
 
     #: pages buffered before ``page_crawled`` commits inline
     MAX_PENDING = 1000
@@ -432,14 +460,28 @@ class Backend:
         self._lock = threading.Lock()
         self._pending: dict[str, CrawledPage] = {}  # url -> page, arrival order
         self._pending_links: set[str] = set()
+        self._queued: list[_QueuedGet] = []  # GETs for the next round, arrival order
+        self._leading = False  # a GET is leading a round
+        self._round_done = threading.Condition(self._lock)
+        self._counts = {
+            "pages_committed": 0,
+            "commits": 0,
+            "commit_seconds": 0.0,
+            "get_rounds": 0,
+            "gets_served": 0,
+        }
 
-    def _commit(self) -> None:
-        """Commit the buffer as one batch; the caller holds _spark_lock."""
-        with self._lock:
-            pages = list(self._pending.values())
-            self._pending, self._pending_links = {}, set()
+    def _take_pending(self) -> list[CrawledPage]:
+        """Empty the commit buffer; the caller holds _lock."""
+        pages = list(self._pending.values())
+        self._pending, self._pending_links = {}, set()
+        return pages
+
+    def _commit(self, pages: list[CrawledPage]) -> None:
+        """Commit taken pages as one batch; the caller holds _spark_lock."""
         if not pages:
             return
+        t0 = time.perf_counter()
         try:
             self.scheduler.add(self.page_db.pages_batch(pages))
         except Exception as e:
@@ -447,16 +489,24 @@ class Backend:
                 f"commit of {len(pages)} buffered pages failed, "
                 f"they are lost: {e}"
             ) from e
+        with self._lock:
+            self._counts["pages_committed"] += len(pages)
+            self._counts["commits"] += 1
+            self._counts["commit_seconds"] += time.perf_counter() - t0
 
     def flush(self) -> None:
         """Commit every buffered crawled page now."""
         with self._spark_lock:
-            self._commit()
+            with self._lock:
+                pages = self._take_pending()
+            self._commit(pages)
 
     def add_seeds(self, seed_urls: list[str], scores: list[float] | None = None) -> None:
         scores = scores or [1.0] * len(seed_urls)
         with self._spark_lock:
-            self._commit()  # pages posted before the seeds go first
+            with self._lock:
+                pages = self._take_pending()
+            self._commit(pages)  # pages posted before the seeds go first
             seed = CrawledPage(
                 url=f"_seed_{self._n_seeds}", links=list(zip(seed_urls, scores))
             )
@@ -482,7 +532,77 @@ class Backend:
         """The reference ignores errors (frontera.py:60-61); the view
         recomputation makes retry automatic (U4)."""
 
+    def metrics(self) -> dict[str, float]:
+        """Ingest and round counters since start-up: pages in the
+        commit buffer now, pages committed from it, its commits and
+        their total seconds (seed ingest not counted), GET rounds run
+        and the GETs they served (GETs per round above 1 means rounds
+        shared their Spark work)."""
+        with self._lock:
+            return {"pages_buffered": len(self._pending), **self._counts}
+
     def get_next_requests(self, max_n_requests: int) -> list[str]:
+        """Pop up to ``max_n_requests`` URLs after committing the buffer.
+
+        Concurrent calls are served in rounds. A call queues itself;
+        if no round is running it leads the next one, otherwise it
+        waits on ``_round_done`` (not on the Spark lock, which is not
+        FIFO: a call already served could sit through another round
+        waiting for it). The leader takes the Spark lock, then, under
+        one ``_lock`` acquisition, the queue and the commit buffer.
+        Taking the queue no later than the buffer puts every page a
+        queued caller posted before its GET into this commit. It
+        commits once, pops ``Σn`` URLs with one ``scheduler.requests``
+        and hands each queued call its slice in arrival order. If the
+        commit or the pop raises, every call of the round raises that
+        error. Calls that queue during a round wait for the next one.
+
+        A round returns what its calls would get one after another
+        with no commit between them, with the commit first. The view
+        pops in the total order (score DESC, xxhash64(url) ASC), and
+        the depth gate does not change between the calls. With a
+        crawl rate armed each call escalates its domain limit
+        soft→hard; the domains each step admits are a superset of the
+        previous step's, and a pop does not change ``crawl_log``, so
+        the temperatures and ``now`` are the same for every call.
+        When one call stops at step j, every earlier step's admitted
+        set is used up, so the next call finds nothing before step j
+        and continues at step j where the one pop would. The slices of
+        one ``Σn`` pop are therefore the sequential calls' answers."""
+        get = _QueuedGet(max(max_n_requests, 0))
+        with self._lock:
+            self._queued.append(get)
+            while self._leading and not get.done:
+                self._round_done.wait()
+            if get.done:
+                return get.result()
+            self._leading = True
+        try:
+            self._serve_round()
+        finally:
+            with self._lock:
+                self._leading = False
+                self._round_done.notify_all()
+        return get.result()
+
+    def _serve_round(self) -> None:
+        """Serve every queued GET as one round; the caller leads it."""
         with self._spark_lock:
-            self._commit()
-            return self.scheduler.requests(max_n_requests)
+            with self._lock:
+                round_, self._queued = self._queued, []
+                pages = self._take_pending()
+            try:
+                self._commit(pages)
+                urls = self.scheduler.requests(sum(g.n for g in round_))
+            except BaseException as e:
+                with self._lock:
+                    for g in round_:
+                        g.error = e
+                raise
+            with self._lock:
+                start = 0
+                for g in round_:
+                    g.urls = urls[start:start + g.n]
+                    start += g.n
+                self._counts["get_rounds"] += 1
+                self._counts["gets_served"] += len(round_)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aduana_spark.frontier.page_info import (
+    cached_batch,
     empty_page_info,
     ingest_crawl_batch,
     is_seed_col,
@@ -180,20 +181,21 @@ class BFSchedulerView:
         nothing — the crawled page itself has n_crawls>0 and never
         enters). Crawled pages also heat their domain's temperature
         (page_db.c:858-860)."""
-        if self._page_db is not None:
-            new_sched = self._page_db.add_batch(batch)
-        else:
-            new_info, new_sched = ingest_crawl_batch(self._own_page_info, batch)
-            # localCheckpoint truncates the per-batch lineage chain
-            # (see PageDB.add_batch) — persist alone caches rows but
-            # leaves the logical plan growing per batch
-            self._own_page_info = new_info.localCheckpoint()
-        self.schedule = self.schedule.unionByName(
-            new_sched.select("url", "score")
-        ).localCheckpoint()
-        self.crawl_log = self.crawl_log.unionByName(
-            batch.select(domain_col("url").alias("domain"), F.col("ts"))
-        ).localCheckpoint()
+        with cached_batch(batch):
+            if self._page_db is not None:
+                new_sched = self._page_db.add_batch(batch)
+            else:
+                new_info, new_sched = ingest_crawl_batch(self._own_page_info, batch)
+                # localCheckpoint truncates the per-batch lineage chain
+                # (see PageDB.add_batch) — persist alone caches rows but
+                # leaves the logical plan growing per batch
+                self._own_page_info = new_info.localCheckpoint()
+            self.schedule = self.schedule.unionByName(
+                new_sched.select("url", "score")
+            ).localCheckpoint()
+            self.crawl_log = self.crawl_log.unionByName(
+                batch.select(domain_col("url").alias("domain"), F.col("ts"))
+            ).localCheckpoint()
 
     def _escalation_limits(self) -> list[float | None]:
         """The reference's request loop: one pass at the soft limit,
@@ -227,25 +229,27 @@ class BFSchedulerView:
             ).persist()
 
         urls: list[str] = []
-        for limit in limits:
-            if len(urls) >= n:
-                break
-            top = frontier_topk(
-                self.schedule,
-                self.page_info,
-                n - len(urls),
-                served=self.served,
-                max_depth=self.max_depth,
-                domain_rate=domain_rate,
-                crawl_limit=limit,
-            )
-            got = [r["url"] for r in top.collect()]
-            if got:
-                batch = self.spark.createDataFrame([(u,) for u in got], "url STRING")
-                self.served = self.served.unionByName(batch).localCheckpoint()
-                urls += got
-            if domain_rate is None:
-                break  # single unlimited pass
-        if domain_rate is not None:
-            domain_rate.unpersist()
+        try:
+            for limit in limits:
+                if len(urls) >= n:
+                    break
+                top = frontier_topk(
+                    self.schedule,
+                    self.page_info,
+                    n - len(urls),
+                    served=self.served,
+                    max_depth=self.max_depth,
+                    domain_rate=domain_rate,
+                    crawl_limit=limit,
+                )
+                got = [r["url"] for r in top.collect()]
+                if got:
+                    batch = self.spark.createDataFrame([(u,) for u in got], "url STRING")
+                    self.served = self.served.unionByName(batch).localCheckpoint()
+                    urls += got
+                if domain_rate is None:
+                    break  # single unlimited pass
+        finally:
+            if domain_rate is not None:
+                domain_rate.unpersist()
         return urls

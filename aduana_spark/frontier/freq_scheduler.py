@@ -290,10 +290,11 @@ class FreqSchedulerView:
         the page-info table (schedule entries come from load_*, which
         reads the updated state — the reference separates the two the
         same way)."""
-        from aduana_spark.frontier.page_info import ingest_crawl_batch
+        from aduana_spark.frontier.page_info import cached_batch, ingest_crawl_batch
 
-        new_info, _ = ingest_crawl_batch(self.page_info, batch)
-        self.page_info = new_info.localCheckpoint()  # truncate lineage
+        with cached_batch(batch):
+            new_info, _ = ingest_crawl_batch(self.page_info, batch)
+            self.page_info = new_info.localCheckpoint()  # truncate lineage
 
     # ---- serving ---------------------------------------------------------
 

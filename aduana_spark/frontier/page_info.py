@@ -27,6 +27,9 @@ link position — matching sequential ingest of the same batch.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,6 +53,23 @@ def is_seed_col(url) -> F.Column:
     return url.startswith("_seed_")
 
 
+@contextmanager
+def cached_batch(batch: DataFrame):
+    """Keep ``batch`` cached while the block runs, for the several
+    scans an ingest makes of it. Wrap the whole ingest, up to its last
+    eager checkpoint. A batch the caller already cached stays cached;
+    one cached here is released on the way out, so a long-running
+    ingest loop does not leave one cached batch behind per call."""
+    if batch.storageLevel != StorageLevel.NONE:
+        yield batch
+        return
+    batch.persist()
+    try:
+        yield batch
+    finally:
+        batch.unpersist()
+
+
 def ingest_crawl_batch(
     page_info: DataFrame, batch: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
@@ -59,10 +79,10 @@ def ingest_crawl_batch(
     links ARRAY<STRUCT<url STRING, score DOUBLE>>, page_score DOUBLE,
     content_hash BINARY, ts TIMESTAMP.
     ``new_schedule_rows``: (url, score) for newly created uncrawled
-    pages (candidate schedule insertions).
+    pages (candidate schedule insertions). Both results are lazy and
+    scan ``batch`` several times: materialize them inside
+    ``cached_batch(batch)``.
     """
-    batch = batch.persist()
-
     crawled = batch.select(
         "crawl_order", "url", "page_score", "content_hash", "ts"
     )

@@ -8,20 +8,34 @@ format doc/python.rst:203-247):
   success, 400 with a plain-text ``ERROR: ...`` body on bad input
   (matching the reference's error strings).
 - ``GET /request?n=42`` — JSON list of up to n frontier URLs.
+- ``GET /metrics`` — plain text, one ``name value`` line per counter of
+  ``Backend.metrics()``: ``pages_buffered``, ``pages_committed``,
+  ``commits``, ``commit_seconds``, ``get_rounds`` and ``gets_served``.
 
-The ``Backend`` group-commits crawled pages (see ``api.Backend``):
+The ``Backend`` group-commits crawled pages and serves GETs in rounds
+(see ``api.Backend``):
 
 - 201 means "accepted into the commit buffer", not yet merged.
 - A page's state becomes visible at the next ``GET /request`` (or
   ``Backend.flush()``), which commits every page buffered since the
   previous one as one batch before it pops the frontier.
+- The ``GET /request`` calls that wait while the backend's Spark work
+  runs are served together as one round when it ends: one commit and
+  one frontier pop, each GET getting its slice in arrival order.
+  ``gets_served / get_rounds`` on ``/metrics`` is the GETs per round.
 - A failed commit loses the buffered pages, just as a process crash
-  loses the in-memory ``page_info``. The request that ran it gets 500
-  with a plain-text ``ERROR: ...`` body stating how many buffered
-  pages the commit held; any other backend failure also answers 500.
+  loses the in-memory ``page_info``. Every GET of the round that ran
+  it gets 500 with a plain-text ``ERROR: ...`` body stating how many
+  buffered pages the commit held; any other backend failure also
+  answers 500.
 
 The server holds no lock of its own: the backend serializes its
 Spark work, and a POST that only buffers does not wait for it.
+
+Connections are HTTP/1.1 keep-alive, so a spider's GET and its POSTs
+share one socket and one handler thread. Every response carries
+``Content-Length``; a 404 closes the connection, as its request body
+is left unread.
 
 The reference serves falcon+gevent; here it is a stdlib
 ``http.server`` facade over the Frontera ``Backend`` (api.py) — the
@@ -46,16 +60,24 @@ _log = logging.getLogger(__name__)
 
 def _make_handler(backend, default_reqs: int):
     class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+        # headers and body go out as two writes: with Nagle on, the body
+        # of a reply on a reused connection waits ~40 ms for the
+        # client's delayed ACK of the headers
+        disable_nagle_algorithm = True
+
         def log_message(self, *a):  # quiet test runs
             pass
 
-        def _error(self, message: str, code: int = 400) -> None:
-            body = message.encode()
+        def _reply(self, code: int, content_type: str, body: bytes) -> None:
             self.send_response(code)
-            self.send_header("Content-Type", "text/plain")
+            self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+
+        def _error(self, message: str, code: int = 400) -> None:
+            self._reply(code, "text/plain", message.encode())
 
         def _backend_failed(self, e: Exception) -> None:
             _log.exception("backend call failed")
@@ -97,7 +119,17 @@ def _make_handler(backend, default_reqs: int):
 
         def do_GET(self):
             parsed = urlparse(self.path)
-            if parsed.path.rstrip("/") not in ("", "/request"):
+            path = parsed.path.rstrip("/")
+            if path == "/metrics":
+                try:
+                    metrics = backend.metrics()
+                except Exception as e:
+                    self._backend_failed(e)
+                    return
+                text = "".join(f"{name} {value}\n" for name, value in metrics.items())
+                self._reply(200, "text/plain", text.encode())
+                return
+            if path not in ("", "/request"):
                 self.send_error(404)
                 return
             qs = parse_qs(parsed.query)
@@ -111,12 +143,9 @@ def _make_handler(backend, default_reqs: int):
             except Exception as e:
                 self._backend_failed(e)
                 return
-            body = json.dumps(urls, ensure_ascii=True).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self._reply(
+                200, "application/json", json.dumps(urls, ensure_ascii=True).encode()
+            )
 
     return Handler
 

@@ -77,20 +77,21 @@ class StreamingIngest:
         self.batches_seen = 0
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from aduana_spark.frontier.page_info import ingest_crawl_batch
+        from aduana_spark.frontier.page_info import cached_batch, ingest_crawl_batch
 
         parsed = parse_crawled_pages(batch_df)
         if parsed.isEmpty():
             return
-        new_info, _ = ingest_crawl_batch(self.page_info, parsed)
-        self.page_info = new_info.localCheckpoint()
-        self.edges = (
-            self.edges.unionByName(
-                parsed.select(
-                    F.col("url").alias("src_url"), F.explode("links").alias("l")
-                ).select("src_url", F.col("l.url").alias("dst_url"))
-            )
-        ).localCheckpoint()
+        with cached_batch(parsed):
+            new_info, _ = ingest_crawl_batch(self.page_info, parsed)
+            self.page_info = new_info.localCheckpoint()
+            self.edges = (
+                self.edges.unionByName(
+                    parsed.select(
+                        F.col("url").alias("src_url"), F.explode("links").alias("l")
+                    ).select("src_url", F.col("l.url").alias("dst_url"))
+                )
+            ).localCheckpoint()
         self.batches_seen += 1
 
     def start(self, input_dir: str, checkpoint_dir: str, trigger_once: bool = True):

@@ -323,6 +323,156 @@ def test_backend_concurrent_posts_lose_nothing(spark, monkeypatch):
     assert sorted(r["url"] for r in crawled.collect()) == sorted(sum(urls, []))
 
 
+#: state before the round tests' GETs: seeds at depth 1, then a.org/1
+#: (depth 2) is served and crawled, so its links sit at depth 3, past
+#: max_depth 2
+ROUND_SETUP_OPS = [
+    ("seeds", ["https://a.org/", "https://b.org/", "https://c.org/"]),
+    ("get", 3),
+    ("post", "https://a.org/", [("https://a.org/1", 0.8)]),
+    ("get", 1),
+]
+
+#: posts the round commits. Domain temperatures (one per crawl, all at
+#: one ts) come out a.org 2, b.org 1, c.org 3, d.org 0, so under a crawl
+#: rate of (1.0, 4.0) the pop escalates through three limits
+ROUND_POSTS = [
+    ("https://a.org/1", [("https://a.org/deep", 0.99), ("https://b.org/deep", 0.98)]),
+    ("https://b.org/", [("https://b.org/1", 0.5), ("https://d.org/", 0.3),
+                        ("https://a.org/3", 0.6)]),
+    ("https://c.org/", [("https://c.org/1", 0.9), ("https://c.org/2", 0.85),
+                        ("https://c.org/3", 0.2)]),
+    ("https://c.org/x", [("https://c.org/4", 0.88)]),
+    ("https://c.org/y", []),
+]
+
+
+def _round_backend(spark):
+    from aduana_spark.api import Backend
+
+    b = Backend(spark, max_depth=2)
+    b.scheduler.set_crawl_rate(1.0, 4.0)
+    for op, *args in ROUND_SETUP_OPS:
+        if op == "seeds":
+            b.add_seeds(*args)
+        elif op == "get":
+            b.get_next_requests(*args)
+        else:
+            b.page_crawled(*args)
+    for url, links in ROUND_POSTS:
+        b.page_crawled(url, links)
+    return b
+
+
+def _gets_in_one_round(b, ns):
+    """Queue one GET per n while holding the Spark lock, each queued
+    before the next starts; returns each GET's list or exception."""
+    import threading
+    import time
+
+    out = {}
+
+    def get(i, n):
+        try:
+            out[i] = b.get_next_requests(n)
+        except Exception as e:
+            out[i] = e
+
+    threads = []
+    with b._spark_lock:
+        for i, n in enumerate(ns):
+            threads.append(threading.Thread(target=get, args=(i, n)))
+            threads[-1].start()
+            deadline = time.time() + 60
+            while len(b._queued) < i + 1 and time.time() < deadline:
+                time.sleep(0.01)
+            assert len(b._queued) == i + 1
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    return [out[i] for i in range(len(ns))]
+
+
+def test_backend_round_matches_sequential_gets(spark):
+    """GETs queued behind the Spark lock are served as one round: one
+    commit and one ``scheduler.requests`` call, whose slices equal the
+    answers of the same GETs run one after another — with a depth gate
+    and a crawl rate armed."""
+    def rows(df):
+        return df.orderBy(*df.columns).collect()
+
+    def counted(fn, calls):
+        def call(*a, **kw):
+            calls.append(a)
+            return fn(*a, **kw)
+        return call
+
+    ns = [2, 3, 1]
+    rounded, sequential = _round_backend(spark), _round_backend(spark)
+    adds, pops = [], []
+    rounded.scheduler.add = counted(rounded.scheduler.add, adds)
+    rounded.scheduler.requests = counted(rounded.scheduler.requests, pops)
+    got = _gets_in_one_round(rounded, ns)
+    assert got == [sequential.get_next_requests(n) for n in ns]
+    assert got == [
+        ["https://b.org/1", "https://d.org/"],
+        ["https://a.org/3", "https://c.org/1", "https://c.org/4"],
+        ["https://c.org/2"],
+    ]
+    assert (len(adds), pops) == (1, [(6,)])
+    assert rounded.metrics()["get_rounds"] == 3  # two setup GETs + this round
+    assert rounded.metrics()["gets_served"] == 5
+    assert rows(rounded.page_db.page_info) == rows(sequential.page_db.page_info)
+    assert rows(rounded.scheduler.schedule) == rows(sequential.scheduler.schedule)
+
+
+def test_backend_round_error_reaches_every_get(spark):
+    """A pop that raises fails every GET of its round; none is left
+    waiting and the next GET is served."""
+    b = _round_backend(spark)
+
+    def fail(n):
+        raise OSError("pop failed")
+
+    b.scheduler.requests = fail
+    got = _gets_in_one_round(b, [2, 3, 1])
+    assert all(isinstance(e, OSError) and "pop failed" in str(e) for e in got)
+    del b.scheduler.requests
+    assert b.get_next_requests(2) == ["https://b.org/1", "https://d.org/"]
+
+
+def test_backend_releases_cached_batches(spark):
+    """Commits, seed ingest and pops leave nothing cached behind."""
+    from aduana_spark.api import Backend
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    b = Backend(spark)
+    b.scheduler.set_crawl_rate(1.0, 4.0)
+    b.add_seeds(["https://a.org/", "https://b.org/"])
+    for _ in range(3):
+        for url in b.get_next_requests(2):
+            b.page_crawled(url, [(url + "x", 0.5), (url + "y", 0.4)])
+    assert cache.isEmpty()
+
+
+def test_caller_cached_batch_stays_cached(spark):
+    """A batch the caller cached is still cached after ingest."""
+    from pyspark import StorageLevel
+
+    from aduana_spark.api import BFScheduler, CrawledPage, PageDB
+
+    db = PageDB(spark)
+    sched = BFScheduler(spark, page_db=db)
+    batch = db.pages_batch([CrawledPage("https://a.org/", [("https://a.org/1", 0.5)])])
+    batch.persist()
+    try:
+        sched.add(batch)
+        assert batch.is_cached and batch.storageLevel != StorageLevel.NONE
+    finally:
+        batch.unpersist()
+
+
 def test_freq_serving_ratios(spark):
     """Statistical property (reference test_freq_scheduler.py:6-55):
     long-run serve counts per page are proportional to the page's

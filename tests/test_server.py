@@ -3,6 +3,7 @@ parity with aduana-server.py (POST /crawled, GET /request?n=)."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import urllib.error
 import urllib.request
@@ -80,3 +81,61 @@ def test_rest_server_backend_error_answers_500(spark):
         del backend.scheduler.add
         got = json.loads(urllib.request.urlopen(f"{srv.url}/request", timeout=30).read())
         assert got == []
+
+
+def test_rest_server_keep_alive(spark):
+    """One HTTP/1.1 connection carries a GET, two POSTs and a GET; a
+    404 with an unread body closes it."""
+    from aduana_spark.api import Backend
+    from aduana_spark.server import AduanaServer
+
+    backend = Backend(spark)
+    backend.add_seeds(["https://a.org/"])
+    with AduanaServer(backend) as srv:
+        host, port = srv.httpd.server_address[:2]
+        conn = http.client.HTTPConnection(host, port, timeout=60)
+        try:
+            def call(method, path, body=None):
+                conn.request(method, path, body=body)
+                resp = conn.getresponse()
+                return resp, resp.read()
+
+            resp, data = call("GET", "/request?n=5")
+            assert json.loads(data) == ["https://a.org/"] and not resp.will_close
+            sock = conn.sock
+            for url in ("https://a.org/", "https://a.org/1"):
+                body = json.dumps({"url": url, "links": [[url + "x", 0.5]]})
+                resp, _ = call("POST", "/crawled", body)
+                assert resp.status == 201 and not resp.will_close
+            resp, data = call("GET", "/request")
+            assert sorted(json.loads(data)) == ["https://a.org/1x", "https://a.org/x"]
+            assert not resp.will_close and conn.sock is sock
+
+            resp, _ = call("POST", "/nope", json.dumps({"url": "https://a.org/"}))
+            assert resp.status == 404 and resp.will_close and conn.sock is None
+        finally:
+            conn.close()
+
+
+def test_rest_server_metrics(spark):
+    """GET /metrics counts commits and GET rounds: two POSTs and two
+    sequential GETs make one commit of two pages and two rounds of
+    one GET each."""
+    from aduana_spark.api import Backend
+    from aduana_spark.server import AduanaServer
+
+    with AduanaServer(Backend(spark)) as srv:
+        for url in ("https://a.org/", "https://b.org/"):
+            assert _post(srv.url, json.dumps({"url": url}).encode()).status == 201
+        for _ in range(2):
+            urllib.request.urlopen(f"{srv.url}/request", timeout=30).read()
+        resp = urllib.request.urlopen(f"{srv.url}/metrics", timeout=30)
+        assert resp.headers["Content-Type"] == "text/plain"
+        lines = resp.read().decode().splitlines()
+    metrics = {name: float(value) for name, value in (ln.split() for ln in lines)}
+    assert list(metrics) == ["pages_buffered", "pages_committed", "commits",
+                             "commit_seconds", "get_rounds", "gets_served"]
+    assert metrics["commit_seconds"] > 0
+    del metrics["commit_seconds"]
+    assert metrics == {"pages_buffered": 0, "pages_committed": 2, "commits": 1,
+                       "get_rounds": 2, "gets_served": 2}
