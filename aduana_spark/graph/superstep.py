@@ -60,12 +60,6 @@ class SuperstepMetrics:
     wall_sec: float
     edges: int
     edges_per_sec: float
-    #: time.monotonic() at superstep end — lets external CPU samplers
-    #: (bench.py's per-superstep steal attribution) map samples onto
-    #: REAL superstep windows instead of reconstructing them
-    #: back-to-back from walls, which misattributes any non-superstep
-    #: tail work inside the loop
-    end_monotonic: float = 0.0
 
 
 @dataclass
@@ -93,8 +87,7 @@ def _derived_superstep_partitions(spark: SparkSession, n_rows: int) -> int | Non
     64→16 loop partitions took the median steady-state superstep from
     ~0.8 s to ~0.5 s at identical results). The derivation only ever
     NARROWS the session setting — big inputs keep the admin-chosen
-    width, so cluster runs and the pinned scaling protocol (256-part
-    fixed layout, ~32M edges) are untouched. Returns None when no
+    width, so cluster runs are untouched. Returns None when no
     narrowing applies."""
     try:
         session_parts = int(spark.conf.get(_WIDTH))
@@ -239,7 +232,6 @@ class SuperstepLoop:
                 wall,
                 self.n_edges,
                 self.n_edges / max(wall, 1e-9),
-                end_monotonic=time.monotonic(),
             )
         )
         self.converged = converged

@@ -8,7 +8,10 @@ cluster-shaped:
   web graph are heavily skewed),
 - Arrow enabled for every pandas UDF path,
 - shuffle partition count is a tunable (the iterative graph loops
-  narrow it for small graphs and restore it, see ``graph.superstep``).
+  narrow it for small graphs and restore it, see ``graph.superstep``),
+- the driver heap fits the host: ``$ADUANA_DRIVER_MEM`` when set, else
+  an eighth of MemTotal clamped to 1-4 GB (:func:`driver_heap`), with
+  ``-Xms`` equal to ``-Xmx``.
 """
 
 from __future__ import annotations
@@ -18,6 +21,26 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ADUANA_SHUFFLE_PARTITIONS", "32"))
+
+
+def driver_heap(meminfo: str) -> str:
+    """Default driver heap for a host, from the text of its
+    ``/proc/meminfo``: an eighth of MemTotal, clamped to [1g, 4g]. A
+    text without a MemTotal line gets the 1g floor."""
+    total_kb = 0
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            total_kb = int(line.split()[1])
+            break
+    return f"{max(1024, min(4096, total_kb // 1024 // 8))}m"
+
+
+def _host_driver_heap() -> str:
+    try:
+        with open("/proc/meminfo") as fh:
+            return driver_heap(fh.read())
+    except OSError:
+        return driver_heap("")
 
 
 def get_spark(
@@ -31,6 +54,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores). On a
     real cluster, leave ``master`` unset and submit with
     ``spark-submit --py-files aduana_spark.zip``.
+
+    The driver heap is ``spark.driver.memory`` from ``extra_conf``, else
+    ``$ADUANA_DRIVER_MEM``, else :func:`driver_heap` of this host; the
+    JVM starts with ``-Xms`` at that size. ``extra_conf`` entries are
+    applied last and override any default here.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -45,9 +73,11 @@ def get_spark(
             pkg_parent + (os.pathsep + existing if existing else "")
         )
     # effective driver heap: an extra_conf override must also drive the
-    # Xms/pre-touch options below (-Xms larger than -Xmx aborts the JVM)
-    driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("ADUANA_DRIVER_MEM", "16g")
+    # -Xms option below (-Xms larger than -Xmx aborts the JVM)
+    driver_mem = (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("ADUANA_DRIVER_MEM")
+        or _host_driver_heap()
     )
     builder = (
         SparkSession.builder.appName(app_name)
@@ -67,15 +97,8 @@ def get_spark(
         # cross-CPU page-table/TLB kernel work stalls on descheduled
         # vCPUs and can multiply iterative-job walls (A/B-measured on
         # this repo's PageRank supersteps — see BENCH.md). Production
-        # executors pin Xms=Xmx for the same reason. Disable with
-        # ADUANA_JVM_PRETOUCH=0 (e.g. on memory-constrained dev
-        # machines where lazily-committed heap matters).
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem}"
-            if os.environ.get("ADUANA_JVM_PRETOUCH", "1") != "0"
-            else "",
-        )
+        # executors pin Xms=Xmx for the same reason.
+        .config("spark.driver.extraJavaOptions", f"-Xms{driver_mem}")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # iterative jobs chain localCheckpoints (PageRank/HITS/CC/LP):

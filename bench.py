@@ -1,72 +1,42 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.md scaling protocol).
+"""Headline suite: the engine's headline operators, timed in-process.
 
-Runs the engine's headline operators over ``$SPARK_GRAFT_SF_DIR``
+Runs every row of :func:`headline_queries` over ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and
-prints ONE COMPACT JSON line (headline query times + per-level
-scaling minima + efficiencies). The full per-cycle probe/steal
-detail — too large for the driver's tail capture — is written to
-``BENCH_DETAIL_r5.json`` next to this file.
+prints ONE JSON line:
 
-Scaling protocol (the north rule's two-cluster-size criterion,
-BASELINE.md — no real cluster in this sandbox):
+- ``value``: the sum of the 12 timed query rows (sec);
+- ``queries``: each row's wall, plus ``pagerank_superstep`` (the mean
+  PageRank superstep wall, derived, not a row of ``value``);
+- ``contaminated_queries``: rows whose window the host stole from,
+  judged by each row's own /proc/stat split;
+- ``pagerank_edges``, ``pagerank_supersteps``,
+  ``pagerank_edges_per_superstep_sec``;
+- ``harness_s``: the rest of the process wall (imports, session start
+  and stop, untimed reads).
 
-- The identical PageRank job runs over the same pre-materialized
-  edge-table parquet at N→4N parallelism pairs (2,8) → (4,16) →
-  (8,32) on this 32-core, no-SMT host, in that grading-priority
-  order; efficiency = (throughput@4N / throughput@N) / 4.
-- Cycles are gated by an opportunistic clean-window probe: a forked
-  multi-core CPU kernel at the cycle's own width must express most of
-  that width before a cycle starts, else the suite sleeps through the
-  storm burst (they run minutes on this VM) instead of burning a
-  pinned cycle into it.
-- **Each cycle runs in a fresh subprocess pinned with
-  ``sched_setaffinity`` to exactly N cores** before the JVM starts,
-  so GC/shuffle-IO/codegen threads cannot free-ride on the host's
-  idle cores — ``local[2]`` in an unpinned 32-core JVM measures a
-  2-task-slot job with ~32 cores of JVM background service, which
-  flattens the small leg and understates scaling (round-2 artifact).
-- AQE is OFF and ``spark.sql.shuffle.partitions`` is fixed at 256
-  for every level: AQE's ``coalescePartitions.parallelismFirst``
-  targets defaultParallelism, which differs per level — the layouts
-  would silently diverge.
-- Host steal on this VM arrives in bursts shorter than a cycle, so
-  contamination is judged PER SUPERSTEP: a 4 Hz /proc/stat sampler
-  inside each cycle attributes steal to individual superstep
-  windows, and only supersteps with ≤3% of the job's own cores
-  stolen AND kernel time under 0.4× user time (lock-holder
-  preemption shows up as kernel-dominated stalls, not steal) count
-  as cost samples. A level with <3 clean supersteps is reported
-  ``unmeasurable`` with the blocking
-  evidence instead of silently falling back to contaminated data.
-  Cycle-level single-core/multi-core probes are kept as
-  corroboration in the detail file.
-
-Edge table: deduplicated union of the star-schema's natural digraphs
-(customer→order, order→part, part→supplier) — Zipf-ish part reuse
-gives realistic in-degree skew — inflated ×32 with salted copies
-(~43M edges at sf0.1) and written once to /dev/shm parquet so every
-cycle reads identical bytes.
-
-Set SPARK_GRAFT_SKIP_SCALING=1 to skip the scaling run (fast mode).
+Per-change performance is judged by perfbench (``BENCHMARK.json``);
+this suite produces the headline table in BENCH.md.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+_T_START = time.time()
+
+import contextlib  # noqa: E402
+import json  # noqa: E402
+import os  # noqa: E402
+import sys  # noqa: E402
+
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
 
 
 def _session(cores: int, shuffle_partitions: int) -> SparkSession:
@@ -111,47 +81,13 @@ def bench_edges(spark) -> DataFrame:
     return e1.unionAll(e2).unionAll(e3).dropDuplicates(["src", "dst"])
 
 
-def scaling_edges(spark, copies: int = 16) -> DataFrame:
-    """×copies salted inflation of the bench graph (same for both
-    parallelism levels)."""
-    e = bench_edges(spark)
-    k = F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("k")
-    # cast before multiplying: k is INT and 64 × 1e8 overflows 32-bit
-    # under ANSI mode
-    off = F.col("k").cast("long") * F.lit(100_000_000).cast("long")
-    return e.select("src", "dst", k).select(
-        (F.col("src") + off).alias("src"),
-        (F.col("dst") + off).alias("dst"),
-    )
+@contextlib.contextmanager
+def headline_queries(spark):
+    """The timed headline rows as an ordered ``name -> callable`` table;
+    each zero-arg callable runs its query through to the action.
 
-
-def _query_contaminated(c: dict | None) -> bool:
-    """Same adjudication main() publishes as ``contaminated_queries``:
-    host steal during the query's own window, or a kernel-dominated
-    profile (lock-holder preemption / free-page-reporting storm),
-    attributes a slow wall to the environment rather than the plan."""
-    return bool(c) and (
-        c.get("steal_pct", 0.0) >= 2.0
-        or c.get("system_pct", 0.0) >= 0.6 * max(c.get("user_pct", 0.0), 0.1)
-    )
-
-
-# one storm-gated re-run per contaminated headline query (round-4
-# verdict: 5/12 rows were probe-flagged with no clean driver
-# wall-clock for the heavy iterative queries). The retry waits for a
-# clean probe window first — re-running INTO the same storm proves
-# nothing — and the whole suite shares one wait budget so a
-# persistent storm costs bounded time, not 12×180 s.
-HEADLINE_RETRIES = int(os.environ.get("SPARK_GRAFT_HEADLINE_RETRIES", "1"))
-_HEADLINE_RETRY_WAIT = float(
-    os.environ.get("SPARK_GRAFT_HEADLINE_RETRY_WAIT", "180")
-)
-_HEADLINE_RETRY_BUDGET = float(
-    os.environ.get("SPARK_GRAFT_HEADLINE_RETRY_BUDGET", "900")
-)
-
-
-def run_headline(spark) -> tuple[dict[str, float], dict[str, dict]]:
+    ``ivf_topk_cells`` queries the cells the last ``ivf_build_cells``
+    call persisted; they are unpersisted when the block exits."""
     from aduana_spark.datagen import synth_pages
     from aduana_spark.extraction import extract_pages, raw_edges
     from aduana_spark.graph.components import connected_components
@@ -159,92 +95,25 @@ def run_headline(spark) -> tuple[dict[str, float], dict[str, dict]]:
     from aduana_spark.graph.pagerank import pagerank
     from aduana_spark.graph.triangles import triangle_count
     from aduana_spark.pipeline.dedup import minhash_lsh_candidates
-    from aduana_spark.pipeline.similarity import brute_force_topk
-
-    q: dict[str, float] = {}
-    # per-query host-CPU attribution: /proc/stat split over each
-    # query's own window (steal/system/user %), so a slow wall can be
-    # adjudicated environment-vs-code from the artifact alone — the
-    # round-3 extract_5k_pages 36→56 s "regression" was unattributable
-    # because only the scaling suite carried probes
-    qcpu: dict[str, dict] = {}
-
-    retry_budget = [_HEADLINE_RETRY_BUDGET]
-
-    def T(name, fn, cleanup=None):
-        attempts: list[tuple[float, dict, object]] = []
-        while True:
-            s0 = _proc_stat()
-            t0 = time.time()
-            out = fn()
-            wall = time.time() - t0
-            cpu = _proc_stat_delta(s0, _proc_stat())
-            attempts.append((wall, cpu, out))
-            dirty = _query_contaminated(cpu)
-            if not dirty or len(attempts) > HEADLINE_RETRIES:
-                break
-            if retry_budget[0] <= 0:
-                break
-            # drop the contaminated attempt's side effects before
-            # re-running (e.g. a persisted cell table)
-            if cleanup is not None:
-                cleanup(out)
-            gate_wait = min(_HEADLINE_RETRY_WAIT, retry_budget[0])
-            t_gate = time.time()
-            gate = _wait_clean_window(
-                CPUS, gate_wait, time.time() + gate_wait
-            )
-            retry_budget[0] -= time.time() - t_gate
-            if not gate.get("window_clean"):
-                break  # storm persists: keep the honest dirty sample
-        # prefer the last CLEAN attempt; fall back to the fastest wall
-        clean = [a for a in attempts if not _query_contaminated(a[1])]
-        wall, cpu, out = clean[-1] if clean else min(attempts, key=lambda a: a[0])
-        for extra_wall, extra_cpu, extra_out in attempts:
-            if extra_out is not out and cleanup is not None:
-                cleanup(extra_out)
-        q[name] = wall
-        qcpu[name] = dict(cpu)
-        if len(attempts) > 1:
-            qcpu[name]["attempt_walls"] = [round(a[0], 3) for a in attempts]
-        return out
+    from aduana_spark.pipeline.multimodal import (
+        extract_media_features,
+        synthesize_media,
+    )
+    from aduana_spark.pipeline.similarity import (
+        add_ivf_cells,
+        brute_force_topk,
+        ivf_topk,
+        kmeans_centroids,
+    )
 
     edges = bench_edges(spark)
-
-    pr = T("pagerank_1e6", lambda: pagerank(edges, precision=1e-6, max_iters=60))
-    q["pagerank_superstep"] = sum(m.wall_sec for m in pr.metrics) / max(
-        len(pr.metrics), 1
-    )
-    globals()["_PR_RESULT"] = pr
-
-    T("hits_1e4", lambda: hits(edges, precision=1e-4, max_iters=40).ranks.count())
-
-    T("connected_components", lambda: connected_components(edges).ranks.count())
-
     li = _t(spark, "lineitem")
     mod = li.select(
         (F.col("l_partkey") % 500).cast("long").alias("src"),
         (F.col("l_suppkey") % 500).cast("long").alias("dst"),
     ).where(F.col("src") != F.col("dst"))
-    T("triangle_count", lambda: triangle_count(mod).collect())
-
     orders = _t(spark, "orders")
-    T(
-        "frontier_topk",
-        lambda: orders.where(F.col("o_orderstatus") == "O")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(100)
-        .collect(),
-    )
-
     docs = _t(spark, "documents")
-    T(
-        "minhash_lsh",
-        lambda: minhash_lsh_candidates(
-            docs, num_perm=64, bands=16, shingle_k=3, threshold=0.5
-        ).count(),
-    )
-
     # 10× corpus: exercises the bucket caps + the bucket-join under
     # load (each original doc's 10 salted copies are exact dups, so
     # every band bucket carries 10× membership)
@@ -258,218 +127,79 @@ def run_headline(spark) -> tuple[dict[str, float], dict[str, dict]]:
         ),
         "text",
     )
-    T(
-        "minhash_lsh_10x",
-        lambda: minhash_lsh_candidates(
-            docs10, num_perm=64, bands=16, shingle_k=3, threshold=0.5
-        ).count(),
-    )
-
     emb = _t(spark, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    T("embedding_topk", lambda: brute_force_topk(emb, list(qvec), k=10).collect())
+    qvec = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
 
     # IVF with the persisted-cell scale path: build (k-means + cell
     # assignment, persisted) timed separately from the repeated-query
     # cost that benefits from it
-    from aduana_spark.pipeline.similarity import (
-        add_ivf_cells,
-        ivf_topk,
-        kmeans_centroids,
-    )
+    ivf: dict = {}
 
-    def _ivf_build():
-        cents = kmeans_centroids(emb, k=16, iters=3, seed=7)
-        cells = add_ivf_cells(emb, cents).persist()
-        cells.count()
-        return cents, cells
-
-    cents, cells = T(
-        "ivf_build_cells", _ivf_build, cleanup=lambda out: out[1].unpersist()
-    )
-    T(
-        "ivf_topk_cells",
-        lambda: ivf_topk(
-            cells, list(qvec), k=10, centroids=cents, cell_col="_cell"
-        ).collect(),
-    )
-    cells.unpersist()
-
-    T(
-        "extract_5k_pages",
-        lambda: raw_edges(
-            extract_pages(synth_pages(spark, n_pages=5000, n_domains=200))
-        ).count(),
-    )
+    def ivf_build_cells():
+        if "cells" in ivf:
+            ivf["cells"].unpersist()
+        ivf["cents"] = kmeans_centroids(emb, k=16, iters=3, seed=7)
+        ivf["cells"] = add_ivf_cells(emb, ivf["cents"]).persist()
+        return ivf["cells"].count()
 
     # REAL multimodal decode throughput: synthesize 2k media rows
-    # (PNG/BMP/GIF/JPEG images, WAVs, MJPEG-AVI videos — the full
-    # round-5 codec set) and decode every one to features in Arrow
-    # batches. Encoder+decoder both run in the measured window; the
-    # synthesis is the same deterministic corpus the media_decode
-    # oracle gates, so the number tracks the code path users run.
-    def _media_decode_2k():
-        from aduana_spark.pipeline.multimodal import (
-            extract_media_features,
-            synthesize_media,
-        )
-
-        docs = _t(spark, "documents").select("doc_id").limit(2000)
+    # (PNG/BMP/GIF/JPEG images, WAVs, MJPEG-AVI videos) and decode
+    # every one to features in Arrow batches. Encoder and decoder both
+    # run in the measured window; the synthesis is the same
+    # deterministic corpus the media_decode oracle gates.
+    def media_decode_2k():
         return (
             extract_media_features(
-                synthesize_media(docs), dim=16, decoder="real"
+                synthesize_media(docs.select("doc_id").limit(2000)),
+                dim=16,
+                decoder="real",
             )
             .where(F.col("feature").isNotNull())
             .count()
         )
 
-    T("media_decode_2k", _media_decode_2k)
-    return q, qcpu
-
-
-def _probe_once(mb: int = 24) -> float:
-    """Single-threaded CPU-steal probe: seconds to SHA-256 a fixed
-    buffer (pure C loop, no BLAS thread pools, deterministic work).
-    On a quiet host this is constant to a few %; host CPU steal shows
-    up directly as a longer wall."""
-    import hashlib
-
-    buf = b"\x5a" * (1 << 20)
-    t0 = time.perf_counter()
-    h = hashlib.sha256()
-    for _ in range(mb):
-        h.update(buf)
-    return time.perf_counter() - t0
-
-
-def fault_probe(mb: int = 64) -> float:
-    """First-touch throughput of fresh anonymous memory, in MB/s.
-
-    This guest runs with virtio-balloon *free page reporting*: freed
-    guest pages are returned to the host, so re-allocating them
-    triggers a host-side fault for new backing. Under host memory
-    pressure each such fault costs ~0.5 ms — first-touch throughput
-    collapses from GB/s to ~5-10 MB/s while CPU spin probes and
-    already-touched memory stay full speed, and the victim workload
-    books the stall as guest *sys* time with zero steal (measured; see
-    BENCH.md root-cause section). Any workload that grows fresh
-    footprint (JVM heap commit, tmpfs shuffle churn) storms in that
-    regime, so this probe — not a CPU probe — is the gate for
-    "is it worth starting a JVM right now".
-    Quiet readings: 1-8 GB/s. Storm readings: < 100 MB/s."""
-    import numpy as np
-
-    n = mb * 1024 * 1024 // 8
-    t0 = time.perf_counter()
-    a = np.empty(n)
-    a[:: 512] = 1.0  # one write per 4 KiB page => fault every page
-    dt = time.perf_counter() - t0
-    del a
-    return mb / dt
-
-
-def steal_probe(rounds: int = 3) -> float:
-    """min over a few probe rounds (the min is the machine's true
-    single-core cost; anything above it is interference)."""
-    return min(_probe_once() for _ in range(rounds))
-
-
-def _parallel_probe_worker(mb: int) -> float:
-    return _probe_once(mb)
-
-
-def _membw_probe_worker(mb: int) -> float:
-    """Memory-bandwidth kernel: stream-multiply a float64 array that
-    is far larger than L2/L3 share (single-threaded numpy elementwise
-    op). Shuffle-heavy Spark stages are bound by exactly this resource
-    on a single box — N threads share ONE memory system, unlike N
-    executors on a cluster, each with its own."""
-    import numpy as np
-
-    a = np.ones(mb * 131072)  # mb MB of float64
-    np.multiply(a, 1.0000001, out=a)  # warm
-    t0 = time.perf_counter()
-    for _ in range(8):
-        np.multiply(a, 1.0000001, out=a)  # in-place: no alloc/page faults
-    return time.perf_counter() - t0
-
-
-def host_effective_cores(levels=(1, 8, 32), mb: int = 192, membw_mb: int = 64) -> dict:
-    """Measure how many cores' worth of sustained compute the host
-    actually provides: N forked workers each do fixed single-threaded
-    work; aggregate throughput / single-worker throughput = effective
-    cores at N. On a dedicated 32-core host the CPU kernel reads ≈N; a
-    burst-quota VM plateaus at the quota. The memory-bandwidth kernel
-    plateaus where the socket's memory system saturates — the ceiling
-    that binds shuffle-heavy stages on ONE box (a real 4N-executor
-    cluster multiplies memory systems along with cores, so this
-    ceiling is a single-node artifact, not a plan property)."""
-    import multiprocessing as mp
-
-    out = {}
-    ctx = mp.get_context("fork")
-
-    def best_of(pool_n, worker, work, scale, rounds=2):
-        # walls measured INSIDE each worker (fork/Pool startup excluded);
-        # identical work keeps the workers overlapped, so Σ(work/wall_i)
-        # is the aggregate sustained throughput at concurrency n. Best
-        # of a few rounds — a stolen round understates the ceiling.
-        best = 0.0
-        for _ in range(rounds):
-            with ctx.Pool(pool_n) as pool:
-                walls = pool.map(worker, [work] * pool_n)
-            best = max(best, sum(scale / w for w in walls))
-        return round(best, 1)
-
-    for n in levels:
-        out[f"throughput_{n}"] = best_of(n, _parallel_probe_worker, mb, mb)
-        out[f"membw_throughput_{n}"] = best_of(
-            n, _membw_probe_worker, membw_mb, membw_mb * 8
-        )
-    base = out["throughput_1"]
-    mbase = out["membw_throughput_1"]
-    for n in levels:
-        out[f"effective_cores_{n}"] = round(out[f"throughput_{n}"] / base, 2)
-        out[f"effective_membw_{n}"] = round(out[f"membw_throughput_{n}"] / mbase, 2)
-    return out
+    try:
+        yield {
+            "pagerank_1e6": lambda: pagerank(edges, precision=1e-6, max_iters=60),
+            "hits_1e4": lambda: hits(edges, precision=1e-4, max_iters=40).ranks.count(),
+            "connected_components": lambda: connected_components(edges).ranks.count(),
+            "triangle_count": lambda: triangle_count(mod).collect(),
+            "frontier_topk": lambda: orders.where(F.col("o_orderstatus") == "O")
+            .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
+            .limit(100)
+            .collect(),
+            "minhash_lsh": lambda: minhash_lsh_candidates(
+                docs, num_perm=64, bands=16, shingle_k=3, threshold=0.5
+            ).count(),
+            "minhash_lsh_10x": lambda: minhash_lsh_candidates(
+                docs10, num_perm=64, bands=16, shingle_k=3, threshold=0.5
+            ).count(),
+            "embedding_topk": lambda: brute_force_topk(emb, qvec, k=10).collect(),
+            "ivf_build_cells": ivf_build_cells,
+            "ivf_topk_cells": lambda: ivf_topk(
+                ivf["cells"], qvec, k=10, centroids=ivf["cents"], cell_col="_cell"
+            ).collect(),
+            "extract_5k_pages": lambda: raw_edges(
+                extract_pages(synth_pages(spark, n_pages=5000, n_domains=200))
+            ).count(),
+            "media_decode_2k": media_decode_2k,
+        }
+    finally:
+        if "cells" in ivf:
+            ivf["cells"].unpersist()
 
 
 def _proc_stat() -> list[int] | None:
     try:
         with open("/proc/stat") as fh:
             return [int(x) for x in fh.readline().split()[1:]]
-    except Exception:
-        return None
-
-
-def _proc_stat_cpus(cores: int) -> list[int] | None:
-    """Summed ticks over ONLY the pinned CPUs (lines cpu0..cpu{N-1}).
-    Host-wide steal over-attributes: interference on cpu20 is not
-    interference with a job pinned to cpus 0-7, and light background
-    threads (the parent's probes, kernel housekeeping) accrue
-    steal/system on cores the job never touches."""
-    try:
-        agg: list[int] | None = None
-        with open("/proc/stat") as fh:
-            for line in fh:
-                if line.startswith("cpu") and len(line) > 3 and line[3].isdigit():
-                    parts = line.split()
-                    if int(parts[0][3:]) < cores:
-                        vals = [int(x) for x in parts[1:]]
-                        agg = vals if agg is None else [
-                            a + b for a, b in zip(agg, vals)
-                        ]
-        return agg
-    except Exception:
+    except OSError:
         return None
 
 
 def _proc_stat_delta(a, b) -> dict:
-    """CPU-time split (%) between two /proc/stat snapshots — the
-    hypervisor's own accounting of steal during the window, immune to
-    the probe-can't-see-it problem (a single-core probe between runs
-    reads clean while the 32-thread job inside the window was
-    throttled)."""
+    """CPU-time split (%) between two /proc/stat snapshots: the
+    hypervisor's own accounting of steal during the window."""
     if a is None or b is None:
         return {}
     d = [y - x for x, y in zip(a, b)]
@@ -478,1145 +208,66 @@ def _proc_stat_delta(a, b) -> dict:
     return {f"{n}_pct": round(100 * v / total, 1) for n, v in zip(names, d[:8])}
 
 
-def _cycle_main(argv: list[str]) -> None:
-    """Child-process entry for ONE scaling cycle: pin this process
-    (and therefore the JVM it spawns — GC, shuffle IO, codegen
-    threads included) to exactly N cores BEFORE pyspark starts, run
-    the identical PageRank job, write walls + /proc/stat split to the
-    result file. Linux sizes ``Runtime.availableProcessors`` from the
-    affinity mask, so the pinned JVM's service thread pools match a
-    real N-core executor's."""
-    cores, partitions, supersteps = int(argv[0]), int(argv[1]), int(argv[2])
-    edges_path, out_path = argv[3], argv[4]
-    os.sched_setaffinity(0, set(range(cores)))
-    import pathlib
-    import threading
-
-    from aduana_spark.graph.pagerank import pagerank
-    from aduana_spark.session import get_spark
-
-    # per-pinned-CPU /proc/stat sampler: host steal on this VM arrives
-    # in bursts that hit mid-cycle (lock-holder preemption inflates
-    # guest *system* time too, so a stolen window shows kernel-heavy
-    # 10× superstep walls). Sampling the job's own N CPUs at 4 Hz lets
-    # the parent classify each superstep individually — one clean
-    # superstep anywhere in the cycle is a valid cost sample, where
-    # cycle-level probes would discard the whole cycle — without
-    # counting interference on cores the job never touches.
-    samples: list[tuple[float, list[int] | None]] = []
-    stop_evt = threading.Event()
-
-    def _sampler():
-        while not stop_evt.is_set():
-            samples.append((time.monotonic(), _proc_stat_cpus(cores)))
-            stop_evt.wait(0.25)
-
-    thr = threading.Thread(target=_sampler, daemon=True)
-    thr.start()
-
-    pathlib.Path("/dev/shm/spark-local").mkdir(exist_ok=True)
-    spark = get_spark(
-        app_name=f"aduana-scaling-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=partitions,
-        extra_conf={
-            "spark.local.dir": "/dev/shm/spark-local",
-            # Free superseded superstep state at superstep cadence, not
-            # the 5 min engine default. Under the host's free-page
-            # reporting (BENCH.md second root cause) tmpfs pages freed
-            # tens of seconds ago are still host-mapped, so a superstep
-            # that reuses just-freed shuffle pages faults cheaply, while
-            # pages that sat freed for minutes (one big batched cleanup)
-            # have been reported/unmapped and every reallocation pays a
-            # host fault. Frequent cleanup converts the per-superstep
-            # tmpfs churn from always-fresh to mostly-recycled. The
-            # concurrent-GC flag below keeps the triggered collections
-            # from pausing the superstep.
-            "spark.cleaner.periodicGC.interval": "30s",
-            # fixed layout across levels: AQE coalescing targets
-            # defaultParallelism (parallelismFirst), which differs per
-            # level — the physical plans would silently diverge
-            "spark.sql.adaptive.enabled": "false",
-            # Pin Xms = Xmx. Root cause of the "superstep-3 storm"
-            # (A/B-confirmed, BENCH.md): with the default growable
-            # heap, G1's commit/uncommit churn after the first couple
-            # of supersteps drives guest-kernel cross-CPU
-            # page-table/TLB work that stalls on host-descheduled
-            # vCPUs — walls blow up 10-40x with sys >> user and ~zero
-            # booked steal. A fixed-size heap never grows or shrinks,
-            # so the mechanism is gone; first-touch faults are spread
-            # thinly and measured harmless (near-zero pgfault during
-            # storms). UseTransparentHugePages: measured in a confirmed
-            # fault-regime window, 4 KiB first-touch collapses to
-            # 5-6 MB/s while MADV_HUGEPAGE first-touch holds
-            # 168-366 MB/s (2 MiB faults, ~512x fewer host round
-            # trips) — with THP the heap commit is storm-resilient,
-            # which also makes AlwaysPreTouch affordable again (pay
-            # the whole commit once, inside the probe-gated window,
-            # instead of bleeding it into supersteps).
-            # ExplicitGCInvokesConcurrent keeps the 30 s periodic GC
-            # above from stop-the-world pausing a superstep.
-            # 8 GiB (not the 16 GiB facade default): plenty for the x24
-            # table at every width, and the one-time THP pre-touch of
-            # 8 GiB stays bounded (~seconds quiet, single-digit minutes
-            # in the deepest measured storm) where 16 GiB blew a whole
-            # cycle budget. Xms = Xmx = spark.driver.memory.
-            # Override with ADUANA_SCALING_MEM / SPARK_GRAFT_CYCLE_JAVA_OPTS.
-            "spark.driver.memory": os.environ.get(
-                "ADUANA_SCALING_MEM", "8g"
-            ),
-            "spark.driver.extraJavaOptions": os.environ.get(
-                "SPARK_GRAFT_CYCLE_JAVA_OPTS",
-                "-Xms" + os.environ.get("ADUANA_SCALING_MEM", "8g")
-                + " -XX:+UseTransparentHugePages -XX:+AlwaysPreTouch"
-                + " -XX:+ExplicitGCInvokesConcurrent",
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        t0 = time.time()
-        edges = spark.read.parquet(edges_path)
-        stat0 = _proc_stat()
-
-        # stream per-superstep evidence to disk as it lands: a cycle
-        # the parent kills at the timeout still contributes its
-        # completed (possibly clean) supersteps instead of zero —
-        # in a storm burst the early supersteps are often the only
-        # usable samples the whole window produces
-        done: list = []
-
-        def _on_superstep(m) -> None:
-            done.append(m)
-            try:
-                with open(out_path + ".partial", "w") as fh:
-                    json.dump(
-                        {
-                            "cores": cores,
-                            "walls_sec": [round(x.wall_sec, 2) for x in done],
-                            "windows": [
-                                [x.end_monotonic - x.wall_sec, x.end_monotonic]
-                                for x in done
-                            ],
-                            "samples": [
-                                [tm, st] for tm, st in samples if st is not None
-                            ],
-                        },
-                        fh,
-                    )
-            except OSError:
-                pass
-
-        # precision=0: run EXACTLY `supersteps` supersteps. The cycle
-        # measures per-superstep cost (identical message-passing work
-        # each iteration, converged or not); early convergence at 1e-6
-        # was silently capping long harvest cycles at ~7 supersteps,
-        # wasting the JVM's amortized heap-faulting on fewer samples.
-        res = pagerank(
-            edges, precision=0.0, max_iters=supersteps, on_superstep=_on_superstep
-        )
-        stat1 = _proc_stat()
-        stop_evt.set()
-        thr.join(timeout=2)
-        walls = [m.wall_sec for m in res.metrics]
-        # REAL superstep boundaries from the per-superstep monotonic
-        # stamps (SuperstepMetrics.end_monotonic) — reconstructing
-        # windows back-to-back from walls shifted every window earlier
-        # by whatever non-superstep tail work ran inside pagerank()
-        windows = [
-            (m.end_monotonic - m.wall_sec, m.end_monotonic) for m in res.metrics
-        ]
-        out = {
-            "cores": cores,
-            "n_edges": res.n_edges,
-            "total_sec": round(time.time() - t0, 2),
-            "walls_sec": [round(w, 2) for w in walls],
-            "cpu_during": _proc_stat_delta(stat0, stat1),
-            "supersteps": _per_superstep_cpu(samples, windows, cores),
-        }
-    finally:
-        spark.stop()
-    with open(out_path, "w") as fh:
-        json.dump(out, fh)
-
-
-def _per_superstep_cpu(
-    samples: list, windows: list[tuple[float, float]], cores: int
-) -> list[dict]:
-    """Map sampler snapshots onto the REAL superstep windows (start,
-    end monotonic pairs recorded by the pagerank loop itself) and
-    report per-superstep steal/system/user in units of CORES
-    (tick-rate × share of window), plus steal as a fraction of the N
-    cores the pinned job owns."""
-    out = []
-    for a, b in windows:
-        w = b - a
-        win = [(tm, st) for tm, st in samples if st is not None and a <= tm <= b]
-        if len(win) < 2:
-            out.append({"wall_sec": round(w, 2)})
-            continue
-        (t0, s0), (t1, s1) = win[0], win[-1]
-        dt = max(t1 - t0, 1e-6)
-        d = [y - x for x, y in zip(s0, s1)]
-        hz = os.sysconf("SC_CLK_TCK")
-        names = ["user", "nice", "system", "idle", "iowait", "irq", "softirq", "steal"]
-        cores_by = {n: v / hz / dt for n, v in zip(names, d[:8])}
-        out.append(
-            {
-                "wall_sec": round(w, 2),
-                "user_cores": round(cores_by["user"], 2),
-                "system_cores": round(cores_by["system"], 2),
-                "steal_cores": round(cores_by["steal"], 3),
-                "steal_frac_of_job": round(cores_by["steal"] / cores, 4),
-            }
-        )
-    return out
-
-
-def _salvage_partial_cycle(partial_path: str, cores: int, errname: str) -> dict:
-    """Build a cycle record from the child's streamed per-superstep
-    evidence after a timeout/crash; empty record if nothing usable."""
-    try:
-        with open(partial_path) as fh:
-            part = json.load(fh)
-        samples = [(tm, st) for tm, st in part.get("samples", [])]
-        windows = [tuple(w) for w in part.get("windows", [])]
-        return {
-            "cores": cores,
-            "failed": f"{errname}(partial {len(windows)} supersteps)",
-            "walls_sec": part.get("walls_sec", []),
-            "supersteps": _per_superstep_cpu(samples, windows, cores),
-        }
-    except (OSError, ValueError):
-        return {
-            "cores": cores,
-            "failed": errname,
-            "walls_sec": [],
-            "supersteps": [],
-        }
-
-
-def _run_pinned_cycle(
-    cores: int, partitions: int, supersteps: int, edges_path: str,
-    timeout_sec: int = 900,
-) -> dict:
-    """One pinned cycle in a subprocess. A clean cycle finishes in
-    2-6 minutes even at N=2; a cycle that blows past ``timeout_sec``
-    is by definition heavily contaminated — kill it and record the
-    timeout so the parent counts it as zero clean supersteps instead
-    of stalling the whole suite behind a steal storm."""
-    import subprocess
-    import tempfile
-
-    fd, out_path = tempfile.mkstemp(suffix=".json")
-    os.close(fd)
-    try:
-        subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--cycle",
-                str(cores),
-                str(partitions),
-                str(supersteps),
-                edges_path,
-                out_path,
-            ],
-            check=True,
-            timeout=timeout_sec,
-            stdout=subprocess.DEVNULL,
-            stderr=subprocess.DEVNULL,
-        )
-        with open(out_path) as fh:
-            return json.load(fh)
-    except (subprocess.TimeoutExpired, subprocess.CalledProcessError) as e:
-        # salvage the supersteps the child streamed out before the
-        # kill — their per-superstep steal/kernel gating still applies,
-        # so a storm-killed cycle contributes its clean prefix instead
-        # of nothing
-        return _salvage_partial_cycle(out_path + ".partial", cores, type(e).__name__)
-    finally:
-        for p in (out_path, out_path + ".partial"):
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-
-
-def _scaling_table_path(copies: int) -> str:
-    """Content-keyed /dev/shm path for the scaling table. The key
-    (sf-dir basename + copies) is what makes concurrent runs safe: a
-    bench invocation at a different SF used to re-materialize over the
-    one shared path, silently swapping the table under an in-flight
-    harvester — its cycles then measured the wrong table while
-    self-reporting the old edge count, which the merge would have
-    accepted (caught live: an 'n2' cycle with 5 s walls against an
-    18.99 s floor). Distinct tables now get distinct paths; an
-    explicit SPARK_GRAFT_SCALING_TABLE is honored verbatim."""
-    env = os.environ.get("SPARK_GRAFT_SCALING_TABLE")
-    if env:
-        return env
-    key = f"{os.path.basename(os.path.normpath(SF_DIR))}_{copies}x"
-    return f"/dev/shm/aduana_scaling_edges_{key}"
-
-
-def _materialize_scaling_table(copies: int) -> tuple[str, int]:
-    """Write the inflated edge table once (full cores) so every cycle
-    at every level reads identical bytes.
-
-    Reuses an existing table when a marker written after a *completed*
-    materialization matches (same copies + sf dir): on this host CPU
-    arrives as burst credits, and re-inflating the table at 32 threads
-    spends the very credits the pinned cycles need. The marker is only
-    written after a successful count, so a killed write never leaves a
-    reusable-looking partial table; pyarrow re-counts the footers
-    (cheap, no JVM) as a belt-and-braces check."""
-    path = _scaling_table_path(copies)
-    marker = path + ".meta"
-    try:
-        with open(marker) as fh:
-            m = json.load(fh)
-        if m.get("copies") == copies and m.get("sf_dir") == SF_DIR:
-            import pyarrow.dataset as pads
-
-            n = pads.dataset(path, format="parquet").count_rows()
-            if n == m.get("n_edges"):
-                return path, n
-    except (OSError, ValueError, KeyError):
-        pass
-    spark = _session(CPUS, shuffle_partitions=256)
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        scaling_edges(spark, copies=copies).write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-    finally:
-        spark.stop()
-    with open(marker, "w") as fh:
-        json.dump({"copies": copies, "sf_dir": SF_DIR, "n_edges": n}, fh)
-    return path, n
-
-
-# fresh pinned JVM per cycle: the first supersteps carry JIT/codegen
-# warmup — drop them from the steady-state walls
-WARMUP_SUPERSTEPS = 2
-
-# A superstep is an uncontaminated cost sample when (a) the host stole
-# <=3% of the job's pinned cores during its window (direct slowdown
-# bound) and (b) guest kernel time stayed under the width's kernel
-# gate. (b) catches the failure modes accounted steal misses:
-# kernel-dominated stalls (lock-holder preemption / reclaim) and the
-# fault-latency regime (host free-page reporting — BENCH.md round-4
-# root cause), both of which inflate walls while steal stays low.
-#
-# The kernel gate is PER WIDTH because the bias is asymmetric: an
-# inflated-wall sample admitted on the SLOW leg of an N→4N pair
-# *raises* measured efficiency (the round-2 overclaim mode), while on
-# the fast leg it can only lower it. Measured healthy clusters:
-# n2 0.03, n4 0.05-0.07, n8 0.03 (sys/user; legitimate tmpfs-shuffle
-# kernel share grows with width: n32 healthy 0.22-0.35), while
-# fault-regime samples cluster at >=0.32 even at n2 (walls ~25-30%
-# inflated vs the same table's healthy samples). Gates sit ~3-5x the
-# healthy ceiling and below the degraded cluster at the narrow widths
-# that serve as slow legs; the old flat 0.4 admitted 0.32-0.39
-# fault-regime n2 samples.
-STEAL_FRAC_CLEAN = 0.03
-KERNEL_USER_RATIO_CLEAN = {2: 0.15, 4: 0.2, 8: 0.25, 16: 0.45, 32: 0.45}
-
-
-def _kernel_gate(cores: int) -> float:
-    return KERNEL_USER_RATIO_CLEAN.get(cores, 0.45)
-
-
-def _superstep_clean(ss: dict, cores: int) -> bool:
-    return (
-        "steal_frac_of_job" in ss
-        and ss["steal_frac_of_job"] <= STEAL_FRAC_CLEAN
-        and ss.get("system_cores", float("inf"))
-        <= _kernel_gate(cores) * ss.get("user_cores", 0.0)
+def _query_contaminated(c: dict | None) -> bool:
+    """Host steal during the query's own window, or a kernel-dominated
+    profile (lock-holder preemption / free-page-reporting storm),
+    attributes a slow wall to the environment rather than the plan."""
+    return bool(c) and (
+        c.get("steal_pct", 0.0) >= 2.0
+        or c.get("system_pct", 0.0) >= 0.6 * max(c.get("user_pct", 0.0), 0.1)
     )
 
 
-# Foreign-user-load gate (cycle-relative). The steal/kernel gates
-# cannot see a SECOND guest process burning the pinned CPUs: its
-# cycles book as plain user time, so a superstep stretched 4x by
-# competing load still reads steal≈0, sys/user≈0.05. What does expose
-# it is work accounting: every superstep runs identical work, so
-# user-core-SECONDS per superstep is bounded — the worst measured
-# legitimate inflation (memory-stall latency regimes, which burn user
-# cycles while stalled) reaches 2.4x the cycle's own floor across all
-# committed evidence, while the one measured foreign-load sample
-# (builder verification jobs overlapping a pinned cycle: wall 136.2 s
-# vs sibling ~30 s at n2) read 4.0x. A sample above 3x the cycle's
-# min clean user-core-seconds is therefore a second process, not host
-# weather, and is rejected. Conservative for the estimator: rejected
-# samples are wall-inflated, so dropping them can only lower medians
-# toward the floor and can never reject the floor itself (the min has
-# by definition the lowest core-seconds ~ the reference).
-FOREIGN_LOAD_CS_RATIO = 3.0
-
-
-def cycle_clean_supersteps(supersteps: list, cores: int) -> list:
-    """The cycle's uncontaminated cost samples: per-superstep
-    steal/kernel gates plus the cycle-relative foreign-load gate
-    (user-core-seconds ≤ FOREIGN_LOAD_CS_RATIO × the cycle's min
-    among gate-passing samples; needs ≥2 passing samples to have a
-    reference)."""
-    passing = [ss for ss in supersteps if _superstep_clean(ss, cores)]
-    if len(passing) < 2:
-        return passing
-    cs = [ss["wall_sec"] * ss["user_cores"] for ss in passing]
-    floor = min(cs)
-    return [
-        ss
-        for ss, c in zip(passing, cs)
-        if c <= FOREIGN_LOAD_CS_RATIO * floor
-    ]
-
-
-SUPERLINEAR_REFUSAL = 1.1
-
-
-def _pair_efficiency(
-    lo_eps: float, hi_eps: float, n: int, n4: int
-) -> tuple[float | None, str | None]:
-    """Efficiency of an N→4N pair with a superlinear refusal: on one
-    box, 4N pinned threads cannot genuinely exceed ideal ×4 scaling
-    by >10% (the levels share every cache level and the memory
-    system — there is no per-executor resource multiplication to go
-    superlinear on). An efficiency above 1.1 therefore means the slow
-    leg's 'clean' samples were wall-inflated by a regime the gates
-    missed; the pair is refused instead of reported as a vacuously
-    passing number."""
-    eff = round((hi_eps / lo_eps) / (n4 / n), 3)
-    if eff > SUPERLINEAR_REFUSAL:
-        return None, (
-            f"superlinear ({eff} > {SUPERLINEAR_REFUSAL}): slow-leg clean "
-            "samples likely wall-inflated by an undetected degraded "
-            "regime; refused"
-        )
-    return eff, None
-
-
-def _pair_note(eff: float | None) -> str | None:
-    """Annotation for efficiencies in (1.0, SUPERLINEAR_REFUSAL]:
-    physically the ratio cannot exceed 1.0 on one box, so a reading
-    there means the SLOW leg's quiet floor is unfound — its min comes
-    from a worse host regime than the fast leg's best window (the
-    harvester re-samples the slow leg until the estimator returns to
-    <=1.0, which can only lower it). Reported, not refused: the
-    reading is evidence the true ratio is high, biased only by the
-    missing slow-leg floor."""
-    if eff is not None and eff > 1.0:
-        return (
-            "min-estimator > 1.0 is impossible for pinned same-box "
-            "threads: slow-leg quiet floor unfound (regime asymmetry "
-            "between legs' best windows); true ratio <= 1.0, lowered "
-            "only by further slow-leg sampling"
-        )
-    return None
-
-
-# N→4N pairs, in grading priority order: (2,8) is the cluster-analog
-# criterion pair; (4,16) is the same ×4 ratio at half the memory
-# pressure (second data point for the "32 threads share one socket's
-# memory system" bound); (8,32) documents that bound.
-SCALING_PAIRS = ((2, 8), (4, 16), (8, 32))
-
-# minimum effective-cores fraction (forked CPU-kernel probe) for a
-# window to be worth spending a pinned cycle on: measured quiet-host
-# values are ~0.94×N up to 8 workers, ~0.8×N at 16, ~0.6-0.9×N at 32
-# (single-socket membw), while storm windows read 0.3-0.5×N
-CLEAN_EFF_FRAC = {2: 0.85, 4: 0.85, 8: 0.85, 16: 0.7, 32: 0.55}
-
-
-def _clean_eff_frac(cores: int) -> float:
-    """Window-gate threshold for any width (HARVEST_FORCE_LEVEL /
-    HARVEST_LEVELS accept arbitrary core counts): tabulated levels
-    verbatim, in-between widths take the nearest-wider tabulated
-    threshold (conservatively lower — a wider job tolerates less
-    per-core headroom on this single-socket box)."""
-    if cores in CLEAN_EFF_FRAC:
-        return CLEAN_EFF_FRAC[cores]
-    wider = [c for c in sorted(CLEAN_EFF_FRAC) if c >= cores]
-    return CLEAN_EFF_FRAC[wider[0]] if wider else CLEAN_EFF_FRAC[32]
-
-
-def _supersteps_for(cores: int) -> int:
-    """Supersteps per cycle: slow legs (N<=4) pay ~20 s per superstep,
-    so 6 keeps the cycle short; fast legs amortize JVM startup over 8
-    (2 warmup supersteps are dropped either way)."""
-    return 6 if cores <= 4 else 8
-
-
-def _wait_clean_window(
-    cores: int, wait_budget_sec: float, deadline: float
-) -> dict:
-    """Opportunistic clean-window gate: probe the host BEFORE spending
-    a 100-300 s pinned cycle, and sleep through storm bursts (they run
-    minutes on this VM) instead of burning cycle budget into them. A
-    forked multi-core probe at the cycle's own width is required — a
-    single-core probe reads clean while 32-thread aggregate is
-    throttled 5×. After ``wait_budget_sec`` the cycle runs anyway:
-    per-superstep steal gating still protects the estimator, and
-    bursts shorter than a cycle can leave clean supersteps inside a
-    stormy window."""
-    t0 = time.time()
-    attempts = []
-    fault_attempts = []
-    while True:
-        mc = host_effective_cores(levels=(1, cores), mb=64, membw_mb=24)
-        eff = mc[f"effective_cores_{cores}"]
-        attempts.append(eff)
-        # fresh-page fault probe: the free-page-reporting storm regime
-        # (BENCH.md root cause) leaves CPU probes reading clean while
-        # any workload that grows footprint — a starting JVM above
-        # all — stalls ~0.5 ms/page in guest kernel
-        fp = round(fault_probe(32), 1)
-        fault_attempts.append(fp)
-        if eff >= _clean_eff_frac(cores) * cores and fp >= 400.0:
-            return {
-                "waited_sec": round(time.time() - t0, 1),
-                "probe_attempts": attempts,
-                "fault_probe_attempts_mb_s": fault_attempts,
-                "window_clean": True,
-            }
-        if time.time() - t0 > wait_budget_sec or time.time() > deadline:
-            return {
-                "waited_sec": round(time.time() - t0, 1),
-                "probe_attempts": attempts,
-                "fault_probe_attempts_mb_s": fault_attempts,
-                "window_clean": False,
-            }
-        time.sleep(20)
-
-
-EVIDENCE_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "scaling_evidence"
-)
-
-
-def _committed_windows(n_edges: int, partitions: int) -> list[tuple[str, dict]]:
-    """Committed scaling-evidence windows (suite `.partial` dumps and
-    `tools/cycle_harvester.py` harvests under `scaling_evidence/`)
-    that ran the IDENTICAL protocol instance: same pre-materialized
-    table (edge count) and same fixed shuffle layout. Windows with a
-    different table or layout are excluded, mirroring
-    `tools/merge_scaling_windows.py`'s refusal."""
-    wins: list[tuple[str, dict]] = []
-    for p in sorted(glob.glob(os.path.join(EVIDENCE_DIR, "*.json"))):
-        try:
-            with open(p) as fh:
-                d = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        s = d.get("scaling") if isinstance(d.get("scaling"), dict) else d
-        if not isinstance(s, dict) or not s.get("cycles"):
-            continue
-        if (
-            s.get("edges") != n_edges
-            or s.get("shuffle_partitions") != partitions
-        ):
-            continue
-        wins.append((os.path.basename(p), s))
-    return wins
-
-
-def _merged_levels(
-    own_cycles: list[dict],
-    n_edges: int,
-    partitions: int,
-    levels: list[int],
-    pairs,
-) -> dict | None:
-    """Union of this window's clean supersteps with committed
-    evidence windows under the identical protocol. The per-superstep
-    gates (`_superstep_clean`) are what make supersteps from
-    different windows comparable: every cycle runs the same table,
-    same fixed partition layout, pinned fresh JVM, AQE off — the only
-    thing varying across windows is host contamination, which the
-    gates remove. Reported under clearly-labeled `merged` keys; the
-    single-window numbers remain the primary per-window signal."""
-    wins = _committed_windows(n_edges, partitions)
-    if not wins and not own_cycles:
-        return None
-    all_cycles: list[tuple[str, dict]] = [
-        ("<this window>", c) for c in own_cycles
-    ]
-    for name, s in wins:
-        all_cycles.extend((name, c) for c in s["cycles"])
-    merged: dict = {
-        "sources": ["<this window>"] + [name for name, _ in wins],
-        "note": (
-            "min over the union of steal-clean supersteps across this "
-            "window and committed scaling_evidence/ windows; identical "
-            "table/layout/pinning per cycle, per-superstep gates "
-            "identical to the single-window estimator "
-            "(tools/merge_scaling_windows.py documents the argument)"
-        ),
-    }
-    per_window: dict[str, dict[int, list[float]]] = {}
-    for cores in levels:
-        clean: list[float] = []
-        contributing: set[str] = set()
-        for name, c in all_cycles:
-            if c.get("cores") != cores:
-                continue
-            ok = cycle_clean_supersteps(c.get("supersteps", []), cores)
-            if ok:
-                walls = [ss["wall_sec"] for ss in ok]
-                clean.extend(walls)
-                contributing.add(name)
-                per_window.setdefault(name, {}).setdefault(
-                    cores, []
-                ).extend(walls)
-        lvl: dict = {
-            "clean_supersteps": len(clean),
-            "windows": sorted(contributing),
-        }
-        if len(clean) >= 3:
-            best = min(clean)
-            lvl["min_sec_per_superstep"] = round(best, 3)
-            lvl["median_sec_per_superstep"] = round(
-                sorted(clean)[len(clean) // 2], 3
-            )
-            lvl["edges_per_sec"] = round(n_edges / best)
-        else:
-            lvl["unmeasurable"] = True
-        merged[f"n{cores}"] = lvl
-    for n, n4 in pairs:
-        lo, hi = merged[f"n{n}"], merged[f"n{n4}"]
-        if "edges_per_sec" in lo and "edges_per_sec" in hi:
-            eff, reason = _pair_efficiency(
-                lo["edges_per_sec"], hi["edges_per_sec"], n, n4
-            )
-            merged[f"efficiency_{n}_to_{n4}"] = eff
-            if reason:
-                merged[f"efficiency_{n}_to_{n4}_unmeasurable"] = reason
-            note = _pair_note(eff)
-            if note:
-                merged[f"efficiency_{n}_to_{n4}_note"] = note
-            # regime-mix-sensitive cross-check (see BENCH.md estimator
-            # discussion): medians of the clean-sample union
-            med = (
-                lo["median_sec_per_superstep"]
-                / hi["median_sec_per_superstep"]
-            ) / (n4 / n)
-            merged[f"efficiency_{n}_to_{n4}_median"] = round(med, 3)
-        else:
-            merged[f"efficiency_{n}_to_{n4}"] = None
-    # per-window pair efficiencies: a window that measured BOTH legs of
-    # a pair (>=3 clean each) is a self-contained, regime-matched
-    # measurement — surfaced so the driver artifact carries the
-    # within-window estimates next to the cross-window merge (same
-    # block tools/merge_scaling_windows.py emits)
-    pw: dict[str, dict[str, float]] = {}
-    for name, lv in per_window.items():
-        for n, n4 in pairs:
-            if len(lv.get(n, [])) >= 3 and len(lv.get(n4, [])) >= 3:
-                eff = (min(lv[n]) / min(lv[n4])) / (n4 / n)
-                pw.setdefault(name, {})[f"{n}_to_{n4}"] = round(eff, 3)
-    if pw:
-        merged["per_window_pairs"] = pw
-    return merged
-
-
-def run_scaling(pairs=SCALING_PAIRS, repeats: int | None = None) -> dict:
-    """Identical PageRank job at multiple parallelism levels — the
-    sandbox protocol for the north rule's two-cluster-size criterion
-    (BASELINE.md): same pre-materialized edge table, FIXED 256-partition
-    shuffle layout, AQE off, and each cycle in a fresh subprocess
-    pinned to exactly N of the host's 32 cores (see module docstring).
-    Levels run in N→4N PAIRS in grading priority order — (2,8) the
-    criterion pair, then (4,16), then (8,32) — each cycle gated by an
-    opportunistic clean-window probe (``_wait_clean_window``) so storm
-    bursts are slept through instead of consuming cycle budget, with
-    per-phase budget caps so no pair starves the others.
-
-    Steal-robust estimator (this VM has heavy bursty host CPU steal,
-    shorter than a cycle): a 4 Hz in-cycle /proc/stat sampler
-    attributes steal to individual superstep windows; only supersteps
-    with ≤3% of the job's cores stolen are cost samples, and a level
-    with fewer than 3 steal-clean supersteps is reported
-    ``unmeasurable`` with the blocking evidence — never silently
-    backfilled from contaminated walls. The per-level cost is the min
-    over clean steady-state supersteps (identical work per superstep
-    → the min is the machine's true cost). Cycle-bracketing
-    single-core and forked-multi-core probes are recorded as
-    corroboration.
-    ``host_effective_cores`` additionally measures the host's
-    sustained compute and memory-bandwidth ceilings;
-    ``efficiency_vs_*_ceiling`` normalizes the measured speedup by
-    the speedup the host itself can express (N threads on one box
-    share a single memory system; N→4N *executors* on a cluster
-    multiply memory systems with cores)."""
-    repeats = repeats or int(os.environ.get("SPARK_GRAFT_SCALING_REPEATS", "4"))
-    budget_sec = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_SEC", "2700"))
-    wait_budget = float(os.environ.get("SPARK_GRAFT_CLEAN_WAIT_SEC", "150"))
-    t_start = time.time()
-    deadline = t_start + budget_sec
-    # 24 copies (~32M edges at sf0.1): 25% cheaper n2 cycles than the
-    # round-3 table (the n2 leg dominates suite cost at ~20 s per
-    # superstep) while per-superstep walls at the fast legs stay ~5-6 s
-    # — still ~15x the per-superstep fixed overhead, so the efficiency
-    # ratio is not overhead-polluted
-    copies = int(os.environ.get("SPARK_GRAFT_SCALING_COPIES", "24"))
-    levels: list[int] = []
-    for pair in pairs:
-        for c in pair:
-            if c not in levels:
-                levels.append(c)
-    # phase budget fractions, cumulative: the (2,8) criterion pair may
-    # use up to 55% of the budget, (4,16) up to 85%, (8,32) the rest —
-    # a storm during phase A cannot starve the later pairs entirely
-    phase_frac = {0: 0.55, 1: 0.85, 2: 1.0}
-    # 8 tasks per core at the widest level: with only 2 waves one
-    # straggler in a 32-thread single-JVM wave costs ~50% wall —
-    # measured 64→256 partitions took the 32-core superstep from 34s
-    # to 6.1s under identical conditions. Same layout at every level.
-    fixed_partitions = 8 * max(levels)
-    out: dict = {
-        "protocol": "pinned-affinity fresh-JVM per cycle, AQE off, "
-        f"{fixed_partitions} fixed shuffle partitions, clean-window-gated "
-        "cycles, min-of-clean-supersteps",
-        "shuffle_partitions": fixed_partitions,
-        "repeats": repeats,
-        "inflation_copies": copies,
-        "supersteps_per_cycle": {f"n{c}": _supersteps_for(c) for c in levels},
-        "warmup_supersteps_dropped": WARMUP_SUPERSTEPS,
-        "clean_wait_budget_sec": wait_budget,
-    }
-    edges_path, n_edges = _materialize_scaling_table(copies)
-    out["edges"] = n_edges
-    out["host_probe_start"] = host_effective_cores(levels=(1,) + tuple(levels))
-    out["fault_probe_start_mb_s"] = round(fault_probe(32), 1)
-    cycles: list[dict] = []
-    target_clean = 4  # per level; hard gate below stays >=3
-    # Fixed-schedule sampling (ADVICE r4): a level is not "done" after
-    # one lucky cycle — each leg must contribute >= this many cycles
-    # that are themselves clean (>=3 clean supersteps), so a pair never
-    # rides on a single regime draw per leg. Triggered-only stopping is
-    # biased near the decision line; a fixed per-leg schedule is not.
-    # Budget/phase deadlines still cap everything, so a storm degrades
-    # to the round-4 behavior (one clean cycle) instead of stalling.
-    min_clean_cycles = int(os.environ.get("SPARK_GRAFT_MIN_CLEAN_CYCLES", "2"))
-
-    def _clean_count(cores: int) -> int:
-        return sum(
-            len(cycle_clean_supersteps(c["supersteps"], cores))
-            for c in cycles
-            if c["cores"] == cores
-        )
-
-    def _clean_cycles(cores: int) -> int:
-        return sum(
-            1
-            for c in cycles
-            if c["cores"] == cores
-            and len(cycle_clean_supersteps(c["supersteps"], cores)) >= 3
-        )
-
-    def _cycles_run(cores: int) -> int:
-        return sum(1 for c in cycles if c["cores"] == cores)
-
-    def _run_one(cores: int, cycle_i: int, phase_deadline: float) -> None:
-        gate = _wait_clean_window(
-            cores, min(wait_budget, max(phase_deadline - time.time(), 0)),
-            deadline,
-        )
-        probe_before = steal_probe()
-        r = _run_pinned_cycle(
-            cores, fixed_partitions, _supersteps_for(cores), edges_path,
-            # slow legs need the long cap; fast legs that blow 600 s
-            # are storm-bound by definition
-            timeout_sec=900 if cores <= 4 else 600,
-        )
-        probe_after = steal_probe()
-        cycles.append(
-            {
-                "cycle": cycle_i,
-                "cores": cores,
-                "window_gate": gate,
-                "probe_before_sec": round(probe_before, 4),
-                "probe_after_sec": round(probe_after, 4),
-                "cpu_during": r.get("cpu_during", {}),
-                "total_sec": r.get("total_sec"),
-                "walls_sec": r["walls_sec"][WARMUP_SUPERSTEPS:],
-                "all_walls_sec": r["walls_sec"],
-                "failed": r.get("failed"),
-                "supersteps": r.get("supersteps", [])[WARMUP_SUPERSTEPS:],
-            }
-        )
-        # incremental persistence: a killed suite still leaves the
-        # per-cycle evidence on disk
-        try:
-            with open(DETAIL_FILE + ".partial", "w") as fh:
-                json.dump(
-                    {"cycles": cycles,
-                     **{k: v for k, v in out.items() if k != "cycles"}},
-                    fh,
-                )
-        except OSError:
-            pass
-
-    # pair-phased, priority-ordered: finish the (2,8) criterion pair
-    # first (interleaved 2,8,2,8 — interleaving diversifies each
-    # level's exposure to storm bursts), then (4,16), then (8,32).
-    # A level is done at >=4 clean steady-state supersteps or after
-    # ``repeats`` cycles; the wall-clock budget gates every cycle.
-    for phase_i, pair in enumerate(pairs):
-        phase_deadline = t_start + phase_frac[min(phase_i, 2)] * budget_sec
-        for cycle_i in range(repeats):
-            for cores in pair:
-                if (
-                    _clean_count(cores) >= target_clean
-                    and _clean_cycles(cores) >= min_clean_cycles
-                ):
-                    continue
-                if _cycles_run(cores) >= repeats:
-                    continue
-                if time.time() > phase_deadline:
-                    out.setdefault("phase_budget_hits", []).append(
-                        f"phase{phase_i}@cycle{cycle_i}"
-                    )
-                    break
-                _run_one(cores, cycle_i, phase_deadline)
-            if time.time() > phase_deadline:
-                break
-        if time.time() > deadline:
-            out["budget_exhausted_after_sec"] = round(time.time() - t_start)
-            break
-    if not cycles:
-        # budget can be exhausted by table materialization + start
-        # probes alone (or repeats=0): report the refusal instead of
-        # crashing on an empty min()
-        out["unmeasurable"] = True
-        out["reason"] = "no scaling cycle ran (budget/repeats exhausted)"
-        for c in levels:
-            out[f"n{c}"] = {"unmeasurable": True, "reason": out["reason"]}
-        for n, n4 in pairs:
-            out[f"efficiency_{n}_to_{n4}"] = None
-            out[f"efficiency_{n}_to_{n4}_unmeasurable"] = out["reason"]
-        merged = _merged_levels(
-            [], n_edges, fixed_partitions, levels, pairs
-        )
-        if merged:
-            out["merged"] = merged
-        return out
-    best_probe = min(min(c["probe_before_sec"], c["probe_after_sec"]) for c in cycles)
-    # best gate-probe reading as a fraction of the probed width (gate
-    # probes run at each cycle's own core count, so raw values mix
-    # widths): 1.0 ≈ the host expressed the full width at least once
-    best_eff_frac = max(
-        eff / c["cores"]
-        for c in cycles
-        for eff in c["window_gate"]["probe_attempts"]
-    )
-    out["best_probe_sec"] = best_probe
-    out["best_window_eff_frac"] = round(best_eff_frac, 3)
-    out["cycles"] = cycles
-    # Per-SUPERSTEP selection: host steal on this VM arrives in bursts
-    # shorter than a cycle, and a preempted lock holder inflates guest
-    # kernel time ~10× on the stolen window (the erratic-wall
-    # signature). A superstep whose sampled steal is <= 3% of the
-    # job's own cores is an uncontaminated cost sample even when its
-    # cycle neighbors were hit. Identical work per superstep → the min
-    # over clean supersteps is the machine's true cost.
-    for cores in levels:
-        mine = [c for c in cycles if c["cores"] == cores]
-        clean_walls: list[float] = []
-        contributing = set()
-        for c in mine:
-            ok = cycle_clean_supersteps(c["supersteps"], cores)
-            if ok:
-                clean_walls.extend(ss["wall_sec"] for ss in ok)
-                contributing.add(c["cycle"])
-        lvl: dict = {
-            "edges": n_edges,
-            "cycles": len(mine),
-            "clean_supersteps": len(clean_walls),
-            "clean_cycles": len(contributing),
-            "steal_frac_gate": STEAL_FRAC_CLEAN,
-            "kernel_user_ratio_gate": _kernel_gate(cores),
-        }
-        if len(clean_walls) >= 3:
-            best = min(clean_walls)
-            lvl["min_sec_per_superstep"] = round(best, 3)
-            lvl["edges_per_sec"] = round(n_edges / best)
-        else:
-            # hard refusal: no silent fallback to contaminated walls
-            lvl["unmeasurable"] = True
-            lvl["reason"] = (
-                f"only {len(clean_walls)} steal-clean supersteps "
-                f"(need >=3) across {len(mine)} cycles; per-superstep "
-                "steal fractions in detail file"
-            )
-        out[f"n{cores}"] = lvl
-    out["host_probe_end"] = host_effective_cores(levels=(1,) + tuple(levels))
-    out["fault_probe_end_mb_s"] = round(fault_probe(32), 1)
-    for n, n4 in pairs:
-        lo, hi = out[f"n{n}"], out[f"n{n4}"]
-        if "edges_per_sec" not in lo or "edges_per_sec" not in hi:
-            out[f"efficiency_{n}_to_{n4}"] = None
-            out[f"efficiency_{n}_to_{n4}_unmeasurable"] = (
-                f"{'n%d' % n if 'edges_per_sec' not in lo else 'n%d' % n4}"
-                "<3 clean supersteps"
-            )
-            continue
-        speedup = hi["edges_per_sec"] / lo["edges_per_sec"]
-        eff, sl_reason = _pair_efficiency(
-            lo["edges_per_sec"], hi["edges_per_sec"], n, n4
-        )
-        out[f"efficiency_{n}_to_{n4}"] = eff
-        if sl_reason:
-            out[f"efficiency_{n}_to_{n4}_unmeasurable"] = sl_reason
-        note = _pair_note(eff)
-        if note:
-            out[f"efficiency_{n}_to_{n4}_note"] = note
-        # host ceiling: the speedup the host itself expresses between the
-        # two concurrency levels; of the start/end measurements take the
-        # MORE generous one (higher ceiling → lower normalized efficiency,
-        # i.e. conservative toward the engine)
-        for kind in ("cores", "membw"):
-            key = "effective_cores" if kind == "cores" else "effective_membw"
-            sps = [
-                hp[f"{key}_{n4}"] / hp[f"{key}_{n}"]
-                for hp in (out["host_probe_start"], out["host_probe_end"])
-                if f"{key}_{n}" in hp and f"{key}_{n4}" in hp
-            ]
-            if sps:
-                ceiling = max(sps)
-                tag = "host" if kind == "cores" else "membw"
-                out[f"{tag}_ceiling_speedup_{n}_to_{n4}"] = round(ceiling, 3)
-                out[f"efficiency_vs_{tag}_ceiling_{n}_to_{n4}"] = round(
-                    speedup / ceiling, 3
-                )
-    merged = _merged_levels(cycles, n_edges, fixed_partitions, levels, pairs)
-    if merged:
-        out["merged"] = merged
-    return out
-
-
-# Ad-hoc/smoke runs can point the detail artifact elsewhere so they
-# don't clobber the curated round evidence next to this file.
-DETAIL_FILE = os.environ.get("SPARK_GRAFT_DETAIL_PATH") or os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL_r5.json"
-)
-
-
-def _detail_path(skip_scaling: bool) -> str:
-    """Where main() writes the full detail artifact. Skip-scaling
-    (fast/smoke) runs must not clobber the curated full-run detail
-    next to this file — without a scaling block the overwrite would
-    silently delete committed evidence — so absent an explicit
-    SPARK_GRAFT_DETAIL_PATH they land in the temp dir."""
-    if skip_scaling and not os.environ.get("SPARK_GRAFT_DETAIL_PATH"):
-        import tempfile
-
-        return os.path.join(
-            tempfile.gettempdir(), "BENCH_DETAIL_skip_scaling.json"
-        )
-    return DETAIL_FILE
-
-
-def _compact_scaling(scaling: dict, core_levels=(2, 8, 4, 16, 32)) -> dict:
-    """The few-hundred-byte summary that fits the driver's tail
-    capture; the full cycle/probe detail lives in DETAIL_FILE."""
-    keep = ["edges", "best_probe_sec", "best_window_eff_frac"]
-    out = {k: scaling[k] for k in keep if k in scaling}
-    # full protocol string / repeats / partitions live in the detail
-    # file; the tail-capture budget is ~2 KB for the WHOLE line
-    out["protocol"] = "pinned+gated-v4"
-    for cores in core_levels:
-        lvl = scaling.get(f"n{cores}", {})
-        out[f"n{cores}"] = {
-            k: lvl[k]
-            for k in (
-                "min_sec_per_superstep",
-                "edges_per_sec",
-                "clean_supersteps",
-                "clean_cycles",
-                "unmeasurable",
-            )
-            if k in lvl
-        }
-    def _eff_keys(src: dict) -> dict:
-        # numeric efficiencies only; the ~200 B prose notes
-        # (_note / _unmeasurable explanations) stay in the detail
-        # file — 3 pairs × 2 sections of prose would blow the ~2 KB
-        # tail-capture budget the compact line exists to respect
-        kept: dict = {}
-        for k, v in src.items():
-            if not k.startswith("efficiency"):
-                continue
-            if k.endswith("_note"):
-                continue
-            kept[k] = "see detail" if k.endswith("_unmeasurable") else v
-        return kept
-
-    out.update(_eff_keys(scaling))
-    m = scaling.get("merged")
-    if m:
-        # criterion numbers over this window ∪ committed evidence
-        # windows (identical protocol instance; provenance + note in
-        # the detail file / scaling_evidence/)
-        cm: dict = _eff_keys(m)
-        cm["clean_supersteps"] = {
-            f"n{c}": m[f"n{c}"]["clean_supersteps"]
-            for c in core_levels
-            if f"n{c}" in m
-        }
-        cm["windows"] = len(m.get("sources", []))
-        out["merged"] = cm
-    out["detail_file"] = os.path.basename(DETAIL_FILE)
-    # clean-window builder measurements under the identical protocol
-    # (full per-superstep evidence committed in-repo) — relevant when
-    # this run's window is steal-stormy and levels come back refused
-    out["builder_evidence_file"] = "BENCH_BUILDER_r5.json"
-    return out
-
-
-def _headline_main(argv: list[str]) -> None:
-    """Child-process entry for the headline suite: ``spark.stop()``
-    does not end the py4j gateway JVM (it lives until the Python
-    process exits, retaining its full heap), so running the headline
-    in its own process guarantees the multi-GB headline JVM is gone —
-    not idling and periodically GC-ing — before the pinned scaling
-    cycles measure anything."""
-    out_path = argv[0]
-    fault_start = round(fault_probe(32), 1)
-    spark = _session(CPUS, shuffle_partitions=2 * CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        queries, queries_cpu = run_headline(spark)
-    finally:
-        spark.stop()
-    pr = globals().get("_PR_RESULT")
-    with open(out_path, "w") as fh:
-        json.dump(
-            {
-                "queries": queries,
-                "queries_cpu": queries_cpu,
-                # host fresh-page fault throughput (MB/s) bracketing
-                # the suite: <100 = free-page-reporting storm regime
-                # (BENCH.md root cause) — walls in that regime are
-                # environment-bound regardless of per-query steal
-                "fault_probe_mb_s": [fault_start, round(fault_probe(32), 1)],
-                "pagerank_edges": pr.n_edges if pr else None,
-                "pagerank_supersteps": pr.n_iterations if pr else None,
-                "pagerank_wall_sum": (
-                    sum(m.wall_sec for m in pr.metrics) if pr else None
-                ),
-            },
-            fh,
-        )
-
-
-def _run_headline_subprocess() -> tuple[dict, dict, dict]:
-    """Run the headline suite in a subprocess (JVM dies with it);
-    fall back to in-process if the child fails so a bench artifact is
-    always produced."""
-    import subprocess
-    import tempfile
-
-    fd, out_path = tempfile.mkstemp(suffix=".json")
-    os.close(fd)
-    try:
-        subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--headline", out_path],
-            check=True,
-        )
-        with open(out_path) as fh:
-            r = json.load(fh)
-        return r["queries"], r["queries_cpu"], r
-    except (subprocess.CalledProcessError, OSError, ValueError, KeyError):
-        spark = _session(CPUS, shuffle_partitions=2 * CPUS)
-        spark.sparkContext.setLogLevel("ERROR")
-        try:
-            queries, queries_cpu = run_headline(spark)
-        finally:
-            spark.stop()
-        pr = globals().get("_PR_RESULT")
-        return (
-            queries,
-            queries_cpu,
-            {
-                "pagerank_edges": pr.n_edges if pr else None,
-                "pagerank_supersteps": pr.n_iterations if pr else None,
-                "pagerank_wall_sum": (
-                    sum(m.wall_sec for m in pr.metrics) if pr else None
-                ),
-            },
-        )
-    finally:
-        try:
-            os.unlink(out_path)
-        except OSError:
-            pass
+def run_headline(spark) -> tuple[dict[str, float], dict[str, dict], object]:
+    """Time each headline row once. Returns the walls (with
+    ``pagerank_superstep`` after ``pagerank_1e6``), each row's
+    /proc/stat split, and the PageRank result."""
+    q: dict[str, float] = {}
+    qcpu: dict[str, dict] = {}
+    pr = None
+    with headline_queries(spark) as rows:
+        for name, fn in rows.items():
+            s0 = _proc_stat()
+            t0 = time.time()
+            out = fn()
+            q[name] = time.time() - t0
+            qcpu[name] = _proc_stat_delta(s0, _proc_stat())
+            if name == "pagerank_1e6":
+                pr = out
+                q["pagerank_superstep"] = sum(
+                    m.wall_sec for m in pr.metrics
+                ) / max(len(pr.metrics), 1)
+    return q, qcpu, pr
 
 
 def main() -> None:
-    t_all = time.time()
-    queries, queries_cpu, prinfo = _run_headline_subprocess()
-
-    scaling = None
-    if not SKIP_SCALING:
-        # pair-phased protocol: (2→8) criterion pair first, then
-        # (4→16) — same ×4 ratio, half the memory pressure — then
-        # (8→32). At 32 threads the single shared memory system
-        # saturates (see the membw probe), which 4N separate executors
-        # on a real cluster would not share.
-        scaling = run_scaling()
-
-    # per-query contamination flags (full split in the detail file):
-    # steal during the query's own window, or a kernel-dominated
-    # profile (lock-holder preemption), attributes a slow wall to the
-    # environment rather than the plan
-    contaminated = [
-        name
-        for name, c in queries_cpu.items()
-        if c
-        and (
-            c.get("steal_pct", 0.0) >= 2.0
-            or c.get("system_pct", 0.0) >= 0.6 * max(c.get("user_pct", 0.0), 0.1)
-        )
-    ]  # names only — per-query user/system/steal splits: detail file
+    spark = _session(CPUS, shuffle_partitions=2 * CPUS)
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        queries, queries_cpu, pr = run_headline(spark)
+    finally:
+        spark.stop()
+    queries = {k: round(v, 3) for k, v in queries.items()}
+    timed = round(sum(v for k, v in queries.items() if k != "pagerank_superstep"), 3)
+    pr_wall = sum(m.wall_sec for m in pr.metrics)
     result = {
         "metric": "headline_suite_total",
-        "value": round(time.time() - t_all, 3),
+        "value": timed,
         "unit": "sec",
         "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
-        "queries": {k: round(v, 3) for k, v in queries.items()},
-        "contaminated_queries": contaminated,
-        "pagerank_edges": prinfo.get("pagerank_edges"),
-        "pagerank_supersteps": prinfo.get("pagerank_supersteps"),
+        "queries": queries,
+        "contaminated_queries": [
+            name for name, c in queries_cpu.items() if _query_contaminated(c)
+        ],
+        "pagerank_edges": pr.n_edges,
+        "pagerank_supersteps": pr.n_iterations,
         "pagerank_edges_per_superstep_sec": (
-            round(
-                prinfo["pagerank_edges"]
-                * prinfo["pagerank_supersteps"]
-                / prinfo["pagerank_wall_sum"]
-            )
-            if prinfo.get("pagerank_wall_sum")
-            else None
+            round(pr.n_edges * pr.n_iterations / pr_wall) if pr_wall else None
         ),
+        "harness_s": round(time.time() - _T_START - timed, 3),
     }
-    detail = dict(result)
-    detail["queries_cpu"] = queries_cpu
-    if scaling:
-        detail["scaling"] = scaling
-        result["scaling"] = _compact_scaling(scaling)
-    with open(_detail_path(SKIP_SCALING), "w") as fh:
-        json.dump(detail, fh, indent=1)
-    try:
-        os.unlink(DETAIL_FILE + ".partial")
-    except OSError:
-        pass
     print(json.dumps(result))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--cycle":
-        _cycle_main(sys.argv[2:])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--headline":
-        _headline_main(sys.argv[2:])
-    else:
-        main()
+    main()

@@ -1,11 +1,10 @@
 #!/usr/bin/env python
-"""Supplementary measurement harness for the optimization round.
+"""Diagnostics around the headline suite: repeated query walls, plan
+captures and per-superstep breakdowns, for explaining a bench.py row.
 
-``bench.py`` is FROZEN (the driver times the round with the
-round-start copy), so every extra experiment lives here:
-
-- ``queries [name ...]``: run individual headline queries with
-  repeats, printing per-attempt walls (guide §1.1: measure first).
+- ``queries [name ...]``: run individual rows of
+  ``bench.headline_queries`` with repeats (``BE_REPEATS``, default 3),
+  printing per-attempt walls.
 - ``plans <out_dir> [name ...]``: capture ``.explain("formatted")``
   for each query's final DataFrame into ``<out_dir>/<name>.txt``
   (the committed plan evidence under ``plans/r06/``).
@@ -28,9 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-import bench  # noqa: E402  (frozen harness: reuse its query definitions)
+import bench  # noqa: E402
 
-SF_DIR = bench.SF_DIR
 CPUS = bench.CPUS
 
 
@@ -40,116 +38,25 @@ def _spark():
     return s
 
 
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
 # ---------------------------------------------------------------- queries
-# Each entry returns a zero-arg callable that runs the query exactly the
-# way bench.run_headline does (same action), so walls are comparable.
-
-
-def _query_runners(spark):
-    from aduana_spark.datagen import synth_pages
-    from aduana_spark.extraction import extract_pages, raw_edges
-    from aduana_spark.graph.components import connected_components
-    from aduana_spark.graph.hits import hits
-    from aduana_spark.graph.pagerank import pagerank
-    from aduana_spark.graph.triangles import triangle_count
-    from aduana_spark.pipeline.dedup import minhash_lsh_candidates
-    from aduana_spark.pipeline.multimodal import (
-        extract_media_features,
-        synthesize_media,
-    )
-    from aduana_spark.pipeline.similarity import (
-        add_ivf_cells,
-        brute_force_topk,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    edges = bench.bench_edges(spark)
-    docs = bench._t(spark, "documents")
-    docs10 = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).select(
-        F.explode(F.sequence(F.lit(0), F.lit(9))).alias("k"), "doc_id", "text"
-    ).select(
-        (F.col("doc_id") * F.lit(10).cast("long") + F.col("k").cast("long")).alias(
-            "doc_id"
-        ),
-        "text",
-    )
-    emb = bench._t(spark, "embeddings")
-    orders = bench._t(spark, "orders")
-    li = bench._t(spark, "lineitem")
-    mod = li.select(
-        (F.col("l_partkey") % 500).cast("long").alias("src"),
-        (F.col("l_suppkey") % 500).cast("long").alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
-
-    def media_df():
-        d = docs.select("doc_id").limit(2000)
-        return (
-            extract_media_features(synthesize_media(d), dim=16, decoder="real")
-            .where(F.col("feature").isNotNull())
-        )
-
-    def ivf_build():
-        cents = kmeans_centroids(emb, k=16, iters=3, seed=7)
-        cells = add_ivf_cells(emb, cents).persist()
-        cells.count()
-        cells.unpersist()
-
-    qvec_holder = {}
-
-    def qvec():
-        if "v" not in qvec_holder:
-            qvec_holder["v"] = list(
-                emb.where(F.col("vec_id") == 0).first()["embedding"]
-            )
-        return qvec_holder["v"]
-
-    return {
-        "pagerank_1e6": lambda: pagerank(edges, precision=1e-6, max_iters=60),
-        "hits_1e4": lambda: hits(edges, precision=1e-4, max_iters=40).ranks.count(),
-        "connected_components": lambda: connected_components(edges).ranks.count(),
-        "triangle_count": lambda: triangle_count(mod).collect(),
-        "frontier_topk": lambda: orders.where(F.col("o_orderstatus") == "O")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(100)
-        .collect(),
-        "minhash_lsh": lambda: minhash_lsh_candidates(
-            docs, num_perm=64, bands=16, shingle_k=3, threshold=0.5
-        ).count(),
-        "minhash_lsh_10x": lambda: minhash_lsh_candidates(
-            docs10, num_perm=64, bands=16, shingle_k=3, threshold=0.5
-        ).count(),
-        "embedding_topk": lambda: brute_force_topk(emb, qvec(), k=10).collect(),
-        "ivf_build_cells": ivf_build,
-        "extract_5k_pages": lambda: raw_edges(
-            extract_pages(synth_pages(spark, n_pages=5000, n_domains=200))
-        ).count(),
-        "media_decode_2k": lambda: media_df().count(),
-    }
-
-
 def cmd_queries(names: list[str], repeats: int = 3) -> None:
     spark = _spark()
-    runners = _query_runners(spark)
-    names = names or list(runners)
-    out = {}
-    for name in names:
-        fn = runners[name]
-        walls = []
-        for i in range(repeats):
-            spark.sparkContext.setJobDescription(f"{name}#{i}")
-            t0 = time.time()
-            fn()
-            walls.append(round(time.time() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = walls
-        print(json.dumps({name: walls}), flush=True)
+    with bench.headline_queries(spark) as rows:
+        names = names or list(rows)
+        if "ivf_topk_cells" in names and "ivf_build_cells" not in names:
+            rows["ivf_build_cells"]()  # untimed: the cells it queries
+        out = {}
+        for name in names:
+            fn = rows[name]
+            walls = []
+            for i in range(repeats):
+                spark.sparkContext.setJobDescription(f"{name}#{i}")
+                t0 = time.time()
+                fn()
+                walls.append(round(time.time() - t0, 3))
+            spark.sparkContext.setJobDescription(None)
+            out[name] = walls
+            print(json.dumps({name: walls}), flush=True)
     print(json.dumps({"all": out}))
     spark.stop()
 
