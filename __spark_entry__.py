@@ -352,11 +352,9 @@ def _q_connected_components_star(spark, sf_dir):
 def _q_connected_components_two_phase(spark, sf_dir):
     # the O(log²)-round large-star/small-star scale path must produce
     # the same components as minprop (same closed-form oracle)
-    from aduana_spark.graph.components import connected_components
+    from aduana_spark.graph.components import connected_components_two_phase
 
-    res = connected_components(
-        _nation_star_edges(spark, sf_dir), max_iters=40, algorithm="two-phase"
-    )
+    res = connected_components_two_phase(_nation_star_edges(spark, sf_dir), max_iters=40)
     return res.ranks.orderBy("id")
 
 

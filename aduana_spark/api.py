@@ -7,6 +7,8 @@ The reference exposes ``PageDB`` (add/page_info/iter_page_info),
 ``FreqScheduler``. Here the same names become thin facades over the
 DataFrame engine: state lives in parquet-backed DataFrames, scores
 come from the iterative jobs, and ``requests`` is the frontier view.
+``PageDB`` and ``CrawledPage`` live with the ingest MERGE in
+``frontier.page_info`` and are re-exported here.
 
 This is deliberately a *facade*, not the engine: at production scale
 each method is a Spark job over Iceberg tables; at fixture scale it
@@ -15,7 +17,6 @@ drives the same code paths the tests gate.
 
 from __future__ import annotations
 
-import datetime as dt
 import threading
 import time
 from dataclasses import dataclass
@@ -23,182 +24,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.bf_scheduler import BFSchedulerView, frontier_topk
-from aduana_spark.frontier.page_info import (
-    cached_batch,
-    empty_page_info,
-    ingest_crawl_batch,
-)
+from aduana_spark.frontier.bf_scheduler import BFSchedulerView
+from aduana_spark.frontier.page_info import CrawledPage, PageDB
 from aduana_spark.functions.urls import url_hash_col
-from aduana_spark.graph.builder import edges_with_ids
 from aduana_spark.graph.hits import hits as hits_job
 from aduana_spark.graph.pagerank import pagerank as pagerank_job
-
-
-@dataclass
-class CrawledPage:
-    """Mirror of aduana.CrawledPage (aduana/__init__.py:33-106)."""
-
-    url: str
-    links: list[tuple[str, float]]
-    score: float = 0.0
-    hash: bytes | None = None
-    time: dt.datetime | None = None
-
-
-class PageDB:
-    """Mirror of aduana.PageDB (aduana/__init__.py:159-232): page-state
-    store + link graph, backed by DataFrames instead of LMDB."""
-
-    # crawl_order is 64-bit: streaming ingest derives it from
-    # monotonically_increasing_id(), whose upper bits carry the
-    # partition index — an INT cast would collide across partitions
-    # and make within-batch first-writer-wins nondeterministic
-    BATCH_SCHEMA = (
-        "crawl_order BIGINT, url STRING, "
-        "links ARRAY<STRUCT<url: STRING, score: DOUBLE>>, "
-        "page_score DOUBLE, content_hash BINARY, ts TIMESTAMP"
-    )
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.page_info = empty_page_info(spark)
-        self.edges = spark.createDataFrame([], "src_url STRING, dst_url STRING")
-        self._order = 0
-
-    @staticmethod
-    def urlhash(url: str) -> int:
-        """64-bit page id. The reference uses
-        XXH32(domain)<<32|XXH32(url) (page_db.c:502-514) for key
-        locality; we use xxhash64(url) — locality comes from the
-        domain column (functions/urls.py)."""
-        import pyspark.sql.functions as F  # noqa: F811
-
-        # computed JVM-side for consistency with the engine's id columns
-        raise NotImplementedError(
-            "use url_hash_col on a DataFrame; driver-side scalar hashing "
-            "is not part of the engine surface"
-        )
-
-    def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
-        """Crawl batch in BATCH_SCHEMA, one row per page in list order:
-        ``crawl_order`` numbers the pages consecutively, so the MERGE's
-        within-batch first-writer-wins follows arrival order."""
-        default_ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-        rows = [
-            (
-                self._order + i,
-                page.url,
-                [(u, float(s)) for u, s in page.links],
-                float(page.score),
-                page.hash or b"",
-                (page.time or default_ts).replace(tzinfo=None),
-            )
-            for i, page in enumerate(pages)
-        ]
-        self._order += len(pages)
-        return self.spark.createDataFrame(rows, schema=self.BATCH_SCHEMA)
-
-    def page_batch(self, page: CrawledPage) -> DataFrame:
-        """One-row crawl batch in BATCH_SCHEMA from a CrawledPage."""
-        return self.pages_batch([page])
-
-    def add_batch(self, batch: DataFrame) -> DataFrame:
-        """page_db_add (page_db.c:807-1016) for a whole batch: one
-        MERGE into page_info + an edge-log append. Returns the batch's
-        newly created crawlable pages (the schedule insertions) so a
-        scheduler sharing this PageDB ingests each batch exactly
-        once."""
-        with cached_batch(batch):
-            new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
-            # localCheckpoint (not persist+count): each batch's plan embeds
-            # the previous state's plan, so without truncation Catalyst
-            # re-analyzes a deepening tree and per-batch cost grows
-            # super-linearly (~5s → 30s within 10 batches, measured)
-            self.page_info = new_info.localCheckpoint()
-            new_edges = batch.select(
-                F.col("url").alias("src_url"),
-                F.explode("links").alias("l"),
-            ).select("src_url", F.col("l.url").alias("dst_url"))
-            self.edges = self.edges.unionByName(new_edges).localCheckpoint()
-        return new_sched
-
-    def add(self, page: CrawledPage) -> None:
-        """Single-page convenience over ``add_batch``."""
-        self.add_batch(self.page_batch(page))
-
-    def get_info(self, url: str):
-        """S7 point lookup (page_db.c:1018-1067)."""
-        rows = self.page_info.where(F.col("url") == url).collect()
-        return rows[0] if rows else None
-
-    def iter_page_info(self):
-        """S4 page-info scan (page_db.c:1377-1441)."""
-        for r in self.page_info.toLocalIterator():
-            yield r
-
-    def id_edges(self) -> DataFrame:
-        """Dedup'd (src, dst) LONG edges (S2 link stream analog)."""
-        e = self.edges.dropDuplicates(["src_url", "dst_url"])
-        v = (
-            e.select(F.col("src_url").alias("url"))
-            .unionAll(e.select(F.col("dst_url").alias("url")))
-            .distinct()
-            .select(url_hash_col("url").alias("id"), "url")
-        )
-        return edges_with_ids(e, v)
-
-    # ---- S12/S13: path + neighborhood scans ------------------------------
-
-    def backlink_path(self, url: str, max_hops: int = 100) -> list[str]:
-        """S12 (page_db_path.c:12-54): follow linked_from provenance up
-        to the seed. Driver loop of point lookups — O(depth) tiny jobs,
-        exactly like the reference's cursor walk."""
-        path = [url]
-        seen = {url}
-        cur = url
-        for _ in range(max_hops):
-            row = self.get_info(cur)
-            if row is None or row["linked_from"] is None:
-                break
-            cur = row["linked_from"]
-            if cur in seen:
-                break
-            path.append(cur)
-            seen.add(cur)
-        return path
-
-    def neighborhood(self, url: str) -> DataFrame:
-        """S13 (page_db_links.c:64-155): forward + backward neighbors
-        with URLs; one filtered union over the URL edge table."""
-        fwd = self.edges.where(F.col("src_url") == url).select(
-            F.lit("out").alias("direction"), F.col("dst_url").alias("url")
-        )
-        bwd = self.edges.where(F.col("dst_url") == url).select(
-            F.lit("in").alias("direction"), F.col("src_url").alias("url")
-        )
-        return fwd.unionAll(bwd)
-
-    def info_dump(self) -> DataFrame:
-        """S8 (page_db.c:1263-1334): human-readable page-state table."""
-        return self.page_info.select(
-            url_hash_col("url").alias("hash"),
-            "url",
-            "first_crawl",
-            "last_crawl",
-            "n_changes",
-            "n_crawls",
-            "depth",
-            "score",
-        )
-
-    def links_dump(self) -> DataFrame:
-        """S9 (page_db.c:1336-1354): edge-list dump."""
-        return self.id_edges()
-
-    def find(self, regex: str) -> DataFrame:
-        """S11 (page_db_find.c): regex URL scan."""
-        return self.page_info.where(F.col("url").rlike(regex)).select("url")
 
 
 class PageRankScorer:
@@ -271,6 +101,22 @@ class HitsScorer:
         )
 
 
+def scorer_from_settings(settings: dict, page_db: PageDB):
+    """The scorer the settings ask for over ``page_db``, or None:
+    SCORER (class, e.g. PageRankScorer); USE_SCORES turns content
+    scores on and, for a PageRankScorer, applies PAGE_RANK_DAMPING
+    (0.85)."""
+    scorer_class = settings.get("SCORER", None)
+    if scorer_class is None:
+        return None
+    scorer = scorer_class(page_db)
+    if settings.get("USE_SCORES", False):
+        scorer.use_content_scores = True
+        if isinstance(scorer, PageRankScorer):
+            scorer.damping = settings.get("PAGE_RANK_DAMPING", 0.85)
+    return scorer
+
+
 class BFScheduler(BFSchedulerView):
     """Mirror of aduana.BFScheduler (aduana/__init__.py:365-465):
     best-first frontier with optional scorer re-keying. ``requests``
@@ -319,16 +165,7 @@ class BFScheduler(BFSchedulerView):
         HARD_CRAWL_LIMIT (100.0), MAX_CRAWL_DEPTH,
         SCORE_UPDATE_INTERVAL."""
         db = page_db if page_db is not None else PageDB(spark)
-        scorer_class = settings.get("SCORER", None)
-        scorer = None
-        if scorer_class is not None:
-            scorer = scorer_class(db)
-            use_scores = settings.get("USE_SCORES", False)
-            if use_scores:
-                if scorer_class is PageRankScorer:
-                    scorer.damping = settings.get("PAGE_RANK_DAMPING", 0.85)
-                scorer.use_content_scores = use_scores
-        sch = cls(spark, scorer=scorer, page_db=db)
+        sch = cls(spark, scorer=scorer_from_settings(settings, db), page_db=db)
         sch.set_crawl_rate(
             settings.get("SOFT_CRAWL_LIMIT", 0.25),
             settings.get("HARD_CRAWL_LIMIT", 100.0),

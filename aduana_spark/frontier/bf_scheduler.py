@@ -20,6 +20,8 @@ At scale this compiles to TakeOrderedAndProject after a cheap
 anti-join — no global sort materializes. Served/crawled tracking is an
 append-only log; restart stability (test_bf_scheduler.c:248-314) is
 free because the view is a pure function of the persisted tables.
+``page_info`` is the scheduler's ``PageDB`` (frontier.page_info), and
+``add`` ingests through ``PageDB.add_batch``.
 """
 
 from __future__ import annotations
@@ -27,12 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.page_info import (
-    cached_batch,
-    empty_page_info,
-    ingest_crawl_batch,
-    is_seed_col,
-)
+from aduana_spark.frontier.page_info import PageDB, cached_batch
 from aduana_spark.functions.urls import domain_col
 
 
@@ -108,9 +105,10 @@ class BFSchedulerView:
     persisted; at production scale each of these tables is an Iceberg
     table and ingest is a MERGE job.
 
-    When ``page_db`` is given, page state lives in that PageDB and
-    each batch is ingested exactly once (shared with the Frontera
-    ``Backend``); otherwise the view owns its page-info table.
+    Page state lives in ``page_db``: the PageDB passed in (shared with
+    the Frontera ``Backend`` or a restarted view, so each batch is
+    ingested exactly once) or a new one. The view itself keeps only
+    the schedule, the served log and the crawl log.
 
     ``set_crawl_rate(soft, hard)`` arms the politeness gate: crawled
     pages heat their domain (page_db.c:858-860) over a linear-decay
@@ -125,12 +123,11 @@ class BFSchedulerView:
         self,
         spark: SparkSession,
         max_depth: int | None = None,
-        page_db=None,
+        page_db: PageDB | None = None,
     ):
         self.spark = spark
         self.max_depth = max_depth
-        self._page_db = page_db
-        self._own_page_info = empty_page_info(spark) if page_db is None else None
+        self.page_db = page_db if page_db is not None else PageDB(spark)
         self.schedule = spark.createDataFrame([], "url STRING, score DOUBLE")
         self.served = spark.createDataFrame([], "url STRING")
         self.crawl_log = spark.createDataFrame([], "domain STRING, ts TIMESTAMP")
@@ -138,19 +135,6 @@ class BFSchedulerView:
         self.hard_rate: float | None = None
         self.temp_window: float | None = None
         self.update_interval: float | None = None
-
-    @property
-    def page_info(self) -> DataFrame:
-        if self._page_db is not None:
-            return self._page_db.page_info
-        return self._own_page_info
-
-    @page_info.setter
-    def page_info(self, df: DataFrame) -> None:
-        if self._page_db is not None:
-            self._page_db.page_info = df
-        else:
-            self._own_page_info = df
 
     def set_crawl_rate(self, soft_rate: float, hard_rate: float) -> None:
         """bf_scheduler_set_max_domain_crawl_rate
@@ -182,14 +166,7 @@ class BFSchedulerView:
         enters). Crawled pages also heat their domain's temperature
         (page_db.c:858-860)."""
         with cached_batch(batch):
-            if self._page_db is not None:
-                new_sched = self._page_db.add_batch(batch)
-            else:
-                new_info, new_sched = ingest_crawl_batch(self._own_page_info, batch)
-                # localCheckpoint truncates the per-batch lineage chain
-                # (see PageDB.add_batch) — persist alone caches rows but
-                # leaves the logical plan growing per batch
-                self._own_page_info = new_info.localCheckpoint()
+            new_sched = self.page_db.add_batch(batch)
             self.schedule = self.schedule.unionByName(
                 new_sched.select("url", "score")
             ).localCheckpoint()
@@ -235,7 +212,7 @@ class BFSchedulerView:
                     break
                 top = frontier_topk(
                     self.schedule,
-                    self.page_info,
+                    self.page_db.page_info,
                     n - len(urls),
                     served=self.served,
                     max_depth=self.max_depth,

@@ -14,10 +14,9 @@ Batch analogs over a crawl-event log (domain STRING, ts TIMESTAMP):
 - ``mode='linear'``: Σ max(0, 1 - (now-t)/T) — the reference's decay
   shape applied per event (the incremental table is the streaming
   approximation of exactly this sum),
-- ``mode='window'``: plain count of events in (now-T, now],
-- ``mode='exp'``: Σ exp(-(now-t)/T) — smooth variant.
+- ``mode='window'``: plain count of events in (now-T, now].
 
-All are one groupBy with a map-side-combinable sum; a "fixed table
+Both are one groupBy with a map-side-combinable sum; a "fixed table
 evicting the minimum" (domain_temp.c:44-53) is unnecessary — the
 aggregation is already bounded by the number of active domains.
 """
@@ -44,8 +43,6 @@ def domain_temperature(
         w = F.greatest(F.lit(0.0), F.lit(1.0) - age / F.lit(window_sec))
     elif mode == "window":
         w = F.when(age <= window_sec, F.lit(1.0)).otherwise(F.lit(0.0))
-    elif mode == "exp":
-        w = F.exp(-age / F.lit(window_sec))
     else:
         raise ValueError(f"unknown mode {mode!r}")
     return (

@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.page_info import crawl_rate_col, is_seed_col
+from aduana_spark.frontier.page_info import PageDB, crawl_rate_col, is_seed_col
 
 
 @dataclass
@@ -176,7 +176,8 @@ class FreqSchedulerView:
     when ``margin >= 0``. Here the schedule is driver-side heap state
     (it is pure control flow, like the reference's cursor loop —
     O(requests) entries), while frequency assignment and page state
-    are Spark jobs over the page-info table. URLs replace the
+    are Spark jobs over the page-info table of ``page_db`` (the
+    PageDB passed in, or a new one). URLs replace the
     reference's 64-bit page hashes as schedule identities (same
     substitution as the rest of the engine; hashing is a Spark-side
     column, functions/urls.py).
@@ -196,11 +197,9 @@ class FreqSchedulerView:
     #: deliberately if your driver heap allows, or use next_due_view
     max_facade_rows: int = 1_000_000
 
-    def __init__(self, spark, page_info: DataFrame | None = None):
-        from aduana_spark.frontier.page_info import empty_page_info
-
+    def __init__(self, spark, page_db: PageDB | None = None):
         self.spark = spark
-        self.page_info = page_info if page_info is not None else empty_page_info(spark)
+        self.page_db = page_db if page_db is not None else PageDB(spark)
         #: freq_scheduler.h:45-53 — negative disables the margin gate
         self.margin: float = -1.0
         #: 0 = unlimited (freq_scheduler.c:210-211)
@@ -209,12 +208,12 @@ class FreqSchedulerView:
         self._schedule: dict[str, list[float]] = {}
 
     @classmethod
-    def from_settings(cls, spark, settings: dict, page_info: DataFrame | None = None):
+    def from_settings(cls, spark, settings: dict, page_db: PageDB | None = None):
         """Settings surface of FreqScheduler.from_settings
         (aduana/__init__.py:501-523): MAX_N_CRAWLS, FREQ_SPEC (text
         rules or iterable of lines), FREQ_DEFAULT (0.1),
         FREQ_SCALE (-1.0), FREQ_MARGIN (-1.0)."""
-        sch = cls(spark, page_info=page_info)
+        sch = cls(spark, page_db=page_db)
         max_n_crawls = settings.get("MAX_N_CRAWLS", None)
         if max_n_crawls:
             sch.max_n_crawls = max_n_crawls
@@ -263,7 +262,7 @@ class FreqSchedulerView:
         positive estimated change rate when freq_scale > 0."""
         self._load_table(
             build_freq_table(
-                self.page_info,
+                self.page_db.page_info,
                 freq_default=freq_default,
                 freq_scale=freq_scale if freq_scale is not None else -1.0,
                 max_n_crawls=self.max_n_crawls or None,
@@ -274,7 +273,9 @@ class FreqSchedulerView:
         """FREQ_SPEC path: first-match-wins regex rules."""
         self._load_table(
             build_freq_table(
-                self.page_info, rules=rules, max_n_crawls=self.max_n_crawls or None
+                self.page_db.page_info,
+                rules=rules,
+                max_n_crawls=self.max_n_crawls or None,
             )
         )
 
@@ -287,14 +288,10 @@ class FreqSchedulerView:
 
     def add(self, batch: DataFrame) -> None:
         """freq_scheduler_add → page_db_add: merge a crawl batch into
-        the page-info table (schedule entries come from load_*, which
-        reads the updated state — the reference separates the two the
-        same way)."""
-        from aduana_spark.frontier.page_info import cached_batch, ingest_crawl_batch
-
-        with cached_batch(batch):
-            new_info, _ = ingest_crawl_batch(self.page_info, batch)
-            self.page_info = new_info.localCheckpoint()  # truncate lineage
+        the page-info table and append its links to the edge log
+        (schedule entries come from load_*, which reads the updated
+        state — the reference separates the two the same way)."""
+        self.page_db.add_batch(batch)
 
     # ---- serving ---------------------------------------------------------
 
@@ -323,7 +320,7 @@ class FreqSchedulerView:
                 r["last_crawl"].timestamp() if r["last_crawl"] else None,
                 r["n_crawls"],
             )
-            for r in self.page_info.select("url", "last_crawl", "n_crawls")
+            for r in self.page_db.page_info.select("url", "last_crawl", "n_crawls")
             .join(F.broadcast(sched_urls), "url", "leftsemi")
             .collect()
         }

@@ -66,30 +66,20 @@ def connected_components(
     max_iters: int = 50,
     checkpoint: CheckpointManager | str | None = None,
     checkpoint_interval: int = 5,
-    algorithm: str = "minprop",
     resume: bool = False,
 ) -> IterativeResult:
     """Returns ranks DataFrame (id, component) — component = min id in
     the weakly connected component.
 
-    ``algorithm='minprop'`` (default): O(diameter) min-label
-    propagation — right for shallow crawl graphs.
-    ``algorithm='two-phase'``: alternating large-star/small-star
-    (Kiveris et al.), O(log²) rounds — the scale path for
-    high-diameter graphs (see ``connected_components_two_phase``).
+    O(diameter) min-label propagation — right for shallow crawl
+    graphs. High-diameter graphs take
+    ``connected_components_two_phase`` (alternating
+    large-star/small-star, Kiveris et al., O(log²) rounds).
     ``resume=True`` warm-starts from the latest checkpoint shard
     (north-rule mid-iteration resume, like pagerank/hits): min-label
     propagation is monotone — labels only decrease — so resuming from
     any shard converges to the identical fixpoint.
     """
-    if algorithm == "two-phase":
-        return connected_components_two_phase(
-            edges,
-            max_iters=max_iters,
-            checkpoint=checkpoint,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-        )
     spark = edges.sparkSession
     with SuperstepLoop(spark, "components", checkpoint, checkpoint_interval) as loop:
         sym = loop.edge_cache(symmetrize(edges), "src")

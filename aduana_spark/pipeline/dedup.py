@@ -443,57 +443,24 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    candidate_mode: str = "lsh",
-    length_bucket: int = 16,
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
 ) -> DataFrame:
     """Exact token-n-gram Jaccard pairs (id_a < id_b, jaccard >=
-    threshold).
-
-    ``candidate_mode='lsh'`` (default, the 100 TB path): candidates
-    come from minhash band buckets over the same n-gram shingles —
-    sub-quadratic regardless of the corpus's length distribution.
-
-    ``candidate_mode='length'``: candidates from token-length buckets
-    (same or adjacent bucket, since Jaccard ≥ t bounds the length
-    ratio). Exact recall, but quadratic *within* a length band — on a
-    real corpus most same-length documents collide, so this mode is a
-    verification kernel for bounded corpora, not a candidate generator
-    at scale.
-    """
-    if candidate_mode == "lsh":
-        return minhash_lsh_candidates(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_k=n,
-            threshold=threshold,
-            seed=seed,
-        )
-    if candidate_mode != "length":
-        raise ValueError(f"unknown candidate_mode {candidate_mode!r}")
-    sh = df.select(
-        F.col(id_col).alias("doc_id"), _shingle_col(text_col, n).alias("sh")
-    ).withColumn("nb", (F.size("sh") / length_bucket).cast("long"))
-    cand = sh.select("doc_id", "sh", F.explode(F.array(F.col("nb"), F.col("nb") + 1)).alias("b"))
-    left = cand.select("b", F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    right = cand.select("b", F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = (
-        left.join(right, "b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    threshold). Candidates come from minhash band buckets over the
+    same n-gram shingles — sub-quadratic regardless of the corpus's
+    length distribution."""
+    return minhash_lsh_candidates(
+        df,
+        id_col=id_col,
+        text_col=text_col,
+        num_perm=num_perm,
+        bands=bands,
+        shingle_k=n,
+        threshold=threshold,
+        seed=seed,
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.when(union > 0, inter.cast("double") / union).otherwise(0.0).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
 
 
 # ------------------------------------------------------- embedding cosine

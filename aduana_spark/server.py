@@ -189,17 +189,10 @@ def server_from_settings(spark, settings: dict) -> AduanaServer:
     """Settings keys of aduana-server.py (SCORER, USE_SCORES,
     PAGE_RANK_DAMPING, SOFT/HARD_CRAWL_LIMIT, SEEDS, DEFAULT_REQS,
     ADDRESS, PORT)."""
-    from aduana_spark.api import Backend
+    from aduana_spark.api import Backend, scorer_from_settings
 
     backend = Backend(spark)
-    scorer_class = settings.get("SCORER", None)
-    if scorer_class is not None:
-        scorer = scorer_class(backend.page_db)
-        if settings.get("USE_SCORES", False):
-            scorer.use_content_scores = True
-            if hasattr(scorer, "damping"):
-                scorer.damping = settings.get("PAGE_RANK_DAMPING", 0.85)
-        backend.scheduler.scorer = scorer
+    backend.scheduler.scorer = scorer_from_settings(settings, backend.page_db)
     soft = settings.get("SOFT_CRAWL_LIMIT", None)
     hard = settings.get("HARD_CRAWL_LIMIT", None)
     if soft is not None and hard is not None:

@@ -5,10 +5,10 @@ The reference ingests crawled pages one REST POST at a time
 ``{"url": ..., "score": ..., "links": [[url, score], ...],
 "content_hash": ...}``) and triggers score recomputation when enough
 new pages arrived (U1). The Spark-native shape: a streaming source of
-crawled-page JSON → ``foreachBatch`` applying the same MERGE the
-batch path uses (frontier.page_info.ingest_crawl_batch) and appending
-raw edges; the scorer job runs between micro-batches when
-``update_due`` fires.
+crawled-page JSON → ``foreachBatch`` handing each micro-batch to
+``PageDB.add_batch`` (frontier.page_info), the MERGE and edge-log
+append the batch path uses; the scorer job runs between micro-batches
+when ``update_due`` fires.
 
 This module keeps everything testable with file sources; on a real
 cluster the source is Kafka/Kinesis and the sinks are Iceberg tables
@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from aduana_spark.frontier.page_info import PageDB
 
 #: REST wire format (doc/python.rst:203-247)
 CRAWLED_PAGE_SCHEMA = T.StructType(
@@ -62,36 +64,22 @@ def parse_crawled_pages(raw: DataFrame) -> DataFrame:
 
 
 class StreamingIngest:
-    """File/Kafka-source streaming ingest into page_info + edge log.
+    """File/Kafka-source streaming ingest into a ``PageDB``.
 
     ``start(input_dir, checkpoint_dir)`` returns the StreamingQuery;
-    state is exposed as ``page_info`` / ``edges`` DataFrames after
-    each micro-batch (foreachBatch runs the batch MERGE)."""
+    state is exposed as ``page_db.page_info`` / ``page_db.edges``
+    after each micro-batch (foreachBatch runs ``PageDB.add_batch``)."""
 
     def __init__(self, spark: SparkSession):
-        from aduana_spark.frontier.page_info import empty_page_info
-
         self.spark = spark
-        self.page_info = empty_page_info(spark)
-        self.edges = spark.createDataFrame([], "src_url STRING, dst_url STRING")
+        self.page_db = PageDB(spark)
         self.batches_seen = 0
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from aduana_spark.frontier.page_info import cached_batch, ingest_crawl_batch
-
         parsed = parse_crawled_pages(batch_df)
         if parsed.isEmpty():
             return
-        with cached_batch(parsed):
-            new_info, _ = ingest_crawl_batch(self.page_info, parsed)
-            self.page_info = new_info.localCheckpoint()
-            self.edges = (
-                self.edges.unionByName(
-                    parsed.select(
-                        F.col("url").alias("src_url"), F.explode("links").alias("l")
-                    ).select("src_url", F.col("l.url").alias("dst_url"))
-                )
-            ).localCheckpoint()
+        self.page_db.add_batch(parsed)
         self.batches_seen += 1
 
     def start(self, input_dir: str, checkpoint_dir: str, trigger_once: bool = True):

@@ -62,8 +62,8 @@ def test_hits_scorer_authority(golden_db):
 def test_bf_scheduler_rekey_with_scorer(spark):
     """After scorer.update(), the frontier serves by converged
     authority/pagerank instead of link scores (U2)."""
-    sch = BFScheduler(spark)
     db = PageDB(spark)
+    sch = BFScheduler(spark, page_db=db)
     # crawl 1 and 2; 3,4,5 stay frontier
     batches = [
         ("p1", [("p3", 0.9), ("p4", 0.1)]),
@@ -78,12 +78,11 @@ def test_bf_scheduler_rekey_with_scorer(spark):
             schema=PageDB.BATCH_SCHEMA,
         )
         sch.add(batch)
-        db.add(CrawledPage(url=url, links=links))
     # link-score order: p3 (0.9) > p5 (0.8) > p4 (0.1)
     assert sch.requests(3) == ["p3", "p5", "p4"]
 
-    sch2 = BFScheduler(spark, scorer=PageRankScorer(db, precision=1e-8))
-    sch2.page_info, sch2.schedule = sch.page_info, sch.schedule
+    sch2 = BFScheduler(spark, scorer=PageRankScorer(db, precision=1e-8), page_db=db)
+    sch2.schedule = sch.schedule
     sch2.update_scores()
     got = sch2.requests(3)
     # pagerank order: p3 and p4 have 2 in-links, p5 has 1 → p5 last;

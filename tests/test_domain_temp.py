@@ -87,10 +87,10 @@ def test_streaming_ingest(spark, tmp_path):
     q = ing.start(str(indir), str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    info = {r["url"]: r for r in ing.page_info.collect()}
+    info = {r["url"]: r for r in ing.page_db.page_info.collect()}
     assert info["a"]["n_crawls"] == 1 and info["b"]["n_crawls"] == 1
     assert info["c"]["n_crawls"] == 0 and info["c"]["score"] in (0.1, 0.3)
-    edges = {(r["src_url"], r["dst_url"]) for r in ing.edges.collect()}
+    edges = {(r["src_url"], r["dst_url"]) for r in ing.page_db.edges.collect()}
     assert edges == {("a", "b"), ("a", "c"), ("b", "c")}
 
 

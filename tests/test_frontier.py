@@ -14,7 +14,7 @@ from aduana_spark.frontier.freq_scheduler import (
     build_freq_table,
     next_due_view,
 )
-from aduana_spark.frontier.page_info import empty_page_info, ingest_crawl_batch
+from aduana_spark.frontier.page_info import PageDB, empty_page_info, ingest_crawl_batch
 
 TS = dt.datetime(2026, 1, 1)
 
@@ -29,6 +29,13 @@ def _batch(spark, order, url, links, score=0.0, chash=b"h", ts=TS):
     return spark.createDataFrame(
         [(order, url, links, score, chash, ts)], schema=BATCH_SCHEMA
     )
+
+
+def _page_db(spark, page_info):
+    """A PageDB holding a hand-built page-info table."""
+    db = PageDB(spark)
+    db.page_info = page_info
+    return db
 
 
 #: the hand-drawn crawl of test_bf_scheduler.c:23-56
@@ -60,8 +67,8 @@ def test_bf_scheduler_restart_stability(spark):
     got1 = sch.requests(25)
     assert got1 == [f"http://www.foobar.com/page_{i}" for i in range(99, 74, -1)]
     # "restart": rebuild the view object from the persisted tables
-    sch2 = BFSchedulerView(spark)
-    sch2.page_info, sch2.schedule, sch2.served = sch.page_info, sch.schedule, sch.served
+    sch2 = BFSchedulerView(spark, page_db=sch.page_db)
+    sch2.schedule, sch2.served = sch.schedule, sch.served
     got2 = sch2.requests(25)
     assert got2 == [f"http://www.foobar.com/page_{i}" for i in range(74, 49, -1)]
 
@@ -473,6 +480,42 @@ def test_caller_cached_batch_stays_cached(spark):
         batch.unpersist()
 
 
+def test_one_ingest_path(spark):
+    """PageDB.add_batch, BFSchedulerView.add and FreqSchedulerView.add
+    apply a crawl batch the same way: equal page state, equal edge
+    log, and no cached batch left behind."""
+    from aduana_spark.frontier.freq_scheduler import FreqSchedulerView
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    later = TS + dt.timedelta(seconds=10)
+    batches = [
+        _batch(spark, 0, "s", [("a", 0.5), ("b", 0.4)]),
+        # "b" is already known: it keeps the link from "s"
+        _batch(spark, 1, "a", [("b", 0.9), ("c", 0.3)], ts=TS + dt.timedelta(seconds=1)),
+        # repeat crawl of "s" with a changed content hash
+        _batch(spark, 2, "s", [("a", 0.1)], chash=b"h2", ts=later),
+    ]
+    db, bf, fs = PageDB(spark), BFSchedulerView(spark), FreqSchedulerView(spark)
+    for add in (db.add_batch, bf.add, fs.add):
+        for batch in batches:
+            add(batch)
+        assert cache.isEmpty()
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    info = {r["url"]: r for r in db.page_info.collect()}
+    assert (info["s"]["n_crawls"], info["s"]["n_changes"]) == (2, 1)
+    assert info["s"]["last_crawl"] == later
+    assert (info["b"]["linked_from"], info["b"]["score"]) == ("s", 0.4)
+    assert info["c"]["depth"] == 2
+    for store in (bf.page_db, fs.page_db):
+        assert rows(store.page_info) == rows(db.page_info)
+        assert rows(store.edges) == rows(db.edges)
+    assert db.edges.count() == 5
+
+
 def test_freq_serving_ratios(spark):
     """Statistical property (reference test_freq_scheduler.py:6-55):
     long-run serve counts per page are proportional to the page's
@@ -564,12 +607,8 @@ def test_bf_requests_escalation_politeness(spark):
     got = sch.requests(3, now=now)
     assert got == ["https://cold.org/x", "https://cold.org/y", "https://hot.org/c"]
     # without politeness the hot page would have been served first
-    sch2 = BFSchedulerView(spark)
-    sch2.page_info, sch2.schedule, sch2.served = (
-        sch.page_info,
-        sch.schedule,
-        spark.createDataFrame([], "url STRING"),
-    )
+    sch2 = BFSchedulerView(spark, page_db=sch.page_db)
+    sch2.schedule, sch2.served = sch.schedule, spark.createDataFrame([], "url STRING")
     assert sch2.requests(1) == ["https://hot.org/c"]
 
 
@@ -638,20 +677,21 @@ def test_freq_load_simple_scale_semantics(spark):
         " last_crawl TIMESTAMP, n_changes BIGINT, n_crawls BIGINT, score DOUBLE,"
         " content_hash BINARY",
     )
-    fs = FreqSchedulerView(spark, page_info=pi)
+    db = _page_db(spark, pi)
+    fs = FreqSchedulerView(spark, page_db=db)
     fs.load_simple(freq_default=0.01, freq_scale=2.0)
     assert fs._schedule["https://a.com"][1] == pytest.approx(0.1)  # 2 × 0.05
     assert fs._schedule["https://b.com"][1] == pytest.approx(0.01)  # default
     assert "_seed_0" not in fs._schedule
     assert "https://never.com" not in fs._schedule
     # scale disabled (reference default -1): everyone gets the default
-    fs2 = FreqSchedulerView(spark, page_info=pi)
+    fs2 = FreqSchedulerView(spark, page_db=db)
     fs2.load_simple(freq_default=0.25)
     assert fs2._schedule["https://a.com"][1] == pytest.approx(0.25)
     # scale boundary: the facade's driver-side dict refuses above
     # max_facade_rows with a pointer to the distributed next_due_view
     # path — it must fail fast, not OOM the driver at 10^12 rows
-    fs3 = FreqSchedulerView(spark, page_info=pi)
+    fs3 = FreqSchedulerView(spark, page_db=db)
     fs3.max_facade_rows = 1  # table has 2 loadable pages
     with pytest.raises(ValueError, match="next_due_view"):
         fs3.load_simple(freq_default=0.01)
@@ -671,7 +711,7 @@ def test_freq_facade_margin_and_max_n_crawls(spark):
         " last_crawl TIMESTAMP, n_changes BIGINT, n_crawls BIGINT, score DOUBLE,"
         " content_hash BINARY",
     )
-    fs = FreqSchedulerView(spark, page_info=pi)
+    fs = FreqSchedulerView(spark, page_db=_page_db(spark, pi))
     fs.margin = 0.1
     fs.max_n_crawls = 9
     fs.load([("https://a.com", 0.1), ("https://b.com", 0.1)])
@@ -702,7 +742,7 @@ def test_freq_facade_serving_ratios(spark):
         " last_crawl TIMESTAMP, n_changes BIGINT, n_crawls BIGINT, score DOUBLE,"
         " content_hash BINARY",
     )
-    fs = FreqSchedulerView(spark, page_info=pi)
+    fs = FreqSchedulerView(spark, page_db=_page_db(spark, pi))
     fs.load([("a", 0.1), ("b", 0.005), ("c", 0.002)])
     served = fs.requests(10_000, now=0.0)
     counts = {u: served.count(u) for u in "abc"}
@@ -725,7 +765,7 @@ def test_freq_from_settings(spark):
     fs = FreqSchedulerView.from_settings(
         spark,
         {"FREQ_DEFAULT": 0.02, "FREQ_SCALE": 4.0, "FREQ_MARGIN": 0.5, "MAX_N_CRAWLS": 10},
-        page_info=pi,
+        page_db=_page_db(spark, pi),
     )
     assert fs.margin == pytest.approx(0.5)
     assert fs.max_n_crawls == 10
@@ -745,7 +785,7 @@ def test_freq_missing_pageinfo_deleted(spark):
         " last_crawl TIMESTAMP, n_changes BIGINT, n_crawls BIGINT, score DOUBLE,"
         " content_hash BINARY",
     )
-    fs = FreqSchedulerView(spark, page_info=pi)
+    fs = FreqSchedulerView(spark, page_db=_page_db(spark, pi))
     fs.load([("a", 0.1), ("ghost", 10.0)])  # ghost would win every pop
     served = fs.requests(4, now=0.0)
     assert served == ["a"] * 4
@@ -874,7 +914,7 @@ def test_freq_requests_collect_bounded_by_schedule(spark):
         "CAST(0.0 AS DOUBLE) AS score",
         "CAST(NULL AS BINARY) AS content_hash",
     )
-    fs = FreqSchedulerView(spark, page_info=big_pi)
+    fs = FreqSchedulerView(spark, page_db=_page_db(spark, big_pi))
     # schedule far smaller than page_info — and smaller than
     # max_facade_rows, so the facade contract is satisfied while the
     # old whole-table collect would have shipped all 5000 rows

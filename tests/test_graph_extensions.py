@@ -9,7 +9,10 @@ import pytest
 
 from aduana_spark.datagen import random_digraph
 from aduana_spark.graph.bfs import bfs_depths
-from aduana_spark.graph.components import connected_components
+from aduana_spark.graph.components import (
+    connected_components,
+    connected_components_two_phase,
+)
 from aduana_spark.graph.hits import hits
 from aduana_spark.graph.labelprop import label_propagation
 from aduana_spark.graph.pagerank import pagerank
@@ -101,8 +104,6 @@ def test_bfs_max_depth(spark):
 def test_two_phase_cc_matches_minprop_and_nx(spark):
     """large-star/small-star converges in O(log) rounds on a long path
     where min-propagation needs O(n) supersteps."""
-    from aduana_spark.graph.components import connected_components_two_phase
-
     # 150-node path + a clique + isolated self-loop vertex
     edges = [(i, i + 1) for i in range(150)]
     edges += [(200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)]
@@ -124,8 +125,6 @@ def test_two_phase_cc_matches_minprop_and_nx(spark):
 
 
 def test_two_phase_cc_random_graph(spark):
-    from aduana_spark.graph.components import connected_components_two_phase
-
     edges, n = random_digraph(n=200, p=0.005, seed=13)
     g = nx.DiGraph(edges)
     want = {}
@@ -192,18 +191,16 @@ def test_two_phase_cc_checkpoint_resume(spark, tmp_path):
     is the whole state, so resuming from the latest shard reproduces
     the uninterrupted run's exact labels (the round transform is
     deterministic) in fewer rounds than a cold start."""
-    from aduana_spark.graph.components import connected_components
-
     edges = [(i, i + 1) for i in range(64)]  # path: several rounds
     edges += [(200 + i, 201 + i) for i in range(20)]
     df = _edges_df(spark, edges)
     ck = str(tmp_path / "ck2p")
-    partial = connected_components(
-        df, algorithm="two-phase", max_iters=2, checkpoint=ck, checkpoint_interval=1
+    partial = connected_components_two_phase(
+        df, max_iters=2, checkpoint=ck, checkpoint_interval=1
     )
     assert not partial.converged
-    resumed = connected_components(
-        df, algorithm="two-phase", max_iters=40, checkpoint=ck, resume=True
+    resumed = connected_components_two_phase(
+        df, max_iters=40, checkpoint=ck, resume=True
     )
     assert resumed.converged
     g = nx.Graph()
@@ -215,7 +212,7 @@ def test_two_phase_cc_checkpoint_resume(spark, tmp_path):
             want[v] = m
     got = {r["id"]: r["component"] for r in resumed.ranks.collect()}
     assert got == want
-    cold = connected_components(df, algorithm="two-phase", max_iters=40)
+    cold = connected_components_two_phase(df, max_iters=40)
     assert resumed.n_iterations < cold.n_iterations
 
 
@@ -271,8 +268,8 @@ LOOPS = {
     "pagerank": lambda edges, seeds: pagerank(edges).ranks,
     "hits": lambda edges, seeds: hits(edges).ranks,
     "components": lambda edges, seeds: connected_components(edges).ranks,
-    "components_two_phase": lambda edges, seeds: connected_components(
-        edges, algorithm="two-phase"
+    "components_two_phase": lambda edges, seeds: connected_components_two_phase(
+        edges
     ).ranks,
     "labelprop": lambda edges, seeds: label_propagation(edges).ranks,
     "bfs": bfs_depths,

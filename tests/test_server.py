@@ -139,3 +139,21 @@ def test_rest_server_metrics(spark):
     del metrics["commit_seconds"]
     assert metrics == {"pages_buffered": 0, "pages_committed": 2, "commits": 1,
                        "get_rounds": 2, "gets_served": 2}
+
+
+def test_server_from_settings_scorer(spark):
+    """SCORER, USE_SCORES and PAGE_RANK_DAMPING reach the backend's
+    scheduler through the same wiring as BFScheduler.from_settings."""
+    from aduana_spark.api import PageRankScorer
+    from aduana_spark.server import server_from_settings
+
+    srv = server_from_settings(
+        spark,
+        {"SCORER": PageRankScorer, "USE_SCORES": True, "PAGE_RANK_DAMPING": 0.7},
+    )
+    with srv:
+        scorer = srv.backend.scheduler.scorer
+        assert isinstance(scorer, PageRankScorer)
+        assert scorer.page_db is srv.backend.page_db
+        assert scorer.damping == pytest.approx(0.7)
+        assert scorer.use_content_scores is True
