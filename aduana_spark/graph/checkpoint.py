@@ -12,15 +12,25 @@ by reloading that shard (SURVEY.md §7 risk notes).
 This doubles as lineage truncation: reading the shard back gives the
 driver loop a fresh plan root, keeping plan depth O(1) across ~100
 iterations instead of O(iters).
+
+The driver-side (local) loops hand :meth:`CheckpointManager.save` a
+``pyarrow.Table`` instead, written as ``iter=K/part-00000.parquet``
+with the same columns and types as the Spark shard, so either loop
+resumes from a shard the other wrote.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class CheckpointManager:
@@ -35,12 +45,21 @@ class CheckpointManager:
     def _manifest_path(self, iteration: int) -> str:
         return os.path.join(self.manifest_dir, f"iter_{iteration:06d}.json")
 
-    def save(self, iteration: int, df: DataFrame, metrics: dict) -> DataFrame:
+    def save(
+        self, iteration: int, df: DataFrame | pa.Table, metrics: dict
+    ) -> DataFrame | pa.Table:
         """Write shard + manifest; return the reloaded (lineage-free)
-        DataFrame."""
+        DataFrame, or the table itself."""
         path = self.shard_path(iteration)
         t0 = time.time()
-        df.write.mode("overwrite").parquet(path)
+        if isinstance(df, DataFrame):
+            df.write.mode("overwrite").parquet(path)
+        else:
+            import pyarrow.parquet as pq
+
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            pq.write_table(df, os.path.join(path, "part-00000.parquet"))
         entry = {
             "iteration": iteration,
             "checkpoint_write_sec": time.time() - t0,
@@ -50,6 +69,8 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(entry, f)
         os.replace(tmp, self._manifest_path(iteration))
+        if not isinstance(df, DataFrame):
+            return df
         return df.sparkSession.read.parquet(path)
 
     def iterations(self) -> list[int]:
@@ -65,6 +86,11 @@ class CheckpointManager:
 
     def load(self, spark: SparkSession, iteration: int) -> DataFrame:
         return spark.read.parquet(self.shard_path(iteration))
+
+    def load_table(self, iteration: int) -> pa.Table:
+        import pyarrow.parquet as pq
+
+        return pq.read_table(self.shard_path(iteration))
 
     def manifest(self, iteration: int) -> dict:
         with open(self._manifest_path(iteration)) as f:

@@ -17,20 +17,34 @@ Init: h1 = a1 = 1/N (hits.c:97-110). The scheduler score is the
 non-convergence (hits_scorer.c:73-76) — hence ``strict=False``
 default here too.
 
-Spark execution mirrors ``pagerank``: edges persisted partitioned by
-src; per superstep two join+aggregate pipelines (hub messages grouped
-by src, authority messages grouped by dst), both with map-side partial
-aggregation; state persisted per iteration, checkpointed every
-``checkpoint_interval`` supersteps.
+Execution mirrors ``pagerank``, with the same two executors:
+
+- **local**, at most ``LOCAL_MAX_EDGES`` rows per input
+  (``graph.superstep``): one bounded Arrow fetch, then every superstep
+  is :func:`_local_superstep`, two ``np.bincount`` calls on the driver
+  instead of two Spark jobs of mostly fixed cost.
+- **spark**, above the bound: edges persisted partitioned by src; per
+  superstep two join+aggregate pipelines (hub messages grouped by src,
+  authority messages grouped by dst), both with map-side partial
+  aggregation; state persisted per iteration.
+
+Both checkpoint the state (id, score, hub, auth) every
+``checkpoint_interval`` supersteps, in one shard format.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aduana_spark.graph.checkpoint import CheckpointManager
-from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop
+from aduana_spark.graph.superstep import (
+    IterativeResult,
+    SuperstepLoop,
+    dense_index,
+    scatter,
+)
 
 
 def _vertices(
@@ -83,6 +97,71 @@ def _candidate(
     )
 
 
+def _local_superstep(
+    src: np.ndarray,
+    dst: np.ndarray,
+    score: np.ndarray | None,
+    hub: np.ndarray,
+    auth: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, float]:
+    """The numpy twin of :func:`_candidate` and the L1 update, on dense
+    vertex indices: (hub, auth, delta). ``score`` None leaves the hub
+    messages unweighted."""
+    n = len(hub)
+    # hub messages: weight of edge f→t is (score[t] *) a1[t]
+    am = auth if score is None else score * auth
+    hub_raw = np.bincount(src, weights=am[dst], minlength=n)
+    # authority messages: h1[f]
+    auth_raw = np.bincount(dst, weights=hub[src], minlength=n)
+    new_hub = hub_raw / (hub_raw.sum() or 1.0)
+    new_auth = auth_raw / (auth_raw.sum() or 1.0)
+    delta = max(np.abs(new_hub - hub).max(), np.abs(new_auth - auth).max())
+    return new_hub, new_auth, float(delta)
+
+
+def _hits_local(
+    loop: SuperstepLoop,
+    cols: list,
+    precision: float,
+    max_iters: int,
+    resume: bool,
+    strict: bool,
+) -> IterativeResult:
+    """The whole loop on the driver over ``fetch_local``'s arrays, with
+    the vertex universe and scores of :func:`_vertices`."""
+    import pyarrow as pa
+
+    src, dst, score_ids, score_vals, vertex_ids = cols
+    if vertex_ids is None:
+        vertex_ids = np.concatenate([src, dst])
+    ids = np.unique(vertex_ids)
+    n = loop.n_vertices = len(ids)
+    s, s_in = dense_index(ids, src)
+    d, d_in = dense_index(ids, dst)
+    s, d = s[s_in & d_in], d[s_in & d_in]
+    score = np.ones(n) if score_ids is None else scatter(ids, score_ids, score_vals)
+
+    prev = loop.resume(resume)
+    if prev is None:
+        hub, auth = np.full(n, 1.0 / n), np.full(n, 1.0 / n)
+    else:
+        hub, auth = (
+            scatter(ids, prev["id"].to_numpy(), prev[c].to_numpy()) for c in ("hub", "auth")
+        )
+
+    for _ in loop.supersteps(max_iters):
+        hub, auth, delta = _local_superstep(
+            s, d, None if score_ids is None else score, hub, auth
+        )
+        loop.end(
+            pa.table({"id": ids, "score": score, "hub": hub, "auth": auth}),
+            delta,
+            delta <= precision,
+        )
+    ranks = loop.spark.createDataFrame(pa.table({"id": ids, "hub": hub, "auth": auth}))
+    return loop.result(ranks, strict, precision)
+
+
 def _sums(cand: DataFrame) -> DataFrame:
     """The L1 normalizers Σ hub_raw and Σ auth_raw."""
     return cand.agg(F.sum("hub_raw").alias("hs"), F.sum("auth_raw").alias("as_"))
@@ -103,6 +182,12 @@ def hits(
     DataFrame (id, hub, auth)."""
     spark = edges.sparkSession
     with SuperstepLoop(spark, "hits", checkpoint, checkpoint_interval) as loop:
+        # cached by the fetch: above the bound the edge caches read these
+        # rows instead of recomputing the input
+        edges = loop.cache(edges.select("src", "dst"), supersteps=0)
+        cols = loop.fetch_local(edges, scores, vertices)
+        if cols is not None:
+            return _hits_local(loop, cols, precision, max_iters, resume, strict)
         # two cached copies, each pre-partitioned AND pre-sorted on its
         # join key (hub messages join on dst, authority messages on src)
         edges_by_src = loop.edge_cache(edges, "src")

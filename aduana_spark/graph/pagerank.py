@@ -16,6 +16,15 @@ redistribution of dangling-node mass in one pass (worked example in
 test_page_rank.c:10-67) — naive per-node (1-d)/N does NOT reproduce
 the fixtures.
 
+Inputs of at most ``LOCAL_MAX_EDGES`` rows (``graph.superstep``)
+converge on the driver: one bounded Arrow fetch, then each superstep
+is :func:`_local_superstep`, a few numpy lines over dense vertex
+indices with ``np.bincount`` as the Σ aggregate. On a crawl-sized
+graph the Spark superstep below is ~1 s of job and stage overhead, not
+data. ``salt_buckets`` is a no-op there, as there is no reduce key to
+skew. Checkpoint shards, manifests and resume are the Spark loop's, so
+either loop resumes from the other's shard.
+
 Spark execution per superstep (designed for ~10^12-edge tables):
 
 - ``edges`` is hash-partitioned by ``src`` once and persisted; the
@@ -51,12 +60,19 @@ from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aduana_spark.graph.builder import out_degrees
 from aduana_spark.graph.checkpoint import CheckpointManager
-from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop, SuperstepMetrics
+from aduana_spark.graph.superstep import (
+    IterativeResult,
+    SuperstepLoop,
+    SuperstepMetrics,
+    dense_index,
+    scatter,
+)
 
 
 def _vertex_state(
@@ -117,6 +133,82 @@ def _candidate(
     )
 
 
+def _local_superstep(
+    src: np.ndarray,
+    dst: np.ndarray,
+    deg: np.ndarray,
+    rank: np.ndarray,
+    damping: float,
+    score: np.ndarray | None,
+    total_score: float,
+) -> tuple[np.ndarray, float]:
+    """The numpy twin of :func:`_candidate` and the rank update, on
+    dense vertex indices: (new rank, L∞ delta). ``score`` None is the
+    uniform teleport."""
+    # dangling vertices (deg=0) emit nothing — their mass lands in rem
+    m = np.divide(rank, deg, out=np.zeros_like(rank), where=deg > 0)
+    raw = damping * np.bincount(dst, weights=m[src], minlength=len(rank))
+    rem = 1.0 - raw.sum()
+    if score is None:
+        new = raw + rem / len(rank)
+    else:
+        new = raw + rem * score / total_score
+    return new, float(np.abs(new - rank).max())
+
+
+def _pagerank_local(
+    loop: SuperstepLoop,
+    cols: list,
+    damping: float,
+    precision: float,
+    max_iters: int,
+    resume: bool,
+    strict: bool,
+) -> IterativeResult:
+    """The whole loop on the driver over ``fetch_local``'s arrays, with
+    the vertex universe, degrees and scores of :func:`_vertex_state`."""
+    import pyarrow as pa
+
+    src, dst, score_ids, score_vals, vertex_ids = cols
+    if vertex_ids is None:
+        vertex_ids = np.concatenate(
+            [src, dst] + ([score_ids] if score_ids is not None else [])
+        )
+    ids = np.unique(vertex_ids)
+    n = loop.n_vertices = len(ids)
+    s, s_in = dense_index(ids, src)
+    d, d_in = dense_index(ids, dst)
+    deg = np.bincount(s[s_in], minlength=n)
+    # messages only travel between vertices of the universe
+    s, d = s[s_in & d_in], d[s_in & d_in]
+    score, total_score = np.zeros(n), 1.0
+    if score_ids is not None:
+        score = scatter(ids, score_ids, score_vals)
+        # a zero total falls back to 1.0 (page_rank.c:204-206)
+        total_score = float(score_vals.sum()) or 1.0
+
+    prev = loop.resume(resume)
+    if prev is not None:
+        prev_rank = prev["rank"].to_numpy()
+        # renormalize (page_rank.c:234-248 — warm start after growth)
+        rank = scatter(ids, prev["id"].to_numpy(), prev_rank) / prev_rank.sum()
+    else:
+        rank = np.full(n, 1.0 / n)
+
+    for _ in loop.supersteps(max_iters):
+        rank, delta = _local_superstep(
+            s, d, deg, rank, damping, None if score_ids is None else score, total_score
+        )
+        loop.end(
+            pa.table({"id": ids, "deg": deg, "score": score, "rank": rank}),
+            delta,
+            delta <= precision,
+            damping=damping,
+        )
+    ranks = loop.spark.createDataFrame(pa.table({"id": ids, "rank": rank}))
+    return loop.result(ranks, strict, precision)
+
+
 def _uniform_sums(cand: DataFrame) -> DataFrame:
     """The uniform-teleport superstep's one job: Σ raw, max d, min d
     with d = raw − old_rank."""
@@ -161,6 +253,14 @@ def pagerank(
     with SuperstepLoop(
         spark, "pagerank", checkpoint, checkpoint_interval, on_superstep
     ) as loop:
+        # cached by the fetch: above the bound the edge caches read these
+        # rows instead of recomputing the input
+        edges = loop.cache(edges.select("src", "dst"), supersteps=0)
+        cols = loop.fetch_local(edges, scores, vertices)
+        if cols is not None:
+            return _pagerank_local(
+                loop, cols, damping, precision, max_iters, resume, strict
+            )
         edges = loop.edge_cache(edges, "src")
         vstate, total_score = _vertex_state(edges, scores, vertices)
         # no explicit repartition: every branch of _vertex_state ends

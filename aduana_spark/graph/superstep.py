@@ -21,6 +21,18 @@ unpersists every cache it owns on every exit, raised or returned, so a
 loop leaves the caller's session as it found it. Each algorithm keeps
 only its state setup, its message/aggregate/update expressions and its
 convergence test.
+
+Crawl-sized graphs skip Spark's per-job cost altogether. A superstep
+is a sum-aggregate over a sparse join (*Aggregate Queries on Sparse
+Databases*, PODS 2020), and on a few thousand edges its ~1 s is job
+and stage overhead, not data (SparkTune, EDBT 2019). So when every
+input has at most :data:`LOCAL_MAX_EDGES` rows,
+:meth:`SuperstepLoop.fetch_local` brings it to the driver in one
+bounded Arrow fetch and PageRank and HITS run each superstep as
+``np.bincount`` over dense vertex indices (executor ``local``).
+Larger inputs run the distributed loop (executor ``spark``). Both
+executors share the bookkeeping above, the checkpoint shard format
+included, so a run checkpointed on one resumes on the other.
 """
 
 from __future__ import annotations
@@ -29,13 +41,17 @@ import itertools
 import logging
 import time
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from aduana_spark.graph.checkpoint import CheckpointManager
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 log = logging.getLogger("aduana_spark.graph")
 
@@ -46,6 +62,11 @@ _WIDTH = "spark.sql.shuffle.partitions"
 #: (~5-10 ms scheduling + serialization) while keeping tasks small enough
 #: for straggler insurance.
 SUPERSTEP_ROWS_PER_TASK = 100_000
+
+#: inputs of at most this many rows converge on the driver. It bounds
+#: the driver fetch at about 16 MB of (src, dst) edges, and it sits below
+#: the 1.34M-edge sf0.1 bench graph, whose rows time the distributed loop
+LOCAL_MAX_EDGES = 1_000_000
 
 
 class ConvergenceError(RuntimeError):
@@ -97,6 +118,23 @@ def _derived_superstep_partitions(spark: SparkSession, n_rows: int) -> int | Non
     return derived if derived < session_parts else None
 
 
+def dense_index(ids: np.ndarray, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Positions of ``x`` in the sorted unique ``ids``, and the mask of
+    the ``x`` found there."""
+    pos = np.searchsorted(ids, x).clip(max=max(len(ids) - 1, 0))
+    return pos, ids[pos] == x
+
+
+def scatter(ids: np.ndarray, keys: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """``values`` placed at their ``keys``' positions in the sorted
+    unique ``ids``: a left join of the vertices onto (key, value) rows,
+    0.0 where a vertex has none."""
+    out = np.zeros(len(ids))
+    pos, found = dense_index(ids, keys)
+    out[pos[found]] = values[found]
+    return out
+
+
 class SuperstepLoop:
     """The shared bookkeeping of one iterative loop; use as a context
     manager around the whole algorithm.
@@ -133,6 +171,8 @@ class SuperstepLoop:
         #: current superstep; start_iter during setup
         self.it = 0
         self.converged = False
+        #: "local" once :meth:`fetch_local` took the inputs to the driver
+        self.executor = "spark"
         #: the last superstep's state was reloaded from its checkpoint
         #: shard, so no cache backs it
         self._saved = False
@@ -181,6 +221,42 @@ class SuperstepLoop:
         self.n_edges = cached.count()
         return cached
 
+    def fetch_local(
+        self,
+        edges: DataFrame,
+        scores: DataFrame | None = None,
+        vertices: DataFrame | None = None,
+    ) -> list[np.ndarray | None] | None:
+        """Pick the executor. Fetches ``edges`` (src, dst), then
+        ``scores`` (id, score) and ``vertices`` (id) when given, each
+        with one Arrow collect of at most ``LOCAL_MAX_EDGES + 1`` rows.
+        When every input fits the bound the loop turns ``local`` and
+        this returns the columns as numpy arrays: src, dst, score ids,
+        score values (nulls as 0.0), vertex ids; absent inputs give
+        None. Otherwise it returns None and the loop stays on Spark, so
+        a graph above the bound pays one bounded edge fetch."""
+        cols: list[np.ndarray | None] = []
+        for df, names in (
+            (edges, ("src", "dst")),
+            (scores, ("id", "score")),
+            (vertices, ("id",)),
+        ):
+            if df is None:
+                cols += [None] * len(names)
+                continue
+            table = df.select(*names).limit(LOCAL_MAX_EDGES + 1).toArrow()
+            if table.num_rows > LOCAL_MAX_EDGES:
+                return None
+            cols += [
+                table[c].cast("double").fill_null(0.0).to_numpy()
+                if c == "score"
+                else table[c].to_numpy()
+                for c in names
+            ]
+        self.executor = "local"
+        self.n_edges = len(cols[0])
+        return cols
+
     def narrow(self) -> None:
         """Narrow the session's shuffle width to
         :func:`_derived_superstep_partitions` of ``n_edges`` for every
@@ -192,13 +268,16 @@ class SuperstepLoop:
                 self._restore_width = self.spark.conf.get(_WIDTH)
             self.spark.conf.set(_WIDTH, str(derived))
 
-    def resume(self, resume: bool) -> DataFrame | None:
+    def resume(self, resume: bool) -> DataFrame | pa.Table | None:
         """The latest checkpoint shard when ``resume`` is set and one
-        exists (supersteps then continue after it), else None."""
+        exists (supersteps then continue after it), else None. The
+        local executor reads it as an Arrow table."""
         latest = self.ckpt.latest() if resume and self.ckpt is not None else None
         if latest is None:
             return None
         self.start_iter = self.it = latest
+        if self.executor == "local":
+            return self.ckpt.load_table(latest)
         return self.ckpt.load(self.spark, latest)
 
     # ------------------------------------------------------------- loop
@@ -219,7 +298,9 @@ class SuperstepLoop:
             if self.converged:
                 return
 
-    def end(self, state: DataFrame, delta: float, converged: bool, **extra) -> DataFrame:
+    def end(
+        self, state: DataFrame | pa.Table, delta: float, converged: bool, **extra
+    ) -> DataFrame | pa.Table:
         """Close the current superstep: emit its metrics, write the
         checkpoint shard when due (``extra`` joins the manifest) and
         drop the caches due now. Returns the state to carry on with —
@@ -246,6 +327,7 @@ class SuperstepLoop:
                 state,
                 {
                     "algo": self.algo,
+                    "executor": self.executor,
                     "delta": float(delta),
                     "wall_sec": wall,
                     "edges": self.n_edges,
@@ -267,6 +349,7 @@ class SuperstepLoop:
             self.on_superstep(m)
         fields = {
             "algo": self.algo,
+            "executor": self.executor,
             "iteration": m.iteration,
             "delta": m.delta,
             "wall_sec": round(m.wall_sec, 6),

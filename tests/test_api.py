@@ -34,6 +34,31 @@ def test_pagedb_ingest_and_scans(golden_db):
     assert golden_db.find("p[12]$").count() == 2
 
 
+def test_info_and_links_dump(spark):
+    """S8/S9 after a two-batch ingest: one info row per page-info row
+    with the dump's columns, and the links dump is the id-edge list."""
+    db = PageDB(spark)
+    db.add_batch(
+        db.pages_batch(
+            [
+                CrawledPage(url="a", links=[("b", 0.5), ("c", 0.2)]),
+                CrawledPage(url="b", links=[("c", 0.1)]),
+            ]
+        )
+    )
+    db.add_batch(db.pages_batch([CrawledPage(url="c", links=[("a", 0.3), ("d", 0.4)])]))
+    info = db.info_dump()
+    assert info.columns == [
+        "hash", "url", "first_crawl", "last_crawl", "n_changes", "n_crawls", "depth",
+        "score",
+    ]
+    rows = info.collect()
+    assert len(rows) == db.page_info.count()
+    assert sorted(r["url"] for r in rows) == ["a", "b", "c", "d"]
+    assert sorted(db.links_dump().collect()) == sorted(db.id_edges().collect())
+    assert db.links_dump().count() == 5
+
+
 def test_backlink_path(spark):
     db = PageDB(spark)
     db.add(CrawledPage(url="seed", links=[("a", 0.5)]))

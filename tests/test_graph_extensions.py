@@ -4,11 +4,14 @@ networkx exact oracles (FIXTURES.md §3)."""
 from __future__ import annotations
 
 import logging
+from unittest import mock
 
 import pytest
 
 from aduana_spark.datagen import random_digraph
+from aduana_spark.graph import superstep
 from aduana_spark.graph.bfs import bfs_depths
+from aduana_spark.graph.checkpoint import CheckpointManager
 from aduana_spark.graph.components import (
     connected_components,
     connected_components_two_phase,
@@ -263,10 +266,22 @@ def test_bfs_and_labelprop_restore_session_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def _distributed(loop):
+    """``loop`` on the Spark executor whatever the graph's size."""
+
+    def run(edges, seeds):
+        with mock.patch.object(superstep, "LOCAL_MAX_EDGES", -1):
+            return loop(edges, seeds)
+
+    return run
+
+
 #: every iterative loop, as a call returning the DataFrame it computes
 LOOPS = {
     "pagerank": lambda edges, seeds: pagerank(edges).ranks,
     "hits": lambda edges, seeds: hits(edges).ranks,
+    "pagerank_distributed": _distributed(lambda edges, seeds: pagerank(edges).ranks),
+    "hits_distributed": _distributed(lambda edges, seeds: hits(edges).ranks),
     "components": lambda edges, seeds: connected_components(edges).ranks,
     "components_two_phase": lambda edges, seeds: connected_components_two_phase(
         edges
@@ -320,3 +335,21 @@ def test_supersteps_logged_in_order(spark, caplog):
         ("components", i, float(changed), res.n_edges)
         for i, changed in enumerate([4, 3, 2, 1, 0], start=1)
     ]
+
+
+@pytest.mark.parametrize("executor", ["local", "spark"])
+def test_superstep_log_names_executor(spark, caplog, monkeypatch, tmp_path, executor):
+    """The INFO line and the manifest name the executor that ran the
+    superstep."""
+    if executor == "spark":
+        monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
+    edges = _edges_df(spark, [(i, i + 1) for i in range(4)] + [(4, 0)])
+    with caplog.at_level(logging.INFO, logger="aduana_spark.graph"):
+        res = pagerank(edges, checkpoint=str(tmp_path), checkpoint_interval=1)
+    records = [r for r in caplog.records if r.name == "aduana_spark.graph"]
+    assert [(r.algo, r.executor, r.iteration) for r in records] == [
+        ("pagerank", executor, i) for i in range(1, res.n_iterations + 1)
+    ]
+    assert all(f"executor={executor}" in r.getMessage() for r in records)
+    ckpt = CheckpointManager(str(tmp_path), "pagerank")
+    assert ckpt.manifest(ckpt.latest())["executor"] == executor

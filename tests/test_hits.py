@@ -1,5 +1,6 @@
 """HITS golden fixture (/root/reference/lib/test/test_hits.c) +
-networkx cross-check (renormalized to L1)."""
+networkx cross-check (renormalized to L1). The cases run on the local
+executor; ``test_hits_distributed`` reruns them on the Spark one."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ from aduana_spark.datagen import (
     golden_edges,
     random_digraph,
 )
+from aduana_spark.graph import superstep
+from aduana_spark.graph.checkpoint import CheckpointManager
 from aduana_spark.graph.hits import hits
 
 
@@ -70,3 +73,55 @@ def test_hits_checkpoint_resume(spark, tmp_path):
     for i in full:
         assert got[i][0] == pytest.approx(full[i][0], abs=1e-8)
         assert got[i][1] == pytest.approx(full[i][1], abs=1e-8)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_hits_golden,
+        test_hits_numpy_crosscheck,
+        test_hits_content_weighted_numpy_crosscheck,
+        test_hits_checkpoint_resume,
+    ],
+    ids=lambda case: case.__name__[len("test_hits_"):],
+)
+def test_hits_distributed(spark, tmp_path, monkeypatch, case):
+    """The same cases on the Spark executor."""
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
+    if case is test_hits_checkpoint_resume:
+        case(spark, tmp_path)
+    else:
+        case(spark)
+
+
+#: LOCAL_MAX_EDGES that puts these tests' graphs on each executor
+BOUNDS = {"local": superstep.LOCAL_MAX_EDGES, "spark": -1}
+
+
+@pytest.mark.parametrize("first, then", [("spark", "local"), ("local", "spark")])
+def test_hits_cross_path_resume(spark, tmp_path, monkeypatch, first, then):
+    """A run killed after 3 supersteps on one executor resumes on the
+    other from the same shard and reaches the uninterrupted run's
+    fixpoint."""
+    edges, n = random_digraph(n=80, p=0.05, seed=9)
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    full = _d(hits(df, precision=1e-10, max_iters=300))
+
+    ck = str(tmp_path / "ck")
+    cm = CheckpointManager(ck, "hits")
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[first])
+    partial = hits(df, precision=1e-10, max_iters=3, checkpoint=ck, checkpoint_interval=1)
+    assert not partial.converged and cm.latest() == 3
+    m = cm.manifest(3)
+    assert (m["edges"], m["executor"]) == (len(edges), first)
+
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[then])
+    resumed = hits(df, precision=1e-10, max_iters=300, checkpoint=ck, resume=True)
+    assert resumed.converged
+    last = 3 + resumed.n_iterations
+    assert cm.latest() == last
+    assert (cm.manifest(last)["edges"], cm.manifest(last)["executor"]) == (len(edges), then)
+    got = _d(resumed)
+    for i in full:
+        assert got[i][0] == pytest.approx(full[i][0], abs=1e-9)
+        assert got[i][1] == pytest.approx(full[i][1], abs=1e-9)

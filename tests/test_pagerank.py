@@ -1,5 +1,7 @@
 """PageRank golden fixtures (/root/reference/lib/test/test_page_rank.c)
-+ networkx cross-check + checkpoint/resume kill-test."""
++ networkx cross-check + checkpoint/resume kill-test. The cases run on
+the local executor (the graphs are far below LOCAL_MAX_EDGES);
+``test_pagerank_distributed`` reruns them on the Spark one."""
 
 from __future__ import annotations
 
@@ -14,6 +16,8 @@ from aduana_spark.datagen import (
     golden_scores,
     random_digraph,
 )
+from aduana_spark.graph import superstep
+from aduana_spark.graph.checkpoint import CheckpointManager
 from aduana_spark.graph.pagerank import pagerank
 
 
@@ -89,7 +93,9 @@ def test_pagerank_personalized_numpy_crosscheck(spark):
         assert got[i] == pytest.approx(want[i], abs=1e-6), i
 
 
-def test_pagerank_salted_matches_unsalted(spark):
+def test_pagerank_salted_matches_unsalted(spark, monkeypatch):
+    # salting splits the Spark loop's reduce key; the local loop has none
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
     edges, n = random_digraph(n=150, p=0.03, seed=11)
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     plain = _ranks_dict(pagerank(df, precision=1e-8))
@@ -110,8 +116,6 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
         df, precision=1e-10, max_iters=3, checkpoint=ck, checkpoint_interval=1
     )
     assert not partial.converged
-    from aduana_spark.graph.checkpoint import CheckpointManager
-
     cm = CheckpointManager(ck, "pagerank")
     assert cm.latest() == 3
     m = cm.manifest(3)
@@ -125,6 +129,63 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
         checkpoint_interval=5,
         resume=True,
     )
+    got = _ranks_dict(resumed)
+    for i in full:
+        assert got[i] == pytest.approx(full[i], abs=1e-9)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_pagerank_golden_d085,
+        test_pagerank_golden_d0_scores,
+        test_pagerank_golden_d05_scores,
+        test_pagerank_numpy_crosscheck,
+        test_pagerank_personalized_numpy_crosscheck,
+        test_pagerank_checkpoint_resume,
+    ],
+    ids=lambda case: case.__name__[len("test_pagerank_"):],
+)
+def test_pagerank_distributed(spark, tmp_path, monkeypatch, case):
+    """The same cases on the Spark executor."""
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
+    if case is test_pagerank_checkpoint_resume:
+        case(spark, tmp_path)
+    else:
+        case(spark)
+
+
+#: LOCAL_MAX_EDGES that puts these tests' graphs on each executor
+BOUNDS = {"local": superstep.LOCAL_MAX_EDGES, "spark": -1}
+
+
+@pytest.mark.parametrize("first, then", [("spark", "local"), ("local", "spark")])
+def test_pagerank_cross_path_resume(spark, tmp_path, monkeypatch, first, then):
+    """A personalized run killed after 3 supersteps on one executor
+    resumes on the other from the same shard and reaches the
+    uninterrupted run's fixpoint."""
+    edges, n = random_digraph(n=100, p=0.04, seed=3)
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    sdf = spark.createDataFrame(
+        [(i, (i % 5) / 5.0) for i in range(n)], "id LONG, score DOUBLE"
+    )
+    kw = dict(damping=0.7, scores=sdf, precision=1e-10, max_iters=200)
+    full = _ranks_dict(pagerank(df, **kw))
+
+    ck = str(tmp_path / "ck")
+    cm = CheckpointManager(ck, "pagerank")
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[first])
+    partial = pagerank(df, **{**kw, "max_iters": 3}, checkpoint=ck, checkpoint_interval=1)
+    assert not partial.converged and cm.latest() == 3
+    m = cm.manifest(3)
+    assert (m["edges"], m["executor"]) == (len(edges), first)
+
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[then])
+    resumed = pagerank(df, **kw, checkpoint=ck, resume=True)
+    assert resumed.converged
+    last = 3 + resumed.n_iterations
+    assert cm.latest() == last
+    assert (cm.manifest(last)["edges"], cm.manifest(last)["executor"]) == (len(edges), then)
     got = _ranks_dict(resumed)
     for i in full:
         assert got[i] == pytest.approx(full[i], abs=1e-9)
