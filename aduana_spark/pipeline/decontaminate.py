@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aduana_spark.pipeline.dedup import _shingle_col
+from aduana_spark.pipeline.dedup import _shingled
 
 
 def ngram_contamination(
@@ -46,12 +46,14 @@ def ngram_contamination(
     shuffles on the n-gram hash.
     """
     bench_text = bench_text_col or text_col
-    d_sh = docs.select(
-        F.col(id_col).alias("doc_id"), _shingle_col(text_col, n).alias("s")
+    d_sh = _shingled(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")), n
     )
-    grams = d_sh.select("doc_id", F.explode("s").alias("g"))
+    grams = d_sh.select("doc_id", F.explode("shingles").alias("g"))
     bench = (
-        benchmark.select(F.explode(_shingle_col(bench_text, n)).alias("g")).distinct()
+        _shingled(benchmark.select(F.col(bench_text).alias("_text")), n)
+        .select(F.explode("shingles").alias("g"))
+        .distinct()
     )
     if broadcast_benchmark:
         bench = F.broadcast(bench)
@@ -61,7 +63,7 @@ def ngram_contamination(
         .agg(F.count("*").alias("hits"))
     )
     return (
-        d_sh.select("doc_id", F.size("s").alias("total"))
+        d_sh.select("doc_id", F.size("shingles").alias("total"))
         .join(hits, "doc_id", "left")
         .select(
             "doc_id",

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import logging
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from aduana_spark.pipeline import dedup
 from aduana_spark.pipeline.dedup import (
     embedding_near_duplicates,
     exact_duplicates,
@@ -83,11 +87,11 @@ def test_minhash_signatures_rebalance_single_split(spark, docs):
 def test_minhash_jaccard_is_exact_verification(spark, docs):
     """The jaccard column is exact (computed on shingle sets, not
     estimated from signatures)."""
-    from aduana_spark.pipeline.dedup import _shingle_col
+    from aduana_spark.pipeline.dedup import _shingled
 
     sh = {
-        r["doc_id"]: set(r["s"])
-        for r in docs.select("doc_id", _shingle_col("text", 3).alias("s")).collect()
+        r["doc_id"]: set(r["shingles"])
+        for r in _shingled(docs.select("doc_id", F.col("text").alias("_text")), 3).collect()
     }
     want = len(sh[0] & sh[2]) / len(sh[0] | sh[2])
     pairs = {
@@ -514,6 +518,171 @@ def test_minhash_bucket_cap_guards_boilerplate(spark):
         df, num_perm=32, bands=8, shingle_k=3, threshold=0.3, max_bucket_size=None
     ).count()
     assert uncapped == 120 * 119 // 2 + 1
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_minhash_lsh_finds_near_dups,
+        test_minhash_jaccard_is_exact_verification,
+        test_ngram_jaccard_pairs,
+        test_minhash_bucket_cap_guards_boilerplate,
+    ],
+    ids=lambda case: case.__name__[len("test_"):],
+)
+def test_minhash_distributed(spark, docs, monkeypatch, case):
+    """The same cases on the Spark executor (the fixtures are far below
+    LOCAL_MAX_DOCS, so the plain tests run the driver one)."""
+    monkeypatch.setattr(dedup, "LOCAL_MAX_DOCS", -1)
+    if case is test_minhash_bucket_cap_guards_boilerplate:
+        case(spark)
+    else:
+        case(spark, docs)
+
+
+#: null, empty, fewer than k tokens, tab/newline/space runs, Unicode
+#: case and repeated texts
+EDGE_TEXTS = [
+    None,
+    None,
+    "",
+    "",
+    "a",
+    "a b",
+    "A\tb",
+    "  a   B  ",
+    "x\ny\tz  w",
+    "x y z w",
+    "ÄÖ ü ß straße",
+    "äö Ü ß STRASSE",
+    "äö ü ß straße",
+    BASE,
+    BASE.upper(),
+    BASE.replace(" ", "\t\t"),
+    BASE.replace("quick", "rapid"),
+    BASE,
+]
+
+
+def _edge_corpus(spark):
+    return spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "doc_id LONG, text STRING")
+
+
+def _boilerplate_corpus(spark):
+    boiler = "all rights reserved cookie notice privacy policy terms of service apply"
+    rows = [(i, boiler) for i in range(60)] + [(1000, BASE), (1001, BASE.upper())]
+    return spark.createDataFrame(rows, "doc_id INT, text STRING")
+
+
+def _dedup_records(caplog):
+    return [
+        r for r in caplog.records if r.name == "aduana_spark.pipeline" and r.msg.startswith("dedup ")
+    ]
+
+
+@pytest.mark.parametrize("threshold", [0.5, None], ids=["t0.5", "tNone"])
+@pytest.mark.parametrize(
+    "corpus", ["fixture", "edge", "boilerplate", "documents", "empty", "non_null_ids"]
+)
+def test_minhash_executors_agree(spark, docs, sf_dir, monkeypatch, caplog, corpus, threshold):
+    """Driver and Spark executors return the same rows (jaccard bit for
+    bit) and the same schema; each call logs the executor it ran on."""
+    df = {
+        "fixture": lambda: docs,
+        "edge": lambda: _edge_corpus(spark),
+        "boilerplate": lambda: _boilerplate_corpus(spark),
+        "documents": lambda: spark.read.parquet(f"{sf_dir}/documents.parquet"),
+        "empty": lambda: _edge_corpus(spark).limit(0),
+        # spark.range ids are non-nullable: the schemas must agree on that too
+        "non_null_ids": lambda: spark.range(12).select(
+            F.col("id").alias("doc_id"),
+            F.when(F.col("id") % 3 == 0, BASE)
+            .otherwise(F.concat(F.lit(BASE), F.lit(" extra words"), F.col("id").cast("string")))
+            .alias("text"),
+        ),
+    }[corpus]()
+    kw = dict(num_perm=32, bands=8, shingle_k=3, threshold=threshold, max_bucket_size=40)
+    got = {}
+    for executor, bound in (("local", dedup.LOCAL_MAX_DOCS), ("spark", -1)):
+        monkeypatch.setattr(dedup, "LOCAL_MAX_DOCS", bound)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="aduana_spark.pipeline"):
+            out = minhash_lsh_candidates(df, **kw)
+        rec = _dedup_records(caplog)
+        assert [r.executor for r in rec] == [executor]
+        assert rec[0].pairs == out.count()
+        got[executor] = (out.schema, sorted(out.collect()))
+    assert got["local"][0] == got["spark"][0]
+    assert got["local"][1] == got["spark"][1]
+    if corpus not in ("documents", "empty"):
+        assert got["local"][1], "the corpus must yield pairs"
+
+
+def _jobs_during(spark, fn):
+    """(fn's result, Spark jobs that ran during the call)."""
+    sc = spark.sparkContext
+    group = f"dedup-jobs-{uuid.uuid4()}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_minhash_job_counts(spark, docs, monkeypatch):
+    """The driver executor runs at most three jobs (row count, token
+    fetch); ``eager=False`` runs none at call time, on either path."""
+    out, jobs = _jobs_during(
+        spark, lambda: minhash_lsh_candidates(docs, num_perm=64, bands=16, shingle_k=3)
+    )
+    assert 0 < jobs <= 3
+    assert out.count() > 0
+    lazy, jobs = _jobs_during(
+        spark,
+        lambda: minhash_lsh_candidates(
+            docs, num_perm=64, bands=16, shingle_k=3, eager=False
+        ),
+    )
+    assert jobs == 0
+    assert sorted(lazy.collect()) == sorted(out.collect())
+
+
+def test_minhash_local_pair_bound_falls_back(spark, monkeypatch, caplog):
+    """An all-identical corpus with the bucket cap off would expand to
+    bands * n(n-1)/2 pair rows: above LOCAL_MAX_PAIRS the driver hands
+    the call to Spark before building a single pair, and Spark still
+    returns all n(n-1)/2 pairs."""
+    n = 60
+    df = spark.createDataFrame([(i, BASE) for i in range(n)], "doc_id LONG, text STRING")
+    monkeypatch.setattr(dedup, "LOCAL_MAX_PAIRS", n * (n - 1) // 2)
+
+    def no_pairs(*args):
+        raise AssertionError("pairs built above LOCAL_MAX_PAIRS")
+
+    monkeypatch.setattr(dedup, "_bucket_pairs", no_pairs)
+    with caplog.at_level(logging.INFO, logger="aduana_spark.pipeline"):
+        out = minhash_lsh_candidates(
+            df, num_perm=32, bands=8, shingle_k=3, max_bucket_size=None
+        )
+    assert out.count() == n * (n - 1) // 2
+    assert out.where(F.col("jaccard") != 1.0).count() == 0
+    (rec,) = _dedup_records(caplog)
+    assert (rec.executor, rec.docs, rec.pairs) == ("spark", n, n * (n - 1) // 2)
+
+
+def test_minhash_log_line(spark, docs, caplog):
+    """One INFO line per call, fields as LogRecord attributes."""
+    with caplog.at_level(logging.INFO, logger="aduana_spark.pipeline"):
+        out = minhash_lsh_candidates(docs, num_perm=64, bands=16, shingle_k=3, threshold=0.5)
+    (rec,) = _dedup_records(caplog)
+    assert rec.levelno == logging.INFO
+    assert (rec.executor, rec.docs, rec.pairs) == ("local", docs.count(), out.count())
+    assert rec.candidates >= rec.pairs and rec.wall_sec > 0
+    for k in ("executor", "docs", "candidates", "pairs", "wall_sec"):
+        assert f"{k}={getattr(rec, k)}" in rec.getMessage()
 
 
 def test_ngram_contamination_and_filter(spark, docs):

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from aduana_spark.functions.urls import (
@@ -10,6 +12,8 @@ from aduana_spark.functions.urls import (
     ref_same_domain,
     ref_url_domain,
     same_domain_col,
+    utf8_buffers,
+    xxhash64_np,
 )
 
 REF_CASES = {
@@ -61,3 +65,34 @@ def test_native_same_domain(spark):
     got = df.select("u1", "u2", same_domain_col("u1", "u2").alias("s")).collect()
     for r in got:
         assert r["s"] == ref_same_domain(r["u1"], r["u2"]), (r["u1"], r["u2"])
+
+
+def test_xxhash64_np_matches_spark(spark):
+    """The numpy XXH64 agrees with ``F.xxhash64`` on every byte length
+    0-100 (so every tail class: under 4, 4-7 and 8-31 bytes, and one
+    to three 32-byte stripes), in ASCII and in 2-, 3- and 4-byte UTF-8,
+    and on a sliced Arrow array."""
+    rng = np.random.default_rng(7)
+    alphabet = list("abcxyz 019") + list("äßéñ") + list("€中文") + ["😀", "𝄞"]
+    strings = [""]
+    for n_bytes in range(101):
+        for _ in range(50):
+            s, size = "", 0
+            while size < n_bytes:
+                c = alphabet[rng.integers(len(alphabet))]
+                if size + len(c.encode()) <= n_bytes:
+                    s, size = s + c, size + len(c.encode())
+            strings.append(s)
+    assert len(strings) > 5000
+    assert {len(s.encode()) for s in strings} == set(range(101))
+    assert any(len(c.encode()) == 4 for s in strings for c in s)
+    want = [
+        r["h"]
+        for r in spark.createDataFrame([(i, s) for i, s in enumerate(strings)], "i INT, s STRING")
+        .select("i", F.xxhash64("s").alias("h"))
+        .orderBy("i")
+        .collect()
+    ]
+    for arr in (pa.array(strings), pa.array(["skipped"] + strings)[1:]):
+        data, offsets = utf8_buffers(arr)
+        assert xxhash64_np(data, offsets[:-1], np.diff(offsets)).tolist() == want
