@@ -184,9 +184,10 @@ class BFScheduler(BFSchedulerView):
     def add(self, batch: DataFrame) -> None:
         # count pages, not batches: the reference's update gate
         # (bf_scheduler.c:537-549, BF_SCHEDULER_UPDATE_NUM_PAGES) counts
-        # crawled pages added, and one add() batch may hold many
-        n = batch.count()
+        # crawled pages added, and one add() batch may hold many. The
+        # commit counted them to pick its executor
         super().add(batch)
+        n = self.page_db.last_commit.pages
         self._pages_since_update += n
         self._pages_added_total += n
 
@@ -275,6 +276,11 @@ class Backend:
     GETs are served in rounds: the GETs that queued while the Spark
     work of an earlier round (or a flush) ran are served together by
     one commit and one frontier pop (see ``get_next_requests``).
+
+    A commit hands its pages to ``PageDB.add_batch`` as an Arrow
+    table (``pages_batch``), so while the store is within
+    ``LOCAL_MAX_ROWS`` it merges on the driver without fetching them
+    back; the pop still runs on Spark.
 
     Methods are thread-safe. One lock serializes the Spark work
     (commit, seed ingest, pops), so a buffered ``page_crawled`` never

@@ -26,10 +26,19 @@ free because the view is a pure function of the persisted tables.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.page_info import PageDB, cached_batch
+from aduana_spark.frontier.page_info import (
+    PageDB,
+    arrow_schema,
+    cached_batch,
+    keep,
+    keep_table,
+    known_table,
+    within_bound,
+)
 from aduana_spark.functions.urls import domain_col
 
 
@@ -108,7 +117,16 @@ class BFSchedulerView:
     Page state lives in ``page_db``: the PageDB passed in (shared with
     the Frontera ``Backend`` or a restarted view, so each batch is
     ingested exactly once) or a new one. The view itself keeps only
-    the schedule, the served log and the crawl log.
+    the schedule, the served log and the crawl log, (url, ts) per
+    crawled page.
+
+    ``add`` follows the executor of its page-info commit. After a
+    commit on the driver, the schedule and the crawl log of up to
+    ``LOCAL_MAX_ROWS`` rows each are appended as Arrow tables that the
+    view keeps behind its DataFrames, like ``PageDB`` does. Otherwise
+    they are unioned and checkpointed on Spark. A DataFrame assigned
+    from outside (a restart, a score re-key) costs the next local
+    commit one count and one fetch.
 
     ``set_crawl_rate(soft, hard)`` arms the politeness gate: crawled
     pages heat their domain (page_db.c:858-860) over a linear-decay
@@ -128,9 +146,17 @@ class BFSchedulerView:
         self.spark = spark
         self.max_depth = max_depth
         self.page_db = page_db if page_db is not None else PageDB(spark)
-        self.schedule = spark.createDataFrame([], "url STRING, score DOUBLE")
+        #: attribute -> (DataFrame, its Arrow table or None, rows or None)
+        self._known: dict = {}
+        self._schemas = {}
+        for name, ddl in (
+            ("schedule", "url STRING, score DOUBLE"),
+            ("crawl_log", "url STRING, ts TIMESTAMP"),
+        ):
+            df = spark.createDataFrame([], ddl)
+            self._schemas[name] = arrow_schema(df)
+            keep(self, name, df, self._schemas[name].empty_table())
         self.served = spark.createDataFrame([], "url STRING")
-        self.crawl_log = spark.createDataFrame([], "domain STRING, ts TIMESTAMP")
         self.soft_rate: float | None = None
         self.hard_rate: float | None = None
         self.temp_window: float | None = None
@@ -167,12 +193,21 @@ class BFSchedulerView:
         (page_db.c:858-860)."""
         with cached_batch(batch):
             new_sched = self.page_db.add_batch(batch)
-            self.schedule = self.schedule.unionByName(
+            commit = self.page_db.last_commit
+            logs = ("schedule", commit.schedule), ("crawl_log", commit.crawls)
+            if commit.executor == "local" and within_bound(self, "schedule", "crawl_log"):
+                for name, rows in logs:
+                    table = known_table(self, name, self._schemas[name])
+                    keep_table(
+                        self, name, pa.concat_tables([table, rows.cast(table.schema)])
+                    )
+                return
+            keep(self, "schedule", self.schedule.unionByName(
                 new_sched.select("url", "score")
-            ).localCheckpoint()
-            self.crawl_log = self.crawl_log.unionByName(
-                batch.select(domain_col("url").alias("domain"), F.col("ts"))
-            ).localCheckpoint()
+            ).localCheckpoint())
+            keep(self, "crawl_log", self.crawl_log.unionByName(
+                batch.select("url", "ts")
+            ).localCheckpoint())
 
     def _escalation_limits(self) -> list[float | None]:
         """The reference's request loop: one pass at the soft limit,
@@ -202,7 +237,10 @@ class BFSchedulerView:
                 last = self.crawl_log.agg(F.max("ts")).first()[0]
                 now = last.timestamp() if last is not None else 0.0
             domain_rate = domain_temperature(
-                self.crawl_log, now=now, window_sec=self.temp_window, mode="linear"
+                self.crawl_log.select(domain_col("url"), "ts"),
+                now=now,
+                window_sec=self.temp_window,
+                mode="linear",
             ).persist()
 
         urls: list[str] = []

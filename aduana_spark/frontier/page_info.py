@@ -26,22 +26,50 @@ link position — matching sequential ingest of the same batch.
 
 ``PageDB`` is the one page-state store: the schedulers, the Frontera
 ``Backend`` and streaming ingest all hold one, and ``PageDB.add_batch``
-is the only code that applies a crawl batch to it (MERGE, edge-log
-append and lineage truncation).
+is the only code that applies a crawl batch to it (MERGE and edge-log
+append).
+
+The MERGE has two executors, picked once per commit. A crawl-sized
+commit pays Spark's per-job cost many times over for a few thousand
+rows (SparkTune, EDBT 2019), so when the store's page-info and edge
+rows plus the batch's rows are at most :data:`LOCAL_MAX_ROWS`, the
+batch crosses to the driver once as Arrow and :func:`_ingest_local`
+runs the MERGE in pyarrow/numpy (executor ``local``). ``PageDB`` keeps
+the Arrow table behind each DataFrame it creates, so the next commit
+neither re-fetches nor checkpoints its state. Larger stores, and
+batches that repeat a ``url`` or a ``crawl_order`` or hold a null URL,
+run :func:`ingest_crawl_batch` on Spark (executor ``spark``). Each
+commit logs one INFO line on ``aduana_spark.frontier``:
+``commit executor=… pages=… links=… page_info_rows=… wall_sec=…``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import logging
+import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
-from aduana_spark.functions.urls import url_hash_col
+from aduana_spark.functions.urls import url_hash_col, utf8_buffers, xxhash64_np
 from aduana_spark.graph.builder import edges_with_ids
+from aduana_spark.graph.superstep import row_count
+
+log = logging.getLogger("aduana_spark.frontier")
+
+#: a commit runs on the driver when the store's page-info and edge rows
+#: plus the batch's rows are at most this many; set from the crossover
+#: of a 10-page commit on both executors and the driver heap (ROADMAP
+#: item 3)
+LOCAL_MAX_ROWS = 1_000_000
 
 PAGE_INFO_SCHEMA = (
     "url STRING, linked_from STRING, depth BIGINT, first_crawl TIMESTAMP, "
@@ -176,6 +204,202 @@ def ingest_crawl_batch(
     return new_page_info, new_schedule
 
 
+@dataclass
+class _Links:
+    """A batch's outlinks, one row per list element in batch order."""
+
+    parent: np.ndarray  # batch row of the linking page
+    pos: np.ndarray  # position in that page's list
+    url: pa.Array
+    score: pa.Array
+
+
+def _links(batch: pa.Table) -> _Links:
+    """posexplode of the batch's ``links`` (null lists explode to none)."""
+    lists = batch["links"].combine_chunks()
+    parent = pc.list_parent_indices(lists).to_numpy()
+    flat = pc.list_flatten(lists)
+    return _Links(
+        parent,
+        np.arange(len(parent)) - np.searchsorted(parent, parent),
+        pc.struct_field(flat, "url"),
+        pc.struct_field(flat, "score").cast(pa.float64()),
+    )
+
+
+def _local_batch(batch: pa.Table) -> bool:
+    """Whether the driver MERGE may take ``batch``: every ``url`` and
+    ``crawl_order`` present and distinct, and no null outlink URL.
+    The Spark MERGE gives a repeated URL one page-info row per repeat,
+    and leaves a tie in ``crawl_order`` to shuffle order."""
+    n = batch.num_rows
+    return all(
+        batch[c].null_count == 0 and pc.count_distinct(batch[c]).as_py() == n
+        for c in ("url", "crawl_order")
+    ) and _links(batch).url.null_count == 0
+
+
+def _unique_urls(page_info: pa.Table) -> bool:
+    """Whether no URL repeats in a page-info table (nulls aside)."""
+    urls = page_info["url"]
+    return pc.count_distinct(urls).as_py() == len(urls) - urls.null_count
+
+
+def _eq_null_safe(a, b):
+    """Spark's ``<=>``: equal, or both null."""
+    return pc.if_else(pc.is_null(a), pc.is_null(b), pc.fill_null(pc.equal(a, b), False))
+
+
+def _ingest_local(old: pa.Table, batch: pa.Table) -> tuple[pa.Table, pa.Table]:
+    """:func:`ingest_crawl_batch` on the driver, row for row: returns
+    (new_page_info, new_schedule_rows) as Arrow tables in the schemas
+    of ``old`` and of the schedule. ``batch`` must pass
+    :func:`_local_batch` and ``old`` must hold each URL once. One hash
+    lookup of the batch's URLs and link targets in ``old`` drives the
+    crawled-page upsert and the anti-join; first mention wins by
+    (``crawl_order``, position)."""
+    schema = old.schema
+    n = batch.num_rows
+    url = batch["url"].combine_chunks()
+    ts = batch["ts"].combine_chunks().cast(schema.field("last_crawl").type)
+    links = _links(batch)
+    at = pc.index_in(
+        pa.concat_arrays([url, links.url]), value_set=old["url"].combine_chunks()
+    )
+    at = pc.fill_null(at, -1).to_numpy()
+    crawled_at, link_at = at[:n], at[n:]
+
+    # ---- update/insert the crawled pages themselves ----------------------
+    found = crawled_at >= 0
+    prev = old.take(pa.array(np.where(found, crawled_at, 0), mask=~found))
+    n_crawls = pc.coalesce(prev["n_crawls"], 0)
+    changed = pc.and_(
+        pc.greater(n_crawls, 0),
+        pc.invert(_eq_null_safe(batch["content_hash"], prev["content_hash"])),
+    )
+    depth = pc.coalesce(prev["depth"], 0)
+    crawled = pa.table(
+        {
+            "url": url,
+            "linked_from": prev["linked_from"],
+            "depth": depth,
+            "first_crawl": pc.coalesce(prev["first_crawl"], ts),
+            "last_crawl": ts,
+            "n_changes": pc.add(
+                pc.coalesce(prev["n_changes"], 0), changed.cast(pa.int64())
+            ),
+            "n_crawls": pc.add(n_crawls, 1),
+            "score": batch["page_score"].cast(pa.float64()),
+            "content_hash": batch["content_hash"],
+        },
+        schema=schema,
+    )
+
+    # ---- first-seen link targets -----------------------------------------
+    order = np.lexsort((links.pos, batch["crawl_order"].to_numpy()[links.parent]))
+    codes = pc.dictionary_encode(links.url.take(order)).indices.to_numpy()
+    first = np.sort(order[np.unique(codes, return_index=True)[1]])
+    new = first[
+        (link_at[first] < 0)
+        & ~pc.is_in(links.url.take(first), value_set=url).to_numpy(zero_copy_only=False)
+    ]
+    src = links.parent[new]
+    m = len(new)
+    link_info = pa.table(
+        {
+            "url": links.url.take(new),
+            "linked_from": url.take(src),
+            "depth": pc.add(depth.take(src), 1),
+            "first_crawl": pa.nulls(m, ts.type),
+            "last_crawl": pa.nulls(m, ts.type),
+            "n_changes": np.zeros(m, np.int64),
+            "n_crawls": np.zeros(m, np.int64),
+            "score": links.score.take(new),
+            "content_hash": pa.nulls(m, pa.binary()),
+        },
+        schema=schema,
+    )
+
+    untouched = old
+    if found.any():
+        stays = np.ones(old.num_rows, bool)
+        stays[crawled_at[found]] = False
+        untouched = old.filter(stays)
+    new_page_info = pa.concat_tables([untouched, crawled, link_info])
+    return new_page_info, link_info.select(["url", "score"])
+
+
+def arrow_schema(df: DataFrame) -> pa.Schema:
+    """The Arrow schema ``toArrow`` gives ``df``'s rows."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(df.schema)
+
+
+def keep(owner, name: str, df: DataFrame, table: pa.Table | None = None) -> None:
+    """Set ``owner.<name>`` to ``df``, remembering the Arrow table it
+    was created from, if any. ``owner`` has ``spark`` and a ``_known``
+    dict; what it remembers holds only while the attribute is that very
+    DataFrame, so one assigned from outside is read afresh."""
+    setattr(owner, name, df)
+    owner._known[name] = (df, table, table.num_rows if table is not None else None)
+
+
+def keep_table(owner, name: str, table: pa.Table) -> None:
+    """:func:`keep` of a DataFrame created from ``table``, whose chunks
+    are combined first: each chunk becomes a partition."""
+    if table.column(0).num_chunks > 1:
+        table = table.combine_chunks()
+    keep(owner, name, owner.spark.createDataFrame(table), table)
+
+
+def known_rows(owner, name: str) -> int:
+    """Row count of ``owner.<name>``: remembered, or counted once (one
+    job, no row leaves the executors)."""
+    df, table, rows = owner._known.get(name, (None, None, None))
+    if df is not getattr(owner, name) or rows is None:
+        df = getattr(owner, name)
+        rows = row_count(df)
+        owner._known[name] = (df, None, rows)
+    return rows
+
+
+def within_bound(owner, *names: str) -> bool:
+    """Whether each of these attributes has at most LOCAL_MAX_ROWS rows."""
+    return all(known_rows(owner, name) <= LOCAL_MAX_ROWS for name in names)
+
+
+def kept_table(owner, name: str) -> pa.Table | None:
+    """The Arrow table behind ``owner.<name>``, if the owner created it."""
+    df, table, _ = owner._known.get(name, (None, None, None))
+    return table if df is getattr(owner, name) else None
+
+
+def known_table(owner, name: str, schema: pa.Schema) -> pa.Table:
+    """Rows of ``owner.<name>`` as Arrow in ``schema``: the kept table,
+    or one fetch that is then kept."""
+    table = kept_table(owner, name)
+    if table is None:
+        df = getattr(owner, name)
+        table = df.select(*schema.names).toArrow().cast(schema)
+        keep(owner, name, df, table)
+    return table
+
+
+@dataclass
+class Commit:
+    """What one ``PageDB.add_batch`` did. ``schedule`` and ``crawls``
+    are Arrow tables on the local executor, for a scheduler sharing the
+    store; ``links`` is not counted on Spark."""
+
+    executor: str
+    pages: int
+    page_info_rows: int
+    links: int | None = None
+    schedule: pa.Table | None = None
+    crawls: pa.Table | None = None
+
+
 def crawl_rate_col() -> F.Column:
     """F10 / A10 (page_db.c:428-435, freq_algo.c:6-44): estimated
     change rate (n_changes+1)/(last_crawl-first_crawl); -1.0 sentinel
@@ -199,7 +423,14 @@ class CrawledPage:
 
 class PageDB:
     """Mirror of aduana.PageDB (aduana/__init__.py:159-232): page-state
-    store + link graph, backed by DataFrames instead of LMDB."""
+    store + link graph, backed by DataFrames instead of LMDB.
+
+    ``page_info`` and ``edges`` are DataFrames on either executor. A
+    commit on the driver creates them from Arrow tables that the store
+    keeps for the next commit and for :meth:`id_edges`; a commit on
+    Spark checkpoints them (``localCheckpoint``) to truncate lineage.
+    A DataFrame assigned from outside costs the next local commit one
+    count and one fetch."""
 
     # crawl_order is 64-bit: streaming ingest derives it from
     # monotonically_increasing_id(), whose upper bits carry the
@@ -213,28 +444,53 @@ class PageDB:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.page_info = empty_page_info(spark)
-        self.edges = spark.createDataFrame([], "src_url STRING, dst_url STRING")
+        #: attribute -> (DataFrame, its Arrow table or None, rows or None)
+        self._known: dict = {}
+        for name, df in (
+            ("page_info", empty_page_info(spark)),
+            ("edges", spark.createDataFrame([], "src_url STRING, dst_url STRING")),
+        ):
+            keep(self, name, df, arrow_schema(df).empty_table())
+        self._schemas = {n: t.schema for n, (_, t, _) in self._known.items()}
+        self._schemas["batch"] = arrow_schema(
+            spark.createDataFrame([], self.BATCH_SCHEMA)
+        )
+        #: the last pages_batch DataFrame and the Arrow table behind it
+        self._handed: tuple[DataFrame, pa.Table] | None = None
+        self.last_commit: Commit | None = None
         self._order = 0
 
     def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
         """Crawl batch in BATCH_SCHEMA, one row per page in list order:
         ``crawl_order`` numbers the pages consecutively, so the MERGE's
-        within-batch first-writer-wins follows arrival order."""
+        within-batch first-writer-wins follows arrival order. The rows
+        are built as Arrow, and ``add_batch`` of the DataFrame returned
+        last takes them from here instead of fetching them."""
         default_ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-        rows = [
-            (
-                self._order + i,
-                page.url,
-                [(u, float(s)) for u, s in page.links],
-                float(page.score),
-                page.hash or b"",
-                (page.time or default_ts).replace(tzinfo=None),
-            )
-            for i, page in enumerate(pages)
-        ]
+        ts = TimestampType()
+        schema = self._schemas["batch"]
+        table = pa.table(
+            {
+                "crawl_order": np.arange(self._order, self._order + len(pages)),
+                "url": [p.url for p in pages],
+                "links": [
+                    [{"url": u, "score": float(s)} for u, s in p.links] for p in pages
+                ],
+                "page_score": [float(p.score) for p in pages],
+                "content_hash": [p.hash or b"" for p in pages],
+                # naive datetimes as createDataFrame reads them: local time
+                "ts": pa.array(
+                    [ts.toInternal((p.time or default_ts).replace(tzinfo=None))
+                     for p in pages],
+                    pa.int64(),
+                ).cast(schema.field("ts").type),
+            },
+            schema=schema,
+        )
         self._order += len(pages)
-        return self.spark.createDataFrame(rows, schema=self.BATCH_SCHEMA)
+        df = self.spark.createDataFrame(table)
+        self._handed = (df, table)
+        return df
 
     def page_batch(self, page: CrawledPage) -> DataFrame:
         """One-row crawl batch in BATCH_SCHEMA from a CrawledPage."""
@@ -242,23 +498,88 @@ class PageDB:
 
     def add_batch(self, batch: DataFrame) -> DataFrame:
         """page_db_add (page_db.c:807-1016) for a whole batch: one
-        MERGE into page_info + an edge-log append. Returns the batch's
-        newly created crawlable pages (the schedule insertions) so a
-        scheduler sharing this PageDB ingests each batch exactly
-        once."""
+        MERGE into page_info + an edge-log append, on the driver or on
+        Spark (see the module docstring). Returns the batch's newly
+        created crawlable pages (the schedule insertions) so a
+        scheduler sharing this PageDB ingests each batch exactly once;
+        ``last_commit`` says how the commit ran."""
+        t0 = time.perf_counter()
+        handed, self._handed = self._handed, None
         with cached_batch(batch):
-            new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
-            # localCheckpoint (not persist+count): each batch's plan embeds
-            # the previous state's plan, so without truncation Catalyst
-            # re-analyzes a deepening tree and per-batch cost grows
-            # super-linearly (~5s → 30s within 10 batches, measured)
-            self.page_info = new_info.localCheckpoint()
-            new_edges = batch.select(
-                F.col("url").alias("src_url"),
-                F.explode("links").alias("l"),
-            ).select("src_url", F.col("l.url").alias("dst_url"))
-            self.edges = self.edges.unionByName(new_edges).localCheckpoint()
+            if handed is not None and handed[0] is batch:
+                table, pages = handed[1], handed[1].num_rows
+            else:
+                table, pages = None, row_count(batch)
+            commit = self._add_local(batch, table, pages)
+            if commit is None:
+                commit, new_sched = self._add_spark(batch, pages)
+            else:
+                new_sched = self.spark.createDataFrame(commit.schedule)
+        self.last_commit = commit
+        fields = {
+            "executor": commit.executor,
+            "pages": commit.pages,
+            "links": commit.links,
+            "page_info_rows": commit.page_info_rows,
+            "wall_sec": round(time.perf_counter() - t0, 6),
+        }
+        log.info(
+            "commit %s", " ".join(f"{k}={v}" for k, v in fields.items()), extra=fields
+        )
         return new_sched
+
+    def _add_local(
+        self, batch: DataFrame, table: pa.Table | None, pages: int
+    ) -> Commit | None:
+        """The driver MERGE, or None when the store and batch exceed
+        LOCAL_MAX_ROWS or the batch or store does not qualify."""
+        budget = LOCAL_MAX_ROWS - pages
+        for name in ("page_info", "edges"):
+            if budget < 0:
+                return None
+            budget -= known_rows(self, name)
+        if budget < 0:
+            return None
+        if table is None:
+            schema = self._schemas["batch"]
+            table = batch.select(*schema.names).toArrow().cast(schema)
+        if not _local_batch(table):
+            return None
+        old = kept_table(self, "page_info")
+        if old is None:
+            old = known_table(self, "page_info", self._schemas["page_info"])
+            if not _unique_urls(old):
+                return None
+        edges = known_table(self, "edges", self._schemas["edges"])
+        info, sched = _ingest_local(old, table)
+        links = _links(table)
+        new_edges = pa.table(
+            {"src_url": table["url"].combine_chunks().take(links.parent),
+             "dst_url": links.url},
+            schema=edges.schema,
+        )
+        keep_table(self, "page_info", info)
+        keep_table(self, "edges", pa.concat_tables([edges, new_edges]))
+        return Commit(
+            "local", pages, info.num_rows, len(new_edges), sched,
+            table.select(["url", "ts"]),
+        )
+
+    def _add_spark(self, batch: DataFrame, pages: int) -> tuple[Commit, DataFrame]:
+        """The Spark MERGE: ``ingest_crawl_batch`` + checkpoints."""
+        new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
+        # localCheckpoint (not persist+count): each batch's plan embeds
+        # the previous state's plan, so without truncation Catalyst
+        # re-analyzes a deepening tree and per-batch cost grows
+        # super-linearly (~5s → 30s within 10 batches, measured)
+        keep(self, "page_info", new_info.localCheckpoint())
+        new_edges = batch.select(
+            F.col("url").alias("src_url"),
+            F.explode("links").alias("l"),
+        ).select("src_url", F.col("l.url").alias("dst_url"))
+        keep(self, "edges", self.edges.unionByName(new_edges).localCheckpoint())
+        # counted for the log line and the next commit's decision
+        return Commit("spark", pages, known_rows(self, "page_info")), new_sched
 
     def add(self, page: CrawledPage) -> None:
         """Single-page convenience over ``add_batch``."""
@@ -275,7 +596,12 @@ class PageDB:
             yield r
 
     def id_edges(self) -> DataFrame:
-        """Dedup'd (src, dst) LONG edges (S2 link stream analog)."""
+        """Dedup'd (src, dst) LONG edges (S2 link stream analog). From
+        the kept edge table when there is one: the distinct URL pairs,
+        both ends hashed with ``xxhash64_np`` (Spark's ``xxhash64``)."""
+        edges = kept_table(self, "edges")
+        if edges is not None:
+            return self._id_edges_local(edges)
         e = self.edges.dropDuplicates(["src_url", "dst_url"])
         v = (
             e.select(F.col("src_url").alias("url"))
@@ -284,6 +610,20 @@ class PageDB:
             .select(url_hash_col("url").alias("id"), "url")
         )
         return edges_with_ids(e, v)
+
+    def _id_edges_local(self, edges: pa.Table) -> DataFrame:
+
+        pairs = edges.group_by(["src_url", "dst_url"]).aggregate([]).drop_null()
+        m = pairs.num_rows
+        urls = pc.dictionary_encode(
+            pa.concat_arrays([pairs[c].combine_chunks() for c in pairs.column_names])
+        )
+        data, offsets = utf8_buffers(urls.dictionary)
+        ids = xxhash64_np(data, offsets[:-1], np.diff(offsets))[urls.indices.to_numpy()]
+        schema = pa.schema(
+            [pa.field("src", pa.int64(), False), pa.field("dst", pa.int64(), False)]
+        )
+        return self.spark.createDataFrame(pa.table([ids[:m], ids[m:]], schema=schema))
 
     # ---- S12/S13: path + neighborhood scans ------------------------------
 

@@ -182,15 +182,14 @@ def hits(
     DataFrame (id, hub, auth)."""
     spark = edges.sparkSession
     with SuperstepLoop(spark, "hits", checkpoint, checkpoint_interval) as loop:
-        # cached by the fetch: above the bound the edge caches read these
-        # rows instead of recomputing the input
+        # both edge caches read the input from here, not recompute it
         edges = loop.cache(edges.select("src", "dst"), supersteps=0)
-        cols = loop.fetch_local(edges, scores, vertices)
-        if cols is not None:
-            return _hits_local(loop, cols, precision, max_iters, resume, strict)
         # two cached copies, each pre-partitioned AND pre-sorted on its
         # join key (hub messages join on dst, authority messages on src)
         edges_by_src = loop.edge_cache(edges, "src")
+        cols = loop.fetch_local(edges_by_src, scores, vertices)
+        if cols is not None:
+            return _hits_local(loop, cols, precision, max_iters, resume, strict)
         edges_by_dst = loop.edge_cache(edges, "dst")
         # no explicit repartition: hash-partitioned by id already
         # (distinct / equi-join output)

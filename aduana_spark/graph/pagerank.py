@@ -253,15 +253,12 @@ def pagerank(
     with SuperstepLoop(
         spark, "pagerank", checkpoint, checkpoint_interval, on_superstep
     ) as loop:
-        # cached by the fetch: above the bound the edge caches read these
-        # rows instead of recomputing the input
-        edges = loop.cache(edges.select("src", "dst"), supersteps=0)
+        edges = loop.edge_cache(edges, "src")
         cols = loop.fetch_local(edges, scores, vertices)
         if cols is not None:
             return _pagerank_local(
                 loop, cols, damping, precision, max_iters, resume, strict
             )
-        edges = loop.edge_cache(edges, "src")
         vstate, total_score = _vertex_state(edges, scores, vertices)
         # no explicit repartition: every branch of _vertex_state ends
         # hash-partitioned by id already (groupBy / equi-join output)

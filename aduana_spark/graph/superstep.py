@@ -27,9 +27,10 @@ is a sum-aggregate over a sparse join (*Aggregate Queries on Sparse
 Databases*, PODS 2020), and on a few thousand edges its ~1 s is job
 and stage overhead, not data (SparkTune, EDBT 2019). So when every
 input has at most :data:`LOCAL_MAX_EDGES` rows,
-:meth:`SuperstepLoop.fetch_local` brings it to the driver in one
-bounded Arrow fetch and PageRank and HITS run each superstep as
-``np.bincount`` over dense vertex indices (executor ``local``).
+:meth:`SuperstepLoop.fetch_local` counts it on the executors and
+brings it to the driver in one Arrow fetch, and PageRank and HITS run
+each superstep as ``np.bincount`` over dense vertex indices (executor
+``local``).
 Larger inputs run the distributed loop (executor ``spark``). Both
 executors share the bookkeeping above, the checkpoint shard format
 included, so a run checkpointed on one resumes on the other.
@@ -116,6 +117,13 @@ def _derived_superstep_partitions(spark: SparkSession, n_rows: int) -> int | Non
         return None
     derived = max(1, -(-int(n_rows) // SUPERSTEP_ROWS_PER_TASK))
     return derived if derived < session_parts else None
+
+
+def row_count(df: DataFrame) -> int:
+    """Exact row count of ``df`` in one job with no shuffle (count()
+    adds an aggregation exchange, a second job under AQE). No row
+    leaves the executors, and a persisted ``df`` is filled by it."""
+    return df._jdf.queryExecution().toRdd().count()
 
 
 def dense_index(ids: np.ndarray, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -218,7 +226,7 @@ class SuperstepLoop:
             .repartition(F.col(key))
             .sortWithinPartitions(key)
         )
-        self.n_edges = cached.count()
+        self.n_edges = row_count(cached)
         return cached
 
     def fetch_local(
@@ -227,26 +235,32 @@ class SuperstepLoop:
         scores: DataFrame | None = None,
         vertices: DataFrame | None = None,
     ) -> list[np.ndarray | None] | None:
-        """Pick the executor. Fetches ``edges`` (src, dst), then
-        ``scores`` (id, score) and ``vertices`` (id) when given, each
-        with one Arrow collect of at most ``LOCAL_MAX_EDGES + 1`` rows.
-        When every input fits the bound the loop turns ``local`` and
-        this returns the columns as numpy arrays: src, dst, score ids,
-        score values (nulls as 0.0), vertex ids; absent inputs give
-        None. Otherwise it returns None and the loop stays on Spark, so
-        a graph above the bound pays one bounded edge fetch."""
+        """Pick the executor. ``edges`` is the loop's :meth:`edge_cache`,
+        so ``n_edges`` already counts it; ``scores`` (id, score) and
+        ``vertices`` (id), when given, are each cached for the loop and
+        counted with :func:`row_count`. When every input has at most
+        ``LOCAL_MAX_EDGES`` rows the loop turns ``local`` and this
+        fetches each from its cache with one Arrow collect and returns
+        the columns as numpy arrays: src, dst, score ids, score values
+        (nulls as 0.0), vertex ids; absent inputs give None. Otherwise
+        it returns None and the loop stays on Spark: no row has left
+        the executors, and the edge cache is the one the Spark loop
+        reads."""
+        if self.n_edges > LOCAL_MAX_EDGES:
+            return None
+        inputs = [(edges, ("src", "dst"))]
+        for df, names in ((scores, ("id", "score")), (vertices, ("id",))):
+            if df is not None:
+                df = self.cache(df.select(*names), supersteps=0)
+                if row_count(df) > LOCAL_MAX_EDGES:
+                    return None
+            inputs.append((df, names))
         cols: list[np.ndarray | None] = []
-        for df, names in (
-            (edges, ("src", "dst")),
-            (scores, ("id", "score")),
-            (vertices, ("id",)),
-        ):
+        for df, names in inputs:
             if df is None:
                 cols += [None] * len(names)
                 continue
-            table = df.select(*names).limit(LOCAL_MAX_EDGES + 1).toArrow()
-            if table.num_rows > LOCAL_MAX_EDGES:
-                return None
+            table = df.select(*names).toArrow()
             cols += [
                 table[c].cast("double").fill_null(0.0).to_numpy()
                 if c == "score"
@@ -254,7 +268,6 @@ class SuperstepLoop:
                 for c in names
             ]
         self.executor = "local"
-        self.n_edges = len(cols[0])
         return cols
 
     def narrow(self) -> None:

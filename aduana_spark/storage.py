@@ -53,10 +53,3 @@ def write_edge_table(
 
 def read_edge_table(spark: SparkSession, name: str = "edges") -> DataFrame:
     return spark.table(name)
-
-
-def write_page_info(page_info: DataFrame, path: str) -> None:
-    """Page-state snapshot; on Iceberg this is a MERGE target with
-    snapshot isolation replacing the reference's single-writer LMDB
-    transactions (txn_manager.h:96-118)."""
-    page_info.write.mode("overwrite").parquet(path)

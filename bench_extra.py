@@ -10,6 +10,12 @@ captures and per-superstep breakdowns, for explaining a bench.py row.
   (the committed plan evidence under ``plans/r06/``).
 - ``superstep <algo>``: per-superstep wall breakdown for the
   iterative algorithms (pagerank / hits / cc) on the bench graph.
+- ``commit [pages ...]``: the commit crossover. For each store of
+  ``pages`` crawled pages with 9 new outlinks each (page_info 10×,
+  edges 9× pages), five 10-page ``BFSchedulerView.add`` commits on
+  each executor (``page_info.LOCAL_MAX_ROWS`` patched), printing
+  per-commit walls and the driver's peak RSS so far; the first local
+  commit fetches the store.
 
 Usage: python bench_extra.py queries minhash_lsh_10x media_decode_2k
 """
@@ -20,6 +26,7 @@ import contextlib
 import io
 import json
 import os
+import resource
 import sys
 import time
 
@@ -227,6 +234,57 @@ def cmd_superstep(algo: str) -> None:
     spark.stop()
 
 
+# ---------------------------------------------------------------- commit
+def _crawl_batch(spark, first: int, pages: int):
+    """``pages`` crawled pages from page ``first`` on, each linking 9
+    pages that nothing else links."""
+    return spark.range(first, first + pages).select(
+        F.col("id").alias("crawl_order"),
+        F.format_string("https://d%d.org/p%d", F.col("id") % 1000, F.col("id")).alias("url"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(9)),
+            lambda k: F.struct(
+                F.format_string("https://d%d.org/p%d/l%d", F.col("id") % 1000,
+                                F.col("id"), k).alias("url"),
+                (k / 10.0).alias("score"),
+            ),
+        ).alias("links"),
+        F.lit(0.5).alias("page_score"),
+        F.unhex(F.lit("ab")).alias("content_hash"),
+        F.lit("2026-01-01").cast("timestamp").alias("ts"),
+    )
+
+
+def cmd_commit(sizes: list[int], commits: int = 5) -> None:
+    from aduana_spark.frontier import page_info
+    from aduana_spark.frontier.bf_scheduler import BFSchedulerView
+
+    spark = _spark()
+    for pages in sizes:
+        for executor, bound in (("spark", -1), ("local", 10**9)):
+            page_info.LOCAL_MAX_ROWS = -1
+            view = BFSchedulerView(spark)
+            view.add(_crawl_batch(spark, 0, pages))
+            page_info.LOCAL_MAX_ROWS = bound
+            walls = []
+            for i in range(commits):
+                batch = _crawl_batch(spark, pages + 10 * i, 10).persist()
+                batch.count()
+                t0 = time.time()
+                view.add(batch)
+                walls.append(round(time.time() - t0, 3))
+                assert view.page_db.last_commit.executor == executor
+                batch.unpersist()
+            rows = view.page_db.last_commit.page_info_rows
+            print(json.dumps({
+                "pages": pages, "page_info_rows": rows, "executor": executor,
+                "walls": walls,
+                "driver_max_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss >> 10,
+            }), flush=True)
+            del view
+    spark.stop()
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
@@ -236,5 +294,7 @@ if __name__ == "__main__":
         cmd_plans(sys.argv[2], sys.argv[3:])
     elif cmd == "superstep":
         cmd_superstep(sys.argv[2])
+    elif cmd == "commit":
+        cmd_commit([int(a) for a in sys.argv[2:]] or [1_000, 10_000, 100_000])
     else:
         raise SystemExit(f"unknown command {cmd}")

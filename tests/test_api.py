@@ -113,3 +113,12 @@ def test_bf_scheduler_rekey_with_scorer(spark):
     # pagerank order: p3 and p4 have 2 in-links, p5 has 1 → p5 last;
     # p3/p4 tie broken by hash
     assert set(got) == {"p3", "p4", "p5"} and got[2] == "p5"
+
+
+@pytest.mark.parametrize("case", [test_info_and_links_dump], ids=["info_and_links_dump"])
+def test_api_distributed(spark, monkeypatch, case):
+    """The same cases with every commit on the Spark executor."""
+    from aduana_spark.frontier import page_info
+
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", -1)
+    case(spark)

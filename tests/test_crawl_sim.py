@@ -76,3 +76,11 @@ def test_polite_crawl_through_backend(spark):
     # hot.org temp = 2 > soft 1.0 → p2 deferred; cold.org admitted at
     # the soft limit, p2 re-admitted on the escalation ladder (step 2)
     assert backend.get_next_requests(2) == ["https://cold.org/x", "https://hot.org/p2"]
+
+
+def test_polite_crawl_distributed(spark, monkeypatch):
+    """test_polite_crawl_through_backend with every commit on Spark."""
+    from aduana_spark.frontier import page_info
+
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", -1)
+    test_polite_crawl_through_backend(spark)

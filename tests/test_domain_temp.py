@@ -198,3 +198,11 @@ def test_stateful_streaming_domain_temperature(spark, tmp_path):
     assert got["a.org"] == pytest.approx(replay([t0, t0 + 30, t0 + 60]))
     assert got["a.org"] == pytest.approx((1 * 0.5 + 1) * 0.5 + 1)  # 1.75
     assert got["b.org"] == pytest.approx(1.0)  # fully decayed, reheated
+
+
+def test_streaming_ingest_distributed(spark, tmp_path, monkeypatch):
+    """test_streaming_ingest with every micro-batch committed on Spark."""
+    from aduana_spark.frontier import page_info
+
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", -1)
+    test_streaming_ingest(spark, tmp_path)

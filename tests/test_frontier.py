@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from aduana_spark.frontier import page_info
 from aduana_spark.frontier.bf_scheduler import BFSchedulerView, frontier_topk
 from aduana_spark.frontier.freq_scheduler import (
     FreqRule,
@@ -925,3 +926,192 @@ def test_freq_requests_collect_bounded_by_schedule(spark):
     assert got == ["https://bulk.org/p11", "https://bulk.org/p7"]
     # second round: p7 re-inserted at 1/0.5 = 2.0 < p11's 1/0.25 = 4.0
     assert fs.requests(1, now=last.timestamp() + 2000) == ["https://bulk.org/p7"]
+
+
+# ------------------------------------------- commit executors (local/spark)
+
+#: LOCAL_MAX_ROWS that puts every commit on each executor
+BOUNDS = {"local": page_info.LOCAL_MAX_ROWS, "spark": -1}
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_bf_scheduler_pop_order,
+        test_bf_scheduler_restart_stability,
+        test_one_ingest_path,
+        test_backend_group_commit_matches_one_at_a_time,
+        test_backend_round_matches_sequential_gets,
+        test_bf_requests_escalation_politeness,
+    ],
+    ids=[
+        "pop_order",
+        "restart_stability",
+        "one_ingest_path",
+        "group_commit",
+        "round_matches_sequential_gets",
+        "escalation_politeness",
+    ],
+)
+def test_frontier_distributed(spark, monkeypatch, case):
+    """The same cases with every commit on the Spark executor."""
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", -1)
+    case(spark)
+
+
+def test_ingest_local_matches_merge_semantics(spark):
+    """test_page_info_merge_semantics's batches through the driver
+    MERGE give the Spark MERGE's page-info and schedule rows."""
+    later = TS + dt.timedelta(seconds=10)
+    batches = [
+        _batch(spark, 0, "www.yahoo.com", [("www.google.com", 1.1)], score=0.5,
+               chash=b"\x10\x00"),
+        _batch(spark, 1, "www.bing.com", [], score=0.2, chash=b"\x20\x00"),
+        _batch(spark, 2, "www.bing.com", [], score=0.2, chash=b"\x30\x00", ts=later),
+    ]
+    pi = empty_page_info(spark)
+    table = page_info.arrow_schema(pi).empty_table()
+    for b in batches:
+        pi, sched = ingest_crawl_batch(pi, b)
+        table, local_sched = page_info._ingest_local(table, b.toArrow())
+        assert _rows(spark.createDataFrame(local_sched)) == _rows(sched)
+    assert _rows(spark.createDataFrame(table)) == _rows(pi)
+    rows = {r["url"]: r for r in table.to_pylist()}
+    assert (rows["www.bing.com"]["n_crawls"], rows["www.bing.com"]["n_changes"]) == (2, 1)
+    assert (rows["www.google.com"]["linked_from"], rows["www.google.com"]["depth"]) == (
+        "www.yahoo.com", 1,
+    )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _random_commits(seed, n_commits=5):
+    """Seeded crawl batches: recrawls with a changed, equal or null
+    hash; links to known, unknown and crawled-in-batch pages, repeated
+    links and empty lists; seed pages and non-http URLs."""
+    import random
+
+    rng = random.Random(seed)
+    pool = (
+        [f"https://d{d}.org/p{i}" for d in range(3) for i in range(6)]
+        + ["_seed_0", "_seed_1", "ftp://files.org/a", "mailto:x@y.org", "relative/page"]
+    )
+    hashes = [b"a", b"b", None]
+    last: dict = {}  # url -> hash of its last crawl
+    order = 0
+    for c in range(n_commits):
+        crawled = rng.sample(pool, rng.randint(1, 6))
+        # recrawl two earlier pages: one with a changed hash, one equal
+        crawled += rng.sample(sorted(set(last) - set(crawled)), min(2, len(last)))
+        rows = []
+        for i, url in enumerate(crawled):
+            if url in last and i >= len(crawled) - 2:
+                h = hashes[(hashes.index(last[url]) + i % 2) % 3]
+            else:
+                h = rng.choice(hashes)
+            last[url] = h
+            k = rng.choice([0, 0, 1, 3, 6])
+            links = [(rng.choice(pool + crawled), rng.choice([0.1, 0.5, 0.9, None]))
+                     for _ in range(k)]
+            if links and rng.random() < 0.3:
+                links.append(links[0])  # a repeated link
+            rows.append((
+                order, url, links, rng.choice([0.0, 0.3, None]), h,
+                TS + dt.timedelta(seconds=rng.randint(0, 3 * c + 3)),
+            ))
+            order += rng.randint(1, 3)
+        yield rows
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_commit_executors_agree(spark, monkeypatch, seed):
+    """Seeded multi-commit crawls through BFSchedulerView on the driver
+    executor, on Spark, and alternating between them per commit: equal
+    page_info, edges, schedule, crawl_log and id_edges rows and
+    schemas, and no cached batch left behind."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    views = {run: BFSchedulerView(spark) for run in ("local", "spark", "mixed")}
+    for c, rows in enumerate(_random_commits(seed)):
+        batch = spark.createDataFrame(rows, schema=PageDB.BATCH_SCHEMA)
+        for run, view in views.items():
+            ex = run if run != "mixed" else ("local", "spark")[c % 2]
+            monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", BOUNDS[ex])
+            view.add(batch)
+            assert view.page_db.last_commit.executor == ex
+            assert view.page_db.last_commit.pages == len(rows)
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", BOUNDS["local"])
+    assert cache.isEmpty()
+
+    def tables(view):
+        return {
+            "page_info": view.page_db.page_info,
+            "edges": view.page_db.edges,
+            "schedule": view.schedule,
+            "crawl_log": view.crawl_log,
+            "id_edges": view.page_db.id_edges(),
+        }
+
+    want = tables(views["spark"])
+    for run in ("local", "mixed"):
+        for name, df in tables(views[run]).items():
+            assert df.schema == want[name].schema, (run, name)
+            assert _rows(df) == _rows(want[name]), (run, name)
+    assert views["local"].page_db._known["edges"][1] is not None  # id_edges ran local
+    info = {r["url"]: r for r in want["page_info"].collect()}
+    recrawled = [r for r in info.values() if r["n_crawls"] >= 2]
+    assert any(r["n_changes"] for r in recrawled)
+    assert any(r["n_changes"] < r["n_crawls"] - 1 for r in recrawled)
+
+
+@pytest.mark.parametrize(
+    "rows, then",
+    [
+        # the Spark MERGE gives "a" two page-info rows, so the store
+        # stays on Spark
+        ([(0, "a", [("b", 0.1)]), (1, "a", [("c", 0.2)])], "spark"),
+        ([(0, "a", [("b", 0.1)]), (0, "b", [("c", 0.2)])], "local"),
+        ([(0, None, [("b", 0.1)]), (1, "a", [])], "local"),
+        ([(0, "a", [(None, 0.1), ("b", 0.2)])], "local"),
+    ],
+    ids=["repeated_url", "repeated_crawl_order", "null_url", "null_link_url"],
+)
+def test_commit_declines_to_spark(spark, rows, then):
+    """A batch the driver MERGE does not take runs the Spark path, on
+    a store within the bound, and leaves no cached batch. The next
+    commit fetches the Spark state and runs on the driver if it may."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    batch = spark.createDataFrame(
+        [(o, u, links, 0.0, b"h", TS) for o, u, links in rows],
+        schema=PageDB.BATCH_SCHEMA,
+    )
+    view = BFSchedulerView(spark)
+    view.add(batch)
+    assert view.page_db.last_commit.executor == "spark"
+    assert view.page_db.last_commit.pages == len(rows)
+    assert cache.isEmpty()
+    view.add(_batch(spark, 5, "z", [("a", 0.3)]))
+    assert view.page_db.last_commit.executor == then
+
+
+@pytest.mark.parametrize("executor", ["local", "spark"])
+def test_commit_log_line(spark, monkeypatch, caplog, executor):
+    """One INFO line per commit on aduana_spark.frontier, with the
+    fields as LogRecord attributes."""
+    import logging
+
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", BOUNDS[executor])
+    db = PageDB(spark)
+    db.add_batch(_batch(spark, 0, "s", [("a", 0.5), ("b", 0.4)]))
+    with caplog.at_level(logging.INFO, logger="aduana_spark.frontier"):
+        db.add_batch(_batch(spark, 1, "a", [("b", 0.9), ("c", 0.3), ("c", 0.1)]))
+    recs = [r for r in caplog.records if r.name == "aduana_spark.frontier"]
+    assert len(recs) == 1
+    r = recs[0]
+    assert r.getMessage().startswith(f"commit executor={executor} pages=1 ")
+    assert (r.executor, r.pages, r.page_info_rows) == (executor, 1, 4)
+    assert r.links == (3 if executor == "local" else None)
+    assert r.wall_sec > 0
