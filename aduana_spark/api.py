@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aduana_spark.frontier.bf_scheduler import BFSchedulerView
-from aduana_spark.frontier.page_info import CrawledPage, PageDB
+from aduana_spark.frontier.page_info import CrawledPage, PageDB, scheduled
 from aduana_spark.functions.urls import url_hash_col
 from aduana_spark.graph.hits import hits as hits_job
 from aduana_spark.graph.pagerank import pagerank as pagerank_job
@@ -120,9 +120,9 @@ def scorer_from_settings(settings: dict, page_db: PageDB):
 class BFScheduler(BFSchedulerView):
     """Mirror of aduana.BFScheduler (aduana/__init__.py:365-465):
     best-first frontier with optional scorer re-keying. ``requests``
-    pops from the view; after ``scorer.update()`` the schedule is
-    re-keyed from the converged score table (the reference's
-    update-thread batches, bf_scheduler.c:401-487, become one join).
+    pops from the view; ``update_scores`` re-keys it with the
+    converged score table (the reference's update-thread batches,
+    bf_scheduler.c:401-487, become one overlay join).
     Politeness (``set_crawl_rate`` + geometric escalation) and
     ``set_update_interval`` come from the view base class."""
 
@@ -135,6 +135,8 @@ class BFScheduler(BFSchedulerView):
     ):
         super().__init__(spark, max_depth=max_depth, page_db=page_db)
         self.scorer = scorer
+        #: (url, score) re-key overlay written by update_scores
+        self.rekeyed: DataFrame | None = None
         self._pages_since_update = 0
         # cumulative pages-added snapshot at the last score update —
         # the reference's n_pages_old (bf_scheduler.c:539-548 keeps
@@ -178,6 +180,12 @@ class BFScheduler(BFSchedulerView):
             sch.set_update_interval(update_interval)
         return sch
 
+    @property
+    def schedule(self) -> DataFrame:
+        """(url, score) of every page not crawled yet, at the score of
+        the last re-key for the pages it covered."""
+        return scheduled(self.page_db.page_info, self.rekeyed)
+
     def set_max_crawl_depth(self, d: int) -> None:
         self.max_depth = d or None
 
@@ -218,19 +226,15 @@ class BFScheduler(BFSchedulerView):
         return True
 
     def update_scores(self) -> None:
-        """U2: re-key schedule entries from the scorer's converged
-        score table (delete+insert per entry in the reference; one
-        join here)."""
+        """U2: re-key the schedule from the scorer's converged score
+        table (delete+insert per entry in the reference). The scores
+        become the overlay of the schedule view: each page known now
+        is served at its scorer score, and pages discovered later at
+        their link score until the next re-key."""
         if self.scorer is None:
             return
         self.scorer.update()
-        new = self.scorer.scores()
-        self.schedule = (
-            self.schedule.drop("score")
-            .join(new, "url", "left")
-            .select("url", F.coalesce("score", F.lit(0.0)).alias("score"))
-            .localCheckpoint()
-        )
+        self.rekeyed = self.scorer.scores().localCheckpoint()
 
 
 @dataclass
@@ -262,7 +266,7 @@ class Backend:
     the page to an in-memory buffer: returning means "accepted into
     the commit buffer", not "merged". ``get_next_requests`` and
     ``flush`` commit the whole buffer as one crawl batch (one MERGE
-    and one round of checkpoints) before anything reads page state,
+    and its log appends) before anything reads page state,
     so page state becomes visible at the next GET or ``flush()``.
     Page state, schedule and pop order equal those of ingesting each
     page alone: the buffer is committed early when a page repeats a

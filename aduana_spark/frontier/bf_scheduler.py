@@ -8,37 +8,29 @@ per-domain politeness rate limiting and geometric escalation
 (bf_scheduler.c:782-804).
 
 Spark-first shape: the schedule is **not** a mutable queue but a
-deterministic view over persisted tables::
+deterministic view over persisted tables (SURVEY §1.1)::
 
-    SELECT url FROM schedule s
+    SELECT url, score FROM page_info
     LEFT ANTI JOIN served USING (url)
-    JOIN page_info USING (url)
     WHERE n_crawls = 0 [AND depth <= max_depth] [AND domain rate ok]
     ORDER BY score DESC, xxhash64(url) ASC LIMIT k
 
-At scale this compiles to TakeOrderedAndProject after a cheap
-anti-join — no global sort materializes. Served/crawled tracking is an
-append-only log; restart stability (test_bf_scheduler.c:248-314) is
-free because the view is a pure function of the persisted tables.
-``page_info`` is the scheduler's ``PageDB`` (frontier.page_info), and
-``add`` ingests through ``PageDB.add_batch``.
+with the score re-keyed where ``api.BFScheduler.update_scores`` wrote
+one (``page_info.scheduled``). At scale this compiles to
+TakeOrderedAndProject after a cheap anti-join — no global sort
+materializes. Served tracking is an append-only log; restart
+stability (test_bf_scheduler.c:248-314) is free because the view is a
+pure function of the persisted tables. ``page_info`` and the crawl log
+are the scheduler's ``PageDB`` (frontier.page_info), and ``add``
+ingests through ``PageDB.add_batch``.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.page_info import (
-    PageDB,
-    arrow_schema,
-    cached_batch,
-    keep,
-    keep_table,
-    known_table,
-    within_bound,
-)
+from aduana_spark.frontier.page_info import PageDB, scheduled
 from aduana_spark.functions.urls import domain_col
 
 
@@ -110,23 +102,14 @@ def significant_change(old_score, new_score, threshold: float = 0.1):
 class BFSchedulerView:
     """Driver for sequential ingest/request cycles over the view —
     the ``BFScheduler`` API (aduana/__init__.py:365-465) minus the
-    mutable store. Small-state (fixture-scale) DataFrames are kept
-    persisted; at production scale each of these tables is an Iceberg
-    table and ingest is a MERGE job.
+    mutable store. At production scale each table is an Iceberg table
+    and ingest is a MERGE job.
 
-    Page state lives in ``page_db``: the PageDB passed in (shared with
-    the Frontera ``Backend`` or a restarted view, so each batch is
-    ingested exactly once) or a new one. The view itself keeps only
-    the schedule, the served log and the crawl log, (url, ts) per
-    crawled page.
-
-    ``add`` follows the executor of its page-info commit. After a
-    commit on the driver, the schedule and the crawl log of up to
-    ``LOCAL_MAX_ROWS`` rows each are appended as Arrow tables that the
-    view keeps behind its DataFrames, like ``PageDB`` does. Otherwise
-    they are unioned and checkpointed on Spark. A DataFrame assigned
-    from outside (a restart, a score re-key) costs the next local
-    commit one count and one fetch.
+    Crawl state lives in ``page_db``: the PageDB passed in (shared
+    with the Frontera ``Backend`` or a restarted view, so each batch
+    is ingested exactly once) or a new one. ``schedule`` is a
+    read-only view over its page_info, so a view over the same PageDB
+    sees the same schedule. The view itself keeps only the served log.
 
     ``set_crawl_rate(soft, hard)`` arms the politeness gate: crawled
     pages heat their domain (page_db.c:858-860) over a linear-decay
@@ -146,16 +129,6 @@ class BFSchedulerView:
         self.spark = spark
         self.max_depth = max_depth
         self.page_db = page_db if page_db is not None else PageDB(spark)
-        #: attribute -> (DataFrame, its Arrow table or None, rows or None)
-        self._known: dict = {}
-        self._schemas = {}
-        for name, ddl in (
-            ("schedule", "url STRING, score DOUBLE"),
-            ("crawl_log", "url STRING, ts TIMESTAMP"),
-        ):
-            df = spark.createDataFrame([], ddl)
-            self._schemas[name] = arrow_schema(df)
-            keep(self, name, df, self._schemas[name].empty_table())
         self.served = spark.createDataFrame([], "url STRING")
         self.soft_rate: float | None = None
         self.hard_rate: float | None = None
@@ -184,30 +157,19 @@ class BFSchedulerView:
         api.BFScheduler facade's maybe_update)."""
         self.update_interval = seconds
 
+    @property
+    def schedule(self) -> DataFrame:
+        """(url, score) of every page not crawled yet."""
+        return scheduled(self.page_db.page_info)
+
     def add(self, batch: DataFrame) -> None:
         """Ingest one crawl batch (bf_scheduler_add,
-        bf_scheduler.c:157-246): page_db merge + schedule insertions
-        for newly discovered crawlable pages (excluding seeds from
-        nothing — the crawled page itself has n_crawls>0 and never
-        enters). Crawled pages also heat their domain's temperature
+        bf_scheduler.c:157-246) through ``PageDB.add_batch``: newly
+        discovered pages enter the schedule view (the crawled page
+        itself has n_crawls>0 and never does), and crawled pages heat
+        their domain's temperature through the crawl log
         (page_db.c:858-860)."""
-        with cached_batch(batch):
-            new_sched = self.page_db.add_batch(batch)
-            commit = self.page_db.last_commit
-            logs = ("schedule", commit.schedule), ("crawl_log", commit.crawls)
-            if commit.executor == "local" and within_bound(self, "schedule", "crawl_log"):
-                for name, rows in logs:
-                    table = known_table(self, name, self._schemas[name])
-                    keep_table(
-                        self, name, pa.concat_tables([table, rows.cast(table.schema)])
-                    )
-                return
-            keep(self, "schedule", self.schedule.unionByName(
-                new_sched.select("url", "score")
-            ).localCheckpoint())
-            keep(self, "crawl_log", self.crawl_log.unionByName(
-                batch.select("url", "ts")
-            ).localCheckpoint())
+        self.page_db.add_batch(batch)
 
     def _escalation_limits(self) -> list[float | None]:
         """The reference's request loop: one pass at the soft limit,
@@ -234,10 +196,10 @@ class BFSchedulerView:
         domain_rate = None
         if limits != [None]:
             if now is None:
-                last = self.crawl_log.agg(F.max("ts")).first()[0]
+                last = self.page_db.crawl_log.agg(F.max("ts")).first()[0]
                 now = last.timestamp() if last is not None else 0.0
             domain_rate = domain_temperature(
-                self.crawl_log.select(domain_col("url"), "ts"),
+                self.page_db.crawl_log.select(domain_col("url"), "ts"),
                 now=now,
                 window_sec=self.temp_window,
                 mode="linear",

@@ -15,31 +15,33 @@ Per crawled page in a batch:
   test_bf_scheduler.c:60-79 marks them "n: not added"),
 - the crawled page's own depth when first seen via crawl (a seed) is 0.
 
-The function also returns the batch's *newly created crawlable* pages
-— exactly the rows ``bf_scheduler_add`` inserts into the schedule
-(bf_scheduler.c:203-228), with score = link score (scorer.add returns
-0.0 for both scorers; when no scorer is attached the content score is
-used, bf_scheduler.c:210-213).
-
 Within a batch, first-writer-wins is resolved by ``crawl_order`` then
 link position — matching sequential ingest of the same batch.
 
-``PageDB`` is the one page-state store: the schedulers, the Frontera
-``Backend`` and streaming ingest all hold one, and ``PageDB.add_batch``
-is the only code that applies a crawl batch to it (MERGE and edge-log
-append).
+The best-first schedule is not stored: :func:`scheduled` derives it
+from page_info. The pages with ``n_crawls = 0`` are exactly the rows
+``bf_scheduler_add`` inserts (bf_scheduler.c:203-228) that are not
+crawled yet, at score = link score (scorer.add returns 0.0 for both
+scorers; when no scorer is attached the content score is used,
+bf_scheduler.c:210-213), unless a score re-key overrides it.
 
-The MERGE has two executors, picked once per commit. A crawl-sized
-commit pays Spark's per-job cost many times over for a few thousand
-rows (SparkTune, EDBT 2019), so when the store's page-info and edge
-rows plus the batch's rows are at most :data:`LOCAL_MAX_ROWS`, the
-batch crosses to the driver once as Arrow and :func:`_ingest_local`
-runs the MERGE in pyarrow/numpy (executor ``local``). ``PageDB`` keeps
-the Arrow table behind each DataFrame it creates, so the next commit
-neither re-fetches nor checkpoints its state. Larger stores, and
-batches that repeat a ``url`` or a ``crawl_order`` or hold a null URL,
-run :func:`ingest_crawl_batch` on Spark (executor ``spark``). Each
-commit logs one INFO line on ``aduana_spark.frontier``:
+``PageDB`` is the one crawl-state store: page_info, the edge log and
+the crawl log, (url, ts) per crawled page, which heats domain
+temperature (page_db.c:858-860). The schedulers, the Frontera
+``Backend`` and streaming ingest all hold one, and ``PageDB.add_batch``
+is the only code that applies a crawl batch to it.
+
+A commit has two executors, picked once for all three tables. A
+crawl-sized commit pays Spark's per-job cost many times over for a few
+thousand rows (SparkTune, EDBT 2019), so when the store's rows plus
+the batch's rows are at most :data:`LOCAL_MAX_ROWS`, the batch crosses
+to the driver once as Arrow and :func:`_ingest_local` runs the MERGE
+in pyarrow/numpy (executor ``local``). ``PageDB`` keeps the Arrow
+table behind each DataFrame it creates, so the next commit neither
+re-fetches nor checkpoints its state. Larger stores, and batches that
+repeat a ``url`` or a ``crawl_order`` or hold a null URL, run
+:func:`ingest_crawl_batch` on Spark (executor ``spark``). Each commit
+logs one INFO line on ``aduana_spark.frontier``:
 ``commit executor=… pages=… links=… page_info_rows=… wall_sec=…``.
 """
 
@@ -65,10 +67,10 @@ from aduana_spark.graph.superstep import row_count
 
 log = logging.getLogger("aduana_spark.frontier")
 
-#: a commit runs on the driver when the store's page-info and edge rows
-#: plus the batch's rows are at most this many; set from the crossover
-#: of a 10-page commit on both executors and the driver heap (ROADMAP
-#: item 3)
+#: a commit runs on the driver when the store's page-info, edge and
+#: crawl-log rows plus the batch's rows are at most this many; set from
+#: the crossover of a 10-page commit on both executors and the driver
+#: heap (ROADMAP item 3)
 LOCAL_MAX_ROWS = 1_000_000
 
 PAGE_INFO_SCHEMA = (
@@ -108,17 +110,13 @@ def cached_batch(batch: DataFrame):
         batch.unpersist()
 
 
-def ingest_crawl_batch(
-    page_info: DataFrame, batch: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Apply one crawl batch; returns (new_page_info, new_schedule_rows).
+def ingest_crawl_batch(page_info: DataFrame, batch: DataFrame) -> DataFrame:
+    """Apply one crawl batch; returns the new page_info.
 
     ``batch`` columns: crawl_order BIGINT, url STRING,
     links ARRAY<STRUCT<url STRING, score DOUBLE>>, page_score DOUBLE,
-    content_hash BINARY, ts TIMESTAMP.
-    ``new_schedule_rows``: (url, score) for newly created uncrawled
-    pages (candidate schedule insertions). Both results are lazy and
-    scan ``batch`` several times: materialize them inside
+    content_hash BINARY, ts TIMESTAMP. The result is lazy and scans
+    ``batch`` several times: materialize it inside
     ``cached_batch(batch)``.
     """
     crawled = batch.select(
@@ -198,10 +196,21 @@ def ingest_crawl_batch(
     untouched = page_info.join(
         crawled.select("url"), "url", "left_anti"
     )
-    new_page_info = untouched.unionByName(crawled_info).unionByName(link_info)
+    return untouched.unionByName(crawled_info).unionByName(link_info)
 
-    new_schedule = link_info.select("url", "score")
-    return new_page_info, new_schedule
+
+def scheduled(page_info: DataFrame, rekeyed: DataFrame | None = None) -> DataFrame:
+    """The best-first schedule as a view: (url, score) of every page
+    in ``page_info`` with ``n_crawls = 0``. ``rekeyed`` is an optional
+    (url, score) re-key overlay (bf_scheduler_update,
+    bf_scheduler.c:401-487) whose score wins where it holds the page;
+    pages it does not hold keep their link score."""
+    todo = page_info.where(F.col("n_crawls") == 0).select("url", "score")
+    if rekeyed is None:
+        return todo
+    return todo.join(
+        rekeyed.select("url", F.col("score").alias("rekeyed")), "url", "left"
+    ).select("url", F.coalesce("rekeyed", "score").alias("score"))
 
 
 @dataclass
@@ -250,10 +259,10 @@ def _eq_null_safe(a, b):
     return pc.if_else(pc.is_null(a), pc.is_null(b), pc.fill_null(pc.equal(a, b), False))
 
 
-def _ingest_local(old: pa.Table, batch: pa.Table) -> tuple[pa.Table, pa.Table]:
+def _ingest_local(old: pa.Table, batch: pa.Table) -> pa.Table:
     """:func:`ingest_crawl_batch` on the driver, row for row: returns
-    (new_page_info, new_schedule_rows) as Arrow tables in the schemas
-    of ``old`` and of the schedule. ``batch`` must pass
+    the new page_info as an Arrow table in the schema of ``old``.
+    ``batch`` must pass
     :func:`_local_batch` and ``old`` must hold each URL once. One hash
     lookup of the batch's URLs and link targets in ``old`` drives the
     crawled-page upsert and the anti-join; first mention wins by
@@ -325,8 +334,7 @@ def _ingest_local(old: pa.Table, batch: pa.Table) -> tuple[pa.Table, pa.Table]:
         stays = np.ones(old.num_rows, bool)
         stays[crawled_at[found]] = False
         untouched = old.filter(stays)
-    new_page_info = pa.concat_tables([untouched, crawled, link_info])
-    return new_page_info, link_info.select(["url", "score"])
+    return pa.concat_tables([untouched, crawled, link_info])
 
 
 def arrow_schema(df: DataFrame) -> pa.Schema:
@@ -336,68 +344,15 @@ def arrow_schema(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
-def keep(owner, name: str, df: DataFrame, table: pa.Table | None = None) -> None:
-    """Set ``owner.<name>`` to ``df``, remembering the Arrow table it
-    was created from, if any. ``owner`` has ``spark`` and a ``_known``
-    dict; what it remembers holds only while the attribute is that very
-    DataFrame, so one assigned from outside is read afresh."""
-    setattr(owner, name, df)
-    owner._known[name] = (df, table, table.num_rows if table is not None else None)
-
-
-def keep_table(owner, name: str, table: pa.Table) -> None:
-    """:func:`keep` of a DataFrame created from ``table``, whose chunks
-    are combined first: each chunk becomes a partition."""
-    if table.column(0).num_chunks > 1:
-        table = table.combine_chunks()
-    keep(owner, name, owner.spark.createDataFrame(table), table)
-
-
-def known_rows(owner, name: str) -> int:
-    """Row count of ``owner.<name>``: remembered, or counted once (one
-    job, no row leaves the executors)."""
-    df, table, rows = owner._known.get(name, (None, None, None))
-    if df is not getattr(owner, name) or rows is None:
-        df = getattr(owner, name)
-        rows = row_count(df)
-        owner._known[name] = (df, None, rows)
-    return rows
-
-
-def within_bound(owner, *names: str) -> bool:
-    """Whether each of these attributes has at most LOCAL_MAX_ROWS rows."""
-    return all(known_rows(owner, name) <= LOCAL_MAX_ROWS for name in names)
-
-
-def kept_table(owner, name: str) -> pa.Table | None:
-    """The Arrow table behind ``owner.<name>``, if the owner created it."""
-    df, table, _ = owner._known.get(name, (None, None, None))
-    return table if df is getattr(owner, name) else None
-
-
-def known_table(owner, name: str, schema: pa.Schema) -> pa.Table:
-    """Rows of ``owner.<name>`` as Arrow in ``schema``: the kept table,
-    or one fetch that is then kept."""
-    table = kept_table(owner, name)
-    if table is None:
-        df = getattr(owner, name)
-        table = df.select(*schema.names).toArrow().cast(schema)
-        keep(owner, name, df, table)
-    return table
-
-
 @dataclass
 class Commit:
-    """What one ``PageDB.add_batch`` did. ``schedule`` and ``crawls``
-    are Arrow tables on the local executor, for a scheduler sharing the
-    store; ``links`` is not counted on Spark."""
+    """What one ``PageDB.add_batch`` did; ``links`` is not counted on
+    Spark."""
 
     executor: str
     pages: int
     page_info_rows: int
     links: int | None = None
-    schedule: pa.Table | None = None
-    crawls: pa.Table | None = None
 
 
 def crawl_rate_col() -> F.Column:
@@ -422,15 +377,16 @@ class CrawledPage:
 
 
 class PageDB:
-    """Mirror of aduana.PageDB (aduana/__init__.py:159-232): page-state
+    """Mirror of aduana.PageDB (aduana/__init__.py:159-232): crawl-state
     store + link graph, backed by DataFrames instead of LMDB.
 
-    ``page_info`` and ``edges`` are DataFrames on either executor. A
-    commit on the driver creates them from Arrow tables that the store
-    keeps for the next commit and for :meth:`id_edges`; a commit on
-    Spark checkpoints them (``localCheckpoint``) to truncate lineage.
-    A DataFrame assigned from outside costs the next local commit one
-    count and one fetch."""
+    ``page_info``, ``edges`` (src_url, dst_url) and ``crawl_log``
+    (url, ts) are DataFrames on either executor. A commit on the
+    driver creates them from Arrow tables that the store keeps for the
+    next commit and for :meth:`id_edges`; a commit on Spark checkpoints
+    them (``localCheckpoint``) to truncate lineage. A DataFrame
+    assigned from outside costs the next local commit one count and
+    one fetch."""
 
     # crawl_order is 64-bit: streaming ingest derives it from
     # monotonically_increasing_id(), whose upper bits carry the
@@ -444,21 +400,66 @@ class PageDB:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        #: attribute -> (DataFrame, its Arrow table or None, rows or None)
+        #: table -> (DataFrame, its Arrow table or None, rows or None)
         self._known: dict = {}
-        for name, df in (
-            ("page_info", empty_page_info(spark)),
-            ("edges", spark.createDataFrame([], "src_url STRING, dst_url STRING")),
+        self._schemas = {
+            "batch": arrow_schema(spark.createDataFrame([], self.BATCH_SCHEMA))
+        }
+        for name, ddl in (
+            ("page_info", PAGE_INFO_SCHEMA),
+            ("edges", "src_url STRING, dst_url STRING"),
+            ("crawl_log", "url STRING, ts TIMESTAMP"),
         ):
-            keep(self, name, df, arrow_schema(df).empty_table())
-        self._schemas = {n: t.schema for n, (_, t, _) in self._known.items()}
-        self._schemas["batch"] = arrow_schema(
-            spark.createDataFrame([], self.BATCH_SCHEMA)
-        )
+            df = spark.createDataFrame([], ddl)
+            self._schemas[name] = arrow_schema(df)
+            self._keep(name, df, self._schemas[name].empty_table())
         #: the last pages_batch DataFrame and the Arrow table behind it
         self._handed: tuple[DataFrame, pa.Table] | None = None
         self.last_commit: Commit | None = None
         self._order = 0
+
+    # ---- the Arrow tables behind the store's DataFrames -------------------
+
+    def _keep(self, name: str, df: DataFrame, table: pa.Table | None = None) -> None:
+        """Set table ``name`` to ``df``, remembering the Arrow table it
+        was created from, if any. What is remembered holds only while
+        the attribute is that very DataFrame."""
+        setattr(self, name, df)
+        self._known[name] = (df, table, table.num_rows if table is not None else None)
+
+    def _keep_table(self, name: str, table: pa.Table) -> None:
+        """:meth:`_keep` of a DataFrame created from ``table``, whose
+        chunks are combined first: each chunk becomes a partition."""
+        if table.column(0).num_chunks > 1:
+            table = table.combine_chunks()
+        self._keep(name, self.spark.createDataFrame(table), table)
+
+    def _rows(self, name: str) -> int:
+        """Row count of table ``name``: remembered, or counted once (one
+        job, no row leaves the executors)."""
+        df, _, rows = self._known[name]
+        if df is not getattr(self, name) or rows is None:
+            df = getattr(self, name)
+            rows = row_count(df)
+            self._known[name] = (df, None, rows)
+        return rows
+
+    def _kept(self, name: str) -> pa.Table | None:
+        """The Arrow table behind table ``name``, if the store created it."""
+        df, table, _ = self._known[name]
+        return table if df is getattr(self, name) else None
+
+    def _table(self, name: str) -> pa.Table:
+        """Rows of table ``name`` as Arrow: the kept table, or one fetch
+        that is then kept."""
+        table = self._kept(name)
+        if table is None:
+            df, schema = getattr(self, name), self._schemas[name]
+            table = df.select(*schema.names).toArrow().cast(schema)
+            self._keep(name, df, table)
+        return table
+
+    # ---- ingest -----------------------------------------------------------
 
     def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
         """Crawl batch in BATCH_SCHEMA, one row per page in list order:
@@ -496,25 +497,20 @@ class PageDB:
         """One-row crawl batch in BATCH_SCHEMA from a CrawledPage."""
         return self.pages_batch([page])
 
-    def add_batch(self, batch: DataFrame) -> DataFrame:
+    def add_batch(self, batch: DataFrame) -> None:
         """page_db_add (page_db.c:807-1016) for a whole batch: one
-        MERGE into page_info + an edge-log append, on the driver or on
-        Spark (see the module docstring). Returns the batch's newly
-        created crawlable pages (the schedule insertions) so a
-        scheduler sharing this PageDB ingests each batch exactly once;
-        ``last_commit`` says how the commit ran."""
+        MERGE into page_info and the edge-log and crawl-log appends, on
+        the driver or on Spark (see the module docstring).
+        ``last_commit`` says how the commit ran. A batch other than the
+        one ``pages_batch`` returned last is cached while the commit
+        scans it."""
         t0 = time.perf_counter()
         handed, self._handed = self._handed, None
-        with cached_batch(batch):
-            if handed is not None and handed[0] is batch:
-                table, pages = handed[1], handed[1].num_rows
-            else:
-                table, pages = None, row_count(batch)
-            commit = self._add_local(batch, table, pages)
-            if commit is None:
-                commit, new_sched = self._add_spark(batch, pages)
-            else:
-                new_sched = self.spark.createDataFrame(commit.schedule)
+        if handed is not None and handed[0] is batch:
+            commit = self._add(batch, handed[1], handed[1].num_rows)
+        else:
+            with cached_batch(batch):
+                commit = self._add(batch, None, row_count(batch))
         self.last_commit = commit
         fields = {
             "executor": commit.executor,
@@ -526,60 +522,63 @@ class PageDB:
         log.info(
             "commit %s", " ".join(f"{k}={v}" for k, v in fields.items()), extra=fields
         )
-        return new_sched
+
+    def _add(self, batch: DataFrame, table: pa.Table | None, pages: int) -> Commit:
+        return self._add_local(batch, table, pages) or self._add_spark(batch, pages)
 
     def _add_local(
         self, batch: DataFrame, table: pa.Table | None, pages: int
     ) -> Commit | None:
         """The driver MERGE, or None when the store and batch exceed
         LOCAL_MAX_ROWS or the batch or store does not qualify."""
-        budget = LOCAL_MAX_ROWS - pages
-        for name in ("page_info", "edges"):
-            if budget < 0:
+        rows = pages
+        for name in ("page_info", "edges", "crawl_log"):
+            if rows > LOCAL_MAX_ROWS:
                 return None
-            budget -= known_rows(self, name)
-        if budget < 0:
+            rows += self._rows(name)
+        if rows > LOCAL_MAX_ROWS:
             return None
         if table is None:
             schema = self._schemas["batch"]
             table = batch.select(*schema.names).toArrow().cast(schema)
         if not _local_batch(table):
             return None
-        old = kept_table(self, "page_info")
+        old = self._kept("page_info")
         if old is None:
-            old = known_table(self, "page_info", self._schemas["page_info"])
+            old = self._table("page_info")
             if not _unique_urls(old):
                 return None
-        edges = known_table(self, "edges", self._schemas["edges"])
-        info, sched = _ingest_local(old, table)
+        info = _ingest_local(old, table)
         links = _links(table)
-        new_edges = pa.table(
-            {"src_url": table["url"].combine_chunks().take(links.parent),
-             "dst_url": links.url},
-            schema=edges.schema,
-        )
-        keep_table(self, "page_info", info)
-        keep_table(self, "edges", pa.concat_tables([edges, new_edges]))
-        return Commit(
-            "local", pages, info.num_rows, len(new_edges), sched,
-            table.select(["url", "ts"]),
-        )
+        self._keep_table("page_info", info)
+        for name, cols in (
+            ("edges", {"src_url": table["url"].combine_chunks().take(links.parent),
+                       "dst_url": links.url}),
+            ("crawl_log", {"url": table["url"], "ts": table["ts"]}),
+        ):
+            logged = self._table(name)
+            appended = pa.table(cols).cast(logged.schema)
+            self._keep_table(name, pa.concat_tables([logged, appended]))
+        return Commit("local", pages, info.num_rows, len(links.url))
 
-    def _add_spark(self, batch: DataFrame, pages: int) -> tuple[Commit, DataFrame]:
-        """The Spark MERGE: ``ingest_crawl_batch`` + checkpoints."""
-        new_info, new_sched = ingest_crawl_batch(self.page_info, batch)
+    def _add_spark(self, batch: DataFrame, pages: int) -> Commit:
+        """The Spark MERGE: ``ingest_crawl_batch`` and the log appends,
+        each checkpointed."""
         # localCheckpoint (not persist+count): each batch's plan embeds
         # the previous state's plan, so without truncation Catalyst
         # re-analyzes a deepening tree and per-batch cost grows
         # super-linearly (~5s → 30s within 10 batches, measured)
-        keep(self, "page_info", new_info.localCheckpoint())
+        self._keep("page_info", ingest_crawl_batch(self.page_info, batch).localCheckpoint())
         new_edges = batch.select(
             F.col("url").alias("src_url"),
             F.explode("links").alias("l"),
         ).select("src_url", F.col("l.url").alias("dst_url"))
-        keep(self, "edges", self.edges.unionByName(new_edges).localCheckpoint())
+        self._keep("edges", self.edges.unionByName(new_edges).localCheckpoint())
+        self._keep("crawl_log", self.crawl_log.unionByName(
+            batch.select("url", "ts")
+        ).localCheckpoint())
         # counted for the log line and the next commit's decision
-        return Commit("spark", pages, known_rows(self, "page_info")), new_sched
+        return Commit("spark", pages, self._rows("page_info"))
 
     def add(self, page: CrawledPage) -> None:
         """Single-page convenience over ``add_batch``."""
@@ -599,7 +598,7 @@ class PageDB:
         """Dedup'd (src, dst) LONG edges (S2 link stream analog). From
         the kept edge table when there is one: the distinct URL pairs,
         both ends hashed with ``xxhash64_np`` (Spark's ``xxhash64``)."""
-        edges = kept_table(self, "edges")
+        edges = self._kept("edges")
         if edges is not None:
             return self._id_edges_local(edges)
         e = self.edges.dropDuplicates(["src_url", "dst_url"])

@@ -67,8 +67,9 @@ class StreamingIngest:
     """File/Kafka-source streaming ingest into a ``PageDB``.
 
     ``start(input_dir, checkpoint_dir)`` returns the StreamingQuery;
-    state is exposed as ``page_db.page_info`` / ``page_db.edges``
-    after each micro-batch (foreachBatch runs ``PageDB.add_batch``)."""
+    state is exposed as ``page_db.page_info`` / ``page_db.edges`` /
+    ``page_db.crawl_log`` after each micro-batch (foreachBatch runs
+    ``PageDB.add_batch``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark

@@ -14,8 +14,8 @@ captures and per-superstep breakdowns, for explaining a bench.py row.
   ``pages`` crawled pages with 9 new outlinks each (page_info 10×,
   edges 9× pages), five 10-page ``BFSchedulerView.add`` commits on
   each executor (``page_info.LOCAL_MAX_ROWS`` patched), printing
-  per-commit walls and the driver's peak RSS so far; the first local
-  commit fetches the store.
+  per-commit walls, the Spark jobs each commit ran and the driver's
+  peak RSS so far; the first local commit fetches the store.
 
 Usage: python bench_extra.py queries minhash_lsh_10x media_decode_2k
 """
@@ -260,25 +260,28 @@ def cmd_commit(sizes: list[int], commits: int = 5) -> None:
     from aduana_spark.frontier.bf_scheduler import BFSchedulerView
 
     spark = _spark()
+    tracker = spark.sparkContext.statusTracker()
     for pages in sizes:
         for executor, bound in (("spark", -1), ("local", 10**9)):
             page_info.LOCAL_MAX_ROWS = -1
             view = BFSchedulerView(spark)
             view.add(_crawl_batch(spark, 0, pages))
             page_info.LOCAL_MAX_ROWS = bound
-            walls = []
+            walls, jobs = [], []
             for i in range(commits):
                 batch = _crawl_batch(spark, pages + 10 * i, 10).persist()
                 batch.count()
+                before = set(tracker.getJobIdsForGroup())
                 t0 = time.time()
                 view.add(batch)
                 walls.append(round(time.time() - t0, 3))
+                jobs.append(len(set(tracker.getJobIdsForGroup()) - before))
                 assert view.page_db.last_commit.executor == executor
                 batch.unpersist()
             rows = view.page_db.last_commit.page_info_rows
             print(json.dumps({
                 "pages": pages, "page_info_rows": rows, "executor": executor,
-                "walls": walls,
+                "walls": walls, "jobs": jobs,
                 "driver_max_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss >> 10,
             }), flush=True)
             del view

@@ -107,7 +107,6 @@ def test_bf_scheduler_rekey_with_scorer(spark):
     assert sch.requests(3) == ["p3", "p5", "p4"]
 
     sch2 = BFScheduler(spark, scorer=PageRankScorer(db, precision=1e-8), page_db=db)
-    sch2.schedule = sch.schedule
     sch2.update_scores()
     got = sch2.requests(3)
     # pagerank order: p3 and p4 have 2 in-links, p5 has 1 → p5 last;
@@ -115,7 +114,44 @@ def test_bf_scheduler_rekey_with_scorer(spark):
     assert set(got) == {"p3", "p4", "p5"} and got[2] == "p5"
 
 
-@pytest.mark.parametrize("case", [test_info_and_links_dump], ids=["info_and_links_dump"])
+class _FixedScorer:
+    """A scorer whose converged scores are given."""
+
+    def __init__(self, spark, scores: dict):
+        self._scores = spark.createDataFrame(list(scores.items()), "url STRING, score DOUBLE")
+
+    def update(self) -> None:
+        pass
+
+    def scores(self):
+        return self._scores
+
+
+@pytest.mark.parametrize("bound", [None, -1], ids=["local", "spark"])
+def test_rekey_then_new_links_keep_link_score(spark, monkeypatch, bound):
+    """After update_scores, pages known at the re-key are served at the
+    scorer's score, even below their link score, and pages a later
+    commit discovers at their link score."""
+    from aduana_spark.frontier import page_info
+
+    if bound is not None:
+        monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", bound)
+    scores = {"s": 9.0, "a": 5.0, "b": 0.95, "d": 0.0}
+    sch = BFScheduler(spark, scorer=_FixedScorer(spark, scores))
+    sch.add(sch.page_db.page_batch(CrawledPage("s", [("a", 0.1), ("b", 0.2), ("d", 0.8)])))
+    sch.update_scores()
+    # "b" is known: it keeps the re-keyed score; "c" is new
+    sch.add(sch.page_db.page_batch(CrawledPage("a", [("c", 0.7), ("b", 0.9)])))
+    assert sch.page_db.last_commit.executor == ("spark" if bound else "local")
+    assert dict(sch.schedule.collect()) == {"b": 0.95, "c": 0.7, "d": 0.0}
+    assert sch.requests(3) == ["b", "c", "d"]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [test_info_and_links_dump, test_bf_scheduler_rekey_with_scorer],
+    ids=["info_and_links_dump", "rekey_with_scorer"],
+)
 def test_api_distributed(spark, monkeypatch, case):
     """The same cases with every commit on the Spark executor."""
     from aduana_spark.frontier import page_info

@@ -15,7 +15,12 @@ from aduana_spark.frontier.freq_scheduler import (
     build_freq_table,
     next_due_view,
 )
-from aduana_spark.frontier.page_info import PageDB, empty_page_info, ingest_crawl_batch
+from aduana_spark.frontier.page_info import (
+    PageDB,
+    empty_page_info,
+    ingest_crawl_batch,
+    scheduled,
+)
 
 TS = dt.datetime(2026, 1, 1)
 
@@ -69,7 +74,7 @@ def test_bf_scheduler_restart_stability(spark):
     assert got1 == [f"http://www.foobar.com/page_{i}" for i in range(99, 74, -1)]
     # "restart": rebuild the view object from the persisted tables
     sch2 = BFSchedulerView(spark, page_db=sch.page_db)
-    sch2.schedule, sch2.served = sch.schedule, sch.served
+    sch2.served = sch.served
     got2 = sch2.requests(25)
     assert got2 == [f"http://www.foobar.com/page_{i}" for i in range(74, 49, -1)]
 
@@ -86,14 +91,14 @@ def test_page_info_merge_semantics(spark):
         score=0.5,
         chash=b"\x10\x00",
     )
-    pi, _ = ingest_crawl_batch(pi, b1)
+    pi = ingest_crawl_batch(pi, b1)
     b2 = _batch(spark, 1, "www.bing.com", [], score=0.2, chash=b"\x20\x00")
-    pi, _ = ingest_crawl_batch(pi, b2)
+    pi = ingest_crawl_batch(pi, b2)
     b3 = _batch(
         spark, 2, "www.bing.com", [], score=0.2, chash=b"\x30\x00",
         ts=TS + dt.timedelta(seconds=10),
     )
-    pi, _ = ingest_crawl_batch(pi, b3)
+    pi = ingest_crawl_batch(pi, b3)
 
     rows = {r["url"]: r for r in pi.collect()}
     assert rows["www.yahoo.com"]["n_crawls"] == 1
@@ -127,7 +132,8 @@ def test_frontier_rate_limit_gate(spark):
         "https://seed.org/",
         [("https://hot.org/a", 0.9), ("https://cold.org/b", 0.5)],
     )
-    pi, sched = ingest_crawl_batch(pi, batch)
+    pi = ingest_crawl_batch(pi, batch)
+    sched = scheduled(pi)
     rate = spark.createDataFrame(
         [("hot.org", 5.0), ("cold.org", 0.0)], "domain STRING, temp DOUBLE"
     )
@@ -464,6 +470,29 @@ def test_backend_releases_cached_batches(spark):
     assert cache.isEmpty()
 
 
+def test_backend_commits_persist_nothing(spark, monkeypatch):
+    """Seed ingest, commits and pops of a Backend persist no DataFrame:
+    a commit takes the Arrow rows behind its handed batch and does not
+    cache the batch."""
+    from aduana_spark.api import Backend
+
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    calls = []
+    for name in ("persist", "cache"):
+        def counted(self, *a, _fn=getattr(frame, name), **kw):
+            calls.append(self)
+            return _fn(self, *a, **kw)
+        monkeypatch.setattr(frame, name, counted)
+    b = Backend(spark)
+    b.add_seeds(["https://a.org/", "https://b.org/"])
+    for _ in range(3):
+        for url in b.get_next_requests(2):
+            b.page_crawled(url, [(url + "x", 0.5), (url + "y", 0.4)])
+    b.flush()
+    assert b.page_db.last_commit.executor == "local"
+    assert calls == []
+
+
 def test_caller_cached_batch_stays_cached(spark):
     """A batch the caller cached is still cached after ingest."""
     from pyspark import StorageLevel
@@ -609,7 +638,6 @@ def test_bf_requests_escalation_politeness(spark):
     assert got == ["https://cold.org/x", "https://cold.org/y", "https://hot.org/c"]
     # without politeness the hot page would have been served first
     sch2 = BFSchedulerView(spark, page_db=sch.page_db)
-    sch2.schedule, sch2.served = sch.schedule, spark.createDataFrame([], "url STRING")
     assert sch2.requests(1) == ["https://hot.org/c"]
 
 
@@ -882,7 +910,8 @@ def test_frontier_topk_per_domain(spark):
     pi = empty_page_info(spark)
     links = [(f"https://hub.com/p{i}", 0.9 - i / 1000.0) for i in range(5)]
     links += [(f"https://small{i}.org/", 0.5 - i / 1000.0) for i in range(3)]
-    pi, sched = ingest_crawl_batch(pi, _batch(spark, 0, "https://seed.io/", links))
+    pi = ingest_crawl_batch(pi, _batch(spark, 0, "https://seed.io/", links))
+    sched = scheduled(pi)
     plain = [r["url"] for r in frontier_topk(sched, pi, 4).collect()]
     assert plain == [f"https://hub.com/p{i}" for i in range(4)]
     capped = [
@@ -972,8 +1001,10 @@ def test_ingest_local_matches_merge_semantics(spark):
     pi = empty_page_info(spark)
     table = page_info.arrow_schema(pi).empty_table()
     for b in batches:
-        pi, sched = ingest_crawl_batch(pi, b)
-        table, local_sched = page_info._ingest_local(table, b.toArrow())
+        pi = ingest_crawl_batch(pi, b)
+        table = page_info._ingest_local(table, b.toArrow())
+        sched = scheduled(pi)
+        local_sched = scheduled(spark.createDataFrame(table)).toArrow()
         assert _rows(spark.createDataFrame(local_sched)) == _rows(sched)
     assert _rows(spark.createDataFrame(table)) == _rows(pi)
     rows = {r["url"]: r for r in table.to_pylist()}
@@ -1050,7 +1081,7 @@ def test_commit_executors_agree(spark, monkeypatch, seed):
             "page_info": view.page_db.page_info,
             "edges": view.page_db.edges,
             "schedule": view.schedule,
-            "crawl_log": view.crawl_log,
+            "crawl_log": view.page_db.crawl_log,
             "id_edges": view.page_db.id_edges(),
         }
 
