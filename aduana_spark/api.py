@@ -21,11 +21,14 @@ import threading
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aduana_spark.frontier import page_info
 from aduana_spark.frontier.bf_scheduler import BFSchedulerView
-from aduana_spark.frontier.page_info import CrawledPage, PageDB, scheduled
+from aduana_spark.frontier.page_info import CrawledPage, Kept, PageDB
 from aduana_spark.functions.urls import url_hash_col
 from aduana_spark.graph.hits import hits as hits_job
 from aduana_spark.graph.pagerank import pagerank as pagerank_job
@@ -135,8 +138,6 @@ class BFScheduler(BFSchedulerView):
     ):
         super().__init__(spark, max_depth=max_depth, page_db=page_db)
         self.scorer = scorer
-        #: (url, score) re-key overlay written by update_scores
-        self.rekeyed: DataFrame | None = None
         self._pages_since_update = 0
         # cumulative pages-added snapshot at the last score update —
         # the reference's n_pages_old (bf_scheduler.c:539-548 keeps
@@ -148,11 +149,15 @@ class BFScheduler(BFSchedulerView):
         # reference's reload path does the same (bf_scheduler.c:329
         # adds n_reloaded_pages into n_pages_new), so a restart over
         # 100k pages requires ~1k new pages before the next recompute
-        # instead of re-firing on every >=100-page batch
+        # instead of re-firing on every >=100-page batch. Counted on
+        # the driver when the store keeps page_info as Arrow
         self._pages_added_total = 0
         if page_db is not None:
+            table = page_db.kept("page_info")
             self._pages_added_total = (
-                page_db.page_info.where(F.col("n_crawls") > 0).count()
+                pc.sum(pc.greater(table["n_crawls"], 0)).as_py() or 0
+                if table is not None
+                else page_db.page_info.where(F.col("n_crawls") > 0).count()
             )
         self._last_update_time: float | None = None
 
@@ -180,16 +185,10 @@ class BFScheduler(BFSchedulerView):
             sch.set_update_interval(update_interval)
         return sch
 
-    @property
-    def schedule(self) -> DataFrame:
-        """(url, score) of every page not crawled yet, at the score of
-        the last re-key for the pages it covered."""
-        return scheduled(self.page_db.page_info, self.rekeyed)
-
     def set_max_crawl_depth(self, d: int) -> None:
         self.max_depth = d or None
 
-    def add(self, batch: DataFrame) -> None:
+    def add(self, batch: DataFrame | pa.Table) -> None:
         # count pages, not batches: the reference's update gate
         # (bf_scheduler.c:537-549, BF_SCHEDULER_UPDATE_NUM_PAGES) counts
         # crawled pages added, and one add() batch may hold many. The
@@ -230,11 +229,20 @@ class BFScheduler(BFSchedulerView):
         table (delete+insert per entry in the reference). The scores
         become the overlay of the schedule view: each page known now
         is served at its scorer score, and pages discovered later at
-        their link score until the next re-key."""
+        their link score until the next re-key. While the store's
+        page_info is within ``LOCAL_MAX_ROWS`` the scores are fetched
+        once and kept as Arrow for the driver pop; larger tables are
+        checkpointed."""
         if self.scorer is None:
             return
         self.scorer.update()
-        self.rekeyed = self.scorer.scores().localCheckpoint()
+        scores = self.scorer.scores()
+        if self.page_db.rows("page_info") > page_info.LOCAL_MAX_ROWS:
+            self.rekeyed = scores.localCheckpoint()
+            return
+        schema = self._schemas["rekeyed"]
+        table = scores.select(*schema.names).toArrow().cast(schema)
+        self._known["rekeyed"] = Kept(self.spark, schema, table=table)
 
 
 @dataclass
@@ -282,13 +290,15 @@ class Backend:
     one commit and one frontier pop (see ``get_next_requests``).
 
     A commit hands its pages to ``PageDB.add_batch`` as an Arrow
-    table (``pages_batch``), so while the store is within
-    ``LOCAL_MAX_ROWS`` it merges on the driver without fetching them
-    back; the pop still runs on Spark.
+    table (``pages_table``). While the store is within
+    ``LOCAL_MAX_ROWS`` the commit merges on the driver and the pop
+    runs on the kept Arrow tables there too, so a GET round runs no
+    Spark job and creates no DataFrame.
 
     Methods are thread-safe. One lock serializes the Spark work
     (commit, seed ingest, pops), so a buffered ``page_crawled`` never
-    waits for it. ``metrics()`` reads the ingest and round counters."""
+    waits for it. ``metrics()`` reads the ingest, round and pop
+    counters."""
 
     #: pages buffered before ``page_crawled`` commits inline
     MAX_PENDING = 1000
@@ -316,6 +326,7 @@ class Backend:
             "commit_seconds": 0.0,
             "get_rounds": 0,
             "gets_served": 0,
+            "pop_seconds": 0.0,
         }
 
     def _take_pending(self) -> list[CrawledPage]:
@@ -330,7 +341,7 @@ class Backend:
             return
         t0 = time.perf_counter()
         try:
-            self.scheduler.add(self.page_db.pages_batch(pages))
+            self.scheduler.add(self.page_db.pages_table(pages))
         except Exception as e:
             raise RuntimeError(
                 f"commit of {len(pages)} buffered pages failed, "
@@ -358,7 +369,7 @@ class Backend:
                 url=f"_seed_{self._n_seeds}", links=list(zip(seed_urls, scores))
             )
             self._n_seeds += 1
-            self.scheduler.add(self.page_db.page_batch(seed))
+            self.scheduler.add(self.page_db.pages_table([seed]))
 
     def page_crawled(self, url: str, links: list[tuple[str, float]],
                      score: float = 0.0, content_hash: bytes | None = None) -> None:
@@ -384,7 +395,8 @@ class Backend:
         commit buffer now, pages committed from it, its commits and
         their total seconds (seed ingest not counted), GET rounds run
         and the GETs they served (GETs per round above 1 means rounds
-        shared their Spark work)."""
+        shared their commit and pop), and the total seconds of the
+        rounds' frontier pops."""
         with self._lock:
             return {"pages_buffered": len(self._pending), **self._counts}
 
@@ -440,7 +452,9 @@ class Backend:
                 pages = self._take_pending()
             try:
                 self._commit(pages)
+                t0 = time.perf_counter()
                 urls = self.scheduler.requests(sum(g.n for g in round_))
+                pop_seconds = time.perf_counter() - t0
             except BaseException as e:
                 with self._lock:
                     for g in round_:
@@ -453,3 +467,4 @@ class Backend:
                     start += g.n
                 self._counts["get_rounds"] += 1
                 self._counts["gets_served"] += len(round_)
+                self._counts["pop_seconds"] += pop_seconds

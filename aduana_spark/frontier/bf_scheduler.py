@@ -16,22 +16,43 @@ deterministic view over persisted tables (SURVEY §1.1)::
     ORDER BY score DESC, xxhash64(url) ASC LIMIT k
 
 with the score re-keyed where ``api.BFScheduler.update_scores`` wrote
-one (``page_info.scheduled``). At scale this compiles to
-TakeOrderedAndProject after a cheap anti-join — no global sort
-materializes. Served tracking is an append-only log; restart
-stability (test_bf_scheduler.c:248-314) is free because the view is a
-pure function of the persisted tables. ``page_info`` and the crawl log
-are the scheduler's ``PageDB`` (frontier.page_info), and ``add``
-ingests through ``PageDB.add_batch``.
+one (``page_info.scheduled``, which also carries ``depth``, so the pop
+reads page_info once). At scale this compiles to TakeOrderedAndProject
+after a cheap anti-join — no global sort materializes. Served tracking
+is an append-only log; restart stability (test_bf_scheduler.c:248-314)
+is free because the view is a pure function of the persisted tables.
+``page_info`` and the crawl log are the scheduler's ``PageDB``
+(frontier.page_info), and ``add`` ingests through ``PageDB.add_batch``.
+
+A pop has two executors, picked once per ``requests`` call. Spark's
+per-job cost dominates a crawl-sized pop (SparkTune, EDBT 2019), so
+while the rows it reads are at most ``page_info.LOCAL_MAX_ROWS`` it
+runs on the driver over the Arrow tables ``PageDB`` keeps (executor
+``local``): the same filters, domain-temperature gate and order in
+pyarrow/numpy, with no Spark job and no DataFrame created. Larger
+stores pop on Spark through :func:`frontier_topk` (executor
+``spark``). Each pop logs one INFO line on ``aduana_spark.frontier``:
+``pop executor=… n=… got=… candidates=… passes=… wall_sec=…``.
 """
 
 from __future__ import annotations
 
+import logging
+import time
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aduana_spark.frontier.page_info import PageDB, scheduled
-from aduana_spark.functions.urls import domain_col
+from aduana_spark.frontier import page_info
+from aduana_spark.frontier.domain_temp import domain_temperature, domain_temperature_arrow
+from aduana_spark.frontier.page_info import Kept, KeptFrame, PageDB, arrow_schema, scheduled
+from aduana_spark.functions.urls import domain_arrow, domain_col, utf8_buffers, xxhash64_np
+
+log = logging.getLogger("aduana_spark.frontier")
 
 
 def frontier_topk(
@@ -47,7 +68,10 @@ def frontier_topk(
     """The ranked crawl-frontier view (north rule): top-k unfetched
     URLs by score with the reference's deterministic tie-break.
 
-    ``schedule``: (url, score) candidate entries.
+    ``schedule``: (url, score) candidate entries. One that carries
+    ``depth`` as well (``page_info.scheduled``) is taken as already
+    uncrawled; any other is joined to ``page_info`` for ``n_crawls``
+    and ``depth``.
     ``served``: optional (url) log of already-served entries (pop
     semantics). ``domain_rate``: optional (domain, temp) table for the
     politeness gate F2 (bf_scheduler.c:716-721).
@@ -58,9 +82,11 @@ def frontier_topk(
     to a rank window partitioned by domain: one shuffle on domain,
     then the usual TakeOrderedAndProject — no global sort.
     """
-    cand = schedule.join(
-        page_info.select("url", "n_crawls", "depth"), "url", "left"
-    ).where(F.coalesce("n_crawls", F.lit(0)) == 0)
+    cand = schedule
+    if "depth" not in schedule.columns:
+        cand = schedule.join(
+            page_info.select("url", "n_crawls", "depth"), "url", "left"
+        ).where(F.coalesce("n_crawls", F.lit(0)) == 0)
     if max_depth is not None and max_depth > 0:
         # F1 (bf_scheduler.c:150-155)
         cand = cand.where(F.coalesce("depth", F.lit(0)) <= max_depth)
@@ -90,6 +116,47 @@ def frontier_topk(
     )
 
 
+def _best_rows(score: pa.Array, url: pa.Array, ok: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the first ``k`` rows where ``ok`` holds in
+    ``frontier_topk``'s order: ``score`` DESC as Spark orders doubles
+    (NaN above everything, -0.0 equal to 0.0, nulls last), then
+    ``xxhash64(url)`` ASC; ``url`` holds no null. Rows are partitioned
+    by score first, so only the rows that can place are hashed."""
+    null = score.is_null().to_numpy(zero_copy_only=False)
+    s = pc.fill_null(score, 0.0).to_numpy(zero_copy_only=False)
+    nan = np.isnan(s) & ~null
+    # rank class: NaN, then numbers by descending score, then nulls
+    rank = np.where(nan, 0, np.where(null, 2, 1))
+    key = np.where(rank == 1, 0.0 - s, 0.0)
+    picked, need = [], k
+    for r in range(3):
+        if need <= 0:
+            break
+        rows = np.flatnonzero(ok & (rank == r))
+        if r == 1 and len(rows) > need:
+            cut = np.partition(key[rows], need - 1)[need - 1]
+            rows = rows[key[rows] <= cut]
+        picked.append(rows)
+        need -= len(rows)
+    rows = np.concatenate(picked) if picked else np.zeros(0, np.int64)
+    data, offsets = utf8_buffers(url.take(rows))
+    h = xxhash64_np(data, offsets[:-1], np.diff(offsets))
+    return rows[np.lexsort((h, key[rows], rank[rows]))[:k]]
+
+
+@dataclass
+class Pop:
+    """What one ``BFSchedulerView.requests`` did: the executor, URLs
+    asked for and served, escalation passes run, and on the driver the
+    candidates (uncrawled, within the depth gate, not served yet)."""
+
+    executor: str
+    n: int
+    got: int
+    passes: int
+    candidates: int | None = None
+
+
 def significant_change(old_score, new_score, threshold: float = 0.1):
     """F5 (bf_scheduler.c:450): re-key a schedule entry only when the
     score moved by at least ``threshold`` of its old magnitude —
@@ -109,7 +176,10 @@ class BFSchedulerView:
     with the Frontera ``Backend`` or a restarted view, so each batch
     is ingested exactly once) or a new one. ``schedule`` is a
     read-only view over its page_info, so a view over the same PageDB
-    sees the same schedule. The view itself keeps only the served log.
+    sees the same schedule. The view itself keeps only the served log
+    ``served`` and the re-key overlay ``rekeyed`` (set by
+    ``api.BFScheduler.update_scores``), each kept like the PageDB's
+    tables: as Arrow on the driver, read as a DataFrame on demand.
 
     ``set_crawl_rate(soft, hard)`` arms the politeness gate: crawled
     pages heat their domain (page_db.c:858-860) over a linear-decay
@@ -120,6 +190,9 @@ class BFSchedulerView:
     (bf_scheduler.c:782-804).
     """
 
+    served = KeptFrame()
+    rekeyed = KeptFrame()
+
     def __init__(
         self,
         spark: SparkSession,
@@ -129,7 +202,16 @@ class BFSchedulerView:
         self.spark = spark
         self.max_depth = max_depth
         self.page_db = page_db if page_db is not None else PageDB(spark)
-        self.served = spark.createDataFrame([], "url STRING")
+        self._schemas = {
+            "served": arrow_schema("url STRING"),
+            "rekeyed": arrow_schema("url STRING, score DOUBLE"),
+        }
+        self._known = {
+            "served": Kept(spark, self._schemas["served"],
+                           table=self._schemas["served"].empty_table()),
+            "rekeyed": None,
+        }
+        self.last_pop: Pop | None = None
         self.soft_rate: float | None = None
         self.hard_rate: float | None = None
         self.temp_window: float | None = None
@@ -159,10 +241,11 @@ class BFSchedulerView:
 
     @property
     def schedule(self) -> DataFrame:
-        """(url, score) of every page not crawled yet."""
-        return scheduled(self.page_db.page_info)
+        """(url, score) of every page not crawled yet, at the score of
+        the last re-key for the pages it covered."""
+        return scheduled(self.page_db.page_info, self.rekeyed).drop("depth")
 
-    def add(self, batch: DataFrame) -> None:
+    def add(self, batch: DataFrame | pa.Table) -> None:
         """Ingest one crawl batch (bf_scheduler_add,
         bf_scheduler.c:157-246) through ``PageDB.add_batch``: newly
         discovered pages enter the schedule view (the crawled page
@@ -189,10 +272,48 @@ class BFSchedulerView:
         top-n and log them as served. With a crawl rate armed, each
         pass admits only domains whose temperature is under that
         pass's limit; skipped pages stay scheduled and are re-examined
-        at the next (relaxed) limit."""
-        from aduana_spark.frontier.domain_temp import domain_temperature
+        at the next (relaxed) limit.
 
+        The pop runs on the driver (executor ``local``, no Spark job)
+        while the rows it reads — page_info, the served log, the
+        overlay and, with a crawl rate armed, the crawl log — are at
+        most ``page_info.LOCAL_MAX_ROWS`` and the overlay holds each
+        URL once; otherwise on Spark. ``last_pop`` says how it ran,
+        and one INFO line on ``aduana_spark.frontier`` logs it."""
+        t0 = time.perf_counter()
         limits = self._escalation_limits()
+        pop = self._pop_local if self._pops_locally(limits) else self._pop_spark
+        urls, self.last_pop = pop(n, limits, now)
+        fields = {
+            "executor": self.last_pop.executor,
+            "n": n,
+            "got": self.last_pop.got,
+            "candidates": self.last_pop.candidates,
+            "passes": self.last_pop.passes,
+            "wall_sec": round(time.perf_counter() - t0, 6),
+        }
+        log.info("pop %s", " ".join(f"{k}={v}" for k, v in fields.items()), extra=fields)
+        return urls
+
+    def _pops_locally(self, limits: list[float | None]) -> bool:
+        rows = self.page_db.rows("page_info") + self._known["served"].rows()
+        if limits != [None]:
+            rows += self.page_db.rows("crawl_log")
+        rekeyed = self._known["rekeyed"]
+        if rekeyed is not None:
+            rows += rekeyed.rows()
+        if rows > page_info.LOCAL_MAX_ROWS:
+            return False
+        return rekeyed is None or page_info.unique_urls(rekeyed.fetch())
+
+    def _serve(self, urls: list[str]) -> None:
+        """Append ``urls`` to the served log."""
+        served = self._known["served"].fetch()
+        self._known["served"] = Kept(self.spark, served.schema, table=pa.concat_tables(
+            [served, pa.table({"url": pa.array(urls, pa.string())}).cast(served.schema)]
+        ))
+
+    def _pop_spark(self, n: int, limits: list[float | None], now: float | None):
         domain_rate = None
         if limits != [None]:
             if now is None:
@@ -206,12 +327,14 @@ class BFSchedulerView:
             ).persist()
 
         urls: list[str] = []
+        passes = 0
         try:
             for limit in limits:
                 if len(urls) >= n:
                     break
+                passes += 1
                 top = frontier_topk(
-                    self.schedule,
+                    scheduled(self.page_db.page_info, self.rekeyed),
                     self.page_db.page_info,
                     n - len(urls),
                     served=self.served,
@@ -221,12 +344,57 @@ class BFSchedulerView:
                 )
                 got = [r["url"] for r in top.collect()]
                 if got:
-                    batch = self.spark.createDataFrame([(u,) for u in got], "url STRING")
-                    self.served = self.served.unionByName(batch).localCheckpoint()
+                    self._serve(got)
                     urls += got
                 if domain_rate is None:
                     break  # single unlimited pass
         finally:
             if domain_rate is not None:
                 domain_rate.unpersist()
-        return urls
+        return urls, Pop("spark", n, len(urls), passes)
+
+    def _pop_local(self, n: int, limits: list[float | None], now: float | None):
+        """``_pop_spark`` row for row, on the kept Arrow tables."""
+        info = self.page_db.arrow("page_info")
+        todo = pc.and_(pc.equal(info["n_crawls"], 0), pc.is_valid(info["url"]))
+        if self.max_depth is not None and self.max_depth > 0:
+            todo = pc.and_(todo, pc.less_equal(pc.coalesce(info["depth"], 0), self.max_depth))
+        cand = info.select(["url", "score"]).filter(todo)
+        url = cand["url"].combine_chunks()
+        score = cand["score"].combine_chunks()
+        rekeyed = self._known["rekeyed"]
+        if rekeyed is not None:
+            over = rekeyed.fetch()
+            at = pc.index_in(url, value_set=over["url"].combine_chunks(), skip_nulls=True)
+            score = pc.coalesce(over["score"].combine_chunks().take(at), score)
+        served = self._known["served"].fetch()["url"].combine_chunks()
+        free = ~pc.is_in(url, value_set=served, skip_nulls=True).to_numpy(zero_copy_only=False)
+        temp = None
+        if limits != [None]:
+            crawls = self.page_db.arrow("crawl_log")
+            if now is None:
+                last = pc.max(crawls["ts"]).value
+                now = last / 1e6 if last is not None else 0.0
+            domains, temps = domain_temperature_arrow(
+                domain_arrow(crawls["url"]), crawls["ts"], now, self.temp_window
+            )
+            # a domain without crawls in the window is at 0
+            at = pc.index_in(domain_arrow(url), value_set=domains, skip_nulls=True)
+            temp = np.append(temps, 0.0)[pc.fill_null(at, len(temps)).to_numpy()]
+
+        candidates = int(free.sum())
+        urls: list[str] = []
+        passes = 0
+        for limit in limits:
+            if len(urls) >= n:
+                break
+            passes += 1
+            ok = free if temp is None else free & (temp <= limit)
+            rows = _best_rows(score, url, ok, n - len(urls))
+            free[rows] = False
+            urls += url.take(rows).to_pylist()
+            if temp is None:
+                break  # single unlimited pass
+        if urls:
+            self._serve(urls)
+        return urls, Pop("local", n, len(urls), passes, candidates)

@@ -25,6 +25,9 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,6 +54,27 @@ def domain_temperature(
         .agg(F.sum(w).alias("temp"))
         .where(F.col("temp") > 0)
     )
+
+
+def domain_temperature_arrow(
+    domains: pa.ChunkedArray, ts: pa.ChunkedArray, now: float, window_sec: float
+) -> tuple[pa.Array, np.ndarray]:
+    """:func:`domain_temperature` in ``mode='linear'`` on the driver,
+    from an event log's domain and timestamp columns: the domains and
+    their temperatures. Ages are taken in whole seconds, as Spark's
+    ``unix_timestamp`` takes them; events without a domain are left
+    out, as the Spark join never matches a null domain."""
+    us = pc.cast(ts, pa.int64())
+    keep = pc.and_(pc.is_valid(domains), pc.is_valid(us))
+    sec = pc.filter(us, keep).to_numpy() // 1_000_000
+    age = now - sec.astype(np.float64)
+    recent = age >= 0
+    codes = pc.dictionary_encode(pc.filter(domains, keep).combine_chunks())
+    weight = np.maximum(0.0, 1.0 - age[recent] / window_sec)
+    temp = np.bincount(
+        codes.indices.to_numpy()[recent], weights=weight, minlength=len(codes.dictionary)
+    )
+    return codes.dictionary, temp
 
 
 def escalated_limits(

@@ -36,9 +36,10 @@ crawl-sized commit pays Spark's per-job cost many times over for a few
 thousand rows (SparkTune, EDBT 2019), so when the store's rows plus
 the batch's rows are at most :data:`LOCAL_MAX_ROWS`, the batch crosses
 to the driver once as Arrow and :func:`_ingest_local` runs the MERGE
-in pyarrow/numpy (executor ``local``). ``PageDB`` keeps the Arrow
-table behind each DataFrame it creates, so the next commit neither
-re-fetches nor checkpoints its state. Larger stores, and batches that
+in pyarrow/numpy (executor ``local``). A local commit keeps only the
+new Arrow tables (:class:`Kept`): the next commit and the frontier pop
+(``bf_scheduler``) read them as they are, and a table's DataFrame is
+created only when Spark first reads it. Larger stores, and batches that
 repeat a ``url`` or a ``crawl_order`` or hold a null URL, run
 :func:`ingest_crawl_batch` on Spark (executor ``spark``). Each commit
 logs one INFO line on ``aduana_spark.frontier``:
@@ -200,17 +201,20 @@ def ingest_crawl_batch(page_info: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def scheduled(page_info: DataFrame, rekeyed: DataFrame | None = None) -> DataFrame:
-    """The best-first schedule as a view: (url, score) of every page
-    in ``page_info`` with ``n_crawls = 0``. ``rekeyed`` is an optional
-    (url, score) re-key overlay (bf_scheduler_update,
+    """The best-first schedule as a view: (url, score, depth) of every
+    page in ``page_info`` with ``n_crawls = 0`` and a URL (a null link
+    URL cannot be crawled, so it is never served). ``rekeyed`` is an
+    optional (url, score) re-key overlay (bf_scheduler_update,
     bf_scheduler.c:401-487) whose score wins where it holds the page;
     pages it does not hold keep their link score."""
-    todo = page_info.where(F.col("n_crawls") == 0).select("url", "score")
+    todo = page_info.where((F.col("n_crawls") == 0) & F.col("url").isNotNull()).select(
+        "url", "score", "depth"
+    )
     if rekeyed is None:
         return todo
     return todo.join(
         rekeyed.select("url", F.col("score").alias("rekeyed")), "url", "left"
-    ).select("url", F.coalesce("rekeyed", "score").alias("score"))
+    ).select("url", F.coalesce("rekeyed", "score").alias("score"), "depth")
 
 
 @dataclass
@@ -248,7 +252,7 @@ def _local_batch(batch: pa.Table) -> bool:
     ) and _links(batch).url.null_count == 0
 
 
-def _unique_urls(page_info: pa.Table) -> bool:
+def unique_urls(page_info: pa.Table) -> bool:
     """Whether no URL repeats in a page-info table (nulls aside)."""
     urls = page_info["url"]
     return pc.count_distinct(urls).as_py() == len(urls) - urls.null_count
@@ -337,11 +341,74 @@ def _ingest_local(old: pa.Table, batch: pa.Table) -> pa.Table:
     return pa.concat_tables([untouched, crawled, link_info])
 
 
-def arrow_schema(df: DataFrame) -> pa.Schema:
-    """The Arrow schema ``toArrow`` gives ``df``'s rows."""
+def arrow_schema(df: DataFrame | str) -> pa.Schema:
+    """The Arrow schema ``toArrow`` gives the rows of ``df``, a
+    DataFrame or a DDL schema string."""
     from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    return to_arrow_schema(df.schema)
+    return to_arrow_schema(_parse_datatype_string(df) if isinstance(df, str) else df.schema)
+
+
+class Kept:
+    """One table of crawl state: an Arrow table on the driver, the
+    DataFrame Spark reads, or both. A table kept as Arrow creates its
+    DataFrame on first read, its chunks combined first (each chunk
+    becomes a partition). A table kept as a DataFrame alone is counted
+    once and fetched once, when first needed; ``fetched`` says whether
+    the Arrow table came from such a fetch."""
+
+    def __init__(self, spark: SparkSession, schema: pa.Schema,
+                 table: pa.Table | None = None, df: DataFrame | None = None):
+        self._spark, self._schema = spark, schema
+        self.table, self._df = table, df
+        self._rows = table.num_rows if table is not None else None
+        self.fetched = False
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            if self.table.column(0).num_chunks > 1:
+                self.table = self.table.combine_chunks()
+            self._df = self._spark.createDataFrame(self.table)
+        return self._df
+
+    def rows(self) -> int:
+        """Row count: known, or counted once (one job, no row leaves
+        the executors)."""
+        if self._rows is None:
+            self._rows = row_count(self._df)
+        return self._rows
+
+    def fetch(self) -> pa.Table:
+        """The rows as Arrow: the kept table, or one fetch that is then
+        kept."""
+        if self.table is None:
+            self.table = self._df.select(*self._schema.names).toArrow().cast(self._schema)
+            self._rows = self.table.num_rows
+            self.fetched = True
+        return self.table
+
+
+class KeptFrame:
+    """A DataFrame attribute over the :class:`Kept` entry of the same
+    name in the owner's ``_known`` dict, built with the owner's
+    ``spark`` and ``_schemas``. Reading it gives the entry's DataFrame
+    (None for no entry); assigning a DataFrame keeps it alone."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.name = name
+
+    def __get__(self, obj, owner=None):
+        if obj is None:
+            return self
+        kept = obj._known.get(self.name)
+        return kept.df if kept is not None else None
+
+    def __set__(self, obj, df: DataFrame | None) -> None:
+        obj._known[self.name] = (
+            Kept(obj.spark, obj._schemas[self.name], df=df) if df is not None else None
+        )
 
 
 @dataclass
@@ -381,12 +448,12 @@ class PageDB:
     store + link graph, backed by DataFrames instead of LMDB.
 
     ``page_info``, ``edges`` (src_url, dst_url) and ``crawl_log``
-    (url, ts) are DataFrames on either executor. A commit on the
-    driver creates them from Arrow tables that the store keeps for the
-    next commit and for :meth:`id_edges`; a commit on Spark checkpoints
-    them (``localCheckpoint``) to truncate lineage. A DataFrame
-    assigned from outside costs the next local commit one count and
-    one fetch."""
+    (url, ts) read as DataFrames on either executor. A commit on the
+    driver keeps only the new Arrow tables, for the next commit, the
+    frontier pop and :meth:`id_edges`; each DataFrame is created when
+    first read. A commit on Spark checkpoints them (``localCheckpoint``)
+    to truncate lineage. A DataFrame assigned from outside costs the
+    next local use one count and one fetch."""
 
     # crawl_order is 64-bit: streaming ingest derives it from
     # monotonically_increasing_id(), whose upper bits carry the
@@ -398,75 +465,54 @@ class PageDB:
         "page_score DOUBLE, content_hash BINARY, ts TIMESTAMP"
     )
 
+    page_info = KeptFrame()
+    edges = KeptFrame()
+    crawl_log = KeptFrame()
+
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        #: table -> (DataFrame, its Arrow table or None, rows or None)
-        self._known: dict = {}
         self._schemas = {
-            "batch": arrow_schema(spark.createDataFrame([], self.BATCH_SCHEMA))
+            name: arrow_schema(ddl)
+            for name, ddl in (
+                ("batch", self.BATCH_SCHEMA),
+                ("page_info", PAGE_INFO_SCHEMA),
+                ("edges", "src_url STRING, dst_url STRING"),
+                ("crawl_log", "url STRING, ts TIMESTAMP"),
+            )
         }
-        for name, ddl in (
-            ("page_info", PAGE_INFO_SCHEMA),
-            ("edges", "src_url STRING, dst_url STRING"),
-            ("crawl_log", "url STRING, ts TIMESTAMP"),
-        ):
-            df = spark.createDataFrame([], ddl)
-            self._schemas[name] = arrow_schema(df)
-            self._keep(name, df, self._schemas[name].empty_table())
-        #: the last pages_batch DataFrame and the Arrow table behind it
-        self._handed: tuple[DataFrame, pa.Table] | None = None
+        #: table name -> Kept
+        self._known = {
+            name: Kept(spark, schema, table=schema.empty_table())
+            for name, schema in self._schemas.items()
+            if name != "batch"
+        }
         self.last_commit: Commit | None = None
         self._order = 0
 
     # ---- the Arrow tables behind the store's DataFrames -------------------
 
-    def _keep(self, name: str, df: DataFrame, table: pa.Table | None = None) -> None:
-        """Set table ``name`` to ``df``, remembering the Arrow table it
-        was created from, if any. What is remembered holds only while
-        the attribute is that very DataFrame."""
-        setattr(self, name, df)
-        self._known[name] = (df, table, table.num_rows if table is not None else None)
+    def rows(self, name: str) -> int:
+        """Row count of table ``name``, counted at most once."""
+        return self._known[name].rows()
 
-    def _keep_table(self, name: str, table: pa.Table) -> None:
-        """:meth:`_keep` of a DataFrame created from ``table``, whose
-        chunks are combined first: each chunk becomes a partition."""
-        if table.column(0).num_chunks > 1:
-            table = table.combine_chunks()
-        self._keep(name, self.spark.createDataFrame(table), table)
+    def kept(self, name: str) -> pa.Table | None:
+        """The Arrow table ``name`` on the driver, if there is one."""
+        return self._known[name].table
 
-    def _rows(self, name: str) -> int:
-        """Row count of table ``name``: remembered, or counted once (one
-        job, no row leaves the executors)."""
-        df, _, rows = self._known[name]
-        if df is not getattr(self, name) or rows is None:
-            df = getattr(self, name)
-            rows = row_count(df)
-            self._known[name] = (df, None, rows)
-        return rows
+    def arrow(self, name: str) -> pa.Table:
+        """Rows of table ``name`` as Arrow, fetched at most once."""
+        return self._known[name].fetch()
 
-    def _kept(self, name: str) -> pa.Table | None:
-        """The Arrow table behind table ``name``, if the store created it."""
-        df, table, _ = self._known[name]
-        return table if df is getattr(self, name) else None
-
-    def _table(self, name: str) -> pa.Table:
-        """Rows of table ``name`` as Arrow: the kept table, or one fetch
-        that is then kept."""
-        table = self._kept(name)
-        if table is None:
-            df, schema = getattr(self, name), self._schemas[name]
-            table = df.select(*schema.names).toArrow().cast(schema)
-            self._keep(name, df, table)
-        return table
+    def _keep(self, name: str, table: pa.Table) -> None:
+        self._known[name] = Kept(self.spark, self._schemas[name], table=table)
 
     # ---- ingest -----------------------------------------------------------
 
-    def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
-        """Crawl batch in BATCH_SCHEMA, one row per page in list order:
-        ``crawl_order`` numbers the pages consecutively, so the MERGE's
-        within-batch first-writer-wins follows arrival order. The rows
-        are built as Arrow, and ``add_batch`` of the DataFrame returned
-        last takes them from here instead of fetching them."""
+    def pages_table(self, pages: list[CrawledPage]) -> pa.Table:
+        """Crawl batch in BATCH_SCHEMA as Arrow, one row per page in
+        list order: ``crawl_order`` numbers the pages consecutively, so
+        the MERGE's within-batch first-writer-wins follows arrival
+        order. ``add_batch`` takes it as it is."""
         default_ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
         ts = TimestampType()
         schema = self._schemas["batch"]
@@ -489,25 +535,26 @@ class PageDB:
             schema=schema,
         )
         self._order += len(pages)
-        df = self.spark.createDataFrame(table)
-        self._handed = (df, table)
-        return df
+        return table
+
+    def pages_batch(self, pages: list[CrawledPage]) -> DataFrame:
+        """:meth:`pages_table` as a DataFrame."""
+        return self.spark.createDataFrame(self.pages_table(pages))
 
     def page_batch(self, page: CrawledPage) -> DataFrame:
         """One-row crawl batch in BATCH_SCHEMA from a CrawledPage."""
         return self.pages_batch([page])
 
-    def add_batch(self, batch: DataFrame) -> None:
+    def add_batch(self, batch: DataFrame | pa.Table) -> None:
         """page_db_add (page_db.c:807-1016) for a whole batch: one
         MERGE into page_info and the edge-log and crawl-log appends, on
         the driver or on Spark (see the module docstring).
-        ``last_commit`` says how the commit ran. A batch other than the
-        one ``pages_batch`` returned last is cached while the commit
-        scans it."""
+        ``last_commit`` says how the commit ran. ``batch`` is a
+        DataFrame, cached while the commit scans it, or an Arrow table
+        in BATCH_SCHEMA (:meth:`pages_table`)."""
         t0 = time.perf_counter()
-        handed, self._handed = self._handed, None
-        if handed is not None and handed[0] is batch:
-            commit = self._add(batch, handed[1], handed[1].num_rows)
+        if isinstance(batch, pa.Table):
+            commit = self._add(None, batch, batch.num_rows)
         else:
             with cached_batch(batch):
                 commit = self._add(batch, None, row_count(batch))
@@ -523,11 +570,12 @@ class PageDB:
             "commit %s", " ".join(f"{k}={v}" for k, v in fields.items()), extra=fields
         )
 
-    def _add(self, batch: DataFrame, table: pa.Table | None, pages: int) -> Commit:
-        return self._add_local(batch, table, pages) or self._add_spark(batch, pages)
+    def _add(self, batch: DataFrame | None, table: pa.Table | None, pages: int) -> Commit:
+        """One of ``batch`` and ``table`` is given."""
+        return self._add_local(batch, table, pages) or self._add_spark(batch, table, pages)
 
     def _add_local(
-        self, batch: DataFrame, table: pa.Table | None, pages: int
+        self, batch: DataFrame | None, table: pa.Table | None, pages: int
     ) -> Commit | None:
         """The driver MERGE, or None when the store and batch exceed
         LOCAL_MAX_ROWS or the batch or store does not qualify."""
@@ -535,7 +583,7 @@ class PageDB:
         for name in ("page_info", "edges", "crawl_log"):
             if rows > LOCAL_MAX_ROWS:
                 return None
-            rows += self._rows(name)
+            rows += self.rows(name)
         if rows > LOCAL_MAX_ROWS:
             return None
         if table is None:
@@ -543,46 +591,48 @@ class PageDB:
             table = batch.select(*schema.names).toArrow().cast(schema)
         if not _local_batch(table):
             return None
-        old = self._kept("page_info")
-        if old is None:
-            old = self._table("page_info")
-            if not _unique_urls(old):
-                return None
+        # a fetched page_info may come from a Spark MERGE that repeated a URL
+        old = self.arrow("page_info")
+        if self._known["page_info"].fetched and not unique_urls(old):
+            return None
         info = _ingest_local(old, table)
         links = _links(table)
-        self._keep_table("page_info", info)
+        self._keep("page_info", info)
         for name, cols in (
             ("edges", {"src_url": table["url"].combine_chunks().take(links.parent),
                        "dst_url": links.url}),
             ("crawl_log", {"url": table["url"], "ts": table["ts"]}),
         ):
-            logged = self._table(name)
-            appended = pa.table(cols).cast(logged.schema)
-            self._keep_table(name, pa.concat_tables([logged, appended]))
+            logged = self.arrow(name)
+            self._keep(name, pa.concat_tables([logged, pa.table(cols).cast(logged.schema)]))
         return Commit("local", pages, info.num_rows, len(links.url))
 
-    def _add_spark(self, batch: DataFrame, pages: int) -> Commit:
+    def _add_spark(
+        self, batch: DataFrame | None, table: pa.Table | None, pages: int
+    ) -> Commit:
         """The Spark MERGE: ``ingest_crawl_batch`` and the log appends,
         each checkpointed."""
+        if batch is None:
+            batch = self.spark.createDataFrame(table)
         # localCheckpoint (not persist+count): each batch's plan embeds
         # the previous state's plan, so without truncation Catalyst
         # re-analyzes a deepening tree and per-batch cost grows
         # super-linearly (~5s → 30s within 10 batches, measured)
-        self._keep("page_info", ingest_crawl_batch(self.page_info, batch).localCheckpoint())
+        self.page_info = ingest_crawl_batch(self.page_info, batch).localCheckpoint()
         new_edges = batch.select(
             F.col("url").alias("src_url"),
             F.explode("links").alias("l"),
         ).select("src_url", F.col("l.url").alias("dst_url"))
-        self._keep("edges", self.edges.unionByName(new_edges).localCheckpoint())
-        self._keep("crawl_log", self.crawl_log.unionByName(
+        self.edges = self.edges.unionByName(new_edges).localCheckpoint()
+        self.crawl_log = self.crawl_log.unionByName(
             batch.select("url", "ts")
-        ).localCheckpoint())
+        ).localCheckpoint()
         # counted for the log line and the next commit's decision
-        return Commit("spark", pages, self._rows("page_info"))
+        return Commit("spark", pages, self.rows("page_info"))
 
     def add(self, page: CrawledPage) -> None:
         """Single-page convenience over ``add_batch``."""
-        self.add_batch(self.page_batch(page))
+        self.add_batch(self.pages_table([page]))
 
     def get_info(self, url: str):
         """S7 point lookup (page_db.c:1018-1067)."""
@@ -598,7 +648,7 @@ class PageDB:
         """Dedup'd (src, dst) LONG edges (S2 link stream analog). From
         the kept edge table when there is one: the distinct URL pairs,
         both ends hashed with ``xxhash64_np`` (Spark's ``xxhash64``)."""
-        edges = self._kept("edges")
+        edges = self.kept("edges")
         if edges is not None:
             return self._id_edges_local(edges)
         e = self.edges.dropDuplicates(["src_url", "dst_url"])

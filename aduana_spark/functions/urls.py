@@ -109,6 +109,15 @@ def domain_col(url: Column | str) -> Column:
     return F.nullif(d, F.lit("")).alias("domain")
 
 
+def domain_arrow(urls: pa.Array | pa.ChunkedArray) -> pa.Array:
+    """:func:`domain_col` of an Arrow string array on the driver: the
+    same pattern in pyarrow's RE2, null where it does not match."""
+    import pyarrow.compute as pc
+
+    pattern = _DOMAIN_RE.replace("([^/:]+)", "(?P<domain>[^/:]+)")
+    return pc.struct_field(pc.extract_regex(urls, pattern), "domain")
+
+
 def same_domain_col(url1: Column | str, url2: Column | str) -> Column:
     """Native same-domain predicate with the reference's fallback:
     when neither URL parses, compare the full strings (util.c:274-279).

@@ -10,7 +10,8 @@ format doc/python.rst:203-247):
 - ``GET /request?n=42`` — JSON list of up to n frontier URLs.
 - ``GET /metrics`` — plain text, one ``name value`` line per counter of
   ``Backend.metrics()``: ``pages_buffered``, ``pages_committed``,
-  ``commits``, ``commit_seconds``, ``get_rounds`` and ``gets_served``.
+  ``commits``, ``commit_seconds``, ``get_rounds``, ``gets_served`` and
+  ``pop_seconds``.
 
 The ``Backend`` group-commits crawled pages and serves GETs in rounds
 (see ``api.Backend``):

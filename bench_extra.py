@@ -16,6 +16,12 @@ captures and per-superstep breakdowns, for explaining a bench.py row.
   each executor (``page_info.LOCAL_MAX_ROWS`` patched), printing
   per-commit walls, the Spark jobs each commit ran and the driver's
   peak RSS so far; the first local commit fetches the store.
+- ``pop [pages ...]``: the pop crossover. Over the same stores (one
+  Spark commit of ``pages`` pages, page_info 10× pages), five
+  ``BFSchedulerView.requests(10)`` on each executor
+  (``page_info.LOCAL_MAX_ROWS`` patched), printing per-pop walls, the
+  Spark jobs each pop ran and the driver's peak RSS so far; the first
+  local pop counts and fetches page_info.
 
 Usage: python bench_extra.py queries minhash_lsh_10x media_decode_2k
 """
@@ -288,6 +294,38 @@ def cmd_commit(sizes: list[int], commits: int = 5) -> None:
     spark.stop()
 
 
+def cmd_pop(sizes: list[int], pops: int = 5) -> None:
+    from aduana_spark.frontier import page_info
+    from aduana_spark.frontier.bf_scheduler import BFSchedulerView
+
+    spark = _spark()
+    tracker = spark.sparkContext.statusTracker()
+    for pages in sizes:
+        page_info.LOCAL_MAX_ROWS = -1
+        store = BFSchedulerView(spark).page_db
+        batch = _crawl_batch(spark, 0, pages).persist()
+        store.add_batch(batch)
+        batch.unpersist()
+        for executor, bound in (("spark", -1), ("local", 10**9)):
+            page_info.LOCAL_MAX_ROWS = bound
+            view = BFSchedulerView(spark, page_db=store)
+            walls, jobs = [], []
+            for _ in range(pops):
+                before = set(tracker.getJobIdsForGroup())
+                t0 = time.time()
+                got = view.requests(10)
+                walls.append(round(time.time() - t0, 3))
+                jobs.append(len(set(tracker.getJobIdsForGroup()) - before))
+                assert view.last_pop.executor == executor and len(got) == 10
+            print(json.dumps({
+                "pages": pages, "page_info_rows": store.rows("page_info"),
+                "executor": executor, "walls": walls, "jobs": jobs,
+                "driver_max_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss >> 10,
+            }), flush=True)
+        del store
+    spark.stop()
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
@@ -299,5 +337,7 @@ if __name__ == "__main__":
         cmd_superstep(sys.argv[2])
     elif cmd == "commit":
         cmd_commit([int(a) for a in sys.argv[2:]] or [1_000, 10_000, 100_000])
+    elif cmd == "pop":
+        cmd_pop([int(a) for a in sys.argv[2:]] or [1_000, 10_000, 100_000])
     else:
         raise SystemExit(f"unknown command {cmd}")

@@ -62,6 +62,14 @@ def test_bf_scheduler_pop_order(spark):
         sch.add(_batch(spark, i, url, links, ts=TS + dt.timedelta(seconds=i)))
     assert sch.requests(2) == ["9", "3"]
     assert sch.requests(4) == ["6"]
+    assert sch.last_pop.executor == _pop_executor()
+
+
+def _pop_executor():
+    """The pop executor a crawl-sized store gets under the
+    ``LOCAL_MAX_ROWS`` in force (``test_frontier_distributed`` patches
+    it to -1)."""
+    return "local" if page_info.LOCAL_MAX_ROWS >= 0 else "spark"
 
 
 def test_bf_scheduler_restart_stability(spark):
@@ -77,6 +85,7 @@ def test_bf_scheduler_restart_stability(spark):
     sch2.served = sch.served
     got2 = sch2.requests(25)
     assert got2 == [f"http://www.foobar.com/page_{i}" for i in range(74, 49, -1)]
+    assert sch2.last_pop.executor == _pop_executor()
 
 
 def test_page_info_merge_semantics(spark):
@@ -434,6 +443,7 @@ def test_backend_round_matches_sequential_gets(spark):
         ["https://c.org/2"],
     ]
     assert (len(adds), pops) == (1, [(6,)])
+    assert rounded.scheduler.last_pop.executor == _pop_executor()
     assert rounded.metrics()["get_rounds"] == 3  # two setup GETs + this round
     assert rounded.metrics()["gets_served"] == 5
     assert rows(rounded.page_db.page_info) == rows(sequential.page_db.page_info)
@@ -1090,7 +1100,7 @@ def test_commit_executors_agree(spark, monkeypatch, seed):
         for name, df in tables(views[run]).items():
             assert df.schema == want[name].schema, (run, name)
             assert _rows(df) == _rows(want[name]), (run, name)
-    assert views["local"].page_db._known["edges"][1] is not None  # id_edges ran local
+    assert views["local"].page_db.kept("edges") is not None  # id_edges ran local
     info = {r["url"]: r for r in want["page_info"].collect()}
     recrawled = [r for r in info.values() if r["n_crawls"] >= 2]
     assert any(r["n_changes"] for r in recrawled)
@@ -1112,7 +1122,8 @@ def test_commit_executors_agree(spark, monkeypatch, seed):
 def test_commit_declines_to_spark(spark, rows, then):
     """A batch the driver MERGE does not take runs the Spark path, on
     a store within the bound, and leaves no cached batch. The next
-    commit fetches the Spark state and runs on the driver if it may."""
+    commit runs on the driver if it may, also after a pop fetched the
+    Spark state."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     batch = spark.createDataFrame(
@@ -1124,6 +1135,8 @@ def test_commit_declines_to_spark(spark, rows, then):
     assert view.page_db.last_commit.executor == "spark"
     assert view.page_db.last_commit.pages == len(rows)
     assert cache.isEmpty()
+    view.requests(1)
+    assert view.last_pop.executor == "local"
     view.add(_batch(spark, 5, "z", [("a", 0.3)]))
     assert view.page_db.last_commit.executor == then
 
@@ -1146,3 +1159,147 @@ def test_commit_log_line(spark, monkeypatch, caplog, executor):
     assert (r.executor, r.pages, r.page_info_rows) == (executor, 1, 4)
     assert r.links == (3 if executor == "local" else None)
     assert r.wall_sec > 0
+
+
+# ------------------------------------------------ pop executors (local/spark)
+
+
+def test_frontier_topk_scans_page_info_once(spark):
+    """Over ``scheduled`` (which carries ``depth``) the Spark pop reads
+    page_info once: no join back onto page_info."""
+    db = PageDB(spark)
+    db.add_batch(db.pages_table([
+        page_info.CrawledPage(f"https://d{i % 7}.org/p{i}",
+                              [(f"https://d{i % 7}.org/p{i}/l{j}", j / 10) for j in range(2)])
+        for i in range(100)
+    ]))
+    assert db.rows("page_info") == 300
+    pi = db.page_info
+    served = spark.createDataFrame([("https://d0.org/p0/l0",)], "url STRING")
+    for sched, scans in ((scheduled(pi), 1), (scheduled(pi).drop("depth"), 2)):
+        top = frontier_topk(sched, pi, 100, served=served)
+        plan = top._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("LocalTableScan") == scans, plan
+        assert top.count() == 100
+
+
+def _pop_state(spark, seed):
+    """Seeded page_info, crawl log, overlay and served log for the pop:
+    score ties, null, NaN, ±0.0 and infinite scores, depths 0-4 and
+    null, seed pages, non-http URLs and a null URL; crawl-log times
+    with fractional seconds, 0-3.5 s before ``now``, hotter on some
+    domains than others."""
+    import random
+
+    rng = random.Random(seed)
+    domains = [f"https://d{d}.org" for d in range(4)]
+    urls = [f"{d}/p{i}" for d in domains for i in range(12)] + [
+        "_seed_0", "_seed_1", "ftp://files.org/a", "mailto:x@y.org", "relative/page",
+        "http://u:p@d1.org:81/q", None,
+    ]
+    scores = [0.5, 0.5, 0.1, 0.9, None, float("nan"), -0.0, 0.0, float("inf"), float("-inf")]
+    info = spark.createDataFrame(
+        [(u, None, rng.choice([0, 1, 2, 3, 4, None]), None, None, 0,
+          rng.choice([0, 0, 0, 1]), rng.choice(scores), None) for u in urls],
+        page_info.PAGE_INFO_SCHEMA,
+    )
+    now = TS + dt.timedelta(seconds=10.5)
+    log_urls = rng.choices(urls, weights=[10] * 12 + [6] * 12 + [3] * 12 + [1] * 12 + [2] * 7,
+                           k=60)
+    crawls = spark.createDataFrame(
+        [(u, now - dt.timedelta(microseconds=rng.randint(0, 3_500_000))) for u in log_urls],
+        "url STRING, ts TIMESTAMP",
+    )
+    known = [u for u in urls if u is not None]
+    rekeyed = spark.createDataFrame(
+        [(u, rng.choice(scores)) for u in rng.sample(known, 25) + ["https://d9.org/x"]],
+        "url STRING, score DOUBLE",
+    )
+    served = spark.createDataFrame([(u,) for u in rng.sample(known, 4)], "url STRING")
+    return info, crawls, rekeyed, served, now.timestamp(), rng.choice([None, 2])
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_pop_executors_agree(spark, monkeypatch, seed):
+    """The driver pop serves what the Spark pop serves, call for call:
+    over the overlay, the depth gate and a served log, first with a
+    crawl rate armed at a fixed ``now`` (every escalation step), then
+    with it disarmed."""
+    info, crawls, rekeyed, served, now, max_depth = _pop_state(spark, seed)
+    got = {}
+    for executor, bound in BOUNDS.items():
+        monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", bound)
+        db = PageDB(spark)
+        db.page_info, db.crawl_log = info, crawls
+        sch = BFSchedulerView(spark, max_depth=max_depth, page_db=db)
+        sch.rekeyed, sch.served = rekeyed, served
+        sch.set_crawl_rate(1.0, 4.0)
+        pops = []
+        for k in (3, 5, 1, 8, 4):
+            pops.append(sch.requests(k, now=now))
+            assert sch.last_pop.executor == executor
+        sch.set_crawl_rate(0.25, 0.0)
+        pops.append(sch.requests(100))
+        got[executor] = pops
+    assert got["local"] == got["spark"]
+    served = sum(got["local"], [])
+    assert len(served) == len(set(served)) > 12
+    assert None not in served
+
+
+@pytest.mark.parametrize("executor", ["local", "spark"])
+def test_pop_log_line(spark, monkeypatch, caplog, executor):
+    """One INFO line per pop on aduana_spark.frontier, with the fields
+    as LogRecord attributes."""
+    import logging
+
+    monkeypatch.setattr(page_info, "LOCAL_MAX_ROWS", BOUNDS[executor])
+    sch = BFSchedulerView(spark)
+    for i, (url, links) in enumerate(CRAWL):
+        sch.add(_batch(spark, i, url, links))
+    with caplog.at_level(logging.INFO, logger="aduana_spark.frontier"):
+        assert sch.requests(2) == ["9", "3"]
+    recs = [r for r in caplog.records if r.getMessage().startswith("pop ")]
+    assert len(recs) == 1
+    r = recs[0]
+    assert r.getMessage().startswith(f"pop executor={executor} n=2 got=2 candidates=")
+    assert (r.executor, r.n, r.got, r.passes) == (executor, 2, 2, 1)
+    # uncrawled: 3, 6 and 9; not counted on Spark
+    assert r.candidates == (3 if executor == "local" else None)
+    assert r.wall_sec > 0
+
+
+def test_backend_round_runs_no_spark(spark, monkeypatch):
+    """Within the bound a Backend GET round, its commit and its pop
+    with a crawl rate armed, runs no Spark job and creates no
+    DataFrame."""
+    from aduana_spark.api import Backend
+
+    b = Backend(spark, max_depth=3)
+    b.scheduler.set_crawl_rate(1.0, 4.0)
+    b.add_seeds(["https://a.org/", "https://b.org/", "https://c.org/"])
+    for url in b.get_next_requests(2):
+        b.page_crawled(url, [(url + "x", 0.5), ("https://d.org/", 0.4)])
+    b.page_crawled("https://e.org/", [("https://e.org/1", 0.9)])
+    created = []
+    session = type(spark)
+    create = session.createDataFrame
+
+    def counted(self, *a, **kw):
+        created.append(a)
+        return create(self, *a, **kw)
+
+    monkeypatch.setattr(session, "createDataFrame", counted)
+    sc = spark.sparkContext
+    sc.setJobGroup("get-round", "one Backend GET round")
+    try:
+        got = b.get_next_requests(4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # a.org/ (1.0, left by the first GET), e.org/1 (0.9), the two 0.5s
+    assert got[:2] == ["https://a.org/", "https://e.org/1"]
+    assert sorted(got[2:]) == ["https://b.org/x", "https://c.org/x"]
+    assert sc.statusTracker().getJobIdsForGroup("get-round") == []
+    assert created == []
+    assert b.page_db.last_commit.executor == b.scheduler.last_pop.executor == "local"
+    assert b.metrics()["pop_seconds"] > 0

@@ -118,9 +118,9 @@ def test_rest_server_keep_alive(spark):
 
 
 def test_rest_server_metrics(spark):
-    """GET /metrics counts commits and GET rounds: two POSTs and two
-    sequential GETs make one commit of two pages and two rounds of
-    one GET each."""
+    """GET /metrics counts commits, GET rounds and pop time: two POSTs
+    and two sequential GETs make one commit of two pages and two
+    rounds of one GET each."""
     from aduana_spark.api import Backend
     from aduana_spark.server import AduanaServer
 
@@ -134,9 +134,10 @@ def test_rest_server_metrics(spark):
         lines = resp.read().decode().splitlines()
     metrics = {name: float(value) for name, value in (ln.split() for ln in lines)}
     assert list(metrics) == ["pages_buffered", "pages_committed", "commits",
-                             "commit_seconds", "get_rounds", "gets_served"]
-    assert metrics["commit_seconds"] > 0
-    del metrics["commit_seconds"]
+                             "commit_seconds", "get_rounds", "gets_served",
+                             "pop_seconds"]
+    assert metrics["commit_seconds"] > 0 and metrics["pop_seconds"] > 0
+    del metrics["commit_seconds"], metrics["pop_seconds"]
     assert metrics == {"pages_buffered": 0, "pages_committed": 2, "commits": 1,
                        "get_rounds": 2, "gets_served": 2}
 

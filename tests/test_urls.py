@@ -8,6 +8,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from aduana_spark.functions.urls import (
+    domain_arrow,
     domain_col,
     ref_same_domain,
     ref_url_domain,
@@ -96,3 +97,24 @@ def test_xxhash64_np_matches_spark(spark):
     for arr in (pa.array(strings), pa.array(["skipped"] + strings)[1:]):
         data, offsets = utf8_buffers(arr)
         assert xxhash64_np(data, offsets[:-1], np.diff(offsets)).tolist() == want
+
+
+def test_domain_arrow_matches_domain_col(spark):
+    """The driver's domain extraction gives ``domain_col``'s domain (or
+    null) on the same corpus, nulls and a sliced array included."""
+    urls = list(REF_CASES) + [
+        "xxxxx",
+        "http://blablabla/foo",
+        "https://d3.example.org/p17",
+        "http://a.com:8080/x",
+        "_seed_0",
+        "ftp://files.org/a",
+        "https://ü.de/x",
+        "http://a@b@c.org/",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(u,) for u in urls], "url STRING")
+    want = [r["d"] for r in df.select(domain_col("url").alias("d")).collect()]
+    assert domain_arrow(pa.array(urls)).to_pylist() == want
+    assert domain_arrow(pa.array(["skipped"] + urls)[1:]).to_pylist() == want
