@@ -13,14 +13,17 @@ passing (the same superstep skeleton as connected components):
 Frontier-only optimization: only vertices whose depth changed last
 superstep emit messages, so each superstep joins the (shrinking)
 frontier against the edge table instead of the full vertex state.
+Up to ``LOCAL_MAX_EDGES`` edges (``graph.superstep``) the frontier is a
+mask over the edge arrays on the driver.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aduana_spark.graph.superstep import SuperstepLoop
+from aduana_spark.graph.superstep import SuperstepLoop, dense_index
 
 
 def bfs_depths(
@@ -30,8 +33,25 @@ def bfs_depths(
     ``id``). Returns (id, depth) for reachable vertices only. Each
     superstep's delta is the number of vertices it reached."""
     with SuperstepLoop(edges.sparkSession, "bfs") as loop:
-        e = loop.edge_cache(edges, "src")
-        loop.narrow()
+        e, cols = loop.fetch_local(edges, vertices=seeds)
+        if cols is not None:
+            # depth -1: not reached yet
+            src, dst, seed_ids = cols[0], cols[1], cols[4]
+            universe = np.concatenate([src, dst, seed_ids])
+            ids, s, d, _ = loop.local_graph(src, dst, universe)
+            depth = np.full(len(ids), -1, dtype=np.int32)
+            depth[dense_index(ids, seed_ids)[0]] = 0
+            frontier = depth == 0
+            for it in loop.supersteps(max_depth):
+                reached = np.zeros(len(ids), dtype=bool)
+                reached[d[frontier[s]]] = True
+                frontier = reached & (depth < 0)
+                depth[frontier] = it
+                loop.end(None, frontier.sum(), not frontier.any())
+            found = depth >= 0
+            ranks = {"id": ids[found], "depth": depth[found]}
+            return loop.local_result(ranks, not_null=("depth",)).ranks
+        e = loop.edge_cache(e, "src")
         state = loop.cache(seeds.select("id", F.lit(0).alias("depth")), supersteps=1)
         frontier = state
         for depth in loop.supersteps(max_depth):

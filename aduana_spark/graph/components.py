@@ -12,10 +12,11 @@ Each superstep::
 
     label'[v] = min(label[v], min_{(u,v) ∈ E_sym} label[u])
 
-converging in O(diameter) supersteps (web graphs: ~15-25). Each
-superstep is one join + min-aggregate with map-side partial
-aggregation; convergence is detected by counting changed labels
-(a cheap aggregate over the persisted candidate DF). For graphs with
+converging in O(diameter) supersteps (web graphs: ~15-25). Up to
+``LOCAL_MAX_EDGES`` edges (``graph.superstep``) a superstep is one
+``np.minimum.at`` on the driver; above, one join + min-aggregate with
+map-side partial aggregation. Convergence is detected by counting
+changed labels. For graphs with
 pathological diameters, the alternating large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and
 Beyond") converges in O(log²) rounds — min-propagation is the
@@ -24,6 +25,9 @@ reference-shaped default because crawl graphs are shallow.
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,6 +65,76 @@ def _candidate(sym: DataFrame, state: DataFrame, frontier: DataFrame) -> DataFra
     )
 
 
+def propagate(
+    loop: SuperstepLoop,
+    edges: DataFrame,
+    symmetric: bool,
+    col: str,
+    local_step: Callable,
+    candidate: Callable,
+    max_iters: int,
+    resume: bool,
+) -> IterativeResult:
+    """The label loop of components and label propagation over
+    ``edges``, first made :func:`symmetrize`'s undirected projection
+    when ``symmetric``. Every vertex starts with its own id as its
+    label ``col``, as does one the resumed shard lacks (graph growth),
+    and the loop stops at the first superstep that changes no label. A
+    local superstep is ``local_step(src, dst, labels)`` on dense
+    indices; a Spark one is ``candidate(sym, state, frontier)`` → (id,
+    old, col), where the frontier holds the vertices the last
+    superstep changed."""
+    edges, cols = loop.fetch_local(edges)
+    if cols is not None:
+        import pyarrow as pa
+
+        ids, s, d, _ = loop.local_graph(cols[0], cols[1])
+        if symmetric:  # symmetrize: both directions of every edge, once
+            n = len(ids)
+            s, d = np.divmod(np.unique(np.concatenate([s * n + d, d * n + s])), n)
+            loop.n_edges = len(s)
+        prev = loop.resume(resume, ids, fill=ids)
+        label = ids if prev is None else prev[col]
+        for _ in loop.supersteps(max_iters):
+            new = local_step(s, d, label)
+            changed = int((new != label).sum())
+            label = new
+            loop.end(pa.table({"id": ids, col: label}), changed, changed == 0)
+        return loop.local_result({"id": ids, col: label})
+
+    sym = loop.edge_cache(symmetrize(edges) if symmetric else edges, "src")
+    verts = (
+        sym.select(F.col("src").alias("id"))
+        .unionAll(sym.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    state = verts.select("id", F.col("id").alias(col))
+    prev = loop.resume(resume)
+    if prev is not None:
+        state = verts.join(prev.select("id", col), "id", "left").select(
+            "id", F.coalesce(col, F.col("id")).alias(col)
+        )
+    # no explicit repartition: both are hash-partitioned by id already
+    # (distinct / equi-join output)
+    state = loop.cache(state, supersteps=1)
+    loop.n_vertices = state.count()
+    frontier = state
+    for _ in loop.supersteps(max_iters):
+        # truncated; the changed count below materializes it
+        cand = candidate(sym, state, frontier).localCheckpoint(eager=False)
+        frontier = cand.where(F.col(col) != F.col("old")).select("id", col)
+        changed = frontier.count()
+        state = loop.end(cand.select("id", col), changed, changed == 0)
+    return loop.result(state)
+
+
+def _local_superstep(s: np.ndarray, d: np.ndarray, comp: np.ndarray) -> np.ndarray:
+    """The numpy twin of :func:`_candidate` on dense vertex indices."""
+    new = comp.copy()
+    np.minimum.at(new, d, comp[s])
+    return new
+
+
 def connected_components(
     edges: DataFrame,
     max_iters: int = 50,
@@ -82,49 +156,17 @@ def connected_components(
     """
     spark = edges.sparkSession
     with SuperstepLoop(spark, "components", checkpoint, checkpoint_interval) as loop:
-        sym = loop.edge_cache(symmetrize(edges), "src")
-        loop.narrow()
-        verts = (
-            sym.select(F.col("src").alias("id"))
-            .unionAll(sym.select(F.col("dst").alias("id")))
-            .distinct()
+        # Delta propagation: only a vertex whose label changed in the last
+        # superstep sends it. A label already delivered was folded into
+        # the receiver's (monotone, non-increasing) label, so a message
+        # from an unchanged vertex can never win the min: the labels and
+        # changed counts per superstep are those of sending from every
+        # vertex, while the join and shuffle shrink with the frontier.
+        # The first superstep, resumed or not, sends from everyone.
+        return propagate(
+            loop, edges, True, "component", _local_superstep, _candidate,
+            max_iters, resume,
         )
-        prev = loop.resume(resume)
-        if prev is not None:
-            # vertices unseen by the shard (graph growth) start at their
-            # own id — monotone labels make the merge restart-safe
-            state = verts.join(prev.select("id", "component"), "id", "left").select(
-                "id", F.coalesce("component", F.col("id")).alias("component")
-            )
-        else:
-            state = verts.select("id", F.col("id").alias("component"))
-        # no explicit repartition: both branches are hash-partitioned by id
-        # already (distinct / equi-join output)
-        state = loop.cache(state, supersteps=1)
-        loop.n_vertices = state.count()
-
-        # Delta propagation: a vertex only needs to (re)send its label after
-        # the superstep in which that label changed — a label already
-        # delivered to a neighbor was folded into the neighbor's (monotone,
-        # non-increasing) label, so messages from unchanged vertices are
-        # ≥ the receiver's current label and can never win the min. The
-        # per-superstep labels (and therefore the changed-count convergence
-        # test) are IDENTICAL to the broadcast-from-everyone formulation;
-        # what shrinks is the E-row join output and the groupBy shuffle,
-        # which decay with the frontier instead of staying O(E) for every
-        # superstep. Superstep 1 sends from every vertex (initial labels
-        # are unseen); after a resume the first superstep also sends from
-        # everyone — monotonicity makes the extra messages harmless.
-        frontier = state
-        for _ in loop.supersteps(max_iters):
-            # truncated; the changed count below materializes it
-            cand = _candidate(sym, state, frontier).localCheckpoint(eager=False)
-            frontier = cand.where(F.col("component") != F.col("old")).select(
-                "id", "component"
-            )
-            changed = frontier.count()
-            state = loop.end(cand.select("id", "component"), changed, changed == 0)
-        return loop.result(state)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:

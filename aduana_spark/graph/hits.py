@@ -21,8 +21,8 @@ Execution mirrors ``pagerank``, with the same two executors:
 
 - **local**, at most ``LOCAL_MAX_EDGES`` rows per input
   (``graph.superstep``): one bounded Arrow fetch, then every superstep
-  is :func:`_local_superstep`, two ``np.bincount`` calls on the driver
-  instead of two Spark jobs of mostly fixed cost.
+  is two ``np.bincount`` calls on the driver instead of two Spark jobs
+  of mostly fixed cost.
 - **spark**, above the bound: edges persisted partitioned by src; per
   superstep two join+aggregate pipelines (hub messages grouped by src,
   authority messages grouped by dst), both with map-side partial
@@ -42,7 +42,6 @@ from aduana_spark.graph.checkpoint import CheckpointManager
 from aduana_spark.graph.superstep import (
     IterativeResult,
     SuperstepLoop,
-    dense_index,
     scatter,
 )
 
@@ -97,28 +96,6 @@ def _candidate(
     )
 
 
-def _local_superstep(
-    src: np.ndarray,
-    dst: np.ndarray,
-    score: np.ndarray | None,
-    hub: np.ndarray,
-    auth: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, float]:
-    """The numpy twin of :func:`_candidate` and the L1 update, on dense
-    vertex indices: (hub, auth, delta). ``score`` None leaves the hub
-    messages unweighted."""
-    n = len(hub)
-    # hub messages: weight of edge f→t is (score[t] *) a1[t]
-    am = auth if score is None else score * auth
-    hub_raw = np.bincount(src, weights=am[dst], minlength=n)
-    # authority messages: h1[f]
-    auth_raw = np.bincount(dst, weights=hub[src], minlength=n)
-    new_hub = hub_raw / (hub_raw.sum() or 1.0)
-    new_auth = auth_raw / (auth_raw.sum() or 1.0)
-    delta = max(np.abs(new_hub - hub).max(), np.abs(new_auth - auth).max())
-    return new_hub, new_auth, float(delta)
-
-
 def _hits_local(
     loop: SuperstepLoop,
     cols: list,
@@ -132,34 +109,33 @@ def _hits_local(
     import pyarrow as pa
 
     src, dst, score_ids, score_vals, vertex_ids = cols
-    if vertex_ids is None:
-        vertex_ids = np.concatenate([src, dst])
-    ids = np.unique(vertex_ids)
-    n = loop.n_vertices = len(ids)
-    s, s_in = dense_index(ids, src)
-    d, d_in = dense_index(ids, dst)
-    s, d = s[s_in & d_in], d[s_in & d_in]
+    ids, s, d, _ = loop.local_graph(src, dst, vertex_ids)
+    n = len(ids)
     score = np.ones(n) if score_ids is None else scatter(ids, score_ids, score_vals)
 
-    prev = loop.resume(resume)
+    prev = loop.resume(resume, ids)
     if prev is None:
         hub, auth = np.full(n, 1.0 / n), np.full(n, 1.0 / n)
     else:
-        hub, auth = (
-            scatter(ids, prev["id"].to_numpy(), prev[c].to_numpy()) for c in ("hub", "auth")
-        )
+        hub, auth = prev["hub"], prev["auth"]
 
     for _ in loop.supersteps(max_iters):
-        hub, auth, delta = _local_superstep(
-            s, d, None if score_ids is None else score, hub, auth
-        )
+        # the numpy twin of _candidate and the L1 update. Hub messages:
+        # weight of edge f→t is score[t] * a1[t] (score 1.0 unweighted)
+        hub_raw = np.bincount(s, weights=(score * auth)[d], minlength=n)
+        # authority messages: h1[f]
+        auth_raw = np.bincount(d, weights=hub[s], minlength=n)
+        new_hub = hub_raw / (hub_raw.sum() or 1.0)
+        new_auth = auth_raw / (auth_raw.sum() or 1.0)
+        delta = float(max(np.abs(new_hub - hub).max(), np.abs(new_auth - auth).max()))
+        hub, auth = new_hub, new_auth
         loop.end(
             pa.table({"id": ids, "score": score, "hub": hub, "auth": auth}),
             delta,
             delta <= precision,
         )
-    ranks = loop.spark.createDataFrame(pa.table({"id": ids, "hub": hub, "auth": auth}))
-    return loop.result(ranks, strict, precision)
+    ranks = {"id": ids, "hub": hub, "auth": auth}
+    return loop.local_result(ranks, strict=strict, precision=precision)
 
 
 def _sums(cand: DataFrame) -> DataFrame:
@@ -182,14 +158,12 @@ def hits(
     DataFrame (id, hub, auth)."""
     spark = edges.sparkSession
     with SuperstepLoop(spark, "hits", checkpoint, checkpoint_interval) as loop:
-        # both edge caches read the input from here, not recompute it
-        edges = loop.cache(edges.select("src", "dst"), supersteps=0)
+        edges, cols = loop.fetch_local(edges, scores, vertices)
+        if cols is not None:
+            return _hits_local(loop, cols, precision, max_iters, resume, strict)
         # two cached copies, each pre-partitioned AND pre-sorted on its
         # join key (hub messages join on dst, authority messages on src)
         edges_by_src = loop.edge_cache(edges, "src")
-        cols = loop.fetch_local(edges_by_src, scores, vertices)
-        if cols is not None:
-            return _hits_local(loop, cols, precision, max_iters, resume, strict)
         edges_by_dst = loop.edge_cache(edges, "dst")
         # no explicit repartition: hash-partitioned by id already
         # (distinct / equi-join output)
@@ -205,7 +179,6 @@ def hits(
                 F.lit(1.0 / loop.n_vertices).alias("auth"),
             )
         state = loop.cache(state, supersteps=1)
-        loop.narrow()
 
         for _ in loop.supersteps(max_iters):
             cand = loop.cache(

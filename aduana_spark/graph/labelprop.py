@@ -11,21 +11,26 @@ Superstep = join + two aggregations, all map-side combinable:
 
     counts[v, l] = Σ_{(u,v)} [label[u] = l]
     label'[v]    = argmax_l (counts, tie → min l)   via max(struct(cnt, -l))
+
+Up to ``LOCAL_MAX_EDGES`` edges (``graph.superstep``) the superstep
+runs in numpy on the driver, with the same tie rule.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aduana_spark.graph.checkpoint import CheckpointManager
-from aduana_spark.graph.components import symmetrize
+from aduana_spark.graph.components import propagate
 from aduana_spark.graph.superstep import IterativeResult, SuperstepLoop
 
 
-def _candidate(sym: DataFrame, state: DataFrame) -> DataFrame:
+def _candidate(sym: DataFrame, state: DataFrame, _frontier: DataFrame) -> DataFrame:
     """One superstep's label counts and mode per vertex →
-    (id, old, label)."""
+    (id, old, label). The mode needs every neighbour's label, not just
+    the frontier's."""
     counts = (
         sym.join(state.select(F.col("id").alias("src"), F.col("label").alias("l")), "src")
         .groupBy("dst", "l")
@@ -43,6 +48,21 @@ def _candidate(sym: DataFrame, state: DataFrame) -> DataFrame:
     )
 
 
+def _local_superstep(s: np.ndarray, d: np.ndarray, label: np.ndarray) -> np.ndarray:
+    """The numpy twin of :func:`_candidate` on dense vertex indices."""
+    labels, li = np.unique(label, return_inverse=True)
+    # counts[v, l], keyed v * len(labels) + l
+    key, cnt = np.unique(d * len(labels) + li[s], return_counts=True)
+    v, l = np.divmod(key, len(labels))
+    # max(struct(cnt, -l)) per receiver: its largest count, then its
+    # smallest label, sorts first
+    o = np.lexsort((l, -cnt, v))
+    v, first = np.unique(v[o], return_index=True)
+    new = label.copy()
+    new[v] = labels[l[o][first]]
+    return new
+
+
 def label_propagation(
     edges: DataFrame,
     max_iters: int = 10,
@@ -57,26 +77,7 @@ def label_propagation(
     from shard K reproduces the uninterrupted trajectory exactly)."""
     spark = edges.sparkSession
     with SuperstepLoop(spark, "labelprop", checkpoint, checkpoint_interval) as loop:
-        sym = loop.edge_cache(edges if directed else symmetrize(edges), "src")
-        loop.narrow()
-        verts = (
-            sym.select(F.col("src").alias("id"))
-            .unionAll(sym.select(F.col("dst").alias("id")))
-            .distinct()
+        return propagate(
+            loop, edges, not directed, "label", _local_superstep, _candidate,
+            max_iters, resume,
         )
-        prev = loop.resume(resume)
-        if prev is not None:
-            state = verts.join(prev.select("id", "label"), "id", "left").select(
-                "id", F.coalesce("label", F.col("id")).alias("label")
-            )
-        else:
-            state = verts.select("id", F.col("id").alias("label"))
-        state = loop.cache(state, supersteps=1)
-        loop.n_vertices = state.count()
-
-        for _ in loop.supersteps(max_iters):
-            # truncated; the changed count below materializes it
-            cand = _candidate(sym, state).localCheckpoint(eager=False)
-            changed = cand.where(F.col("label") != F.col("old")).count()
-            state = loop.end(cand.select("id", "label"), changed, changed == 0)
-        return loop.result(state)

@@ -18,11 +18,10 @@ the fixtures.
 
 Inputs of at most ``LOCAL_MAX_EDGES`` rows (``graph.superstep``)
 converge on the driver: one bounded Arrow fetch, then each superstep
-is :func:`_local_superstep`, a few numpy lines over dense vertex
-indices with ``np.bincount`` as the Σ aggregate. On a crawl-sized
+is a few numpy lines over dense vertex indices with ``np.bincount`` as
+the Σ aggregate. On a crawl-sized
 graph the Spark superstep below is ~1 s of job and stage overhead, not
-data. ``salt_buckets`` is a no-op there, as there is no reduce key to
-skew. Checkpoint shards, manifests and resume are the Spark loop's, so
+data. Checkpoint shards, manifests and resume are the Spark loop's, so
 either loop resumes from the other's shard.
 
 Spark execution per superstep (designed for ~10^12-edge tables):
@@ -32,9 +31,7 @@ Spark execution per superstep (designed for ~10^12-edge tables):
   edge table.
 - the contribution aggregation is ``groupBy(dst).sum`` — map-side
   partial aggregation means a hub page with 10^9 in-links receives at
-  most one partial row per map partition; explicit salting
-  (``salt_buckets``) additionally splits the reduce key for
-  pathological hubs, as the north rule requires.
+  most one partial row per map partition.
 - ONE Spark job per superstep on the uniform-teleport path: the
   single aggregate that executes the E-row join also returns
   (Σ value2, max d, min d) with d_i = raw_i − old_i, from which both
@@ -51,9 +48,8 @@ Spark execution per superstep (designed for ~10^12-edge tables):
 - every ``checkpoint_interval`` iterations the state is additionally
   written as a parquet shard + manifest (delta, wall, edges/sec),
   enabling durable mid-iteration resume.
-- AQE handles runtime skew splitting and partition coalescing; the
-  loop narrows the session's shuffle width for small graphs
-  (``graph.superstep``).
+- every exchange runs at the session's shuffle width; AQE handles
+  runtime skew splitting and partition coalescing.
 """
 
 from __future__ import annotations
@@ -70,7 +66,6 @@ from aduana_spark.graph.superstep import (
     IterativeResult,
     SuperstepLoop,
     SuperstepMetrics,
-    dense_index,
     scatter,
 )
 
@@ -106,9 +101,7 @@ def _vertex_state(
     return vstate, scores.agg(F.sum("score")).first()[0] or 1.0
 
 
-def _candidate(
-    edges: DataFrame, state: DataFrame, damping: float, salt_buckets: int | None
-) -> DataFrame:
+def _candidate(edges: DataFrame, state: DataFrame, damping: float) -> DataFrame:
     """One superstep's E-row join + Σ aggregate: (id, deg, score,
     old_rank, raw) with raw = damping · Σ in-link messages."""
     # dangling vertices (deg=0) emit nothing — their mass lands in rem
@@ -116,14 +109,7 @@ def _candidate(
         F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("m")
     )
     joined = edges.join(msg_src, "src")
-    if salt_buckets and salt_buckets > 1:
-        # two-phase salted aggregation for pathological hub keys
-        partial = joined.groupBy(
-            "dst", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)).alias("_salt")
-        ).agg(F.sum("m").alias("pm"))
-        contrib = partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("raw"))
-    else:
-        contrib = joined.groupBy("dst").agg((F.lit(damping) * F.sum("m")).alias("raw"))
+    contrib = joined.groupBy("dst").agg((F.lit(damping) * F.sum("m")).alias("raw"))
     return state.join(contrib.withColumnRenamed("dst", "id"), "id", "left").select(
         "id",
         "deg",
@@ -131,29 +117,6 @@ def _candidate(
         F.col("rank").alias("old_rank"),
         F.coalesce("raw", F.lit(0.0)).alias("raw"),
     )
-
-
-def _local_superstep(
-    src: np.ndarray,
-    dst: np.ndarray,
-    deg: np.ndarray,
-    rank: np.ndarray,
-    damping: float,
-    score: np.ndarray | None,
-    total_score: float,
-) -> tuple[np.ndarray, float]:
-    """The numpy twin of :func:`_candidate` and the rank update, on
-    dense vertex indices: (new rank, L∞ delta). ``score`` None is the
-    uniform teleport."""
-    # dangling vertices (deg=0) emit nothing — their mass lands in rem
-    m = np.divide(rank, deg, out=np.zeros_like(rank), where=deg > 0)
-    raw = damping * np.bincount(dst, weights=m[src], minlength=len(rank))
-    rem = 1.0 - raw.sum()
-    if score is None:
-        new = raw + rem / len(rank)
-    else:
-        new = raw + rem * score / total_score
-    return new, float(np.abs(new - rank).max())
 
 
 def _pagerank_local(
@@ -170,43 +133,40 @@ def _pagerank_local(
     import pyarrow as pa
 
     src, dst, score_ids, score_vals, vertex_ids = cols
-    if vertex_ids is None:
-        vertex_ids = np.concatenate(
-            [src, dst] + ([score_ids] if score_ids is not None else [])
-        )
-    ids = np.unique(vertex_ids)
-    n = loop.n_vertices = len(ids)
-    s, s_in = dense_index(ids, src)
-    d, d_in = dense_index(ids, dst)
-    deg = np.bincount(s[s_in], minlength=n)
-    # messages only travel between vertices of the universe
-    s, d = s[s_in & d_in], d[s_in & d_in]
-    score, total_score = np.zeros(n), 1.0
+    if vertex_ids is None and score_ids is not None:
+        vertex_ids = np.concatenate([src, dst, score_ids])
+    ids, s, d, deg = loop.local_graph(src, dst, vertex_ids)
+    score, total_score = np.zeros(len(ids)), 1.0
     if score_ids is not None:
         score = scatter(ids, score_ids, score_vals)
         # a zero total falls back to 1.0 (page_rank.c:204-206)
         total_score = float(score_vals.sum()) or 1.0
 
-    prev = loop.resume(resume)
+    prev = loop.resume(resume, ids)
     if prev is not None:
-        prev_rank = prev["rank"].to_numpy()
         # renormalize (page_rank.c:234-248 — warm start after growth)
-        rank = scatter(ids, prev["id"].to_numpy(), prev_rank) / prev_rank.sum()
+        rank = prev["rank"] / prev["rank"].sum()
     else:
-        rank = np.full(n, 1.0 / n)
+        rank = np.full(len(ids), 1.0 / len(ids))
 
     for _ in loop.supersteps(max_iters):
-        rank, delta = _local_superstep(
-            s, d, deg, rank, damping, None if score_ids is None else score, total_score
-        )
+        # the numpy twin of _candidate and the rank update; dangling
+        # vertices (deg=0) emit nothing — their mass lands in rem
+        m = np.divide(rank, deg, out=np.zeros_like(rank), where=deg > 0)
+        raw = damping * np.bincount(d, weights=m[s], minlength=len(rank))
+        rem = 1.0 - raw.sum()
+        if score_ids is None:
+            new = raw + rem / len(rank)
+        else:
+            new = raw + rem * score / total_score
+        delta, rank = float(np.abs(new - rank).max()), new
         loop.end(
             pa.table({"id": ids, "deg": deg, "score": score, "rank": rank}),
             delta,
             delta <= precision,
             damping=damping,
         )
-    ranks = loop.spark.createDataFrame(pa.table({"id": ids, "rank": rank}))
-    return loop.result(ranks, strict, precision)
+    return loop.local_result({"id": ids, "rank": rank}, ("rank",), strict, precision)
 
 
 def _uniform_sums(cand: DataFrame) -> DataFrame:
@@ -229,7 +189,6 @@ def pagerank(
     checkpoint: CheckpointManager | str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    salt_buckets: int | None = None,
     strict: bool = False,
     on_superstep: Callable[[SuperstepMetrics], None] | None = None,
 ) -> IterativeResult:
@@ -253,12 +212,12 @@ def pagerank(
     with SuperstepLoop(
         spark, "pagerank", checkpoint, checkpoint_interval, on_superstep
     ) as loop:
-        edges = loop.edge_cache(edges, "src")
-        cols = loop.fetch_local(edges, scores, vertices)
+        edges, cols = loop.fetch_local(edges, scores, vertices)
         if cols is not None:
             return _pagerank_local(
                 loop, cols, damping, precision, max_iters, resume, strict
             )
+        edges = loop.edge_cache(edges, "src")
         vstate, total_score = _vertex_state(edges, scores, vertices)
         # no explicit repartition: every branch of _vertex_state ends
         # hash-partitioned by id already (groupBy / equi-join output)
@@ -279,16 +238,13 @@ def pagerank(
         else:
             state = vstate.withColumn("rank", F.lit(1.0 / loop.n_vertices))
         state = loop.cache(state, supersteps=1)
-        # the edge cache and vertex state keep the session layout; only
-        # the per-superstep exchanges take the narrowed width
-        loop.narrow()
 
         for _ in loop.supersteps(max_iters):
             # personalized: cand is materialized by this superstep's
             # second job; uniform: it backs the lazy localCheckpoint
             # that materializes inside the NEXT superstep's job
             cand = loop.cache(
-                _candidate(edges, state, damping, salt_buckets),
+                _candidate(edges, state, damping),
                 supersteps=0 if scores is not None else 1,
             )
             if scores is not None:

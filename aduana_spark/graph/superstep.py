@@ -7,7 +7,8 @@ state (LMFAO, *A Layered Aggregate Engine for Analytics Workloads*,
 SIGMOD 2019). :class:`SuperstepLoop` owns everything they share:
 
 - the edge-cache layout (:meth:`SuperstepLoop.edge_cache`);
-- the scale-adaptive loop width (:meth:`SuperstepLoop.narrow`);
+- the executor choice (:meth:`SuperstepLoop.fetch_local`), and the
+  local loops' vertex index and result DataFrame;
 - resume from the latest checkpoint shard;
 - the checkpoint cadence and its manifest;
 - the per-superstep report (:meth:`SuperstepLoop.emit`): the
@@ -16,24 +17,24 @@ SIGMOD 2019). :class:`SuperstepLoop` owns everything they share:
 - cache lifetimes, including the deferred unpersist of a cache that
   backs a still-lazy state.
 
-Used as a context manager, it restores the session's shuffle width and
-unpersists every cache it owns on every exit, raised or returned, so a
-loop leaves the caller's session as it found it. Each algorithm keeps
-only its state setup, its message/aggregate/update expressions and its
+Used as a context manager, it unpersists every cache it owns on every
+exit, raised or returned. No loop writes session conf, so a loop
+leaves the caller's session as it found it. Each algorithm keeps only
+its state setup, its message/aggregate/update expressions and its
 convergence test.
 
 Crawl-sized graphs skip Spark's per-job cost altogether. A superstep
-is a sum-aggregate over a sparse join (*Aggregate Queries on Sparse
+is an aggregate over a sparse join (*Aggregate Queries on Sparse
 Databases*, PODS 2020), and on a few thousand edges its ~1 s is job
 and stage overhead, not data (SparkTune, EDBT 2019). So when every
 input has at most :data:`LOCAL_MAX_EDGES` rows,
 :meth:`SuperstepLoop.fetch_local` counts it on the executors and
-brings it to the driver in one Arrow fetch, and PageRank and HITS run
-each superstep as ``np.bincount`` over dense vertex indices (executor
-``local``).
-Larger inputs run the distributed loop (executor ``spark``). Both
-executors share the bookkeeping above, the checkpoint shard format
-included, so a run checkpointed on one resumes on the other.
+brings it to the driver in one Arrow fetch, and every superstep runs
+in numpy over dense vertex indices (executor ``local``). Larger inputs
+run the distributed loop (executor ``spark``) at the session's shuffle
+width. Both executors share the bookkeeping above, the checkpoint
+shard format included, so a run checkpointed on one resumes on the
+other.
 """
 
 from __future__ import annotations
@@ -55,14 +56,6 @@ if TYPE_CHECKING:
     import pyarrow as pa
 
 log = logging.getLogger("aduana_spark.graph")
-
-_WIDTH = "spark.sql.shuffle.partitions"
-
-#: target E-rows per superstep task. (src,dst,msg) rows are ~16-24 B, so
-#: 100k rows ≈ 2 MB — enough real work to amortize the per-task overhead
-#: (~5-10 ms scheduling + serialization) while keeping tasks small enough
-#: for straggler insurance.
-SUPERSTEP_ROWS_PER_TASK = 100_000
 
 #: inputs of at most this many rows converge on the driver. It bounds
 #: the driver fetch at about 16 MB of (src, dst) edges, and it sits below
@@ -92,31 +85,12 @@ class IterativeResult:
     n_vertices: int
     n_edges: int
     metrics: list[SuperstepMetrics] = field(default_factory=list)
+    #: "local" or "spark": where the supersteps ran
+    executor: str = "spark"
 
     @property
     def deltas(self) -> list[float]:
         return [m.delta for m in self.metrics]
-
-
-def _derived_superstep_partitions(spark: SparkSession, n_rows: int) -> int | None:
-    """Scale-adaptive shuffle width for the per-superstep exchanges:
-    ``min(session conf, ceil(n_rows / SUPERSTEP_ROWS_PER_TASK))``.
-
-    A fixed ``spark.sql.shuffle.partitions`` is tuned for ONE scale; an
-    iterative job pays its per-task overhead once per superstep, so a
-    small graph under a wide session setting spends the whole superstep
-    scheduling near-empty tasks (measured on the sf0.1 bench graph:
-    64→16 loop partitions took the median steady-state superstep from
-    ~0.8 s to ~0.5 s at identical results). The derivation only ever
-    NARROWS the session setting — big inputs keep the admin-chosen
-    width, so cluster runs are untouched. Returns None when no
-    narrowing applies."""
-    try:
-        session_parts = int(spark.conf.get(_WIDTH))
-    except Exception:
-        return None
-    derived = max(1, -(-int(n_rows) // SUPERSTEP_ROWS_PER_TASK))
-    return derived if derived < session_parts else None
 
 
 def row_count(df: DataFrame) -> int:
@@ -133,11 +107,14 @@ def dense_index(ids: np.ndarray, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]
     return pos, ids[pos] == x
 
 
-def scatter(ids: np.ndarray, keys: np.ndarray, values: np.ndarray) -> np.ndarray:
+def scatter(
+    ids: np.ndarray, keys: np.ndarray, values: np.ndarray, fill=0.0
+) -> np.ndarray:
     """``values`` placed at their ``keys``' positions in the sorted
     unique ``ids``: a left join of the vertices onto (key, value) rows,
-    0.0 where a vertex has none."""
-    out = np.zeros(len(ids))
+    ``fill`` (a scalar, or an array over ``ids``) where a vertex has
+    none."""
+    out = np.array(np.broadcast_to(fill, ids.shape))
     pos, found = dense_index(ids, keys)
     out[pos[found]] = values[found]
     return out
@@ -188,20 +165,14 @@ class SuperstepLoop:
         self._t0 = 0.0
         #: (cache, superstep at whose end it is dropped; None = at exit)
         self._caches: list[tuple[DataFrame, int | None]] = []
-        self._restore_width: str | None = None
 
     def __enter__(self) -> SuperstepLoop:
         return self
 
     def __exit__(self, *exc) -> None:
-        try:
-            for df, _ in self._caches:
-                df.unpersist()
-            self._caches = []
-        finally:
-            if self._restore_width is not None:
-                self.spark.conf.set(_WIDTH, self._restore_width)
-                self._restore_width = None
+        for df, _ in self._caches:
+            df.unpersist()
+        self._caches = []
 
     # ------------------------------------------------------------ setup
 
@@ -219,8 +190,7 @@ class SuperstepLoop:
         join ``key`` once, cached and counted into ``n_edges``. The
         cached scan advertises its ordering, so the per-superstep
         SortMergeJoin sorts only the V-row state side and never
-        re-shuffles or re-sorts the edges. Laid out under the session
-        width: call :meth:`narrow` after it."""
+        re-shuffles or re-sorts the edges."""
         cached = self.cache(
             edges.select("src", "dst")
             .repartition(F.col(key))
@@ -234,26 +204,28 @@ class SuperstepLoop:
         edges: DataFrame,
         scores: DataFrame | None = None,
         vertices: DataFrame | None = None,
-    ) -> list[np.ndarray | None] | None:
-        """Pick the executor. ``edges`` is the loop's :meth:`edge_cache`,
-        so ``n_edges`` already counts it; ``scores`` (id, score) and
-        ``vertices`` (id), when given, are each cached for the loop and
-        counted with :func:`row_count`. When every input has at most
+    ) -> tuple[DataFrame, list[np.ndarray | None] | None]:
+        """Pick the executor. ``edges`` (src, dst) and, when given,
+        ``scores`` (id, score) and ``vertices`` (id) are each cached for
+        the loop's setup and counted with :func:`row_count`, the edges
+        into ``n_edges``. When every input has at most
         ``LOCAL_MAX_EDGES`` rows the loop turns ``local`` and this
-        fetches each from its cache with one Arrow collect and returns
-        the columns as numpy arrays: src, dst, score ids, score values
-        (nulls as 0.0), vertex ids; absent inputs give None. Otherwise
-        it returns None and the loop stays on Spark: no row has left
-        the executors, and the edge cache is the one the Spark loop
-        reads."""
+        fetches each from its cache with one Arrow collect. Returns the
+        cached edges, which the Spark loop lays out with
+        :meth:`edge_cache`, and the columns as numpy arrays: src, dst,
+        score ids, score values (nulls as 0.0), vertex ids, None for an
+        absent input. On Spark the columns are None: no row has left
+        the executors."""
+        edges = self.cache(edges.select("src", "dst"), supersteps=0)
+        self.n_edges = row_count(edges)
         if self.n_edges > LOCAL_MAX_EDGES:
-            return None
+            return edges, None
         inputs = [(edges, ("src", "dst"))]
         for df, names in ((scores, ("id", "score")), (vertices, ("id",))):
             if df is not None:
                 df = self.cache(df.select(*names), supersteps=0)
                 if row_count(df) > LOCAL_MAX_EDGES:
-                    return None
+                    return edges, None
             inputs.append((df, names))
         cols: list[np.ndarray | None] = []
         for df, names in inputs:
@@ -268,30 +240,57 @@ class SuperstepLoop:
                 for c in names
             ]
         self.executor = "local"
-        return cols
+        return edges, cols
 
-    def narrow(self) -> None:
-        """Narrow the session's shuffle width to
-        :func:`_derived_superstep_partitions` of ``n_edges`` for every
-        exchange planned from here on; the session value comes back at
-        exit."""
-        derived = _derived_superstep_partitions(self.spark, self.n_edges)
-        if derived:
-            if self._restore_width is None:
-                self._restore_width = self.spark.conf.get(_WIDTH)
-            self.spark.conf.set(_WIDTH, str(derived))
-
-    def resume(self, resume: bool) -> DataFrame | pa.Table | None:
+    def resume(
+        self, resume: bool, ids: np.ndarray | None = None, fill=0.0
+    ) -> DataFrame | dict[str, np.ndarray] | None:
         """The latest checkpoint shard when ``resume`` is set and one
         exists (supersteps then continue after it), else None. The
-        local executor reads it as an Arrow table."""
+        local executor gets its columns as arrays over ``ids``, placed
+        by :func:`scatter` with ``fill``."""
         latest = self.ckpt.latest() if resume and self.ckpt is not None else None
         if latest is None:
             return None
         self.start_iter = self.it = latest
-        if self.executor == "local":
-            return self.ckpt.load_table(latest)
-        return self.ckpt.load(self.spark, latest)
+        if self.executor == "spark":
+            return self.ckpt.load(self.spark, latest)
+        prev = self.ckpt.load_table(latest)
+        keys = prev["id"].to_numpy()
+        return {c: scatter(ids, keys, prev[c].to_numpy(), fill) for c in prev.column_names}
+
+    # ------------------------------------------------ the local executor
+
+    def local_graph(
+        self, src: np.ndarray, dst: np.ndarray, vertex_ids: np.ndarray | None = None
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """The local loop's vertices ``ids``, the sorted unique
+        ``vertex_ids`` (by default every endpoint) counted into
+        ``n_vertices``; the edges between two of them as dense (src,
+        dst) indices; and each vertex's out-degree."""
+        if vertex_ids is None:
+            vertex_ids = np.concatenate([src, dst])
+        ids = np.unique(vertex_ids)
+        self.n_vertices = len(ids)
+        s, s_in = dense_index(ids, src)
+        d, d_in = dense_index(ids, dst)
+        deg = np.bincount(s[s_in], minlength=len(ids))
+        return ids, s[s_in & d_in], d[s_in & d_in], deg
+
+    def local_result(
+        self,
+        columns: dict[str, np.ndarray],
+        not_null: tuple[str, ...] = (),
+        strict: bool = False,
+        precision: float | None = None,
+    ) -> IterativeResult:
+        """:meth:`result` over a DataFrame of ``columns``, nullable but
+        for ``not_null``, as the Spark loop's result is."""
+        import pyarrow as pa
+
+        table = pa.table(columns)
+        schema = pa.schema([f.with_nullable(f.name not in not_null) for f in table.schema])
+        return self.result(self.spark.createDataFrame(table.cast(schema)), strict, precision)
 
     # ------------------------------------------------------------- loop
 
@@ -393,4 +392,5 @@ class SuperstepLoop:
             n_vertices=self.n_vertices,
             n_edges=self.n_edges,
             metrics=self.metrics,
+            executor=self.executor,
         )

@@ -7,8 +7,8 @@ cluster-shaped:
 - AQE on (runtime coalescing + skew-join splitting — hub domains in a
   web graph are heavily skewed),
 - Arrow enabled for every pandas UDF path,
-- shuffle partition count is a tunable (the iterative graph loops
-  narrow it for small graphs and restore it, see ``graph.superstep``),
+- the shuffle width follows the host (:func:`shuffle_width`), and no
+  loop changes it,
 - the driver heap fits the host: ``$ADUANA_DRIVER_MEM`` when set, else
   an eighth of MemTotal clamped to 1-4 GB (:func:`driver_heap`), with
   ``-Xms`` equal to ``-Xmx``.
@@ -17,10 +17,17 @@ cluster-shaped:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ADUANA_SHUFFLE_PARTITIONS", "32"))
+
+def shuffle_width(master: str) -> int | None:
+    """Default shuffle width: 2 × the cores of a ``local[N]`` master (of
+    this process's CPU affinity for ``local[*]``); None, Spark's
+    default, for any other master."""
+    m = re.fullmatch(r"local\[(\d+|\*)\]", master)
+    return m and 2 * (len(os.sched_getaffinity(0)) if m[1] == "*" else int(m[1]))
 
 
 def driver_heap(meminfo: str) -> str:
@@ -57,8 +64,10 @@ def get_spark(
 
     The driver heap is ``spark.driver.memory`` from ``extra_conf``, else
     ``$ADUANA_DRIVER_MEM``, else :func:`driver_heap` of this host; the
-    JVM starts with ``-Xms`` at that size. ``extra_conf`` entries are
-    applied last and override any default here.
+    JVM starts with ``-Xms`` at that size. The shuffle width is
+    ``shuffle_partitions``, else :func:`shuffle_width` of the master.
+    ``extra_conf`` entries are applied last and override any default
+    here.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -82,10 +91,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -109,6 +114,9 @@ def get_spark(
         # superstep cadence instead of accumulating storage
         .config("spark.cleaner.periodicGC.interval", "5min")
     )
+    width = shuffle_partitions or shuffle_width(master)
+    if width:
+        builder = builder.config("spark.sql.shuffle.partitions", str(width))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -39,7 +39,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _session(cores: int, shuffle_partitions: int) -> SparkSession:
+def _session(cores: int) -> SparkSession:
     import pathlib
 
     from aduana_spark.session import get_spark
@@ -52,7 +52,6 @@ def _session(cores: int, shuffle_partitions: int) -> SparkSession:
     return get_spark(
         app_name=f"aduana-bench-{cores}",
         master=f"local[{cores}]",
-        shuffle_partitions=shuffle_partitions,
         extra_conf={"spark.local.dir": local_dir},
     )
 
@@ -241,7 +240,7 @@ def run_headline(spark) -> tuple[dict[str, float], dict[str, dict], object]:
 
 
 def main() -> None:
-    spark = _session(CPUS, shuffle_partitions=2 * CPUS)
+    spark = _session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         queries, queries_cpu, pr = run_headline(spark)

@@ -46,7 +46,7 @@ CPUS = bench.CPUS
 
 
 def _spark():
-    s = bench._session(CPUS, shuffle_partitions=2 * CPUS)
+    s = bench._session(CPUS)
     s.sparkContext.setLogLevel("ERROR")
     return s
 
@@ -130,7 +130,7 @@ def _explain_str(df) -> str:
 def _superstep_plan(spark, algo: str) -> str:
     """Explain ONE steady-state superstep of an iterative algo on the
     bench graph, built from the production pieces: SuperstepLoop's edge
-    cache and loop width, and the algorithm's own setup and
+    cache at the session's width, and the algorithm's own setup and
     message/aggregate functions. pagerank and hits explain superstep
     1's first job; cc runs superstep 1 and explains superstep 2, whose
     plan shows the delta-propagation frontier."""
@@ -149,16 +149,14 @@ def _superstep_plan(spark, algo: str) -> str:
             vstate, _ = _vertex_state(edges, None, None)
             vstate = loop.cache(vstate)
             n_vertices = vstate.count()
-            loop.narrow()
             state = vstate.withColumn("rank", F.lit(1.0 / n_vertices))
-            cand = pr_candidate(edges, state, 0.85, None)
+            cand = pr_candidate(edges, state, 0.85)
             return _explain_str(_uniform_sums(cand))
         if algo == "hits":
             edges_by_src = loop.edge_cache(edges_raw, "src")
             edges_by_dst = loop.edge_cache(edges_raw, "dst")
             verts = loop.cache(_vertices(edges_by_src, None, None))
             n_vertices = verts.count()
-            loop.narrow()
             state = verts.select(
                 "id",
                 "score",
@@ -169,7 +167,6 @@ def _superstep_plan(spark, algo: str) -> str:
             return _explain_str(_sums(cand))
         if algo == "cc":
             sym = loop.edge_cache(symmetrize(edges_raw), "src")
-            loop.narrow()
             state = loop.cache(
                 sym.select(F.col("src").alias("id"))
                 .unionAll(sym.select(F.col("dst").alias("id")))
@@ -230,6 +227,7 @@ def cmd_superstep(algo: str) -> None:
         json.dumps(
             {
                 "algo": algo,
+                "executor": res.executor,
                 "total": round(total, 3),
                 "supersteps": len(walls),
                 "walls": walls,

@@ -1,4 +1,5 @@
-"""bench.py's output contract and the engine's default driver heap."""
+"""bench.py's output contract and the engine's host-fit session
+defaults (driver heap, shuffle width)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import sys
 import pytest
 
 import bench
-from aduana_spark.session import driver_heap
+from aduana_spark.session import driver_heap, shuffle_width
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -37,6 +38,14 @@ def test_driver_heap_from_meminfo():
     assert driver_heap("MemTotal: 4194304 kB\n") == "1024m"  # 4 GB host: floor
     assert driver_heap("MemTotal: 134217728 kB\n") == "4096m"  # 128 GB host: cap
     assert driver_heap("") == "1024m"
+
+
+def test_shuffle_width_from_master():
+    """2 × the master's cores; Spark's own default off local mode."""
+    assert shuffle_width("local[3]") == 6
+    assert shuffle_width("local[*]") == 2 * len(os.sched_getaffinity(0))
+    for master in ("local", "local[2,3]", "spark://host:7077", "yarn"):
+        assert shuffle_width(master) is None
 
 
 def test_headline_query_contamination_adjudicator():

@@ -1,9 +1,14 @@
 """Connected components / label propagation / triangles / BFS vs
-networkx exact oracles (FIXTURES.md §3)."""
+networkx exact oracles (FIXTURES.md §3). The CC, label propagation and
+BFS cases run on the local executor (the graphs are far below
+LOCAL_MAX_EDGES); ``test_graph_loops_distributed`` reruns them on the
+Spark one."""
 
 from __future__ import annotations
 
+import inspect
 import logging
+import os
 from unittest import mock
 
 import pytest
@@ -95,13 +100,12 @@ def test_bfs_depths_exact(spark):
 
 
 def test_bfs_max_depth(spark):
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4)]
+    df = _edges_df(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])
     seeds = spark.createDataFrame([(0,)], "id LONG")
-    got = {
-        r["id"]: r["depth"]
-        for r in bfs_depths(_edges_df(spark, edges), seeds, max_depth=2).collect()
-    }
+    got = {r["id"]: r["depth"] for r in bfs_depths(df, seeds, max_depth=2).collect()}
     assert got == {0: 0, 1: 1, 2: 2}
+    got = {r["id"]: r["depth"] for r in bfs_depths(df, seeds).collect()}
+    assert got == {i: i for i in range(5)}
 
 
 def test_two_phase_cc_matches_minprop_and_nx(spark):
@@ -238,32 +242,105 @@ def test_components_delta_propagation_path_graph(spark):
     assert res.n_iterations == 10
 
 
-def test_bfs_and_labelprop_restore_session_shuffle_partitions(spark):
-    """r6: bfs/labelprop take the scale-adaptive loop width (tiny
-    graphs derive a narrow per-superstep shuffle width); the session
-    conf is scoped state and must be restored on exit, and results
-    must be identical to the session-width formulation."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_connected_components_exact,
+        test_label_propagation_planted_cliques,
+        test_bfs_depths_exact,
+        test_bfs_max_depth,
+        test_components_checkpoint_resume,
+        test_labelprop_checkpoint_resume,
+        test_components_delta_propagation_path_graph,
+    ],
+    ids=lambda case: case.__name__[len("test_"):],
+)
+def test_graph_loops_distributed(spark, tmp_path, monkeypatch, case):
+    """The same cases on the Spark executor."""
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
+    if "tmp_path" in inspect.signature(case).parameters:
+        case(spark, tmp_path)
+    else:
+        case(spark)
 
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4)]
+
+#: LOCAL_MAX_EDGES that puts these tests' graphs on each executor
+BOUNDS = {"local": superstep.LOCAL_MAX_EDGES, "spark": -1}
+
+
+@pytest.mark.parametrize("first, then", [("spark", "local"), ("local", "spark")])
+@pytest.mark.parametrize(
+    "algo, run, col",
+    [
+        ("components", connected_components, "component"),
+        ("labelprop", label_propagation, "label"),
+    ],
+    ids=["components", "labelprop"],
+)
+def test_cross_path_resume(spark, tmp_path, monkeypatch, algo, run, col, first, then):
+    """A run killed after 3 supersteps on one executor resumes on the
+    other from the same shard and ends with the uninterrupted run's
+    labels: CC's fixpoint, and LP's state after the same 8 supersteps."""
+    edges = [(i, i + 1) for i in range(12)] + [(20, 21), (21, 22), (30, 30)]
+    df = _edges_df(spark, edges)
+    full = {r["id"]: r[col] for r in run(df, max_iters=8).ranks.collect()}
+
+    ck = str(tmp_path / "ck")
+    cm = CheckpointManager(ck, algo)
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[first])
+    partial = run(df, max_iters=3, checkpoint=ck, checkpoint_interval=1)
+    assert not partial.converged and cm.latest() == 3
+    assert cm.manifest(3)["executor"] == first
+
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[then])
+    resumed = run(df, max_iters=5, checkpoint=ck, resume=True)
+    assert cm.manifest(cm.latest())["executor"] == then
+    assert {r["id"]: r[col] for r in resumed.ranks.collect()} == full
+
+
+@pytest.mark.parametrize("seed, directed", [(1, False), (2, False), (3, True)])
+def test_labelprop_executors_agree_per_superstep(spark, tmp_path, monkeypatch, seed, directed):
+    """On sparse random graphs, where many vertices see a tie between
+    their neighbours' labels, both executors take the same labels after
+    every superstep (read back from each superstep's shard)."""
+    edges, n = random_digraph(n=60, p=0.04, seed=seed)
+    df = _edges_df(spark, edges)
+    shards = {}
+    for executor, bound in BOUNDS.items():
+        monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", bound)
+        ck = str(tmp_path / executor)
+        res = label_propagation(
+            df, max_iters=6, directed=directed, checkpoint=ck, checkpoint_interval=1
+        )
+        cm = CheckpointManager(ck, "labelprop")
+        assert cm.iterations() == list(range(1, res.n_iterations + 1))
+        shards[executor] = [
+            sorted(cm.load_table(i).select(["id", "label"]).to_pylist(), key=str)
+            for i in cm.iterations()
+        ]
+    assert len(shards["local"]) >= 2
+    assert shards["local"] == shards["spark"]
+
+
+def test_local_results_keep_spark_schema(spark):
+    """Each loop's local result has the column names, types and
+    nullability of its Spark result; BFS depth stays INT."""
+    edges = _edges_df(spark, [(0, 1), (1, 2), (2, 0), (3, 4)])
     seeds = spark.createDataFrame([(0,)], "id LONG")
-    got = {
-        r["id"]: r["depth"]
-        for r in bfs_depths(_edges_df(spark, edges), seeds).collect()
-    }
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    for algo in ("pagerank", "hits", "components", "labelprop", "bfs"):
+        local = LOOPS[algo](edges, seeds).schema
+        assert local == LOOPS[f"{algo}_distributed"](edges, seeds).schema, algo
+    assert bfs_depths(edges, seeds).schema["depth"].dataType.simpleString() == "int"
 
-    cl = []
-    for base in (0, 100):
-        for i in range(5):
-            for j in range(i + 1, 5):
-                cl.append((base + i, base + j))
-    res = label_propagation(_edges_df(spark, cl), max_iters=10)
-    got = {r["id"]: r["label"] for r in res.ranks.collect()}
-    assert len({got[i] for i in range(5)}) == 1
-    assert len({got[100 + i] for i in range(5)}) == 1
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+def test_graph_modules_write_no_session_conf():
+    """No graph module sets session conf: the loops run at the width
+    the session was built with."""
+    graph = os.path.dirname(superstep.__file__)
+    for name in os.listdir(graph):
+        if name.endswith(".py"):
+            with open(os.path.join(graph, name)) as fh:
+                assert "conf.set(" not in fh.read(), name
 
 
 def _distributed(loop):
@@ -283,22 +360,29 @@ LOOPS = {
     "pagerank_distributed": _distributed(lambda edges, seeds: pagerank(edges).ranks),
     "hits_distributed": _distributed(lambda edges, seeds: hits(edges).ranks),
     "components": lambda edges, seeds: connected_components(edges).ranks,
+    "components_distributed": _distributed(
+        lambda edges, seeds: connected_components(edges).ranks
+    ),
     "components_two_phase": lambda edges, seeds: connected_components_two_phase(
         edges
     ).ranks,
     "labelprop": lambda edges, seeds: label_propagation(edges).ranks,
+    "labelprop_distributed": _distributed(
+        lambda edges, seeds: label_propagation(edges).ranks
+    ),
     "bfs": bfs_depths,
+    "bfs_distributed": _distributed(bfs_depths),
 }
 
 
 @pytest.mark.parametrize("algo", list(LOOPS))
 def test_loop_leaves_session_as_found(spark, monkeypatch, algo):
     """A loop that raises mid-way or returns normally leaves the
-    caller's session as it found it: the shuffle width it narrowed is
-    restored and no DataFrame it cached stays cached."""
+    caller's session as it found it: the same conf, the shuffle width
+    included, and no DataFrame it cached still cached."""
     edges = _edges_df(spark, [(i, i + 1) for i in range(9)] + [(9, 0), (3, 7)])
     seeds = spark.createDataFrame([(0,)], "id LONG")
-    width = spark.conf.get("spark.sql.shuffle.partitions")
+    conf = spark.conf.getAll
     cache = spark._jsparkSession.sharedState().cacheManager()
     emit = SuperstepLoop.emit
 
@@ -311,12 +395,12 @@ def test_loop_leaves_session_as_found(spark, monkeypatch, algo):
     monkeypatch.setattr(SuperstepLoop, "emit", emit_or_raise)
     with pytest.raises(RuntimeError, match="superstep 2"):
         LOOPS[algo](edges, seeds)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert spark.conf.getAll == conf
     assert cache.isEmpty()
 
     monkeypatch.undo()
     assert LOOPS[algo](edges, seeds).count() > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert spark.conf.getAll == conf
     assert cache.isEmpty()
 
 
@@ -340,16 +424,27 @@ def test_supersteps_logged_in_order(spark, caplog):
 @pytest.mark.parametrize("executor", ["local", "spark"])
 def test_superstep_log_names_executor(spark, caplog, monkeypatch, tmp_path, executor):
     """The INFO line and the manifest name the executor that ran the
-    superstep."""
-    if executor == "spark":
-        monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
+    superstep, in every loop that has both."""
+    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", BOUNDS[executor])
     edges = _edges_df(spark, [(i, i + 1) for i in range(4)] + [(4, 0)])
-    with caplog.at_level(logging.INFO, logger="aduana_spark.graph"):
-        res = pagerank(edges, checkpoint=str(tmp_path), checkpoint_interval=1)
-    records = [r for r in caplog.records if r.name == "aduana_spark.graph"]
-    assert [(r.algo, r.executor, r.iteration) for r in records] == [
-        ("pagerank", executor, i) for i in range(1, res.n_iterations + 1)
-    ]
-    assert all(f"executor={executor}" in r.getMessage() for r in records)
-    ckpt = CheckpointManager(str(tmp_path), "pagerank")
-    assert ckpt.manifest(ckpt.latest())["executor"] == executor
+    seeds = spark.createDataFrame([(0,)], "id LONG")
+    ck = dict(checkpoint=str(tmp_path), checkpoint_interval=1)
+    runs = {
+        "pagerank": lambda: pagerank(edges, **ck).n_iterations,
+        "components": lambda: connected_components(edges, **ck).n_iterations,
+        "labelprop": lambda: label_propagation(edges, **ck).n_iterations,
+        # depths 1-4, then a superstep that reaches nothing new
+        "bfs": lambda: bfs_depths(edges, seeds).count(),
+    }
+    for algo, run in runs.items():
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="aduana_spark.graph"):
+            n = run()
+        records = [r for r in caplog.records if r.name == "aduana_spark.graph"]
+        assert [(r.algo, r.executor, r.iteration) for r in records] == [
+            (algo, executor, i) for i in range(1, n + 1)
+        ]
+        assert all(f"executor={executor}" in r.getMessage() for r in records)
+        if algo != "bfs":
+            ckpt = CheckpointManager(str(tmp_path), algo)
+            assert ckpt.manifest(ckpt.latest())["executor"] == executor

@@ -93,17 +93,6 @@ def test_pagerank_personalized_numpy_crosscheck(spark):
         assert got[i] == pytest.approx(want[i], abs=1e-6), i
 
 
-def test_pagerank_salted_matches_unsalted(spark, monkeypatch):
-    # salting splits the Spark loop's reduce key; the local loop has none
-    monkeypatch.setattr(superstep, "LOCAL_MAX_EDGES", -1)
-    edges, n = random_digraph(n=150, p=0.03, seed=11)
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    plain = _ranks_dict(pagerank(df, precision=1e-8))
-    salted = _ranks_dict(pagerank(df, precision=1e-8, salt_buckets=8))
-    for i in plain:
-        assert salted[i] == pytest.approx(plain[i], abs=1e-9)
-
-
 def test_pagerank_checkpoint_resume(spark, tmp_path):
     """Kill-test: run 3 supersteps, then resume from the shard and
     converge — final ranks match an uninterrupted run to 1e-9."""
@@ -197,30 +186,3 @@ def test_pagerank_metrics_recorded(spark):
     assert all(m.edges_per_sec > 0 for m in res.metrics)
     deltas = res.deltas
     assert deltas[-1] <= 1e-6
-
-
-def test_derived_superstep_partitions_policy(spark):
-    """The scale-adaptive loop width only ever NARROWS the session's
-    shuffle setting: tiny inputs derive few partitions, inputs big
-    enough to fill the configured width leave it alone (None)."""
-    from aduana_spark.graph.superstep import (
-        SUPERSTEP_ROWS_PER_TASK,
-        _derived_superstep_partitions,
-    )
-
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _derived_superstep_partitions(spark, 1) == 1
-    assert (
-        _derived_superstep_partitions(spark, SUPERSTEP_ROWS_PER_TASK * (sess + 5))
-        is None
-    )
-
-
-def test_pagerank_restores_session_shuffle_partitions(spark):
-    """pagerank's derived loop width is session-conf-scoped state; it
-    must be restored on exit so sibling queries in the same session
-    keep the configured width."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    res = pagerank(golden_edges(spark), precision=1e-6, max_iters=60)
-    assert res.converged
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
